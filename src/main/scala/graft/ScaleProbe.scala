@@ -30,18 +30,6 @@ object ScaleProbe {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p)) {
-      // Files.walk is documented as requiring close (it holds a directory
-      // handle open until then)
-      val s = Files.walk(p)
-      try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      finally s.close()
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
@@ -56,7 +44,7 @@ object ScaleProbe {
     try {
       run(spark, sfDir, bigDir, copies)
     } finally {
-      if (outDirEnv.isEmpty) deleteRecursively(bigPath)
+      if (outDirEnv.isEmpty) Scratch.deleteRec(bigPath)
       spark.stop()
     }
   }
@@ -383,8 +371,8 @@ object ScaleProbe {
       val tN = math.min(time(mk(sN)), time(mk(sN)))
       println(f"| $label | $t1%.2f | $tN%.2f | ${tN / t1}%.1fx |")
     }
-    deleteRecursively(java.nio.file.Paths.get(s1))
-    deleteRecursively(java.nio.file.Paths.get(sN))
+    Scratch.deleteRec(java.nio.file.Paths.get(s1))
+    Scratch.deleteRec(java.nio.file.Paths.get(sN))
 
     def buildSigStore(h: Long): String = {
       val dir = java.nio.file.Files.createTempDirectory("scale_sigstore").toString
@@ -412,8 +400,8 @@ object ScaleProbe {
       val tN = math.min(time(mk(gN)), time(mk(gN)))
       println(f"| $label | $t1%.2f | $tN%.2f | ${tN / t1}%.1fx |")
     }
-    deleteRecursively(java.nio.file.Paths.get(g1))
-    deleteRecursively(java.nio.file.Paths.get(gN))
+    Scratch.deleteRec(java.nio.file.Paths.get(g1))
+    Scratch.deleteRec(java.nio.file.Paths.get(gN))
 
     // Streaming k-NN graph store: the two reads a micro-batch ingest
     // pays. The candidate read is bucket-pruned to the batch's probe
@@ -477,7 +465,7 @@ object ScaleProbe {
       println(f"| $label | $t1%.2f | $tN%.2f | ${tN / t1}%.1fx |")
     }
     Seq(kn1, knN, ke1, keN).foreach(p =>
-      deleteRecursively(java.nio.file.Paths.get(p)))
+      Scratch.deleteRec(java.nio.file.Paths.get(p)))
 
     // Graph-store SERVE cost as BATCHES accumulate: each micro-batch
     // rewrites its touched buckets (and a crash replay can append), so
@@ -518,7 +506,7 @@ object ScaleProbe {
     graft.operators.Sinks.compactPartitioned(spark, fgN, targetBytes = 1L << 30)
     val tsC = math.min(time(serveRead(fgN)), time(serveRead(fgN)))
     println(f"| pruned walk read, after compactPartitioned | $ts1%.2f | $tsC%.2f | ${tsC / ts1}%.1fx |")
-    Seq(fg1, fgN).foreach(p => deleteRecursively(java.nio.file.Paths.get(p)))
+    Seq(fg1, fgN).foreach(p => Scratch.deleteRec(java.nio.file.Paths.get(p)))
 
     hnswStreamGrowthProbe(spark, copies)
   }
@@ -606,8 +594,8 @@ object ScaleProbe {
       println(f"| $label | $t1%.2f | $tN%.2f | ${tN / t1}%.1fx |")
     }
     (l1 ++ lN).foreach { case (a, b) =>
-      deleteRecursively(java.nio.file.Paths.get(a))
-      deleteRecursively(java.nio.file.Paths.get(b))
+      Scratch.deleteRec(java.nio.file.Paths.get(a))
+      Scratch.deleteRec(java.nio.file.Paths.get(b))
     }
   }
 
@@ -694,7 +682,7 @@ object ScaleProbe {
     println(f"| history ${grow}x, 64 buckets (occupancy ${grow}x) | $rd | $td%.2f | ${rd.toDouble / rb}%.1fx |")
     println(f"| history ${grow}x, REBUCKETED to 256 (occupancy re-flattened) | $rw | $tw%.2f | ${rw.toDouble / rb}%.1fx |")
     Seq(e1, e2, e2w).foreach(p =>
-      deleteRecursively(java.nio.file.Paths.get(p)))
+      Scratch.deleteRec(java.nio.file.Paths.get(p)))
 
     // entry read across a maxLevel raise: top layer = corpus/16^cap
     def buildTop(rows: Long): String = {
@@ -733,6 +721,6 @@ object ScaleProbe {
     println(f"| corpus ${copies}x, cap 2 (linear growth by design) | $teN%.2f | ${teN / te1}%.1fx |")
     println(f"| corpus ${copies}x, cap RAISED to 3 (re-capped 16x) | $teR%.2f | ${teR / te1}%.1fx |")
     Seq(top1, topN, topR).foreach(p =>
-      deleteRecursively(java.nio.file.Paths.get(p)))
+      Scratch.deleteRec(java.nio.file.Paths.get(p)))
   }
 }

@@ -34,9 +34,20 @@ object Scratch {
   /** A fresh scratch directory under [[root]]. */
   def dir(prefix: String): Path = Files.createTempDirectory(root, prefix)
 
-  private def deleteRec(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).forEach(c => deleteRec(c))
-    try Files.deleteIfExists(p) catch { case _: Exception => () }
+  /** Delete `p` and everything under it, deepest first. The walk stream
+    * is closed after use (an open walk pins a directory handle per
+    * level), and every entry's delete fails on its own: one undeletable
+    * child — or a walk cut short by an unreadable directory — leaves
+    * the rest of the tree to be deleted, not abandoned. The one
+    * recursive delete the engine uses (exit-time scratch cleanup,
+    * [[StoreCatalog]] store removal, probe cleanup). */
+  private[graft] def deleteRec(p: Path): Unit = {
+    val found = Vector.newBuilder[Path]
+    try {
+      val st = Files.walk(p)
+      try st.forEach(c => found += c) finally st.close()
+    } catch { case _: Exception => () } // delete what the walk reached
+    found.result().reverseIterator.foreach(c =>
+      try Files.deleteIfExists(c) catch { case _: Exception => () })
   }
 }

@@ -20,7 +20,11 @@ import org.apache.spark.sql.SparkSession
   * recording the build config and a FINGERPRINT of the source files
   * (relative path, size, mtime of every data file). Resolution order:
   *
-  *   1. session memo (TrieMap — the per-JVM fast path);
+  *   1. session memo (the per-JVM fast path — and the ONLY in-memory
+  *      store memo: operators resolve every store through
+  *      [[getOrBuild]] on every serve, so nothing above this catalog can
+  *      hold a stale or deleted path). A hit still re-stats the sources
+  *      and counts only if the fingerprint is unchanged;
   *   2. on-disk manifest whose fingerprint and config match → serve with
   *      ZERO rebuild (this is what a fresh JVM hits: build once in an
   *      indexing session, serve from any number of later sessions);
@@ -55,27 +59,10 @@ object StoreCatalog {
   private val memo =
     new scala.collection.concurrent.TrieMap[String, StoreHandle]()
 
-  /** Operator-level store memos (Similarity's ivf/pq/graph/hnsw maps,
-    * TextAnalytics' bm25 map, …) cache RESOLVED handles above this
-    * catalog; when the catalog deletes a store ([[gcStale]], [[drop]])
-    * those memos would otherwise keep serving the dead path. Operators
-    * register their memo-clear here at object init — an operator whose
-    * object was never loaded has no memo to clear, so firing only the
-    * registered hooks is exactly sufficient. */
-  private val invalidationHooks =
-    new java.util.concurrent.CopyOnWriteArrayList[() => Unit]()
-  def registerInvalidationHook(h: () => Unit): Unit =
-    invalidationHooks.add(h)
-  private def fireInvalidationHooks(): Unit =
-    invalidationHooks.asScala.foreach(h => h())
-
   /** Forget every in-memory handle (the on-disk stores stay): the spec
     * hook that makes "open a SECOND session and serve with zero
     * rebuild" testable inside one JVM. */
-  private[graft] def dropSessionMemo(): Unit = {
-    memo.clear()
-    fireInvalidationHooks()
-  }
+  private[graft] def dropSessionMemo(): Unit = memo.clear()
 
   private val ManifestName = "_graft_manifest.properties"
 
@@ -165,14 +152,6 @@ object StoreCatalog {
     StoreHandle(dir.toString, parts, meta)
   }
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      val files = try st.iterator().asScala.toSeq.reverse finally st.close()
-      files.foreach(f =>
-        try Files.deleteIfExists(f) catch { case _: Exception => })
-    }
-
   /** One catalog row: the directory name (= resolution key), manifest
     * facts, and whether the recorded sources still fingerprint-match
     * (current = servable as-is; stale = next resolve rebuilds). */
@@ -214,13 +193,9 @@ object StoreCatalog {
   def gcStale(spark: SparkSession): Seq[String] = {
     val stale = list(spark).filterNot(_.current)
     stale.foreach { s =>
-      deleteRecursively(Paths.get(s.dir))
+      Scratch.deleteRec(Paths.get(s.dir))
       memo.remove(s.key)
     }
-    // operator-level memos may hold the deleted paths — clear them too
-    // (they re-resolve through this catalog, hitting the memo of every
-    // store that survived)
-    if (stale.nonEmpty) fireInvalidationHooks()
     stale.map(_.key)
   }
 
@@ -228,16 +203,15 @@ object StoreCatalog {
     * with (re-bucketing / hierarchy raise publishes under the NEW
     * config's key; the old store stays fingerprint-current, so
     * [[gcStale]] will never collect it — the caller retires it here
-    * once the new layout serves). Clears the session memo and fires
-    * the operator-memo hooks; returns whether the store existed. */
+    * once the new layout serves). Clears the store's session-memo
+    * entry; returns whether the store existed. */
   def drop(spark: SparkSession, family: String, sources: Seq[String],
            config: Seq[(String, String)]): Boolean = {
     val key = keyOf(family, sources, config)
     memo.remove(key)
     val dir = Paths.get(storeRoot(spark)).resolve(key)
     val existed = Files.exists(dir)
-    deleteRecursively(dir)
-    fireInvalidationHooks()
+    Scratch.deleteRec(dir)
     existed
   }
 
@@ -267,13 +241,13 @@ object StoreCatalog {
     * directory and returns the meta map to persist; it runs at most
     * once per (key, fingerprint) ACROSS SESSIONS — the whole point.
     *
-    * Memo hits RE-VALIDATE the source fingerprint (one stat walk +
+    * Every serve calls this — no operator caches the returned handle —
+    * and memo hits RE-VALIDATE the source fingerprint (one stat walk +
     * 16-byte tail reads — cheap next to any serve): a source
     * regenerated inside this JVM's lifetime flips the fingerprint and
     * falls through to the rebuild path, so "never serves yesterday's
-    * index for today's corpus" holds in-session too. (Operator-level
-    * memos above this catalog remain same-fingerprint caches; they are
-    * cleared by [[gcStale]]/[[drop]] via the registered hooks.) */
+    * index for today's corpus" holds in-session too, and a store
+    * [[gcStale]] or [[drop]] deleted is rebuilt, never served dead. */
   def getOrBuild(spark: SparkSession, family: String, sources: Seq[String],
                  config: Seq[(String, String)], parts: Seq[String])
                 (build: Map[String, String] => Map[String, String]): StoreHandle = {
@@ -310,7 +284,7 @@ object StoreCatalog {
         val meta =
           try build(partDirs)
           catch {
-            case e: Throwable => deleteRecursively(staging); throw e
+            case e: Throwable => Scratch.deleteRec(staging); throw e
           }
         val props = new java.util.Properties()
         props.setProperty("family", family)
@@ -351,7 +325,7 @@ object StoreCatalog {
         if (Files.exists(finalDir)) {
           val trash = root.resolve(s".trash-$key-${staging.getFileName}-$attempt")
           Files.move(finalDir, trash, StandardCopyOption.ATOMIC_MOVE)
-          deleteRecursively(trash)
+          Scratch.deleteRec(trash)
         }
         Files.move(staging, finalDir, StandardCopyOption.ATOMIC_MOVE)
         return handleFrom(finalDir, loadManifest(finalDir).get)
@@ -366,7 +340,7 @@ object StoreCatalog {
         case _: java.nio.file.FileSystemException =>
           loadManifest(finalDir).filter(_.getProperty("fingerprint") == fp) match {
             case Some(props) => // compatible winner — adopt its store
-              deleteRecursively(staging)
+              Scratch.deleteRec(staging)
               return handleFrom(finalDir, props).copy(fingerprint = fp)
             case None if attempt < MaxAttempts =>
               // mid-race window (winner moved the stale store aside but
@@ -374,7 +348,7 @@ object StoreCatalog {
               // then retry with our own staging
               Thread.sleep(25L * attempt)
             case None =>
-              deleteRecursively(staging)
+              Scratch.deleteRec(staging)
               throw new IllegalStateException(
                 s"store $key lost $MaxAttempts publish races to an " +
                   "incompatible build")

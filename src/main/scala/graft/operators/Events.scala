@@ -473,11 +473,8 @@ object Events {
       acc | (((a >> i) & 1) << (2 * i)) | (((b >> i) & 1) << (2 * i + 1))
     }
 
-  private val zStores =
-    new scala.collection.concurrent.TrieMap[String, String]()
-  private[graft] def zStoreFor(dir: String): Option[String] = zStores.get(dir)
-
-  /** Build the Z-ORDERED EVENT STORE once per corpus (memoized): rows
+  /** Build the Z-ORDERED EVENT STORE once per corpus into the
+    * [[graft.StoreCatalog]] (create-if-absent, fingerprint-checked): rows
     * land in `ztile` partitions — contiguous 256-cell z-runs, each a
     * bounded 16×16 rectangle of the (user-bucket, time-bucket) plane,
     * 256 partitions over the 16-bit z-space. This is
@@ -492,8 +489,10 @@ object Events {
     * z-sorted WITHIN each tile, so finer boxes still row-group-skip
     * inside the pruned partitions. */
   private[graft] def buildZStore(spark: SparkSession, dir: String): String =
-    zStores.getOrElseUpdate(dir, {
-      val sd = java.nio.file.Files.createTempDirectory("events_zstore").toString
+    graft.StoreCatalog.getOrBuild(spark, "events_ztiles",
+      Seq(s"$dir/events.parquet"),
+      Seq("tilecells" -> "256"),
+      Seq("tiles")) { parts =>
       Tables.loadWide(spark, dir, "events")
         .withColumn("ub", pmod(col("user_id"), lit(256L)))
         .withColumn("tb", pmod(expr("unix_micros(ts) div 60000000"), lit(256L)))
@@ -502,9 +501,9 @@ object Events {
         .repartition(col("ztile"))
         .sortWithinPartitions(col("ztile"), col("zv"))
         .drop("zv")
-        .write.mode("overwrite").partitionBy("ztile").parquet(sd)
-      sd
-    })
+        .write.mode("overwrite").partitionBy("ztile").parquet(parts("tiles"))
+      Map.empty
+    }.parts("tiles")
 
   /** The pruned tile read — exposed for the plan spec. */
   private[graft] def prunedZTiles(spark: SparkSession, storeDir: String,

@@ -599,17 +599,6 @@ object Similarity {
                    FROM scored WHERE score IS NOT NULL)
         SELECT qid, rn, vec_id, score FROM ranked WHERE rn <= $k"""
 
-  /** Session memo of resolved IVF cell stores per (fixture dir, nCells,
-    * codebook tag) — the store itself lives in the persistent
-    * [[graft.StoreCatalog]] (create-if-absent across JVMs; the tag
-    * separates the seed build from the trained one, whose cell
-    * assignments differ). */
-  private val ivfStores =
-    new scala.collection.concurrent.TrieMap[(String, Int, String), String]()
-  private[graft] def ivfStoreDirFor(dir: String, nCells: Int = 8,
-                                    tag: String = "seed"): Option[String] =
-    ivfStores.get((dir, nCells, tag))
-
   /** The pruned cell read: only the partitions holding the query set's
     * probe cells are listed and scanned — the IVF member of the
     * store-serve family (prunedGraphEdges / prunedHnswEdges), exposed
@@ -641,19 +630,18 @@ object Similarity {
       return Seq.empty[(Long, Int, Long, Double)]
         .toDF("qid", "rn", "vec_id", "score")
     }
-    val storeDir = ivfStores.getOrElseUpdate((dir, nCells, storeTag),
-      graft.StoreCatalog.getOrBuild(spark, "ivf_cells",
-        Seq(s"$dir/embeddings.parquet"),
-        Seq("nCells" -> nCells.toString, "tag" -> storeTag),
-        Seq("cells")) { parts =>
-        emb.select(col("vec_id"), col("embedding"),
-            greatestOf(centScores(col("embedding"), codebook))
-              .getField("cid").cast(IntegerType).as("cell"))
-          .repartition(col("cell")) // one clustered file per cell
-          .sortWithinPartitions(col("cell"), col("vec_id"))
-          .write.mode("overwrite").partitionBy("cell").parquet(parts("cells"))
-        Map.empty
-      }.parts("cells"))
+    val storeDir = graft.StoreCatalog.getOrBuild(spark, "ivf_cells",
+      Seq(s"$dir/embeddings.parquet"),
+      Seq("nCells" -> nCells.toString, "tag" -> storeTag),
+      Seq("cells")) { parts =>
+      emb.select(col("vec_id"), col("embedding"),
+          greatestOf(centScores(col("embedding"), codebook))
+            .getField("cid").cast(IntegerType).as("cell"))
+        .repartition(col("cell")) // one clustered file per cell
+        .sortWithinPartitions(col("cell"), col("vec_id"))
+        .write.mode("overwrite").partitionBy("cell").parquet(parts("cells"))
+      Map.empty
+    }.parts("cells")
     serveIvfFromStore(spark, emb, storeDir, codebook, k, nQueries, nProbe)
   }
 
@@ -1202,14 +1190,6 @@ object Similarity {
         .select(col("qid"), col("vec_id")),
       k, nQueries)
 
-  /** Session memo of resolved PQ code stores per (dir, nCells, m); the
-    * store lives in the persistent [[graft.StoreCatalog]]. */
-  private val pqStores =
-    new scala.collection.concurrent.TrieMap[(String, Int, Int), String]()
-  private[graft] def pqStoreDirFor(dir: String, nCells: Int = 8,
-                                   m: Int = 4): Option[String] =
-    pqStores.get((dir, nCells, m))
-
   /** [[pqRerankTopK]] SERVED from a MATERIALIZED codes-only store — the
     * codes family's at-rest deployment shape (its LSH-bucket / graph /
     * hierarchy / IVF-cell siblings prune partitions; PQ's contract is
@@ -1235,15 +1215,14 @@ object Similarity {
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
     val cslice = pqSlices(codebook, sub)
-    val storeDir = pqStores.getOrElseUpdate((dir, nCells, m),
-      graft.StoreCatalog.getOrBuild(spark, "pq_codes",
-        Seq(s"$dir/embeddings.parquet"),
-        Seq("nCells" -> nCells.toString, "m" -> m.toString),
-        Seq("codes")) { parts =>
-        emb.select(col("vec_id") +: pqCodeCols(cslice, m, sub): _*)
-          .write.mode("overwrite").parquet(parts("codes"))
-        Map.empty
-      }.parts("codes"))
+    val storeDir = graft.StoreCatalog.getOrBuild(spark, "pq_codes",
+      Seq(s"$dir/embeddings.parquet"),
+      Seq("nCells" -> nCells.toString, "m" -> m.toString),
+      Seq("codes")) { parts =>
+      emb.select(col("vec_id") +: pqCodeCols(cslice, m, sub): _*)
+        .write.mode("overwrite").parquet(parts("codes"))
+      Map.empty
+    }.parts("codes")
     servePqFromStore(spark, dir, emb, storeDir, cslice, m, sub,
       k, nQueries, budget)
   }
@@ -1316,11 +1295,12 @@ object Similarity {
   private[graft] val D384N = 400
   private val d384Dirs =
     new scala.collection.concurrent.TrieMap[String, String]()
-  /** The persisted synthetic dim-384 corpus (one parquet per session —
-    * harness staging, not a query path). */
+  /** The persisted synthetic dim-384 corpus (one parquet per JVM under
+    * [[graft.Scratch]], deleted at exit — harness staging, not a query
+    * path). */
   private[graft] def d384Dir(spark: SparkSession): String =
     d384Dirs.getOrElseUpdate("d384", {
-      val dir = java.nio.file.Files.createTempDirectory("graft_d384").toString
+      val dir = graft.Scratch.dir("graft_d384").toString
       spark.range(D384N)
         .select(col("id").as("vec_id"),
           transform(sequence(lit(0), lit(383)), j =>
@@ -1777,16 +1757,7 @@ object Similarity {
       .orderBy(col("qid"), col("rn"))
   }
 
-  /** Session memo of resolved graph stores per (fixture dir, deg); the
-    * store lives in the persistent [[graft.StoreCatalog]] (keyed on the
-    * index config so a non-default deg never serves the default
-    * build). */
-  private val graphStores =
-    new scala.collection.concurrent.TrieMap[(String, Int, Int), String]()
   private[graft] val GraphStoreBuckets = 64
-  private[graft] def graphStoreDirFor(dir: String, deg: Int = 8,
-                                      buckets: Int = GraphStoreBuckets): Option[String] =
-    graphStores.get((dir, deg, buckets))
 
   /** Collect the superstep's beam ONCE — O(nQueries·width) (qid, node)
     * rows, the bounded driver-control-state class — returning the rows
@@ -1854,24 +1825,23 @@ object Similarity {
   private[graft] def buildGraphStore(spark: SparkSession, dir: String,
                                      deg: Int,
                                      buckets: Int = GraphStoreBuckets): String =
-    graphStores.getOrElseUpdate((dir, deg, buckets),
-      graft.StoreCatalog.getOrBuild(spark, "knn_graph",
-        Seq(s"$dir/embeddings.parquet"),
-        Seq("deg" -> deg.toString,
-          "buckets" -> buckets.toString),
-        Seq("edges")) { parts =>
-        val emb = Tables.loadWide(spark, dir, "embeddings")
-        knnGraph(spark, dir, deg)
-          .select(col("src"), col("dst"))
-          .join(emb.select(col("vec_id").as("dst"), col("embedding").as("dst_emb")),
-            "dst")
-          .withColumn("gbucket",
-            pmod(col("src"), lit(buckets.toLong)).cast(IntegerType))
-          .repartition(col("gbucket")) // one file per bucket, src-sorted
-          .sortWithinPartitions(col("gbucket"), col("src"))
-          .write.mode("overwrite").partitionBy("gbucket").parquet(parts("edges"))
-        Map.empty
-      }.parts("edges"))
+    graft.StoreCatalog.getOrBuild(spark, "knn_graph",
+      Seq(s"$dir/embeddings.parquet"),
+      Seq("deg" -> deg.toString,
+        "buckets" -> buckets.toString),
+      Seq("edges")) { parts =>
+      val emb = Tables.loadWide(spark, dir, "embeddings")
+      knnGraph(spark, dir, deg)
+        .select(col("src"), col("dst"))
+        .join(emb.select(col("vec_id").as("dst"), col("embedding").as("dst_emb")),
+          "dst")
+        .withColumn("gbucket",
+          pmod(col("src"), lit(buckets.toLong)).cast(IntegerType))
+        .repartition(col("gbucket")) // one file per bucket, src-sorted
+        .sortWithinPartitions(col("gbucket"), col("src"))
+        .write.mode("overwrite").partitionBy("gbucket").parquet(parts("edges"))
+      Map.empty
+    }.parts("edges")
 
   /** CATALOG-MANAGED RE-BUCKETING of the k-NN edge store — the
     * store-growth knob every bucket-partitioned layout documents
@@ -1881,23 +1851,21 @@ object Similarity {
     * rebuild, no embedding scan), built under the NEW config's key via
     * the catalog's staging + atomic publish (crash-safe, race-safe),
     * and the old store keeps serving until the caller retires it with
-    * [[graft.StoreCatalog.drop]] — which also clears the operator
-    * memos, so nothing can read the dead layout. Serve continuity is
-    * spec-pinned: the widened store serves byte-identical walks. */
+    * [[graft.StoreCatalog.drop]]. Serve continuity is spec-pinned: the
+    * widened store serves byte-identical walks. */
   def rebucketGraphStore(spark: SparkSession, dir: String, deg: Int = 8,
                          newBuckets: Int = 256): String = {
     val oldDir = buildGraphStore(spark, dir, deg)
-    graphStores.getOrElseUpdate((dir, deg, newBuckets),
-      graft.StoreCatalog.getOrBuild(spark, "knn_graph",
-        Seq(s"$dir/embeddings.parquet"),
-        Seq("deg" -> deg.toString,
-          "buckets" -> newBuckets.toString),
-        Seq("edges")) { parts =>
-        Sinks.rebucketPartitioned(spark, oldDir, parts("edges"), "gbucket",
-          pmod(col("src"), lit(newBuckets.toLong)).cast(IntegerType),
-          Seq("src"))
-        Map.empty
-      }.parts("edges"))
+    graft.StoreCatalog.getOrBuild(spark, "knn_graph",
+      Seq(s"$dir/embeddings.parquet"),
+      Seq("deg" -> deg.toString,
+        "buckets" -> newBuckets.toString),
+      Seq("edges")) { parts =>
+      Sinks.rebucketPartitioned(spark, oldDir, parts("edges"), "gbucket",
+        pmod(col("src"), lit(newBuckets.toLong)).cast(IntegerType),
+        Seq("src"))
+      Map.empty
+    }.parts("edges")
   }
 
   /** The descent itself, off an explicit edge store at an explicit
@@ -2255,25 +2223,6 @@ object Similarity {
       .orderBy(col("qid"), col("rn"))
   }
 
-  /** Session memo of resolved HNSW hierarchy stores per (fixture dir,
-    * deg, level cap) — (store dir, max populated level); the hierarchy
-    * lives in the persistent [[graft.StoreCatalog]], max level in its
-    * manifest. */
-  private val hnswStores =
-    new scala.collection.concurrent.TrieMap[(String, Int, Int), (String, Int)]()
-  private[graft] def hnswStoreFor(dir: String, deg: Int = 8,
-                                  cap: Int = 2): Option[(String, Int)] =
-    hnswStores.get((dir, deg, cap))
-
-  /** Forget this session's resolved store handles (catalog + disk stay):
-    * the cross-session spec's fresh-JVM simulation hook, ALSO fired by
-    * the catalog when it deletes stores (gcStale/drop) so these memos
-    * can't serve a dead path. */
-  private[graft] def dropStoreMemos(): Unit = {
-    ivfStores.clear(); pqStores.clear(); graphStores.clear(); hnswStores.clear()
-  }
-  graft.StoreCatalog.registerInvalidationHook(() => dropStoreMemos())
-
   /** The pruned hierarchy read: ONE layer, frontier-many buckets. Both
     * `lvl` and `gbucket` are partition columns, so the equality and the
     * isin prune directory listings before any bytes are read — a
@@ -2293,42 +2242,41 @@ object Similarity {
     * The per-layer count()s are paid HERE, once per index lifetime,
     * not per query. Returns (store dir, max populated level). */
   private[graft] def buildHnswStore(spark: SparkSession, dir: String,
-                                    deg: Int, cap: Int = 2): (String, Int) =
-    hnswStores.getOrElseUpdate((dir, deg, cap), {
-      val h = graft.StoreCatalog.getOrBuild(spark, "hnsw_hierarchy",
-        Seq(s"$dir/embeddings.parquet"),
-        Seq("deg" -> deg.toString,
-          "buckets" -> GraphStoreBuckets.toString,
-          "maxcap" -> cap.toString),
-        Seq("edges")) { parts =>
-        val emb = Tables.loadWide(spark, dir, "embeddings")
-        val lvl = emb.select(col("vec_id"), col("embedding"),
-          hnswLevelCol(col("vec_id"), cap).as("lvl")).localCheckpoint(true)
-        val maxl = lvl.agg(max(col("lvl"))).collect()(0).getInt(0)
-        val dstEmb = emb.select(col("vec_id").as("dst"),
-          col("embedding").as("dst_emb"))
-        val layers = (0 to maxl).map { l =>
-          val nodes = lvl.filter(col("lvl") >= l)
-            .select(col("vec_id"), col("embedding"))
-          knnGraphFrom(nodes, deg, adaptiveBits(nodes.count()))
-            .select(col("src"), col("dst"))
-            .join(dstEmb, "dst")
-            .select(col("src"), col("dst"), col("dst_emb"),
-              lit(l).as("lvl"))
-        }
-        layers.reduce(_ unionByName _)
-          .withColumn("gbucket",
-            pmod(col("src"), lit(GraphStoreBuckets.toLong)).cast(IntegerType))
-          .repartition(col("lvl"), col("gbucket")) // one file per partition
-          .sortWithinPartitions(col("lvl"), col("gbucket"), col("src"))
-          .write.mode("overwrite").partitionBy("lvl", "gbucket")
-          .parquet(parts("edges"))
-        // max populated level is store METADATA fixed at build — a serve
-        // session reads it from the manifest, never recomputes it
-        Map("maxl" -> maxl.toString)
+                                    deg: Int, cap: Int = 2): (String, Int) = {
+    val h = graft.StoreCatalog.getOrBuild(spark, "hnsw_hierarchy",
+      Seq(s"$dir/embeddings.parquet"),
+      Seq("deg" -> deg.toString,
+        "buckets" -> GraphStoreBuckets.toString,
+        "maxcap" -> cap.toString),
+      Seq("edges")) { parts =>
+      val emb = Tables.loadWide(spark, dir, "embeddings")
+      val lvl = emb.select(col("vec_id"), col("embedding"),
+        hnswLevelCol(col("vec_id"), cap).as("lvl")).localCheckpoint(true)
+      val maxl = lvl.agg(max(col("lvl"))).collect()(0).getInt(0)
+      val dstEmb = emb.select(col("vec_id").as("dst"),
+        col("embedding").as("dst_emb"))
+      val layers = (0 to maxl).map { l =>
+        val nodes = lvl.filter(col("lvl") >= l)
+          .select(col("vec_id"), col("embedding"))
+        knnGraphFrom(nodes, deg, adaptiveBits(nodes.count()))
+          .select(col("src"), col("dst"))
+          .join(dstEmb, "dst")
+          .select(col("src"), col("dst"), col("dst_emb"),
+            lit(l).as("lvl"))
       }
-      (h.parts("edges"), h.meta("maxl").toInt)
-    })
+      layers.reduce(_ unionByName _)
+        .withColumn("gbucket",
+          pmod(col("src"), lit(GraphStoreBuckets.toLong)).cast(IntegerType))
+        .repartition(col("lvl"), col("gbucket")) // one file per partition
+        .sortWithinPartitions(col("lvl"), col("gbucket"), col("src"))
+        .write.mode("overwrite").partitionBy("lvl", "gbucket")
+        .parquet(parts("edges"))
+      // max populated level is store METADATA fixed at build — a serve
+      // session reads it from the manifest, never recomputes it
+      Map("maxl" -> maxl.toString)
+    }
+    (h.parts("edges"), h.meta("maxl").toInt)
+  }
 
   /** HIERARCHY REWRITE: RAISE THE LEVEL CAP — the production control
     * SCALE_PROBE documents for the growing top layer (the descent's
@@ -2352,39 +2300,37 @@ object Similarity {
                         fromCap: Int = 2, toCap: Int = 3): (String, Int) = {
     require(toCap > fromCap, s"toCap $toCap must exceed fromCap $fromCap")
     val (oldDir, oldMaxl) = buildHnswStore(spark, dir, deg, fromCap)
-    hnswStores.getOrElseUpdate((dir, deg, toCap), {
-      val h = graft.StoreCatalog.getOrBuild(spark, "hnsw_hierarchy",
-        Seq(s"$dir/embeddings.parquet"),
-        Seq("deg" -> deg.toString,
-          "buckets" -> GraphStoreBuckets.toString,
-          "maxcap" -> toCap.toString),
-        Seq("edges")) { parts =>
-        linkTree(java.nio.file.Paths.get(oldDir),
-          java.nio.file.Paths.get(parts("edges")))
-        val emb = Tables.loadWide(spark, dir, "embeddings")
-        val lvl = emb.select(col("vec_id"), col("embedding"),
-          hnswLevelCol(col("vec_id"), toCap).as("lvl")).localCheckpoint(true)
-        val newMaxl = lvl.agg(max(col("lvl"))).collect()(0).getInt(0)
-        val dstEmb = emb.select(col("vec_id").as("dst"),
-          col("embedding").as("dst_emb"))
-        ((oldMaxl + 1) to newMaxl).foreach { l =>
-          val nodes = lvl.filter(col("lvl") >= l)
-            .select(col("vec_id"), col("embedding"))
-          knnGraphFrom(nodes, deg, adaptiveBits(nodes.count()))
-            .select(col("src"), col("dst"))
-            .join(dstEmb, "dst")
-            .select(col("src"), col("dst"), col("dst_emb"), lit(l).as("lvl"))
-            .withColumn("gbucket",
-              pmod(col("src"), lit(GraphStoreBuckets.toLong)).cast(IntegerType))
-            .repartition(col("gbucket"))
-            .sortWithinPartitions(col("gbucket"), col("src"))
-            .write.mode("append").partitionBy("lvl", "gbucket")
-            .parquet(parts("edges"))
-        }
-        Map("maxl" -> newMaxl.toString)
+    val h = graft.StoreCatalog.getOrBuild(spark, "hnsw_hierarchy",
+      Seq(s"$dir/embeddings.parquet"),
+      Seq("deg" -> deg.toString,
+        "buckets" -> GraphStoreBuckets.toString,
+        "maxcap" -> toCap.toString),
+      Seq("edges")) { parts =>
+      linkTree(java.nio.file.Paths.get(oldDir),
+        java.nio.file.Paths.get(parts("edges")))
+      val emb = Tables.loadWide(spark, dir, "embeddings")
+      val lvl = emb.select(col("vec_id"), col("embedding"),
+        hnswLevelCol(col("vec_id"), toCap).as("lvl")).localCheckpoint(true)
+      val newMaxl = lvl.agg(max(col("lvl"))).collect()(0).getInt(0)
+      val dstEmb = emb.select(col("vec_id").as("dst"),
+        col("embedding").as("dst_emb"))
+      ((oldMaxl + 1) to newMaxl).foreach { l =>
+        val nodes = lvl.filter(col("lvl") >= l)
+          .select(col("vec_id"), col("embedding"))
+        knnGraphFrom(nodes, deg, adaptiveBits(nodes.count()))
+          .select(col("src"), col("dst"))
+          .join(dstEmb, "dst")
+          .select(col("src"), col("dst"), col("dst_emb"), lit(l).as("lvl"))
+          .withColumn("gbucket",
+            pmod(col("src"), lit(GraphStoreBuckets.toLong)).cast(IntegerType))
+          .repartition(col("gbucket"))
+          .sortWithinPartitions(col("gbucket"), col("src"))
+          .write.mode("append").partitionBy("lvl", "gbucket")
+          .parquet(parts("edges"))
       }
-      (h.parts("edges"), h.meta("maxl").toInt)
-    })
+      Map("maxl" -> newMaxl.toString)
+    }
+    (h.parts("edges"), h.meta("maxl").toInt)
   }
 
   private def linkTree(src: java.nio.file.Path,

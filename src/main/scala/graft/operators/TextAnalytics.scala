@@ -739,18 +739,6 @@ object TextAnalytics {
     * store rewrite. */
   private[graft] val PostingsBuckets = 64
 
-  private val bm25Stores =
-    new scala.collection.concurrent.TrieMap[(String, Int), (String, String)]()
-  private[graft] def bm25StoreFor(dir: String,
-      buckets: Int = PostingsBuckets): Option[(String, String)] =
-    bm25Stores.get((dir, buckets))
-
-  /** Forget this session's resolved store handles (catalog + disk stay):
-    * the cross-session spec's fresh-JVM simulation hook, ALSO fired by
-    * the catalog when it deletes stores (gcStale/drop). */
-  private[graft] def dropStoreMemos(): Unit = bm25Stores.clear()
-  graft.StoreCatalog.registerInvalidationHook(() => dropStoreMemos())
-
   /** Driver-side twin of the native polyHash bucket — produces the
     * query's bucket set (O(nTerms) ints of control state) for the
     * static partition filter. Must stay formula-identical to
@@ -760,7 +748,7 @@ object TextAnalytics {
     (t.codePoints().toArray.foldLeft(0L)((acc, cp) =>
       (acc * 31 + cp) % Dedup.P) % buckets).toInt
 
-  /** Build the postings + doc-length stores ONCE per corpus (memoized):
+  /** Build the postings + doc-length stores ONCE per corpus:
     * postings = (word, doc_id, tf) clustered into term-hash bucket
     * partitions and sorted by (word, doc_id) within each — a query
     * term's rows are one directory listing + a word-range row-group
@@ -770,30 +758,29 @@ object TextAnalytics {
     * [[graft.StoreCatalog]] — built once per corpus LIFETIME, served by
     * any later session with zero rebuild. */
   private[graft] def buildBm25Store(spark: SparkSession,
-                                    dir: String): (String, String) =
-    bm25Stores.getOrElseUpdate((dir, PostingsBuckets), {
-      val h = graft.StoreCatalog.getOrBuild(spark, "bm25_postings",
-        Seq(s"$dir/documents.parquet"),
-        Seq("buckets" -> PostingsBuckets.toString),
-        Seq("postings", "docs")) { parts =>
-        val tokens = Tables.loadWide(spark, dir, "documents")
-          .select(col("doc_id"), explode(words(col("text"))).as("word"))
-          .filter(col("word") =!= "")
-        tokens.groupBy(col("word"), col("doc_id"))
-          .agg(count(lit(1)).as("tf"))
-          .withColumn("tbucket",
-            pmod(Dedup.chash(col("word")), lit(PostingsBuckets.toLong))
-              .cast(org.apache.spark.sql.types.IntegerType))
-          .repartition(col("tbucket"))
-          .sortWithinPartitions(col("tbucket"), col("word"), col("doc_id"))
-          .write.mode("overwrite").partitionBy("tbucket")
-          .parquet(parts("postings"))
-        tokens.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-          .coalesce(1).write.mode("overwrite").parquet(parts("docs"))
-        Map.empty
-      }
-      (h.parts("postings"), h.parts("docs"))
-    })
+                                    dir: String): (String, String) = {
+    val h = graft.StoreCatalog.getOrBuild(spark, "bm25_postings",
+      Seq(s"$dir/documents.parquet"),
+      Seq("buckets" -> PostingsBuckets.toString),
+      Seq("postings", "docs")) { parts =>
+      val tokens = Tables.loadWide(spark, dir, "documents")
+        .select(col("doc_id"), explode(words(col("text"))).as("word"))
+        .filter(col("word") =!= "")
+      tokens.groupBy(col("word"), col("doc_id"))
+        .agg(count(lit(1)).as("tf"))
+        .withColumn("tbucket",
+          pmod(Dedup.chash(col("word")), lit(PostingsBuckets.toLong))
+            .cast(org.apache.spark.sql.types.IntegerType))
+        .repartition(col("tbucket"))
+        .sortWithinPartitions(col("tbucket"), col("word"), col("doc_id"))
+        .write.mode("overwrite").partitionBy("tbucket")
+        .parquet(parts("postings"))
+      tokens.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
+        .coalesce(1).write.mode("overwrite").parquet(parts("docs"))
+      Map.empty
+    }
+    (h.parts("postings"), h.parts("docs"))
+  }
 
   /** CATALOG-MANAGED RE-BUCKETING of the postings store — the
     * term-bucket sibling of [[graft.operators.Similarity
@@ -807,21 +794,19 @@ object TextAnalytics {
   def rebucketBm25Store(spark: SparkSession, dir: String,
                         newBuckets: Int = 256): (String, String) = {
     val (pd, dd) = buildBm25Store(spark, dir)
-    bm25Stores.getOrElseUpdate((dir, newBuckets), {
-      val h = graft.StoreCatalog.getOrBuild(spark, "bm25_postings",
-        Seq(s"$dir/documents.parquet"),
-        Seq("buckets" -> newBuckets.toString),
-        Seq("postings", "docs")) { parts =>
-        Sinks.rebucketPartitioned(spark, pd, parts("postings"), "tbucket",
-          pmod(Dedup.chash(col("word")), lit(newBuckets.toLong))
-            .cast(org.apache.spark.sql.types.IntegerType),
-          Seq("word", "doc_id"))
-        graft.StoreCatalog.linkTree(java.nio.file.Paths.get(dd),
-          java.nio.file.Paths.get(parts("docs")))
-        Map.empty
-      }
-      (h.parts("postings"), h.parts("docs"))
-    })
+    val h = graft.StoreCatalog.getOrBuild(spark, "bm25_postings",
+      Seq(s"$dir/documents.parquet"),
+      Seq("buckets" -> newBuckets.toString),
+      Seq("postings", "docs")) { parts =>
+      Sinks.rebucketPartitioned(spark, pd, parts("postings"), "tbucket",
+        pmod(Dedup.chash(col("word")), lit(newBuckets.toLong))
+          .cast(org.apache.spark.sql.types.IntegerType),
+        Seq("word", "doc_id"))
+      graft.StoreCatalog.linkTree(java.nio.file.Paths.get(dd),
+        java.nio.file.Paths.get(parts("docs")))
+      Map.empty
+    }
+    (h.parts("postings"), h.parts("docs"))
   }
 
   /** The pruned postings read — `tbucket` is the partition column, so

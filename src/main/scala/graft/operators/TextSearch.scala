@@ -59,15 +59,6 @@ object TextSearch {
     * the corpus (≈ nCandidateBuckets/DocBuckets of the text). */
   private[graft] val DocBuckets = 64
 
-  private val trigramStores =
-    new scala.collection.concurrent.TrieMap[(String, Int), (String, String)]()
-  private val prefixStores =
-    new scala.collection.concurrent.TrieMap[String, String]()
-  private[graft] def dropStoreMemos(): Unit = {
-    trigramStores.clear(); prefixStores.clear()
-  }
-  graft.StoreCatalog.registerInvalidationHook(() => dropStoreMemos())
-
   /** Driver-side query trigrams — must stay semantics-identical to
     * [[graft.plans.CharTrigrams]] (code-point windows), then distinct:
     * the candidate test is set containment, multiplicity is
@@ -150,33 +141,32 @@ object TextSearch {
     * posture): verification must NOT re-read the source table, whose
     * layout owes this query class nothing. */
   private[graft] def buildTrigramStore(spark: SparkSession,
-                                       dir: String): (String, String) =
-    trigramStores.getOrElseUpdate((dir, TrigramBuckets), {
-      val h = graft.StoreCatalog.getOrBuild(spark, "trigram_postings",
-        Seq(s"$dir/documents.parquet"),
-        Seq("buckets" -> TrigramBuckets.toString,
-          "docbuckets" -> DocBuckets.toString),
-        Seq("postings", "docs")) { parts =>
-        val docs = Tables.loadWide(spark, dir, "documents")
-        trigramPostings(docs)
-          .withColumn("tgbucket",
-            pmod(Dedup.chash(col("tg")), lit(TrigramBuckets.toLong))
-              .cast(IntegerType))
-          .repartition(col("tgbucket"))
-          .sortWithinPartitions(col("tgbucket"), col("tg"), col("doc_id"))
-          .write.mode("overwrite").partitionBy("tgbucket")
-          .parquet(parts("postings"))
-        docs.select(col("doc_id"), col("text"))
-          .withColumn("dbucket",
-            pmod(col("doc_id"), lit(DocBuckets.toLong)).cast(IntegerType))
-          .repartition(col("dbucket"))
-          .sortWithinPartitions(col("dbucket"), col("doc_id"))
-          .write.mode("overwrite").partitionBy("dbucket")
-          .parquet(parts("docs"))
-        Map.empty
-      }
-      (h.parts("postings"), h.parts("docs"))
-    })
+                                       dir: String): (String, String) = {
+    val h = graft.StoreCatalog.getOrBuild(spark, "trigram_postings",
+      Seq(s"$dir/documents.parquet"),
+      Seq("buckets" -> TrigramBuckets.toString,
+        "docbuckets" -> DocBuckets.toString),
+      Seq("postings", "docs")) { parts =>
+      val docs = Tables.loadWide(spark, dir, "documents")
+      trigramPostings(docs)
+        .withColumn("tgbucket",
+          pmod(Dedup.chash(col("tg")), lit(TrigramBuckets.toLong))
+            .cast(IntegerType))
+        .repartition(col("tgbucket"))
+        .sortWithinPartitions(col("tgbucket"), col("tg"), col("doc_id"))
+        .write.mode("overwrite").partitionBy("tgbucket")
+        .parquet(parts("postings"))
+      docs.select(col("doc_id"), col("text"))
+        .withColumn("dbucket",
+          pmod(col("doc_id"), lit(DocBuckets.toLong)).cast(IntegerType))
+        .repartition(col("dbucket"))
+        .sortWithinPartitions(col("dbucket"), col("doc_id"))
+        .write.mode("overwrite").partitionBy("dbucket")
+        .parquet(parts("docs"))
+      Map.empty
+    }
+    (h.parts("postings"), h.parts("docs"))
+  }
 
   /** CATALOG-MANAGED RE-BUCKETING of the trigram index — the
     * store-growth knob for THIS family: the trigram vocabulary is
@@ -192,22 +182,20 @@ object TextSearch {
   def rebucketTrigramStore(spark: SparkSession, dir: String,
                            newBuckets: Int = 256): (String, String) = {
     val (pd, dd) = buildTrigramStore(spark, dir)
-    trigramStores.getOrElseUpdate((dir, newBuckets), {
-      val h = graft.StoreCatalog.getOrBuild(spark, "trigram_postings",
-        Seq(s"$dir/documents.parquet"),
-        Seq("buckets" -> newBuckets.toString,
-          "docbuckets" -> DocBuckets.toString),
-        Seq("postings", "docs")) { parts =>
-        Sinks.rebucketPartitioned(spark, pd, parts("postings"), "tgbucket",
-          pmod(Dedup.chash(col("tg")), lit(newBuckets.toLong))
-            .cast(IntegerType),
-          Seq("tg", "doc_id"))
-        graft.StoreCatalog.linkTree(java.nio.file.Paths.get(dd),
-          java.nio.file.Paths.get(parts("docs")))
-        Map.empty
-      }
-      (h.parts("postings"), h.parts("docs"))
-    })
+    val h = graft.StoreCatalog.getOrBuild(spark, "trigram_postings",
+      Seq(s"$dir/documents.parquet"),
+      Seq("buckets" -> newBuckets.toString,
+        "docbuckets" -> DocBuckets.toString),
+      Seq("postings", "docs")) { parts =>
+      Sinks.rebucketPartitioned(spark, pd, parts("postings"), "tgbucket",
+        pmod(Dedup.chash(col("tg")), lit(newBuckets.toLong))
+          .cast(IntegerType),
+        Seq("tg", "doc_id"))
+      graft.StoreCatalog.linkTree(java.nio.file.Paths.get(dd),
+        java.nio.file.Paths.get(parts("docs")))
+      Map.empty
+    }
+    (h.parts("postings"), h.parts("docs"))
   }
 
   /** The pruned postings read: `tgbucket` is the partition column so
@@ -371,25 +359,22 @@ object TextSearch {
     * physical order: layout follows query algebra. */
   private[graft] def buildPrefixStore(spark: SparkSession,
                                       dir: String): String =
-    prefixStores.getOrElseUpdate(dir, {
-      val h = graft.StoreCatalog.getOrBuild(spark, "prefix_postings",
-        Seq(s"$dir/documents.parquet"),
-        Seq("layout" -> "first-char-range"),
-        Seq("postings")) { parts =>
-        Tables.loadWide(spark, dir, "documents")
-          .select(col("doc_id"), explode(words(col("text"))).as("word"))
-          .filter(col("word") =!= "")
-          .groupBy(col("word"), col("doc_id"))
-          .agg(count(lit(1)).as("tf"))
-          .withColumn("w0", substring(col("word"), 1, 1))
-          .repartition(col("w0"))
-          .sortWithinPartitions(col("w0"), col("word"), col("doc_id"))
-          .write.mode("overwrite").partitionBy("w0")
-          .parquet(parts("postings"))
-        Map.empty
-      }
-      h.parts("postings")
-    })
+    graft.StoreCatalog.getOrBuild(spark, "prefix_postings",
+      Seq(s"$dir/documents.parquet"),
+      Seq("layout" -> "first-char-range"),
+      Seq("postings")) { parts =>
+      Tables.loadWide(spark, dir, "documents")
+        .select(col("doc_id"), explode(words(col("text"))).as("word"))
+        .filter(col("word") =!= "")
+        .groupBy(col("word"), col("doc_id"))
+        .agg(count(lit(1)).as("tf"))
+        .withColumn("w0", substring(col("word"), 1, 1))
+        .repartition(col("w0"))
+        .sortWithinPartitions(col("w0"), col("word"), col("doc_id"))
+        .write.mode("overwrite").partitionBy("w0")
+        .parquet(parts("postings"))
+      Map.empty
+    }.parts("postings")
 
   /** The pruned prefix read: one first-char directory, then a
     * StartsWith pushed filter over the partition's word-sorted

@@ -714,6 +714,18 @@ object StreamOps {
       .orderBy(col("cohort_week"), col("week_offset"))
   }
 
+  /** The materialized bigram LM for a fixture dir — a persistent
+    * [[graft.StoreCatalog]] store, fingerprint-keyed on the documents
+    * source, so the model trains once per corpus rather than once per
+    * streaming-twin invocation (the bm25/postings store pattern). */
+  private[graft] def lmModelStoreDir(spark: SparkSession, dir: String): String =
+    graft.StoreCatalog.getOrBuild(spark, "lm_model",
+      Seq(s"$dir/documents.parquet"), Seq(), Seq("model")) { parts =>
+      graft.operators.TextAnalytics.lmModel(spark, dir)
+        .coalesce(1).write.mode("overwrite").parquet(parts("model"))
+      Map.empty
+    }.parts("model")
+
   /** STREAM-STATIC model scoring: the bigram LM trains ONCE in batch
     * (materialized — a per-micro-batch re-train would silently hide in
     * a lazy static side) and every streamed document's bigram slots
@@ -723,24 +735,6 @@ object StreamOps {
     * the stream-stream range join; a non-windowed groupBy after the
     * join can't run in append mode). Oracle: the SAME SQL as batch
     * lm_fluency. */
-  /** Session memo of the resolved LM-model store per fixture dir; the
-    * model lives in the persistent [[graft.StoreCatalog]], fingerprint-
-    * keyed on the documents source (r13 — VERDICT item 3: the batch
-    * model trained inside the streaming twin on EVERY invocation; the
-    * "train once" its scaladoc promises is a materialized model, the
-    * bm25/postings store pattern). */
-  private val lmModelStores =
-    new scala.collection.concurrent.TrieMap[String, String]()
-  graft.StoreCatalog.registerInvalidationHook(() => lmModelStores.clear())
-  private[graft] def lmModelStoreDir(spark: SparkSession, dir: String): String =
-    lmModelStores.getOrElseUpdate(dir,
-      graft.StoreCatalog.getOrBuild(spark, "lm_model",
-        Seq(s"$dir/documents.parquet"), Seq(), Seq("model")) { parts =>
-        graft.operators.TextAnalytics.lmModel(spark, dir)
-          .coalesce(1).write.mode("overwrite").parquet(parts("model"))
-        Map.empty
-      }.parts("model"))
-
   def streamLmFluencyQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.TextAnalytics
     val model = broadcast(

@@ -12,6 +12,16 @@ class PlanSpec extends AnyFunSuite {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** The `part` directory of the one catalog store of `family` built over
+    * the fixture's embeddings at `config` (canonical `k=v;k=v` form). */
+  private def embeddingsStorePart(family: String, config: String,
+                                  part: String): String = {
+    val Seq(info) = StoreCatalog.list(spark).filter(i =>
+      i.family == family && i.config == config &&
+        i.sources == Seq(s"$sfDir/embeddings.parquet"))
+    s"${info.dir}/$part"
+  }
+
   test("q1: shipdate filter is pushed to the parquet scan") {
     val p = plan(Analytics.q1Pricing(spark, sfDir))
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"), p)
@@ -282,7 +292,7 @@ class PlanSpec extends AnyFunSuite {
         beamWidth = 2, steps = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     assert(served.nonEmpty && served.toSeq == inPlan.toSeq)
-    val storeDir = Similarity.graphStoreDirFor(sfDir).get
+    val storeDir = Similarity.buildGraphStore(spark, sfDir, 8)
     val pruned = Similarity.prunedGraphEdges(spark, storeDir, Seq(3, 7))
     val p = pruned.queryExecution.executedPlan.toString
     val pf = p.linesIterator.filter(_.contains("PartitionFilters:")).mkString("\n")
@@ -302,7 +312,7 @@ class PlanSpec extends AnyFunSuite {
         stepsUpper = 2, beamWidth = 2, steps = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     assert(served.nonEmpty && served.toSeq == inPlan.toSeq)
-    val (storeDir, maxl) = Similarity.hnswStoreFor(sfDir).get
+    val (storeDir, maxl) = Similarity.buildHnswStore(spark, sfDir, 8)
     assert(maxl >= 0)
     val pruned = Similarity.prunedHnswEdges(spark, storeDir, 0, Seq(3, 7))
     val p = pruned.queryExecution.executedPlan.toString
@@ -325,7 +335,8 @@ class PlanSpec extends AnyFunSuite {
     val inPlan = Similarity.ivfTopK(spark, sfDir, nQueries = 5)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     assert(served.nonEmpty && served.toSeq == inPlan.toSeq)
-    val storeDir = Similarity.ivfStoreDirFor(sfDir).get
+    val storeDir = embeddingsStorePart("ivf_cells", "nCells=8;tag=seed",
+      "cells")
     val pruned = Similarity.prunedIvfCells(spark, storeDir, Seq(1, 4))
     val p = pruned.queryExecution.executedPlan.toString
     val pf = p.linesIterator.filter(_.contains("PartitionFilters:")).mkString("\n")
@@ -343,7 +354,8 @@ class PlanSpec extends AnyFunSuite {
     assert(served.nonEmpty && served.toSeq == inPlan.toSeq)
     // the at-rest claim: the store holds vec_id + m integer codes and
     // nothing else — the float vectors never landed in the index
-    val schema = spark.read.parquet(Similarity.pqStoreDirFor(sfDir).get).schema
+    val schema = spark.read.parquet(
+      embeddingsStorePart("pq_codes", "m=4;nCells=8", "codes")).schema
     assert(schema.fieldNames.toSet == Set("vec_id", "code0", "code1", "code2", "code3"),
       schema.treeString)
     assert(!schema.exists(_.dataType.typeName.contains("array")), schema.treeString)
@@ -479,7 +491,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.expressions.Window
     val nQueries = 3
     val beamWidth = 2
-    val storeDir = Similarity.graphStoreDirFor(sfDir).get
+    val storeDir = Similarity.buildGraphStore(spark, sfDir, 8)
     val emb = graft.Tables.loadWide(spark, sfDir, "embeddings")
     val n = emb.count()
     val gb = Similarity.GraphStoreBuckets.toLong

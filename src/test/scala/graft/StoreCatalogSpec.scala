@@ -14,12 +14,6 @@ import graft.operators.{Similarity, TextAnalytics}
 class StoreCatalogSpec extends AnyFunSuite {
   import TestSession.spark
 
-  private def dropAllMemos(): Unit = {
-    Similarity.dropStoreMemos()
-    TextAnalytics.dropStoreMemos()
-    StoreCatalog.dropSessionMemo()
-  }
-
   test("a SECOND session serves hnsw/bm25/ivf/graph/pq stores from disk " +
     "with zero rebuild and identical results") {
     val dir = TestSession.sfDir
@@ -27,7 +21,7 @@ class StoreCatalogSpec extends AnyFunSuite {
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
-    dropAllMemos()
+    StoreCatalog.dropSessionMemo()
     try {
       def runAll(s: org.apache.spark.sql.SparkSession) = Map(
         "hnsw" -> Similarity.hnswSearchFromStore(s, dir, nQueries = 3,
@@ -59,7 +53,7 @@ class StoreCatalogSpec extends AnyFunSuite {
       }
 
       // "fresh JVM": drop every in-memory handle, open a SECOND session
-      dropAllMemos()
+      StoreCatalog.dropSessionMemo()
       val session2 = spark.newSession()
       session2.conf.set(key, root)
       val served = runAll(session2)
@@ -67,7 +61,7 @@ class StoreCatalogSpec extends AnyFunSuite {
         "a second session rebuilt a store the catalog already holds")
       assert(served == built, "served results differ from the build session")
     } finally {
-      dropAllMemos()
+      StoreCatalog.dropSessionMemo()
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
@@ -205,6 +199,48 @@ class StoreCatalogSpec extends AnyFunSuite {
     }
   }
 
+  test("operator serves see an in-session source rewrite: bm25 and ivf " +
+    "rebuild their store once and equal the in-plan twin on the new rows") {
+    type Q = (org.apache.spark.sql.SparkSession, String) =>
+      Seq[org.apache.spark.sql.Row]
+    // (name, source table, id column, store serve, in-plan twin)
+    val cases = Seq[(String, String, String, Q, Q)](
+      ("bm25", "documents", "doc_id",
+        (s, d) => TextAnalytics.bm25SearchFromStore(s, d).collect().toSeq,
+        (s, d) => TextAnalytics.bm25Search(s, d).collect().toSeq),
+      ("ivf", "embeddings", "vec_id",
+        (s, d) => Similarity.ivfTopKFromStore(s, d, nQueries = 5)
+          .collect().toSeq,
+        (s, d) => Similarity.ivfTopK(s, d, nQueries = 5).collect().toSeq))
+    val root = Files.createTempDirectory("catalog_rewrite_root").toString
+    val key = "spark.graft.storeRoot"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, root)
+    StoreCatalog.dropSessionMemo()
+    try cases.foreach { case (name, table, id, served, twin) =>
+      val dir = Files.createTempDirectory(s"catalog_rewrite_$name")
+      StoreCatalog.linkTree(Paths.get(TestSession.sfDir), dir)
+      val before = served(spark, dir.toString)
+      // regenerate the source with a different row set
+      spark.read.parquet(s"${TestSession.sfDir}/$table.parquet")
+        .filter(col(id) % 3 =!= 2)
+        .write.mode("overwrite").parquet(s"$dir/$table.parquet")
+      val b0 = StoreCatalog.buildCount.get()
+      val after = served(spark, dir.toString)
+      assert(StoreCatalog.buildCount.get() == b0 + 1,
+        s"$name: the rewritten source did not rebuild its store")
+      assert(after != before, s"$name: the rewrite did not change the answer")
+      assert(after == twin(spark, dir.toString),
+        s"$name: the serve answered from the pre-rewrite store")
+    } finally {
+      StoreCatalog.dropSessionMemo()
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
   test("fingerprint sees a content change even at identical (size, mtime): " +
     "the tail sentinel catches same-millisecond regeneration") {
     val src = Files.createTempDirectory("catalog_sentinel_src")
@@ -222,14 +258,12 @@ class StoreCatalogSpec extends AnyFunSuite {
     assert(fp3 != fp2)
   }
 
-  test("gcStale and drop fire the registered operator-memo hooks; drop " +
-    "retires a CURRENT store by exact (family, sources, config)") {
+  test("gcStale leaves CURRENT stores alone; drop retires a CURRENT " +
+    "store by exact (family, sources, config)") {
     val root = Files.createTempDirectory("catalog_drop_root").toString
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
-    var fired = 0
-    StoreCatalog.registerInvalidationHook(() => fired += 1)
     try {
       val src = Files.createTempDirectory("catalog_drop_src")
       Files.write(src.resolve("d"), "d".getBytes)
@@ -243,23 +277,22 @@ class StoreCatalogSpec extends AnyFunSuite {
       build(Seq("buckets" -> "256")) // the re-bucketed layout
       assert(StoreCatalog.list(spark).size == 2)
       // both stores are fingerprint-CURRENT: gcStale must not touch them
-      val f0 = fired
-      assert(StoreCatalog.gcStale(spark).isEmpty && fired == f0)
-      // retiring the old layout is drop's job — exact key, hooks fired
+      assert(StoreCatalog.gcStale(spark).isEmpty)
+      assert(StoreCatalog.list(spark).size == 2)
+      // retiring the old layout is drop's job — exact key
       assert(StoreCatalog.drop(spark, "dropfam", Seq(src.toString),
         Seq("buckets" -> "64")))
-      assert(fired == f0 + 1, "drop did not fire invalidation hooks")
       val left = StoreCatalog.list(spark)
       assert(left.size == 1 && left.head.config.contains("buckets=256"))
       // dropping a store that is already gone reports false
       assert(!StoreCatalog.drop(spark, "dropfam", Seq(src.toString),
         Seq("buckets" -> "64")))
-      // gcStale on a stale store fires hooks too
+      // once the source changes, gcStale collects the survivor
       Files.setLastModifiedTime(src.resolve("d"),
         java.nio.file.attribute.FileTime.fromMillis(
           Files.getLastModifiedTime(src.resolve("d")).toMillis + 5000))
-      val f1 = fired
-      assert(StoreCatalog.gcStale(spark).size == 1 && fired == f1 + 1)
+      assert(StoreCatalog.gcStale(spark).size == 1)
+      assert(StoreCatalog.list(spark).isEmpty)
     } finally {
       StoreCatalog.dropSessionMemo()
       prev match {
@@ -336,11 +369,11 @@ class StoreCatalogSpec extends AnyFunSuite {
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
-    dropAllMemos()
+    StoreCatalog.dropSessionMemo()
     try {
       val r1 = Similarity.graphBeamSearchFromStore(spark, dir, nQueries = 3,
         beamWidth = 2, steps = 2).collect().toSeq
-      val oldDir = Similarity.graphStoreDirFor(dir).get
+      val oldDir = Similarity.buildGraphStore(spark, dir, 8)
       val newDir = Similarity.rebucketGraphStore(spark, dir, 8, 256)
       // the widened layout spans buckets beyond the old width
       val buckets = new java.io.File(newDir).list()
@@ -350,14 +383,11 @@ class StoreCatalogSpec extends AnyFunSuite {
       val r2 = Similarity.graphBeamServeFrom(spark, dir, newDir, 256,
         nQueries = 3, beamWidth = 2, steps = 2).collect().toSeq
       assert(r2 == r1)
-      // retire the old layout — fingerprint-current, so this is drop's
-      // job, and the hook clears the operator memo holding oldDir
+      // retire the old layout — fingerprint-current, so this is drop's job
       assert(StoreCatalog.drop(spark, "knn_graph",
         Seq(s"$dir/embeddings.parquet"),
         Seq("deg" -> "8", "buckets" -> "64")))
       assert(!Files.exists(Paths.get(oldDir)), "old layout still on disk")
-      assert(Similarity.graphStoreDirFor(dir).isEmpty,
-        "operator memo still holds the dropped store")
       // the widened store resolves and serves with ZERO rebuild
       val b0 = StoreCatalog.buildCount.get()
       val resolved = Similarity.buildGraphStore(spark, dir, 8, 256)
@@ -365,8 +395,18 @@ class StoreCatalogSpec extends AnyFunSuite {
       val r3 = Similarity.graphBeamServeFrom(spark, dir, resolved, 256,
         nQueries = 3, beamWidth = 2, steps = 2).collect().toSeq
       assert(r3 == r1)
+      // no cached handle outlives the drop: the default-width serve
+      // re-resolves through the catalog, which republishes the dropped
+      // layout instead of reading the deleted directory
+      val b1 = StoreCatalog.buildCount.get()
+      val r4 = Similarity.graphBeamSearchFromStore(spark, dir, nQueries = 3,
+        beamWidth = 2, steps = 2).collect().toSeq
+      assert(r4 == r1)
+      assert(StoreCatalog.buildCount.get() == b1 + 1,
+        "the default-width serve did not rebuild the dropped store")
+      assert(Files.exists(Paths.get(oldDir)))
     } finally {
-      dropAllMemos()
+      StoreCatalog.dropSessionMemo()
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
@@ -383,11 +423,11 @@ class StoreCatalogSpec extends AnyFunSuite {
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
-    dropAllMemos()
+    StoreCatalog.dropSessionMemo()
     try {
       val terms = Seq("vector", "scan", "merge")
       val r1 = TextAnalytics.bm25SearchFromStore(spark, dir).collect().toSeq
-      val (pdOld, ddOld) = TextAnalytics.bm25StoreFor(dir).get
+      val (_, ddOld) = TextAnalytics.buildBm25Store(spark, dir)
       val (pd2, dd2) = TextAnalytics.rebucketBm25Store(spark, dir, 256)
       // serve continuity at the widened width
       val r2 = TextAnalytics.serveBm25(spark, dir,
@@ -423,7 +463,7 @@ class StoreCatalogSpec extends AnyFunSuite {
         spark.read.parquet(h.parts("docs")), terms, 20).collect().toSeq
       assert(r3 == r1)
     } finally {
-      dropAllMemos()
+      StoreCatalog.dropSessionMemo()
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
@@ -439,7 +479,7 @@ class StoreCatalogSpec extends AnyFunSuite {
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
-    dropAllMemos()
+    StoreCatalog.dropSessionMemo()
     try {
       val (d1, maxl1) = Similarity.buildHnswStore(spark, dir, 8, cap = 1)
       assert(maxl1 == 1, s"fixture should populate level 1, got $maxl1")
@@ -519,7 +559,7 @@ class StoreCatalogSpec extends AnyFunSuite {
       assert(Files.exists(f2) && Files.isSameFile(f1, f2),
         "base layer was copied, not hardlinked")
     } finally {
-      dropAllMemos()
+      StoreCatalog.dropSessionMemo()
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)

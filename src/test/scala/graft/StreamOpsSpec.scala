@@ -584,7 +584,7 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(streamed.contains((0L, 3L, 0)), s"cross-batch pair missing: $streamed")
     // at-rest layout: band-partitioned directories (the serve path's
     // join key and the membership read's pruning column)
-    val store = new java.io.File("/tmp").listFiles()
+    val store = graft.Scratch.root.toFile.listFiles()
       .filter(_.getName.startsWith("image_hashes")).maxBy(_.lastModified)
     val bands = store.listFiles().filter(_.isDirectory).map(_.getName).sorted
     assert(bands.toSeq == (0 until 4).map(b => s"band=$b"),
