@@ -42,29 +42,33 @@ object Tables {
     }
   }
 
+  /** Approximate scan partitions of `path` from file sizes only (one
+    * driver-side summary call, no job — df.rdd.getNumPartitions would
+    * convert the plan to an RDD at build time for every query), or None
+    * when the file system cannot summarize the path; callers then fall
+    * back to a choice that needs no size. */
+  private[graft] def scanParts(spark: SparkSession, path: String): Option[Long] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
+    try {
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Some(math.max(1L, fs.getContentSummary(p).getLength / maxSplit + 1))
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
   /** Load for compute-heavy per-row operators: when the scan yields far
     * fewer partitions than the cluster has cores (tiny fixture files at
     * test scale: one file = one partition = one busy core out of 32),
     * redistribute up front. At production scale (files >> cores) the
     * guard makes this a no-op — the scan's natural parallelism wins and
-    * no shuffle is added. */
+    * no shuffle is added; so does an unknown size. */
   def loadWide(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = load(spark, dir, name)
     val target = spark.sparkContext.defaultParallelism
-    // scan-parallelism probe from file sizes only (free, driver-side):
-    // the previous df.rdd.getNumPartitions forced an RDD conversion of
-    // the plan at build time for EVERY query
-    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes =
-      try fs.getContentSummary(path).getLength
-      catch { case _: Exception => Long.MaxValue }
-    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    // divide-then-add: the ceil form (bytes + maxSplit - 1) overflows on
-    // the Long.MaxValue failure sentinel and would INVERT the fallback
-    // into a forced full shuffle
-    val approxParts = math.max(1L, bytes / maxSplit + 1)
-    if (approxParts * 2 < target) df.repartition(target) else df
+    scanParts(spark, s"$dir/$name.parquet") match {
+      case Some(parts) if parts * 2 < target => df.repartition(target)
+      case _ => df
+    }
   }
 
   /** [[loadWide]]'s spread in a RANGE layout, globally sorted on `key`
@@ -79,21 +83,16 @@ object Tables {
     *  - the range exchange REPLACES loadWide's round-robin exchange
     *    rather than stacking on it.
     * Same scale guard as loadWide: at production scale the scan's own
-    * parallelism wins the max() and the range shuffle spreads to it. */
+    * parallelism wins the max() and the range shuffle spreads to it;
+    * an unknown size spreads to defaultParallelism. */
   def loadWideSorted(spark: SparkSession, dir: String, name: String,
                      key: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val df = load(spark, dir, name)
     val target = spark.sparkContext.defaultParallelism
-    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes =
-      try fs.getContentSummary(path).getLength
-      catch { case _: Exception => Long.MaxValue }
-    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    val approxParts = math.max(1L, bytes / maxSplit + 1)
-    val n = math.max(target.toLong, approxParts).min(Int.MaxValue).toInt
-    df.repartitionByRange(n, col(key)).sortWithinPartitions(col(key))
+    val n = scanParts(spark, s"$dir/$name.parquet")
+      .fold(target)(parts => math.max(target.toLong, parts).min(Int.MaxValue).toInt)
+    load(spark, dir, name).repartitionByRange(n, col(key))
+      .sortWithinPartitions(col(key))
   }
 
   /** Register every fixture table as a temp view (SQL surface for free). */

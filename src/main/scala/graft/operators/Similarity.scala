@@ -1581,11 +1581,11 @@ object Similarity {
     // EdgeCap whenever the corpus fits NodeCap, so the edge probe
     // cannot waste a build.
     WalkDriver.collectEmb(emb.select(col("vec_id"), col("embedding")))
-      .flatMap { embMap =>
+      .flatMap { case (embMap, n) =>
         WalkDriver.collectAdj(
           knnGraph(spark, dir, deg).select(col("src"), col("dst"))).map { adj =>
           val queries = WalkDriver.queriesOf(embMap, nQueries)
-          val entries = WalkDriver.spreadEntries(embMap.size.toLong, nQueries,
+          val entries = WalkDriver.spreadEntries(n, nQueries,
             nEntries, embMap)
           WalkDriver.greedyResultDF(spark,
             WalkDriver.greedyWalk(queries, entries, embMap, adj, maxSteps))
@@ -1696,11 +1696,11 @@ object Similarity {
     // r13 bounded driver walk — see graphGreedySearch; the distributed
     // superstep loop below is the unchanged above-cap fallback.
     WalkDriver.collectEmb(emb.select(col("vec_id"), col("embedding")))
-      .flatMap { embMap =>
+      .flatMap { case (embMap, n) =>
         WalkDriver.collectAdj(
           knnGraph(spark, dir, deg).select(col("src"), col("dst"))).map { adj =>
           val queries = WalkDriver.queriesOf(embMap, nQueries)
-          val entries = WalkDriver.spreadEntries(embMap.size.toLong, nQueries,
+          val entries = WalkDriver.spreadEntries(n, nQueries,
             nEntries, embMap)
           WalkDriver.beamResultDF(spark,
             WalkDriver.beamWalk(queries, entries, embMap,
@@ -1885,11 +1885,11 @@ object Similarity {
     // superstep serve below is unchanged — at store sizes where pruning
     // matters, that is the path that runs.
     WalkDriver.collectEmb(emb.select(col("vec_id"), col("embedding")))
-      .flatMap { embMap =>
+      .flatMap { case (embMap, n) =>
         WalkDriver.collectAdj(
           spark.read.parquet(storeDir).select(col("src"), col("dst"))).map { adj =>
           val queries = WalkDriver.queriesOf(embMap, nQueries)
-          val entries = WalkDriver.spreadEntries(embMap.size.toLong, nQueries,
+          val entries = WalkDriver.spreadEntries(n, nQueries,
             nEntries, embMap)
           WalkDriver.beamResultDF(spark,
             WalkDriver.beamWalk(queries, entries, embMap,
@@ -2126,7 +2126,7 @@ object Similarity {
     // driver-side — see graphGreedySearch. Above any cap the
     // distributed loop below is unchanged.
     WalkDriver.collectEmb(emb.select(col("vec_id"), col("embedding")))
-      .flatMap { embMap =>
+      .flatMap { case (embMap, n) =>
         val lvl = emb.select(col("vec_id"), col("embedding"),
           hnswLevelCol(col("vec_id")).as("lvl")).localCheckpoint(true)
         val maxl = lvl.agg(max(col("lvl"))).collect()(0).getInt(0)
@@ -2141,7 +2141,7 @@ object Similarity {
         }
         val baseAdj = WalkDriver.collectAdj(
           knnGraphFrom(emb.select(col("vec_id"), col("embedding")), deg,
-            bitsFor(0, embMap.size.toLong)).select(col("src"), col("dst")))
+            bitsFor(0, n)).select(col("src"), col("dst")))
         val upperAdjs = (maxl to 1 by -1).map(l => layerAdj(l))
         val entriesOpt = WalkDriver.collectUnder(
           lvl.filter(col("lvl") === maxl).select(col("vec_id")),
@@ -2379,7 +2379,7 @@ object Similarity {
     // below is the unchanged above-cap fallback.
     val driverResult =
       WalkDriver.collectEmb(emb.select(col("vec_id"), col("embedding")))
-        .flatMap { embMap =>
+        .flatMap { case (embMap, _) =>
           WalkDriver.collectUnder(
             spark.read.parquet(storeDir)
               .select(col("lvl").cast(IntegerType), col("src"), col("dst")),

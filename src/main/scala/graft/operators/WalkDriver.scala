@@ -70,14 +70,20 @@ private[graft] object WalkDriver {
   }
 
   /** (vec_id → embedding) for a (bigint, array<float>) frame under
-    * [[NodeCap]]. */
-  def collectEmb(df: DataFrame, cap: Int = NodeCap): Option[mutable.LongMap[Array[Float]]] =
+    * [[NodeCap]], with the frame's row count. A row whose embedding is
+    * SQL NULL is left out of the map: every walk reads vectors through
+    * `emb.get`, so a missing id scores like the distributed loop's NULL
+    * cosine (dropped). The count still includes it — the distributed
+    * entry spread and adaptive bucket width are functions of
+    * `emb.count()`. */
+  def collectEmb(df: DataFrame,
+                 cap: Int = NodeCap): Option[(mutable.LongMap[Array[Float]], Long)] =
     collectUnder(df, cap).map { rows =>
       val m = new mutable.LongMap[Array[Float]](rows.length * 2)
       rows.foreach { r =>
-        m.update(r.getLong(0), r.getSeq[Float](1).toArray)
+        if (!r.isNullAt(1)) m.update(r.getLong(0), r.getSeq[Float](1).toArray)
       }
-      m
+      (m, rows.length.toLong)
     }
 
   /** src → dst-array adjacency from a (bigint src, bigint dst) frame

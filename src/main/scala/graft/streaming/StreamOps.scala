@@ -1716,11 +1716,11 @@ object StreamOps {
     // above-cap fallback.
     val driverResult =
       WalkDriver.collectEmb(embT.select(col("vec_id"), col("embedding")))
-        .flatMap { embMap =>
+        .flatMap { case (embMap, n) =>
           WalkDriver.collectAdj(
             spark.read.parquet(edgeDir).select(col("src"), col("dst"))).map { adj =>
             val dq = WalkDriver.queriesOf(embMap, nQueries)
-            val de = WalkDriver.spreadEntries(embMap.size.toLong, nQueries,
+            val de = WalkDriver.spreadEntries(n, nQueries,
               nEntries, embMap)
             WalkDriver.beamResultDF(spark,
               WalkDriver.beamWalk(dq, de, embMap,
@@ -2410,7 +2410,7 @@ object StreamOps {
     import graft.operators.WalkDriver
     val driverResult =
       WalkDriver.collectEmb(emb.select(col("vec_id"), col("embedding")))
-        .flatMap { embMap =>
+        .flatMap { case (embMap, _) =>
           val empty = new scala.collection.mutable.LongMap[Array[Long]]()
           val adjOpts: Seq[(Int, Option[scala.collection.mutable.LongMap[Array[Long]]])] =
             (0 to maxl).map { l =>

@@ -118,6 +118,29 @@ class R13WalkDriverSpec extends AnyFunSuite {
     assert(WalkDriver.collectAdj(pairs).isDefined)
   }
 
+  test("a NULL embedding: collectEmb skips its row but counts it, and " +
+    "every driver walk still equals its distributed fallback") {
+    val src = Tables.load(spark, dir, "embeddings")
+    val n = src.count()
+    // an entry node of the spread (i = 1): the entry ids are a function
+    // of the distributed loop's emb.count(), NULL row included
+    val nullId = 10 + (n - 10) / 8
+    val nullDir = java.nio.file.Files.createTempDirectory("emb_null").toString
+    src.withColumn("embedding",
+        when(col("vec_id") === nullId, lit(null)).otherwise(col("embedding")))
+      .write.parquet(s"$nullDir/embeddings.parquet")
+    val (embMap, count) = WalkDriver.collectEmb(
+      Tables.load(spark, nullDir, "embeddings")
+        .select(col("vec_id"), col("embedding"))).get
+    assert(count == n && embMap.size == n - 1 && !embMap.contains(nullId))
+    assert(rows(Similarity.graphBeamSearch(spark, nullDir)) ==
+      rows(Similarity.graphBeamSearchDistributed(spark, nullDir)))
+    assert(rows(Similarity.graphGreedySearch(spark, nullDir)) ==
+      rows(Similarity.graphGreedySearchDistributed(spark, nullDir)))
+    assert(rows(Similarity.hnswSearch(spark, nullDir)) ==
+      rows(Similarity.hnswSearchDistributed(spark, nullDir)))
+  }
+
   test("the driver walk removes the per-superstep jobs: beam store " +
     "serve submits fewer jobs than the distributed serve") {
     val store = Similarity.buildGraphStore(spark, dir, 8)

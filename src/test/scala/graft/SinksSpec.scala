@@ -30,6 +30,69 @@ class SinksSpec extends AnyFunSuite {
     assert(out.filter(col("id") === "r1").count() == 2)
   }
 
+  test("K2 writeDocumentsOut: one file per output size, not per input split; " +
+    "the rebalance shuffle carries only the sink's columns") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_COL, ShuffleExchangeLike}
+    import graft.operators.DocPipeline
+    val dir = tmp("docsout_sized") + "/documents_out"
+    // 64 input splits, some empty texts (error rows: null record_id,
+    // uuid id) beside invoice-like rows that extract every field
+    val docs = spark.range(0, 640, 1, 64).select(col("id").as("doc_id"),
+      when(col("id") % 50 === 0, lit(""))
+        .otherwise(concat(lit("Invoice #"), col("id"), lit(" total amount $"),
+          col("id") % 97, lit(".50 due 2024-01-15, contact billing"),
+          col("id"), lit("@example.com or 555-123-4567"))).as("text"))
+    val persisted = DocPipeline.persist(DocPipeline.extractValidateWithRetry(
+      DocPipeline.schemaLookup(spark, DocPipeline.classifyStage(
+        DocPipeline.clean(DocPipeline.ingest(docs))))))
+    assert(persisted.rdd.getNumPartitions >= 64)
+
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val writes = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        aqe.foreach(qe.executedPlan) {
+          case w: DataWritingCommandExec => w.cmd match {
+            case c: InsertIntoHadoopFsRelationCommand
+                if c.outputPath.toString.endsWith(dir) => writes.put(w.child)
+            case _ =>
+          }
+          case _ =>
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val plan = try {
+      Sinks.writeDocumentsOut(persisted, dir)
+      writes.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+    } finally spark.listenerManager.unregister(listener)
+
+    val dataFiles = new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
+    assert(dataFiles == 1)
+
+    val cols = Seq("doc_type", "raw_text", "structured_data", "file_url")
+    def multiset(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq.mkString("\u0001")).sorted.toSeq
+    val expected = multiset(persisted)
+    assert(expected.length == 640)
+    assert(multiset(spark.read.parquet(dir)) == expected)
+
+    // the final adaptive plan: one shuffle, the hashed rebalance, fed
+    // only the sink's columns
+    assert(plan != null, "no write plan reached the listener")
+    val shuffles = aqe.collect(plan) {
+      case s: ShuffleExchangeLike => s
+    }
+    assert(shuffles.map(_.shuffleOrigin) == Seq(REBALANCE_PARTITIONS_BY_COL), plan)
+    val shuffled = shuffles.head.child.output.map(_.name)
+    assert(Seq("logs", "text_orig", "schema_variant").forall(c => !shuffled.contains(c)),
+      shuffled)
+  }
+
   test("K2 JDBC round-trip: documents_out through a live relational database") {
     // self-skips when no DuckDB JDBC driver jar was found in the local
     // cache at build time (build.sbt glob) — the parquet K2 test above
