@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.Bridge
-import graft.plans.{CharTrigrams, CmsAgg, CodesCosine, CodesDot, CosineSimilarity, KmvMins, LangIdExpr, NfcNormalize, PolyHash, QuantileSketch, SortedIntersectCountLong, Sq8Encode, TopFreq, TopKByScore}
+import graft.plans.{CharTrigrams, CleanTextExpr, CmsAgg, CodesCosine, CodesDot, CosineSimilarity, KeywordClassifyExpr, KmvMins, LangIdExpr, NfcNormalize, PolyHash, QuantileSketch, SortedIntersectCountLong, Sq8Encode, TopFreq, TopKByScore}
 
 /** Column builders for graft's native Catalyst expressions — usable on
   * any session (no FunctionRegistry dependency; the SQL names
@@ -14,6 +14,12 @@ object NativeFunctions {
   /** Single-pass stopword/CJK language ID over LOWERCASED text. */
   def langId(c: Column): Column =
     Bridge.column(LangIdExpr(Bridge.expression(c)))
+  /** One-pass P1 clean_text (whitespace collapse, charset strip, trim). */
+  def cleanText(c: Column): Column =
+    Bridge.column(CleanTextExpr(Bridge.expression(c)))
+  /** One-pass C1 keyword classifier over the LOWERCASED 500-char prefix. */
+  def keywordClassify(c: Column): Column =
+    Bridge.column(KeywordClassifyExpr(Bridge.expression(c)))
   def cosineSim(a: Column, b: Column): Column =
     Bridge.column(CosineSimilarity(Bridge.expression(a), Bridge.expression(b)))
   /** KMV sketch aggregate: k smallest distinct longs, sorted. */

@@ -11,16 +11,21 @@ import org.apache.spark.sql.types._
   * DuckDB SQL fragment builder (the oracle). Keeping the two side by side
   * is what makes the whole surface oracle-checkable: the SQL is the spec,
   * the Column is the implementation, and the driver's DuckDB compare pins
-  * them together. All Column forms are built-in codegen'd expressions —
-  * no UDFs — so they stay inside WholeStageCodegen at scale.
+  * them together. Every Column form is codegen'd — no UDFs, no
+  * higher-order functions — so it stays inside WholeStageCodegen at
+  * scale. Most are built-in expressions; four are graft.plans kernels
+  * that do in one scan what their SQL twins do with regexes:
+  * [[cleanText]] (CleanTextExpr), [[classify]] (KeywordClassifyExpr),
+  * [[langId]] (LangIdExpr) and [[fingerprint]] (PolyHash).
   */
 object TextFunctions {
 
   // --- P1 clean_text (reference: /root/reference/src/utils.py:162-178) ---
   // collapse whitespace runs -> single space; strip chars outside
-  // [\w\s.,\-():]; trim.
-  def cleanText(c: Column): Column =
-    trim(regexp_replace(regexp_replace(c, "\\s+", " "), "[^\\w\\s.,\\-():]", ""))
+  // [\w\s.,\-():]; trim. Engine side: one native byte scan
+  // (graft.plans.CleanTextExpr), equal to the SQL twin's two regexes
+  // under Java regex semantics (see the kernel's doc).
+  def cleanText(c: Column): Column = NativeFunctions.cleanText(c)
   def cleanTextSql(c: String): String =
     s"trim(regexp_replace(regexp_replace($c, '\\s+', ' ', 'g'), '[^\\w\\s.,\\-():]', '', 'g'))"
 
@@ -55,27 +60,9 @@ object TextFunctions {
     s"CASE WHEN length($c) = 0 THEN 0 ELSE list_reduce(list_prepend(CAST(0 AS BIGINT), " +
       s"generate_series(1, length($c))), (acc, i) -> (acc * 31 + ascii(substr($c, i, 1))) % 1000000007) END"
 
-  /** Count of regex hits — the scoring primitive for classify/langId. */
+  /** Count of regex hits — the scoring primitive of qualityScore. */
   def hitCount(c: Column, pat: String): Column =
     size(regexp_extract_all(c, lit(pat), lit(0)))
-
-  /** Argmax over (score, label) with first-label-wins tie semantics:
-    * max over struct(score, -idx) compares score first, then earliest
-    * label. Pure codegen'd expression — no UDF. */
-  private def argmaxLabel(scores: Seq[Column], names: Seq[String], fallback: String): Column = {
-    // r13: the label rides IN the struct and a (score=0, negidx=1,
-    // fallback) sentinel replaces the score>0 gate — the sentinel wins
-    // exactly when every real score is 0 (tie on score, negidx 1 beats
-    // every real 0..-(n-1)), so ONE array_max reference produces the
-    // answer. The old form referenced array_max(packed) twice (.score
-    // and .negidx), duplicating all n regex-count subtrees in the plan.
-    val packed = array(
-      (scores.zip(names).zipWithIndex.map { case ((s, n), i) =>
-        struct(s.as("score"), lit(-i).as("negidx"), lit(n).as("label"))
-      } :+ struct(lit(0).as("score"), lit(1).as("negidx"),
-        lit(fallback).as("label"))): _*)
-    array_max(packed).getField("label")
-  }
 
   private def argmaxLabelSql(scored: Seq[(String, String)], fallback: String): String = {
     // first-wins ties: label X wins iff score>0 and >= all later scores
@@ -91,7 +78,9 @@ object TextFunctions {
   // --- C1 classifier (reference: src/utils.py:5-33): 9-label keyword
   //     scorer over the first 500 chars (truncation per src/utils.py:28).
   //     Deterministic core; an LLM backend can plug in behind the same
-  //     Column->Column interface (SURVEY §2.11). ---
+  //     Column->Column interface (SURVEY §2.11). These patterns are THE
+  //     keyword table: the oracle counts them with regexes, and
+  //     graft.plans.KeywordClassify builds its scan table from them. ---
   val labels: Seq[(String, String)] = Seq(
     "invoice" -> "(invoice|amount due|bill to|subtotal|total due)",
     "contract" -> "(agreement|party|parties|hereby|terms and conditions|witnesseth)",
@@ -102,10 +91,13 @@ object TextFunctions {
     "cover letter" -> "(dear hiring|position|i am writing|sincerely yours)",
     "resume" -> "(experience|education|skills|employment history|objective)")
 
-  def classify(c: Column): Column = {
-    val in = lower(substring(c, 1, 500))
-    argmaxLabel(labels.map(l => hitCount(in, l._2)), labels.map(_._1), "other")
-  }
+  /** Engine side: ONE native scan (graft.plans.KeywordClassifyExpr)
+    * over the lowered prefix instead of eight regexp_extract_all
+    * passes — same counts, same first-label-wins argmax. A NULL text
+    * hits no label, so it is "other", as in the SQL twin. */
+  def classify(c: Column): Column =
+    coalesce(NativeFunctions.keywordClassify(lower(substring(c, 1, 500))),
+      lit(graft.plans.KeywordClassify.Fallback))
   def classifySql(c: String): String = {
     val in = s"lower(substr($c, 1, 500))"
     argmaxLabelSql(
@@ -160,7 +152,12 @@ object TextFunctions {
   // --- E1 field extractors (reference: src/agents.py:159-206 + prompt
   //     rules src/utils.py:57-89). Deterministic regex cores implementing
   //     the prompt's normalization rules (dates->YYYY-MM-DD,
-  //     amounts->numeric, phones +-prefixed). ---
+  //     amounts->numeric, phones +-prefixed). Each extractor is a raw
+  //     first-group match (`...Match`, "" when absent) finished by a
+  //     cheap normalization that reads the match more than once
+  //     (`matched`, `amountOf`, `dateOf`, `phoneOf`); DocPipeline
+  //     projects the raw matches on their own so each regex runs once
+  //     per row. ---
   val amountPat = "([0-9]+\\.[0-9][0-9])"
   // First-pass amount: sign-permissive. A captured negative fails X1
   // validation ("negative amount") and the feedback-aware retry pass
@@ -170,47 +167,55 @@ object TextFunctions {
   val emailPat = "([A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z][A-Za-z]+)"
   val isoDatePat = "([0-9][0-9][0-9][0-9]-[0-9][0-9]-[0-9][0-9])"
   val phonePat = "(\\+?[0-9][0-9 ()-]{6,}[0-9])"
+  val firstTokenPat = "^(\\w+)"
 
-  def extractAmount(c: Column): Column =
-    nullif(regexp_extract(c, amountPat, 1), lit("")).cast(DoubleType)
+  /** No match ("") -> NULL. */
+  def matched(m: Column): Column = nullif(m, lit(""))
+
+  def amountMatch(c: Column): Column = regexp_extract(c, amountPat, 1)
+  def signedAmountMatch(c: Column): Column = regexp_extract(c, signedAmountPat, 1)
+  def amountOf(m: Column): Column = matched(m).cast(DoubleType)
+
+  def extractAmount(c: Column): Column = amountOf(amountMatch(c))
   def extractAmountSql(c: String): String =
     s"CAST(nullif(regexp_extract($c, '$amountPat', 1), '') AS DOUBLE)"
 
-  def extractAmountSigned(c: Column): Column =
-    nullif(regexp_extract(c, signedAmountPat, 1), lit("")).cast(DoubleType)
   def extractAmountSignedSql(c: String): String =
     s"CAST(nullif(regexp_extract($c, '$signedAmountPat', 1), '') AS DOUBLE)"
 
-  def extractEmail(c: Column): Column =
-    nullif(regexp_extract(c, emailPat, 1), lit(""))
+  def emailMatch(c: Column): Column = regexp_extract(c, emailPat, 1)
+  def extractEmail(c: Column): Column = matched(emailMatch(c))
   def extractEmailSql(c: String): String =
     s"nullif(regexp_extract($c, '$emailPat', 1), '')"
 
-  def extractDate(c: Column): Column =
-    to_date(nullif(regexp_extract(c, isoDatePat, 1), lit("")))
+  def dateMatch(c: Column): Column = regexp_extract(c, isoDatePat, 1)
+  def dateOf(m: Column): Column = to_date(matched(m))
+  def extractDate(c: Column): Column = dateOf(dateMatch(c))
   def extractDateSql(c: String): String =
     s"CAST(nullif(regexp_extract($c, '$isoDatePat', 1), '') AS DATE)"
 
   /** Phone normalization per prompt rule src/utils.py:64: ensure leading +.
     * ISO dates are blanked first — `2024-01-31` is digits+hyphens and
     * would otherwise satisfy the phone shape. */
-  def extractPhone(c: Column): Column = {
-    val noDates = regexp_replace(c, isoDatePat, " ")
-    val raw = nullif(regexp_extract(noDates, phonePat, 1), lit(""))
+  def phoneMatch(c: Column): Column =
+    regexp_extract(regexp_replace(c, isoDatePat, " "), phonePat, 1)
+  def phoneOf(m: Column): Column = {
+    val raw = matched(m)
     when(raw.isNull, lit(null).cast(StringType))
       .when(raw.startsWith("+"), raw)
       .otherwise(concat(lit("+"), raw))
   }
+  def extractPhone(c: Column): Column = phoneOf(phoneMatch(c))
   def extractPhoneSql(c: String): String = {
     val noDates = s"regexp_replace($c, '$isoDatePat', ' ', 'g')"
     val raw = s"nullif(regexp_extract($noDates, '$phonePat', 1), '')"
     s"CASE WHEN $raw IS NULL THEN NULL WHEN $raw LIKE '+%' THEN $raw ELSE '+' || $raw END"
   }
 
-  def firstToken(c: Column): Column =
-    nullif(regexp_extract(c, "^(\\w+)", 1), lit(""))
+  def firstTokenMatch(c: Column): Column = regexp_extract(c, firstTokenPat, 1)
+  def firstToken(c: Column): Column = matched(firstTokenMatch(c))
   def firstTokenSql(c: String): String =
-    s"nullif(regexp_extract($c, '^(\\w+)', 1), '')"
+    s"nullif(regexp_extract($c, '$firstTokenPat', 1), '')"
 
   // --- validation X1 (reference: src/agents.py:209-263, prompt checks
   //     src/utils.py:114-118): format checks over extracted fields.

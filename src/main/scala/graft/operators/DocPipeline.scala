@@ -186,24 +186,40 @@ object DocPipeline {
     * `feedbackAware=true` is the retry pass (X3): the extractor consumes
     * the failed pass's `prev_feedback` — on "negative amount" it re-scans
     * with the non-negative pattern (the deterministic analogue of
-    * re-prompting with validator feedback, src/agents.py:48-59,159-180). */
+    * re-prompting with validator feedback, src/agents.py:48-59,159-180).
+    *
+    * The raw regex matches get their own projection and every
+    * normalization reads them from there: `nullif` and the phone `+`
+    * rule reference their input more than once, and CollapseProject
+    * does not inline a non-trivial expression into several references
+    * — so each pattern is scanned once per row instead of once per
+    * reference. The optimized ingest-to-persist plan held 18
+    * regexp_extract before, and holds 6 now: one per pattern, the
+    * retry's non-negative amount included (PlanSpec pins it). */
   def extract(df: DataFrame, feedbackAware: Boolean = false): DataFrame = {
     val t = col("text_orig") // fields from pre-clean text (see ingest)
     val c = col("raw_text")  // text stats from the cleaned text
-    val amount0 = extractAmountSigned(t)
+    val amount0 = signedAmountMatch(t)
     val amount =
       if (!feedbackAware) amount0
       else when(array_contains(col("prev_feedback"), "negative amount"),
-        extractAmount(t)).otherwise(amount0)
-    def gated(field: String, x: Column, tpe: DataType): Column =
-      guarded(when(want(field), x), lit(null).cast(tpe), col("error"))
-    df.withColumn("x_amount", gated("amount", amount, DoubleType))
-      .withColumn("x_email", gated("email", extractEmail(t), StringType))
-      .withColumn("x_date", gated("date", extractDate(t), DateType))
-      .withColumn("x_phone", gated("phone", extractPhone(t), StringType))
-      .withColumn("x_first_token", guarded(firstToken(c), lit(null).cast(StringType), col("error")))
+        amountMatch(t)).otherwise(amount0)
+    def gated(field: String, m: Column): Column =
+      guarded(when(want(field), m), lit(null).cast(StringType), col("error"))
+    df.select(col("*"),
+        gated("amount", amount).as("m_amount"),
+        gated("email", emailMatch(t)).as("m_email"),
+        gated("date", dateMatch(t)).as("m_date"),
+        gated("phone", phoneMatch(t)).as("m_phone"),
+        guarded(firstTokenMatch(c), lit(null).cast(StringType), col("error")).as("m_first_token"))
+      .withColumn("x_amount", amountOf(col("m_amount")))
+      .withColumn("x_email", matched(col("m_email")))
+      .withColumn("x_date", dateOf(col("m_date")))
+      .withColumn("x_phone", phoneOf(col("m_phone")))
+      .withColumn("x_first_token", matched(col("m_first_token")))
       .withColumn("x_n_tokens", guarded(tokenCount(c), lit(null).cast(IntegerType), col("error")))
       .withColumn("structured_data", structuredData)
+      .drop("m_amount", "m_email", "m_date", "m_phone", "m_first_token")
   }
 
   /** P7 envelope: extraction output as JSON with empty fields suppressed
@@ -221,18 +237,29 @@ object DocPipeline {
     * invalid when present AND malformed — plus `missing amount` when the
     * schema EXPLICITLY requests an amount and none was extracted
     * (advisory mode requires nothing, so the unschema'd path keeps the
-    * reference's lenient semantics). */
+    * reference's lenient semantics).
+    *
+    * The feedback list is a `concat` of one- or zero-element arrays, not
+    * `array_compact` over nullable slots: array_compact is a
+    * `filter(lambda)` higher-order function, a CodegenFallback, and a
+    * Project holding one falls out of whole-stage codegen. With it, the
+    * two Projects that held validation_feedback (2 of the 12 in the
+    * ingest-to-persist plan) ran outside the fused loop, each through a
+    * per-task UnsafeProjection, and split the chain into 3 codegen
+    * stages; without it the chain is one stage (PlanSpec pins it). */
   def validate(df: DataFrame): DataFrame = {
     val explicitlyWantsAmount =
       col("schema_fields").isNotNull &&
         map_contains_key(col("schema_fields"), lit("amount"))
-    val feedback = array_compact(array(
-      when(!validEmail(col("x_email")), lit("malformed email")),
-      when(!validAmount(col("x_amount")), lit("negative amount")),
-      when(explicitlyWantsAmount && col("x_amount").isNull, lit("missing amount")),
-      when(col("x_n_tokens").isNotNull && col("x_n_tokens") === 0, lit("empty extraction"))))
-    df.withColumn("validation_feedback",
-        guarded(feedback, array().cast(ArrayType(StringType)), col("error")))
+    val none = array().cast(ArrayType(StringType))
+    def flag(cond: Column, msg: String): Column =
+      when(cond, array(lit(msg))).otherwise(none)
+    val feedback = concat(
+      flag(!validEmail(col("x_email")), "malformed email"),
+      flag(!validAmount(col("x_amount")), "negative amount"),
+      flag(explicitlyWantsAmount && col("x_amount").isNull, "missing amount"),
+      flag(col("x_n_tokens").isNotNull && col("x_n_tokens") === 0, "empty extraction"))
+    df.withColumn("validation_feedback", guarded(feedback, none, col("error")))
       .withColumn("is_valid",
         guarded(size(col("validation_feedback")) === 0, lit(false), col("error")))
   }
@@ -262,15 +289,15 @@ object DocPipeline {
     // X3: the only feedback the deterministic extractor acts on is
     // "negative amount" -> re-scan with the non-negative pattern; every
     // other field re-extracts to the identical value, so only x_amount
-    // (and what derives from it) is rewritten
-    val amountRetry =
-      when(array_contains(col("validation_feedback"), "negative amount"),
-        when(want("amount"), extractAmount(col("text_orig"))).otherwise(lit(null).cast(DoubleType)))
-        .otherwise(col("x_amount"))
+    // (and what derives from it) is rewritten. The re-scan's raw match
+    // is projected on its own, as in extract.
+    val rescan = retrying && array_contains(col("validation_feedback"), "negative amount")
     validate(
-      p0.withColumn("retry_count",
+      p0.withColumn("m_amount", when(rescan && want("amount"), amountMatch(col("text_orig"))))
+        .withColumn("retry_count",
           when(retrying, lit(MaxRetries)).otherwise(col("retry_count")))
-        .withColumn("x_amount", when(retrying, amountRetry).otherwise(col("x_amount")))
+        .withColumn("x_amount", when(rescan, amountOf(col("m_amount"))).otherwise(col("x_amount")))
+        .drop("m_amount")
         .withColumn("structured_data",
           when(retrying, structuredData).otherwise(col("structured_data"))))
   }

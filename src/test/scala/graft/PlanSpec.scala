@@ -158,6 +158,67 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Exchange hashpartitioning"), p.take(3000))
   }
 
+  test("doc pipeline chain: every Project in one codegen stage, each first-pass " +
+    "extraction pattern in exactly one RegExpExtract, no RegExpExtractAll") {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, RegExpExtract, RegExpExtractAll}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import graft.functions.TextFunctions
+    val df = DocPipeline.persist(DocPipeline.extractValidateWithRetry(
+      DocPipeline.schemaLookup(spark, DocPipeline.classifyStage(
+        DocPipeline.clean(DocPipeline.ingest(
+          Tables.load(spark, sfDir, "documents")))))))
+    val exec = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    // (project, inside a codegen stage?) — an InputAdapter is a stage's
+    // input boundary, so what sits below it belongs to another stage
+    def projects(p: SparkPlan, inStage: Boolean): Seq[(ProjectExec, Boolean)] = p match {
+      case w: WholeStageCodegenExec => projects(w.child, inStage = true)
+      case i: InputAdapter => projects(i.child, inStage = false)
+      case pr: ProjectExec => (pr, inStage) +: projects(pr.child, inStage)
+      case other => other.children.flatMap(projects(_, inStage))
+    }
+    val ps = projects(exec, inStage = false)
+    assert(ps.nonEmpty, exec.toString.take(3000))
+    val outside = ps.collect { case (pr, false) => pr.simpleString(4) }
+    assert(outside.isEmpty, s"${outside.size} of ${ps.size} Projects outside codegen: " +
+      exec.toString.take(3000))
+    val fallbacks = ps.flatMap(_._1.projectList.flatMap(_.collect {
+      case e: CodegenFallback => e.prettyName
+    })).distinct
+    assert(fallbacks.isEmpty, s"CodegenFallback in a Project: $fallbacks")
+    val stages = exec.collect { case w: WholeStageCodegenExec => w }
+    assert(stages.size == 1, exec.toString.take(3000))
+    // a stage whose generated method outgrows hugeMethodLimit silently
+    // runs its child uncompiled instead, so the one stage must also
+    // compile under the limit
+    val (_, stats) = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+      .compile(stages.head.doCodeGen()._2)
+    assert(stats.maxMethodCodeSize <= spark.sessionState.conf.hugeMethodLimit,
+      s"generated method of ${stats.maxMethodCodeSize} bytes")
+
+    val exprs = df.queryExecution.optimizedPlan.collect { case n => n.expressions }
+      .flatten
+    val extracts = exprs.flatMap(_.collect {
+      case RegExpExtract(_, Literal(p, _), _) => p.toString
+    })
+    val firstPass = Seq(
+      "signed amount" -> TextFunctions.signedAmountPat,
+      "email" -> TextFunctions.emailPat,
+      "date" -> TextFunctions.isoDatePat,
+      "phone" -> TextFunctions.phonePat,
+      "first token" -> TextFunctions.firstTokenPat)
+    for ((name, pat) <- firstPass)
+      assert(extracts.count(_ == pat) == 1,
+        s"$name pattern in ${extracts.count(_ == pat)} RegExpExtract nodes " +
+          s"(${extracts.size} in all)")
+    val extractAlls = exprs.map(_.collect { case r: RegExpExtractAll => r }.size).sum
+    assert(extractAlls == 0, s"$extractAlls RegExpExtractAll nodes")
+  }
+
   test("lang_trigram_id: profiles broadcast into the scoring join; argmax is WindowGroupLimit") {
     val p = plan(graft.operators.TextAnalytics.langTrigramClassify(spark, sfDir))
     // the model (k·n_langs rows) must build-side broadcast, never shuffle

@@ -12,7 +12,11 @@ import graft.operators.{DocPipeline, SchemaRetrieval}
   * twice). Everything between the base and the output is a projection
   * or a broadcast-left join — order-preserving — so the collected
   * output must be byte-identical INCLUDING ROW ORDER to the late-sort
-  * form. */
+  * form. The order is also pinned at the plan level: the final physical
+  * plan must report an output ordering led by the id column ascending,
+  * so an exchange or join added later between the base sort and the
+  * output fails here even where the fixture's few partitions would
+  * happen to come back in order. */
 class R13EarlySortSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
   private val dir = TestSession.sfDir
@@ -23,6 +27,24 @@ class R13EarlySortSpec extends AnyFunSuite {
     assert(a.nonEmpty && a == b)
     val ids = a.map(_.head.asInstanceOf[Long])
     assert(ids == ids.sorted, "output not doc_id-ordered")
+    assertOrderedById(now)
+  }
+
+  /** The executed (final adaptive) plan's outputOrdering leads with the
+    * frame's first column, ascending. */
+  private def assertOrderedById(df: DataFrame): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val idCol = df.columns.head
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val lead = plan.outputOrdering.headOption
+    assert(lead.exists(o => o.direction == Ascending && (o.child match {
+      case a: Attribute => a.name == idCol
+      case _ => false
+    })), s"output ordering $lead does not lead with $idCol ASC:\n${plan.toString.take(3000)}")
   }
 
   test("llm_prompts: early-sort output == late-sort output, in order") {

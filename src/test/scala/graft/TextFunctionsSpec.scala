@@ -46,6 +46,87 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(one("invoice findings", classify) == "invoice")
   }
 
+  // The regex forms the native cleanText / classify kernels replaced,
+  // kept verbatim as the reference the kernels are pinned to.
+  private def regexCleanText(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    trim(regexp_replace(regexp_replace(c, "\\s+", " "), "[^\\w\\s.,\\-():]", ""))
+  private def regexLabelCounts(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    val in = lower(substring(c, 1, 500))
+    array(labels.map(l => hitCount(in, l._2)): _*)
+  }
+  /** First-label-wins argmax over the regex counts; no hit -> "other".
+    * A NULL text counts NULL for every label, which is no hit: the
+    * regex form and the oracle's CASE both answer "other". */
+  private def regexClassify(counts: Seq[Any]): String = {
+    val cs = counts.map(c => if (c == null) 0 else c.asInstanceOf[Int])
+    if (cs.max <= 0) "other" else labels(cs.indexOf(cs.max))._1
+  }
+
+  /** Runs kernel and regex forms side by side in one Spark projection. */
+  private def assertKernelsMatchRegex(inputs: Seq[String]): Unit = {
+    val rows = inputs.map(Option(_)).toDF("t").select(
+      col("t"), cleanText(col("t")).as("k_clean"), regexCleanText(col("t")).as("r_clean"),
+      classify(col("t")).as("k_class"), regexLabelCounts(col("t")).as("r_counts"))
+      .collect()
+    assert(rows.length == inputs.length)
+    for (r <- rows) {
+      val in = Option(r.getString(0)).map(_.flatMap(ch =>
+        if (ch < ' ' || ch > '~') f"\\u${ch.toInt}%04X" else ch.toString))
+      assert(r.get(1) == r.get(2), s"cleanText on $in")
+      assert(r.getString(3) == regexClassify(r.getSeq[Any](4)), s"classify on $in")
+    }
+  }
+
+  test("native cleanText and classify equal their regex forms on edge inputs") {
+    val javaSpaces = " \t\n\u000B\f\r"
+    val pad = "x" * 492
+    assertKernelsMatchRegex(Seq(
+      null, "", " ", "   ", javaSpaces, javaSpaces * 3,
+      s"${javaSpaces}a${javaSpaces}b$javaSpaces",
+      "a\u000Bb\fc\rd\ne\tf", "\u000B\u000B x \f\f",
+      // non-ASCII whitespace is not Java's \s: dropped, and it splits runs
+      "a\u00A0b", "\u2003x\u3000y\u2028z\u0085w", "a \u00A0 b", " \u00e9 x \u00e9 ",
+      // supplementary code points (letters among them) are dropped whole
+      "a\uD83D\uDE00b", "\uD835\uDC00bc \uD83D\uDE00 d",
+      "keep .,-():_ drop !@#$%^&*[]{}/\\'\"<>?|~`+=;",
+      // upper-case keywords, and lowercasings that leave or reach ASCII
+      "INVOICE Amount Due", "TERMS AND CONDITIONS", "\u0130NVOICE", "S\u212AILLS",
+      // overlapping alternatives: leftmost, first alternative, no overlap
+      "parties party partyparties", "information form informal", "subtotal due",
+      "amount due bill to", "total duetotal due", "report invoice",
+      "receipt receipt invoice", "course course transcript form",
+      "i am writingi am writing position", "gradegpa semester dear hiring",
+      // a keyword straddling the 500-char cut, one ending on it, one
+      // just inside (the trailing "report" is always past the cut)
+      "x" * 496 + " invoice report", pad + "x invoice report",
+      pad + " invoice report", pad.drop(1) + " invoice report",
+      // multibyte characters before the cut: the prefix counts characters
+      "\u00e9" * 300 + "x" * 190 + " invoice", "\u4e16" * 495 + " form",
+      "\uD83D\uDE00" * 490 + " form", "\uD83D\uDE00" * 496 + " form"))
+  }
+
+  test("native cleanText and classify equal their regex forms (property)") {
+    val alts = labels.flatMap(l => graft.plans.KeywordClassify.alternatives(l._2))
+    val alphabet = alts ++ alts.map(_.toUpperCase) ++ Seq("inv", "part", "ies",
+      "in", "ation", "sub", "total", "x", "_", ".", ",", "-", "(", ")", ":", "!",
+      "@", " ", "  ", "\t", "\n", "\u000B", "\f", "\r", "\u00A0", "\u00e9",
+      "\u4e16", "\uD83D\uDE00", "\u0130", "42")
+    val rnd = new scala.util.Random(11)
+    val inputs = (0 until 300).map(_ =>
+      (0 until rnd.nextInt(160)).map(_ => alphabet(rnd.nextInt(alphabet.length)))
+        .mkString(if (rnd.nextBoolean()) " " else ""))
+    assert(inputs.count(_.length > 500) >= 30, "the property must cross the 500-char cut")
+    assertKernelsMatchRegex(inputs ++ randomStrings(100))
+  }
+
+  test("keyword table: alternatives come from TextFunctions.labels, lowercase ASCII only") {
+    import graft.plans.KeywordClassify.alternatives
+    assert(alternatives(labels.head._2) ==
+      Seq("invoice", "amount due", "bill to", "subtotal", "total due"))
+    for (bad <- Seq("(Invoice|bill)", "(a.b)", "(ab|)", "invoice", "(caf\u00e9)"))
+      assertThrows[IllegalArgumentException](alternatives(bad))
+  }
+
   test("langId: stopword heuristic") {
     assert(one("the cat is on the mat and it is flat", langId) == "en")
     assert(one("你好世界", langId) == "zh")
