@@ -27,14 +27,6 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // native graft expressions (cosine_sim, ...) in the SQL surface
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // default checkpoint root for streams that do NOT pass their own
-      // checkpointLocation (those were Spark-managed TEMP dirs before —
-      // same non-durability, now on Scratch's tmpfs-backed root: the
-      // offset/commit-log fsyncs cost ~100 ms per micro-batch on this
-      // box's ext4 /tmp; see graft.Scratch). Explicit checkpoint
-      // locations (the replay/exactly-once paths) override per query.
-      .config("spark.sql.streaming.checkpointLocation",
-        Scratch.dir("stream_chk").toString)
       .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")

@@ -3,19 +3,18 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 /** Scratch space for TRANSIENT-BY-CONTRACT artifacts: staged stream
-  * source dirs, per-query temp checkpoints, per-batch partial dirs,
-  * JVM-lifetime stream stores. None of these survives the JVM by
-  * design (the durable stores live in [[StoreCatalog]]; replay specs
-  * pass their own explicit checkpointLocation), so they belong on the
-  * fastest non-durable storage the platform has — this box's /tmp is
-  * disk-backed ext4, and the offset-log/commit fsyncs alone put a
-  * measured ~100 ms/micro-batch floor under every streaming twin
-  * (StreamFloorProbe, r13). tmpfs when present, java.io.tmpdir
-  * otherwise; `SPARK_GRAFT_SCRATCH_DIR` overrides for deployments
-  * (a production stream points its checkpoints at durable storage
-  * EXPLICITLY — that contract is untouched, this is only the default
-  * for artifacts that were already temp). The root is deleted on JVM
-  * exit. */
+  * source dirs, per-batch partial dirs, JVM-lifetime stream stores, and
+  * the per-query checkpoints [[graft.streaming.StreamOps.runStream]]
+  * creates for every engine stream and deletes once that query stops
+  * (there is no session-wide checkpoint root; a caller that wants a
+  * durable, resumable checkpoint passes its own location). None of
+  * these survives the JVM by design (the durable stores live in
+  * [[StoreCatalog]]), so they belong on the fastest non-durable storage
+  * the platform has — a disk-backed ext4 /tmp puts a measured
+  * ~100 ms/micro-batch floor under every streaming twin through the
+  * offset-log/commit fsyncs alone. tmpfs when present, java.io.tmpdir
+  * otherwise; `SPARK_GRAFT_SCRATCH_DIR` overrides for deployments. The
+  * root is deleted on JVM exit. */
 object Scratch {
   lazy val root: Path = {
     val base = sys.env.get("SPARK_GRAFT_SCRATCH_DIR")
@@ -40,7 +39,8 @@ object Scratch {
     * child — or a walk cut short by an unreadable directory — leaves
     * the rest of the tree to be deleted, not abandoned. The one
     * recursive delete the engine uses (exit-time scratch cleanup,
-    * [[StoreCatalog]] store removal, probe cleanup). */
+    * per-query stream checkpoints, [[StoreCatalog]] store removal,
+    * probe cleanup). */
   private[graft] def deleteRec(p: Path): Unit = {
     val found = Vector.newBuilder[Path]
     try {

@@ -452,10 +452,6 @@ object Multimodal {
 
   // ---- video: REAL MJPEG / DIB frames in a real AVI container ----
 
-  /** StageProbe accessors (scratch measurement main, r12). */
-  private[graft] def videoDimsProbe(id: Long): (Int, Int) = videoDims(id)
-  private[graft] def videoFrameCountProbe(n: Int): Int = videoFrameCount(n)
-
   private def videoDims(id: Long): (Int, Int) =
     (16 + (id % 4).toInt * 8, 16 + (id % 3).toInt * 8)
   private def videoPixDims(id: Long): (Int, Int) =

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Structured Streaming surface (SURVEY §1.5, §2.13): the reference's
   * continuous one-document-per-HTTP-request ingest becomes a stream of
@@ -178,33 +178,64 @@ object StreamOps {
         })
   }
 
-  /** Run a (finite) streaming DataFrame to a named in-memory sink until
-    * all available input is processed; returns the result table. Used by
-    * Verify (streaming twin queries) and tests.
+  /** The one place a streaming query starts: configure `df`'s writer
+    * with `sink`, start it, drain every available input with
+    * `processAllAvailable`, stop it. Every streaming twin and store
+    * builder runs through here.
     *
     * `statePartitions` pins `spark.sql.shuffle.partitions` for the
-    * stream's lifetime (restored after): a streaming query's state-store
-    * count is FIXED at first start, and each stateful operator pays a
-    * per-micro-batch cost linear in it (store init + commit + version
-    * bookkeeping × operators × batches) regardless of data volume. The
-    * replayed-fixture twins carry a few thousand rows, where 32 stores
-    * are pure fixed overhead; a production deployment sizes this to its
-    * real key cardinality instead. */
+    * query's lifetime and restores the previous value afterwards: a
+    * streaming query's state-store count is FIXED at first start, and
+    * each stateful operator pays a per-micro-batch cost linear in it
+    * (store init + commit + version bookkeeping × operators × batches)
+    * regardless of data volume. The replayed-fixture twins carry a few
+    * thousand rows, where 32 stores are pure fixed overhead; a
+    * production deployment sizes this to its real key cardinality.
+    * `None` leaves the session's width alone.
+    *
+    * Without a `checkpointDir` the query gets a FRESH checkpoint under
+    * [[graft.Scratch]] (tmpfs where present: the offset/commit-log
+    * fsyncs cost ~100 ms per micro-batch on a disk-backed /tmp), so no
+    * two runs share one and a rerun never silently resumes an earlier
+    * run's offsets. That checkpoint is deleted once the query has
+    * stopped — after `stop`, never before, because a running query
+    * still writes its offset and commit logs there — and also when the
+    * query failed. A caller's own `checkpointDir` (the crash-replay
+    * paths) is never deleted: resuming from it is the point. */
+  private[graft] def runStream(df: DataFrame,
+                               statePartitions: Option[Int] = None,
+                               checkpointDir: Option[String] = None)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val conf = df.sparkSession.conf
+    val key = "spark.sql.shuffle.partitions"
+    val prev = conf.get(key)
+    val fresh = Option.when(checkpointDir.isEmpty)(graft.Scratch.dir("stream_chk"))
+    try {
+      statePartitions.foreach(n => conf.set(key, n.toString))
+      val q = sink(df.writeStream.option("checkpointLocation",
+        checkpointDir.getOrElse(fresh.get.toString))).start()
+      try q.processAllAvailable() finally q.stop()
+    } finally {
+      if (statePartitions.isDefined) conf.set(key, prev)
+      fresh.foreach(graft.Scratch.deleteRec)
+    }
+  }
+
+  /** Run a (finite) streaming DataFrame to a named in-memory sink until
+    * all available input is processed; returns the result table. Used by
+    * Verify (streaming twin queries) and tests. The memory sink's temp
+    * view is dropped once the result is resolved: the returned frame
+    * holds the sink's rows, the session catalog does not (a view per
+    * call would keep every result alive until the session ends).
+    * `statePartitions`: see [[runStream]]. */
   def runToMemory(spark: SparkSession, df: DataFrame, name: String,
                   mode: String = "complete",
                   statePartitions: Int = 4): DataFrame = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, statePartitions.toString)
-    try {
-      val q: StreamingQuery = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set(key, prev)
-    spark.table(name)
+    runStream(df, Some(statePartitions))(
+      _.format("memory").queryName(name).outputMode(mode))
+    val out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    out
   }
 
   /** Streaming twin of Events.tumbling over the replayed fixture —
@@ -485,19 +516,17 @@ object StreamOps {
     * same-id ties resolve by the highest `seqCol` when given (without
     * one, duplicate ids inside a single micro-batch keep an arbitrary
     * row — pass an event-time/sequence column for deterministic merges).
-    * Blocks until the (finite) stream drains; production would `.start()`
-    * and keep the handle. */
+    * Blocks until the (finite) stream drains; production would keep
+    * the query running and hold its handle. */
   def streamUpsertToStore(spark: SparkSession, updates: DataFrame,
                           storeDir: String, idCol: String = "vec_id",
                           seqCol: Option[String] = None): Unit = {
-    val q = updates.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    runStream(updates) {
+      _.foreachBatch { (batch: DataFrame, _: Long) =>
         graft.operators.EmbeddingStore.upsertToStore(
           batch.sparkSession, storeDir, batch, idCol, seqCol)
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    }
   }
 
   /** Read the embeddings fixture as a file stream — same staging and
@@ -537,16 +566,14 @@ object StreamOps {
     import graft.operators.Similarity
     val storeDir = lshStores.getOrElseUpdate((dir, bits), {
       val store = graft.Scratch.dir("graft_lsh_store").toString
-      val q = embeddingsStream(spark, dir)
+      val in = embeddingsStream(spark, dir)
         .select(col("vec_id"), col("embedding"),
           Similarity.signBucket(col("embedding"), bits).as("bucket"))
-        .writeStream
-        .option("checkpointLocation", store + "_chk")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      runStream(in) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("append").partitionBy("bucket").parquet(store)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
       store
     })
     Similarity.serveLshTopKFromStore(spark, dir, storeDir, k, nQueries, bits)
@@ -750,20 +777,14 @@ object StreamOps {
     // streaming twin of map-side combine, and most of the
     // stream-vs-batch fixed-cost gap was that sink volume.
     val partDir = graft.Scratch.dir("lm_parts").toString
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "4")
-    try {
-      val q = scored.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, epochId: Long) =>
-          batch.groupBy(col("doc_id"))
-            .agg(sum(col("sc")).as("s"), count(lit(1)).as("nb"))
-            .withColumn("epoch", lit(epochId))
-            .coalesce(1).write.mode("append").parquet(partDir)
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set(key, prev)
+    runStream(scored, Some(4)) {
+      _.foreachBatch { (batch: DataFrame, epochId: Long) =>
+        batch.groupBy(col("doc_id"))
+          .agg(sum(col("sc")).as("s"), count(lit(1)).as("nb"))
+          .withColumn("epoch", lit(epochId))
+          .coalesce(1).write.mode("append").parquet(partDir)
+      }
+    }
     // epoch-stamped merge: max per (doc, epoch) absorbs an at-least-once
     // replay's IDENTICAL re-appended partial, sum across epochs carries
     // a document whose slots ever split across batches — correct under
@@ -808,20 +829,14 @@ object StreamOps {
       .join(segs, "w")
       .select(col("doc_id"), col("k"))
     val partDir = graft.Scratch.dir("bpe_parts").toString
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "4")
-    try {
-      val q = counted.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, epochId: Long) =>
-          batch.groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("nw"), sum(col("k")).as("ns"))
-            .withColumn("epoch", lit(epochId))
-            .coalesce(1).write.mode("append").parquet(partDir)
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set(key, prev)
+    runStream(counted, Some(4)) {
+      _.foreachBatch { (batch: DataFrame, epochId: Long) =>
+        batch.groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("nw"), sum(col("k")).as("ns"))
+          .withColumn("epoch", lit(epochId))
+          .coalesce(1).write.mode("append").parquet(partDir)
+      }
+    }
     mergeBpePartials(spark.read.parquet(partDir))
   }
 
@@ -878,20 +893,14 @@ object StreamOps {
         .join(model, "b")
         .select(col("doc_id"), col("lw").as("p"))
       val pd = graft.Scratch.dir("dsir_parts").toString
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, "4")
-      try {
-        val q = scored.writeStream.outputMode("append")
-          .foreachBatch { (batch: DataFrame, epochId: Long) =>
-            batch.groupBy(col("doc_id"))
-              .agg(sum(col("p")).as("s"))
-              .withColumn("batch_id", lit(epochId))
-              .coalesce(1).write.mode("append").parquet(pd)
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally spark.conf.set(key, prev)
+      runStream(scored, Some(4)) {
+        _.foreachBatch { (batch: DataFrame, epochId: Long) =>
+          batch.groupBy(col("doc_id"))
+            .agg(sum(col("p")).as("s"))
+            .withColumn("batch_id", lit(epochId))
+            .coalesce(1).write.mode("append").parquet(pd)
+        }
+      }
       pd
     })
     val perDoc = spark.read.parquet(partDir)
@@ -986,20 +995,14 @@ object StreamOps {
         val fd = graft.Scratch.dir("dsir_feats").toString
         val cd = graft.Scratch.dir("dsir_counts").toString
         val md = graft.Scratch.dir("dsir_models").toString
-        val key = "spark.sql.shuffle.partitions"
-        val prev = spark.conf.get(key)
-        spark.conf.set(key, "4")
-        try {
-          val q = docsStream(spark, dir)
-            .select(col("doc_id"), col("text"), col("lang"))
-            .writeStream.outputMode("append")
-            .foreachBatch { (batch: DataFrame, epochId: Long) =>
-              ingestDsirRefreshBatch(batch, epochId, fd, cd, md,
-                nBuckets, targetLang)
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        } finally spark.conf.set(key, prev)
+        val in = docsStream(spark, dir)
+          .select(col("doc_id"), col("text"), col("lang"))
+        runStream(in, Some(4)) {
+          _.foreachBatch { (batch: DataFrame, epochId: Long) =>
+            ingestDsirRefreshBatch(batch, epochId, fd, cd, md,
+              nBuckets, targetLang)
+          }
+        }
         (fd, cd, md)
       })
     val versions = spark.read.parquet(modelDir)
@@ -1028,20 +1031,21 @@ object StreamOps {
     * replay: the re-run's stage merges zero new rows. This is the true
     * end-to-end form of the reference's continuous ingest + Postgres
     * persist (supabase_client.py:45-77): at-least-once source, exactly-
-    * once relational state. Blocks until the (finite) stream drains. */
+    * once relational state. Blocks until the (finite) stream drains.
+    * `checkpointDir` is the checkpoint a restart resumes from; it is
+    * kept. Without one the run gets a fresh checkpoint, deleted after
+    * stop ([[runStream]]). */
   def streamJdbcExactlyOnce(updates: DataFrame, url: String, table: String,
                             key: String,
                             checkpointDir: Option[String] = None,
                             writeOptions: Map[String, String] = Map.empty): Unit = {
-    val w = updates.writeStream.outputMode("append")
-    val w2 = checkpointDir.fold(w)(d => w.option("checkpointLocation", d))
-    val q = w2.foreachBatch { (batch: DataFrame, epochId: Long) =>
+    runStream(updates, checkpointDir = checkpointDir) {
+      _.foreachBatch { (batch: DataFrame, epochId: Long) =>
         graft.operators.Sinks.writeJdbcExactlyOnce(
           batch, url, table, key, s"epoch_$epochId",
           writeOptions = writeOptions)
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    }
   }
 
   /** One sunk DuckDB file per fixture dir per JVM: bench reps and
@@ -1148,10 +1152,10 @@ object StreamOps {
     import graft.functions.TextFunctions.fingerprint
     val store = dedupStores.getOrElseUpdate(dir, {
       val storeDir = graft.Scratch.dir("dedup_store").toString
-      val q = docsStream(spark, dir)
+      val in = docsStream(spark, dir)
         .select(col("doc_id"), fingerprint(col("text")).as("fp"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      runStream(in) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
           val sp = batch.sparkSession
           val batchMin = batch.groupBy(col("fp"))
             .agg(min(col("doc_id")).as("doc_id"))
@@ -1195,8 +1199,7 @@ object StreamOps {
               .write.mode("append").partitionBy("bucket").parquet(storeDir)
           } finally batchMin.unpersist()
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
       storeDir
     })
     spark.read.parquet(store)
@@ -1239,10 +1242,10 @@ object StreamOps {
   def streamNearDupStoreQuery(spark: SparkSession, dir: String): DataFrame = {
     val store = neardupSigStores.getOrElseUpdate(dir, {
       val storeDir = graft.Scratch.dir("neardup_sigs").toString
-      val q = docsStream(spark, dir)
+      val in = docsStream(spark, dir)
         .select(col("doc_id"), col("text"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      runStream(in) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
           val sp = batch.sparkSession
           val sigs = graft.operators.Dedup.sigTableFrom(batch, k = 8)
           val fresh =
@@ -1254,8 +1257,7 @@ object StreamOps {
             .repartition(col("band")) // one file per band per batch
             .write.mode("append").partitionBy("band").parquet(storeDir)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
       storeDir
     })
     graft.operators.Dedup.keepFromPairs(spark, dir,
@@ -1301,10 +1303,10 @@ object StreamOps {
   def streamImageNearDupStoreQuery(spark: SparkSession, dir: String): DataFrame = {
     val store = imageHashStores.getOrElseUpdate(dir, {
       val storeDir = graft.Scratch.dir("image_hashes").toString
-      val q = docsStream(spark, dir)
+      val in = docsStream(spark, dir)
         .select(col("doc_id"), col("text"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      runStream(in) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
           val sp = batch.sparkSession
           val hashes = graft.operators.Multimodal.imageDhashFrom(batch)
             .withColumnRenamed("dhash", "hash")
@@ -1317,8 +1319,7 @@ object StreamOps {
             .repartition(col("band")) // one file per band per batch
             .write.mode("append").partitionBy("band").parquet(storeDir)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
       storeDir
     })
     graft.operators.Multimodal.pairsFromBandedHashes(spark.read.parquet(store))
@@ -1378,8 +1379,8 @@ object StreamOps {
     import graft.operators.Sketches
     val store = kmvStores.getOrElseUpdate(dir, {
       val storeDir = graft.Scratch.dir("kmv_store").toString
-      val q = eventsStream(spark, dir).writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
+      runStream(eventsStream(spark, dir)) {
+        _.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
           batch.select(col("event_type"),
               Sketches.kmvHash(col("user_id")).as("h"))
             .groupBy(col("event_type"))
@@ -1388,8 +1389,7 @@ object StreamOps {
             .coalesce(1) // a handful of k-long sketch rows per batch
             .write.mode("append").parquet(storeDir)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
       storeDir
     })
     spark.read.parquet(store)
@@ -1436,16 +1436,15 @@ object StreamOps {
     import graft.functions.NativeFunctions.cmsAgg
     val store = cmsStores.getOrElseUpdate(dir, {
       val storeDir = graft.Scratch.dir("cms_store").toString
-      val q = eventsStream(spark, dir).writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
+      runStream(eventsStream(spark, dir)) {
+        _.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
           batch.groupBy(col("event_type"))
             .agg(cmsAgg(col("user_id"), depth, width).as("cms"))
             .withColumn("batch_id", lit(epochId))
             .coalesce(1) // a handful of matrix rows per batch
             .write.mode("append").parquet(storeDir)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
       storeDir
     })
     val parts = spark.read.parquet(store)
@@ -1670,14 +1669,13 @@ object StreamOps {
     val (_, edgeDir) = knnGraphStreamStores.getOrElseUpdate((dir, deg, bits), {
       val nd = graft.Scratch.dir("knn_stream_nodes").toString
       val ed = graft.Scratch.dir("knn_stream_edges").toString
-      val q = embeddingsStream(spark, dir)
+      val in = embeddingsStream(spark, dir)
         .select(col("vec_id"), col("embedding"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      runStream(in) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
           ingestGraphBatch(batch.sparkSession, batch, nd, ed, deg, bits)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
       (nd, ed)
     })
     val w = org.apache.spark.sql.expressions.Window
@@ -1887,25 +1885,19 @@ object StreamOps {
     val (seenDir, tokDir) = corpusStatsStores.getOrElseUpdate((dir, nBuckets), {
       val sd = graft.Scratch.dir("corpus_seen_words").toString
       val td = graft.Scratch.dir("corpus_tok_parts").toString
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, "4")
-      try {
-        val q = docsStream(spark, dir)
-          .select(col("doc_id"), explode(words(col("text"))).as("w"))
-          .filter(col("w") =!= "")
-          .select(expr(s"cast(doc_id div $width as int)").as("bucket"),
-            col("w"))
-          .writeStream.outputMode("append")
-          .foreachBatch { (batch: DataFrame, epochId: Long) =>
-            batch.groupBy(col("bucket")).agg(count(lit(1)).as("toks"))
-              .withColumn("batch_id", lit(epochId))
-              .coalesce(1).write.mode("append").parquet(td)
-            updateSeenWords(batch.sparkSession, sd, batch)
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally spark.conf.set(key, prev)
+      val in = docsStream(spark, dir)
+        .select(col("doc_id"), explode(words(col("text"))).as("w"))
+        .filter(col("w") =!= "")
+        .select(expr(s"cast(doc_id div $width as int)").as("bucket"),
+          col("w"))
+      runStream(in, Some(4)) {
+        _.foreachBatch { (batch: DataFrame, epochId: Long) =>
+          batch.groupBy(col("bucket")).agg(count(lit(1)).as("toks"))
+            .withColumn("batch_id", lit(epochId))
+            .coalesce(1).write.mode("append").parquet(td)
+          updateSeenWords(batch.sparkSession, sd, batch)
+        }
+      }
       (sd, td)
     })
     val toks = spark.read.parquet(tokDir)
@@ -1961,36 +1953,30 @@ object StreamOps {
     import org.apache.spark.sql.expressions.Window
     val store = weightedSampleStores.getOrElseUpdate((dir, n), {
       val sd = graft.Scratch.dir("wsample_store").toString
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, "4")
-      try {
-        val q = docsStream(spark, dir)
-          .select(col("doc_id"), col("n_chars"),
-            expr(s"((((2654435761 * (doc_id % ${graft.operators.Dedup.P}))" +
-              s" % ${graft.operators.Dedup.P} + 40503)" +
-              s" % ${graft.operators.Dedup.P})" +
-              " * 100000) div (n_chars + 1)").as("priority"))
-          .writeStream.outputMode("append")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val sp = batch.sparkSession
-            val prevTop =
-              if ({ val l = new java.io.File(sd).list(); l == null || l.isEmpty })
-                batch.limit(0)
-              else sp.read.parquet(s"$sd/top.parquet")
-            val merged = mergeTopPriorities(batch, prevTop, n)
-            // the store is O(n) rows BY CONTRACT (the reservoir bound),
-            // so collecting it is bounded control state — and the
-            // driver hop breaks the same-file read-then-overwrite cycle
-            val staged = merged.collect()
-            import sp.implicits._
-            staged.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-              .toDF("doc_id", "n_chars", "priority")
-              .coalesce(1).write.mode("overwrite").parquet(s"$sd/top.parquet")
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally spark.conf.set(key, prev)
+      val in = docsStream(spark, dir)
+        .select(col("doc_id"), col("n_chars"),
+          expr(s"((((2654435761 * (doc_id % ${graft.operators.Dedup.P}))" +
+            s" % ${graft.operators.Dedup.P} + 40503)" +
+            s" % ${graft.operators.Dedup.P})" +
+            " * 100000) div (n_chars + 1)").as("priority"))
+      runStream(in, Some(4)) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          val sp = batch.sparkSession
+          val prevTop =
+            if ({ val l = new java.io.File(sd).list(); l == null || l.isEmpty })
+              batch.limit(0)
+            else sp.read.parquet(s"$sd/top.parquet")
+          val merged = mergeTopPriorities(batch, prevTop, n)
+          // the store is O(n) rows BY CONTRACT (the reservoir bound),
+          // so collecting it is bounded control state — and the
+          // driver hop breaks the same-file read-then-overwrite cycle
+          val staged = merged.collect()
+          import sp.implicits._
+          staged.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+            .toDF("doc_id", "n_chars", "priority")
+            .coalesce(1).write.mode("overwrite").parquet(s"$sd/top.parquet")
+        }
+      }
       sd
     })
     val top = spark.read.parquet(s"$store/top.parquet")
@@ -2053,11 +2039,11 @@ object StreamOps {
         .filter(col("doc_id") < benchBelow)
         .select(col("span").as("b_span")).distinct()
         .localCheckpoint(true)
-      val q = docsStream(spark, dir)
+      val in = docsStream(spark, dir)
         .select(col("doc_id"), col("text"), col("n_chars"),
           Dedup.chash(col("text")).as("fp"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      runStream(in) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
           val sp = batch.sparkSession
           val minIds = batch.groupBy(col("fp"))
             .agg(min(col("doc_id")).as("doc_id"))
@@ -2120,8 +2106,7 @@ object StreamOps {
               .write.mode("append").partitionBy("bucket").parquet(fpDir)
           } finally keepers.unpersist()
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
       sd
     })
     val top = spark.read.parquet(s"$root/top.parquet")
@@ -2157,28 +2142,22 @@ object StreamOps {
     val (pd, dd) = bm25StreamStores.getOrElseUpdate(dir, {
       val p = graft.Scratch.dir("bm25_stream_posts").toString
       val d = graft.Scratch.dir("bm25_stream_docs").toString
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, "4")
-      try {
-        val q = docsStream(spark, dir)
-          .select(col("doc_id"), explode(words(col("text"))).as("word"))
-          .filter(col("word") =!= "")
-          .writeStream.outputMode("append")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.groupBy(col("word"), col("doc_id"))
-              .agg(count(lit(1)).as("tf"))
-              .withColumn("tbucket",
-                pmod(Dedup.chash(col("word")),
-                  lit(TextAnalytics.PostingsBuckets.toLong))
-                  .cast(IntegerType))
-              .write.mode("append").partitionBy("tbucket").parquet(p)
-            batch.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-              .coalesce(1).write.mode("append").parquet(d)
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally spark.conf.set(key, prev)
+      val in = docsStream(spark, dir)
+        .select(col("doc_id"), explode(words(col("text"))).as("word"))
+        .filter(col("word") =!= "")
+      runStream(in, Some(4)) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.groupBy(col("word"), col("doc_id"))
+            .agg(count(lit(1)).as("tf"))
+            .withColumn("tbucket",
+              pmod(Dedup.chash(col("word")),
+                lit(TextAnalytics.PostingsBuckets.toLong))
+                .cast(IntegerType))
+            .write.mode("append").partitionBy("tbucket").parquet(p)
+          batch.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
+            .coalesce(1).write.mode("append").parquet(d)
+        }
+      }
       (p, d)
     })
     val posts = TextAnalytics.prunedPostings(spark, pd, terms)
@@ -2228,24 +2207,18 @@ object StreamOps {
     import graft.operators.{Dedup, TextAnalytics}
     val pd = phraseStreamStores.getOrElseUpdate(dir, {
       val p = graft.Scratch.dir("phrase_stream_posts").toString
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, "4")
-      try {
-        val q = docsStream(spark, dir)
-          .select(col("doc_id"), col("text"))
-          .writeStream.outputMode("append")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            TextAnalytics.phrasePostings(batch)
-              .withColumn("tbucket",
-                pmod(Dedup.chash(col("word")),
-                  lit(TextAnalytics.PostingsBuckets.toLong))
-                  .cast(IntegerType))
-              .write.mode("append").partitionBy("tbucket").parquet(p)
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally spark.conf.set(key, prev)
+      val in = docsStream(spark, dir)
+        .select(col("doc_id"), col("text"))
+      runStream(in, Some(4)) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          TextAnalytics.phrasePostings(batch)
+            .withColumn("tbucket",
+              pmod(Dedup.chash(col("word")),
+                lit(TextAnalytics.PostingsBuckets.toLong))
+                .cast(IntegerType))
+            .write.mode("append").partitionBy("tbucket").parquet(p)
+        }
+      }
       p
     })
     val pruned = spark.read.parquet(pd)
@@ -2282,29 +2255,23 @@ object StreamOps {
     val (pd, dd) = trigramStreamStores.getOrElseUpdate(dir, {
       val p = graft.Scratch.dir("trigram_stream_posts").toString
       val d = graft.Scratch.dir("trigram_stream_docs").toString
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, "4")
-      try {
-        val q = docsStream(spark, dir)
-          .select(col("doc_id"), col("text"))
-          .writeStream.outputMode("append")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            TextSearch.trigramPostings(batch)
-              .withColumn("tgbucket",
-                pmod(Dedup.chash(col("tg")),
-                  lit(TextSearch.TrigramBuckets.toLong))
-                  .cast(IntegerType))
-              .write.mode("append").partitionBy("tgbucket").parquet(p)
-            batch.select(col("doc_id"), col("text"))
-              .withColumn("dbucket",
-                pmod(col("doc_id"), lit(TextSearch.DocBuckets.toLong))
-                  .cast(IntegerType))
-              .write.mode("append").partitionBy("dbucket").parquet(d)
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally spark.conf.set(key, prev)
+      val in = docsStream(spark, dir)
+        .select(col("doc_id"), col("text"))
+      runStream(in, Some(4)) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          TextSearch.trigramPostings(batch)
+            .withColumn("tgbucket",
+              pmod(Dedup.chash(col("tg")),
+                lit(TextSearch.TrigramBuckets.toLong))
+                .cast(IntegerType))
+            .write.mode("append").partitionBy("tgbucket").parquet(p)
+          batch.select(col("doc_id"), col("text"))
+            .withColumn("dbucket",
+              pmod(col("doc_id"), lit(TextSearch.DocBuckets.toLong))
+                .cast(IntegerType))
+            .write.mode("append").partitionBy("dbucket").parquet(d)
+        }
+      }
       (p, d)
     })
     val cands = TextSearch.candidateDocs(
@@ -2388,14 +2355,13 @@ object StreamOps {
         (graft.Scratch.dir(s"hnsw_stream_nodes_$l").toString,
           graft.Scratch.dir(s"hnsw_stream_edges_$l").toString)
       }
-      val q = embeddingsStream(spark, dir)
+      val in = embeddingsStream(spark, dir)
         .select(col("vec_id"), col("embedding"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      runStream(in) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
           ingestHnswBatch(batch.sparkSession, batch, sts, deg)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
       sts
     })
     val emb = graft.Tables.loadWide(spark, dir, "embeddings")
@@ -2559,14 +2525,13 @@ object StreamOps {
     }
     val storeDir = ivfStreamStores.getOrElseUpdate((dir, nCells), {
       val sd = graft.Scratch.dir("ivf_stream_store").toString
-      val q = embeddingsStream(spark, dir)
+      val in = embeddingsStream(spark, dir)
         .select(col("vec_id"), col("embedding"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      runStream(in) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
           ingestIvfBatch(batch.sparkSession, batch, sd, codebook)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
       sd
     })
     Similarity.serveIvfFromStore(spark, emb, storeDir, codebook,
@@ -2634,14 +2599,13 @@ object StreamOps {
     }
     val storeDir = pqStreamStores.getOrElseUpdate((dir, nCells, m), {
       val sd = graft.Scratch.dir("pq_stream_store").toString
-      val q = embeddingsStream(spark, dir)
+      val in = embeddingsStream(spark, dir)
         .select(col("vec_id"), col("embedding"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      runStream(in) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
           ingestPqBatch(batch.sparkSession, batch, sd, codebook, m, dim)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
       sd
     })
     Similarity.servePqFromStore(spark, dir, emb, storeDir,
@@ -2714,8 +2678,8 @@ object StreamOps {
     import graft.functions.TextFunctions.{langId, words}
     val store = topFreqStores.getOrElseUpdate((dir, cap), {
       val storeDir = graft.Scratch.dir("topfreq_store").toString
-      val q = docsStream(spark, dir).writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
+      runStream(docsStream(spark, dir)) {
+        _.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
           batch
             .select(langId(col("text")).as("lang_pred"),
               explode(words(col("text"))).as("word"))
@@ -2726,8 +2690,7 @@ object StreamOps {
             .coalesce(1) // a handful of counter rows per batch
             .write.mode("append").parquet(storeDir)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
       storeDir
     })
     val w = org.apache.spark.sql.expressions.Window

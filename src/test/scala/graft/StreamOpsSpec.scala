@@ -386,29 +386,28 @@ class StreamOpsSpec extends AnyFunSuite {
     // run 1: write epoch 0 via the sink, then die before the checkpoint
     // commit can record it
     val crashed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      val q = source.writeStream.outputMode("append")
-        .option("checkpointLocation", chk)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epochId: Long) =>
+      StreamOps.runStream(source, checkpointDir = Some(chk)) {
+        _.foreachBatch { (batch: org.apache.spark.sql.DataFrame, epochId: Long) =>
           graft.operators.Sinks.writeJdbcExactlyOnce(
             batch, url, "events_sunk", "event_id", s"epoch_$epochId")
           if (epochId == 0) throw new RuntimeException("injected crash after sink write")
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
     }
     assert(crashed.getMessage.contains("injected crash"))
+    // the runner never deletes a caller's checkpoint, not even after a
+    // failed run: epoch 0's offsets are still there to resume from
+    assert(Files.exists(Paths.get(chk, "offsets", "0")))
     // the crashed epoch's rows ARE durable (the sink committed)
     assert(graft.operators.Sinks.readJdbc(spark, url, "events_sunk").count() == 10)
     // run 2, same checkpoint: epoch 0 REPLAYS with the same epochId,
     // then epoch 1 proceeds — exactly 15 rows, no dupes
-    val q2 = source.writeStream.outputMode("append")
-      .option("checkpointLocation", chk)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epochId: Long) =>
+    StreamOps.runStream(source, checkpointDir = Some(chk)) {
+      _.foreachBatch { (batch: org.apache.spark.sql.DataFrame, epochId: Long) =>
         graft.operators.Sinks.writeJdbcExactlyOnce(
           batch, url, "events_sunk", "event_id", s"epoch_$epochId")
       }
-      .start()
-    try q2.processAllAvailable() finally q2.stop()
+    }
     val got = graft.operators.Sinks.readJdbc(spark, url, "events_sunk")
       .select(col("event_id").cast("long")).as[Long].collect().sorted.toSeq
     assert(got == (0L until 15L), s"exactly-once violated across replay: $got")
@@ -1229,5 +1228,79 @@ class StreamOpsSpec extends AnyFunSuite {
     val batch = TextAnalytics.corpusCuration(spark, base.toString)
       .collect().map(key).toSeq
     assert(streamed == batch && streamed.nonEmpty)
+  }
+
+  /** Runs `body` and returns its outcome together with the checkpoint
+    * directory of every streaming query it started, each found WHILE
+    * that query runs: the query-started event is delivered on the
+    * query's own thread before its first batch, and the checkpoint's
+    * `metadata` file (written before that event) names the query id.
+    * Only checkpoints under Scratch.root are searched, so a query
+    * checkpointed anywhere else contributes nothing. */
+  private def startedCheckpoints(body: => Unit)
+      : (scala.util.Try[Unit], Seq[java.nio.file.Path]) = {
+    import java.nio.file.{Files, Path}
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import scala.jdk.CollectionConverters._
+    val found = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
+        val st = Files.walk(Scratch.root, 3)
+        try st.iterator().asScala
+          .filter(p => p.getFileName.toString == "metadata" &&
+            new String(Files.readAllBytes(p), "UTF-8").contains(e.id.toString))
+          .foreach(p => found.add(p.getParent))
+        finally st.close()
+      }
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    val outcome = try scala.util.Try(body) finally spark.streams.removeListener(listener)
+    (outcome, found.asScala.toSeq)
+  }
+
+  test("runToMemory drops the memory sink's temp view; the returned frame keeps the rows") {
+    val streamed = StreamOps.streamTumblingQuery(spark, TestSession.sfDir)
+    val views = spark.catalog.listTables().collect().map(_.name)
+    assert(!views.exists(_.startsWith("stream_tumbling_")), views.mkString(", "))
+    val batch = Events.tumbling(spark, TestSession.sfDir)
+      .collect().map(_.toSeq).toSet
+    assert(streamed.collect().map(_.toSeq).toSet == batch && batch.nonEmpty)
+  }
+
+  test("an engine stream checkpoints under Scratch while it runs; the " +
+      "checkpoint is deleted once the query stops") {
+    val (outcome, chks) = startedCheckpoints {
+      StreamOps.streamSessionsQuery(spark, TestSession.sfDir).collect()
+    }
+    outcome.get
+    assert(chks.size == 1, s"checkpoints under ${Scratch.root}: $chks")
+    assert(chks.head.startsWith(Scratch.root))
+    assert(!java.nio.file.Files.exists(chks.head), s"${chks.head} survived stop")
+    assert(spark.streams.active.isEmpty)
+  }
+
+  test("runStream: a failing batch propagates, and the pinned width, the " +
+      "active queries and the fresh checkpoint are all restored") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val pinned = new java.util.concurrent.atomic.AtomicReference[String]()
+    val (outcome, chks) = startedCheckpoints {
+      StreamOps.runStream(StreamOps.eventsStream(spark, TestSession.sfDir),
+          statePartitions = Some(3)) {
+        _.foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          pinned.set(batch.sparkSession.conf.get(key))
+          throw new RuntimeException("injected batch failure")
+        }
+      }
+    }
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](outcome.get)
+    assert(err.getMessage.contains("injected batch failure"))
+    assert(pinned.get == "3", "the query did not run at the pinned width")
+    assert(spark.conf.get(key) == prev)
+    assert(spark.streams.active.isEmpty)
+    assert(chks.size == 1 && chks.head.startsWith(Scratch.root))
+    assert(!java.nio.file.Files.exists(chks.head), s"${chks.head} survived a failed run")
   }
 }
