@@ -3,9 +3,9 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 /** Scratch space for TRANSIENT-BY-CONTRACT artifacts: staged stream
-  * source dirs, per-batch partial dirs, JVM-lifetime stream stores, and
-  * the per-query checkpoints [[graft.streaming.StreamOps.runStream]]
-  * creates for every engine stream and deletes once that query stops
+  * source dirs, per-call partial dirs, and the per-query checkpoints
+  * [[graft.streaming.StreamOps.runStream]] creates for every engine
+  * stream and deletes once that query stops
   * (there is no session-wide checkpoint root; a caller that wants a
   * durable, resumable checkpoint passes its own location). None of
   * these survives the JVM by design (the durable stores live in

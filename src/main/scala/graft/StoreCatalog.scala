@@ -39,7 +39,15 @@ import org.apache.spark.sql.SparkSession
   * for today's corpus. Driver state is O(manifest) — a dozen strings —
   * and the data path is whatever partition layout the family's builder
   * writes; the catalog owns WHERE a store lives and WHETHER it is
-  * current, never what's inside it. */
+  * current, never what's inside it.
+  *
+  * The stream-built stores of [[graft.streaming.StreamOps]] are
+  * families here too (`stream_*`, never a batch family's name): their
+  * build callback replays the source as a stream whose micro-batches
+  * append into the staging parts. That callback creates EVERY part
+  * directory before the stream starts — a part no batch writes (an
+  * HNSW layer no vector reaches) must still exist, or the on-disk
+  * validity check below fails and every later session rebuilds. */
 object StoreCatalog {
 
   /** A resolved, servable store: `parts` maps each named artifact

@@ -836,8 +836,8 @@ object Multimodal {
     * (bit 55 max: sign-safe long shifts on both engines). */
   private[graft] val DhashW = 18
   private[graft] val DhashH = 7
-  private val DhashBands = 4
-  private val DhashBandBits = 14
+  private[graft] val DhashBands = 4
+  private[graft] val DhashBandBits = 14
 
   /** Banded-LSH near-dup pairing shared by the image ([[imageDhash]])
     * and audio ([[audioFingerprint]]) signatures: explode `bands`

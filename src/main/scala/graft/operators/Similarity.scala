@@ -1297,7 +1297,9 @@ object Similarity {
     new scala.collection.concurrent.TrieMap[String, String]()
   /** The persisted synthetic dim-384 corpus (one parquet per JVM under
     * [[graft.Scratch]], deleted at exit — harness staging, not a query
-    * path). */
+    * path). The one memo keyed by neither a store nor a fingerprint: the
+    * corpus is generated from constants, with no source that could go
+    * stale. */
   private[graft] def d384Dir(spark: SparkSession): String =
     d384Dirs.getOrElseUpdate("d384", {
       val dir = graft.Scratch.dir("graft_d384").toString

@@ -29,19 +29,35 @@ object StreamOps {
     * watermarked operators DROP rows arriving more than the watermark
     * delay behind the max seen event time — the intended production
     * semantics, pinned by StreamOpsSpec's "late rows behind the
-    * watermark are dropped" test, NOT an accident of the fixtures. */
+    * watermark are dropped" test, NOT an accident of the fixtures.
+    * Keyed on the source fingerprint too ([[currentStaging]]): a staged
+    * hardlink pins the INODE it was made from, so a source replaced
+    * in-session would otherwise replay its old rows forever. */
   private val stagedStreamDirs =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    new scala.collection.concurrent.TrieMap[String, (String, String)]()
+
+  /** A staging memo's value for `key` while `sources` fingerprint as
+    * when it was made; else `make` a fresh one that replaces it (the
+    * superseded staged dir stays under [[graft.Scratch]] until exit). */
+  private def currentStaging[K](memo: scala.collection.concurrent.Map[K, (String, String)],
+                                key: K, sources: Seq[String])(make: => String): String = {
+    val fp = graft.StoreCatalog.sourceFingerprint(sources)
+    memo.get(key).collect { case (`fp`, v) => v }.getOrElse {
+      val v = make
+      memo.put(key, (fp, v))
+      v
+    }
+  }
 
   private def stageParquetDir(src: java.nio.file.Path): String =
     if (java.nio.file.Files.isDirectory(src)) src.toString
-    else stagedStreamDirs.getOrElseUpdate(src.toString, {
+    else currentStaging(stagedStreamDirs, src.toString, Seq(src.toString)) {
       val d = graft.Scratch.dir("graft_stream")
       try java.nio.file.Files.createLink(d.resolve(src.getFileName), src)
       catch { case _: Exception =>
         java.nio.file.Files.copy(src, d.resolve(src.getFileName)) }
       d.toString
-    })
+    }
 
   /** A file stream needs an explicit schema; take it from the parquet
     * footer (one driver-side read) instead of hardcoding it, so a
@@ -54,19 +70,22 @@ object StreamOps {
   private def footerSchema(spark: SparkSession, stagedDir: String): StructType =
     footerSchemas.getOrElseUpdate(stagedDir, spark.read.parquet(stagedDir).schema)
 
-  /** Read the events fixture as a file stream (one micro-batch per file),
-    * with the same event-time normalization as the batch path.
+  /** Read a fixture table as a file stream (one micro-batch per file).
     * FileStreamSource requires a DIRECTORY source; the fixture is a
     * single file, so it is staged (hardlink/copy) into a temp dir once —
     * which is also the natural replay shape (one file per micro-batch). */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stageParquetDir(java.nio.file.Paths.get(dir, "events.parquet"))
-    graft.Tables.normalizeTimestamps(
-      spark.readStream
-        .schema(footerSchema(spark, staged))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged))
+  private def fixtureStream(spark: SparkSession, dir: String,
+                            table: String): DataFrame = {
+    val staged = stageParquetDir(java.nio.file.Paths.get(dir, s"$table.parquet"))
+    spark.readStream
+      .schema(footerSchema(spark, staged))
+      .option("maxFilesPerTrigger", 1)
+      .parquet(staged)
   }
+
+  /** The events fixture stream, event time normalized as in batch. */
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.normalizeTimestamps(fixtureStream(spark, dir, "events"))
 
   /** Tumbling 1-hour windowed counts + exact-cents value sums with a
     * 2-hour watermark — the streaming twin of Events.tumbling (same
@@ -221,28 +240,57 @@ object StreamOps {
     }
   }
 
-  /** Run a (finite) streaming DataFrame to a named in-memory sink until
-    * all available input is processed; returns the result table. Used by
-    * Verify (streaming twin queries) and tests. The memory sink's temp
-    * view is dropped once the result is resolved: the returned frame
-    * holds the sink's rows, the session catalog does not (a view per
-    * call would keep every result alive until the session ends).
+  /** Run a (finite) streaming DataFrame to an in-memory sink named
+    * `name` plus a per-call suffix until all available input is
+    * processed; returns the result table. The sink's temp view is
+    * dropped once the result is resolved: the returned frame holds the
+    * sink's rows, the session catalog does not (a view per call would
+    * keep every result alive until the session ends).
     * `statePartitions`: see [[runStream]]. */
   def runToMemory(spark: SparkSession, df: DataFrame, name: String,
                   mode: String = "complete",
                   statePartitions: Int = 4): DataFrame = {
+    val query = s"${name}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     runStream(df, Some(statePartitions))(
-      _.format("memory").queryName(name).outputMode(mode))
-    val out = spark.table(name)
-    spark.catalog.dropTempView(name)
+      _.format("memory").queryName(query).outputMode(mode))
+    val out = spark.table(query)
+    spark.catalog.dropTempView(query)
     out
+  }
+
+  /** [[runToMemory]]'s partial-aggregate sibling: append
+    * `partial(batch, epochId)` per micro-batch to a fresh per-call
+    * [[graft.Scratch]] dir (a query result, not a store — the stream
+    * runs on every call) and return the partials. */
+  private def runToParts(df: DataFrame, prefix: String)(
+      partial: (DataFrame, Long) => DataFrame): DataFrame = {
+    val dir = graft.Scratch.dir(prefix).toString
+    runStream(df, Some(4)) {
+      _.foreachBatch { (batch: DataFrame, epochId: Long) =>
+        partial(batch, epochId).coalesce(1).write.mode("append").parquet(dir)
+      }
+    }
+    df.sparkSession.read.parquet(dir)
+  }
+
+  /** Create every part dir of a stream store before its stream starts:
+    * a part no batch writes (an unpopulated HNSW layer) must exist for
+    * the serves' emptiness checks and for the catalog's validity check,
+    * which would otherwise rebuild the store in every later session. */
+  private def createParts(parts: Map[String, String]): Unit =
+    parts.values.foreach(p => java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(p)))
+
+  /** Whether a store dir holds data beyond `_SUCCESS`/hidden files. */
+  private def storeNonEmpty(d: String): Boolean = {
+    val f = new java.io.File(d).list()
+    f != null && f.exists(n => !n.startsWith("_") && !n.startsWith("."))
   }
 
   /** Streaming twin of Events.tumbling over the replayed fixture —
     * verifiable against the SAME DuckDB oracle as the batch query. */
   def streamTumblingQuery(spark: SparkSession, dir: String): DataFrame =
-    runToMemory(spark, tumblingCounts(eventsStream(spark, dir)),
-      s"stream_tumbling_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    runToMemory(spark, tumblingCounts(eventsStream(spark, dir)), "stream_tumbling")
       .orderBy(col("wstart"), col("event_type"))
 
   /** Streaming twin of Events.sessions (session_window + state store
@@ -250,8 +298,7 @@ object StreamOps {
     * as the batch lag+running-sum form, proving the two sessionization
     * shapes agree on the end-exclusive >= 30min gap contract. */
   def streamSessionsQuery(spark: SparkSession, dir: String): DataFrame =
-    runToMemory(spark, sessionCounts(eventsStream(spark, dir)),
-      s"stream_sessions_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    runToMemory(spark, sessionCounts(eventsStream(spark, dir)), "stream_sessions")
       .orderBy(col("user_id"), col("session_start"))
 
   /** Oracle-checkable streaming ingest-dedup twin (the `dedupedStream`
@@ -269,24 +316,16 @@ object StreamOps {
     val deduped = dedupedStream(eventsStream(spark, dir).union(dupes))
     runToMemory(spark,
       deduped.select(col("event_id"), col("user_id"), col("event_type"),
-        col("value")),
-      s"stream_dedup_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      mode = "append")
+        col("value")), "stream_dedup", mode = "append")
       .orderBy(col("event_id"))
   }
 
   def streamDedupOracleSql: String =
     "SELECT event_id, user_id, event_type, value FROM events"
 
-  /** Read the documents fixture as a file stream — same staging and
-    * schema-from-footer shape as [[eventsStream]]. */
-  def docsStream(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stageParquetDir(java.nio.file.Paths.get(dir, "documents.parquet"))
-    spark.readStream
-      .schema(footerSchema(spark, staged))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged)
-  }
+  /** The documents fixture as a file stream. */
+  def docsStream(spark: SparkSession, dir: String): DataFrame =
+    fixtureStream(spark, dir, "documents")
 
   /** STREAM-STATIC decontamination (the continuous form of
     * Dedup.decontaminate): the training corpus arrives as a STREAM, the
@@ -304,21 +343,23 @@ object StreamOps {
   def streamDecontaminateQuery(spark: SparkSession, dir: String, w: Int = 4,
                                benchBelow: Long = 10): DataFrame = {
     import graft.operators.Dedup
-    val bench = broadcast(
-      Dedup.spanTable(graft.Tables.loadWide(spark, dir, "documents"), w)
-        .filter(col("doc_id") < benchBelow)
-        .select(col("span").as("b_span")).distinct())
+    val bench = broadcast(benchSpans(spark, dir, w, benchBelow))
     val streamSpans = Dedup.spanTable(docsStream(spark, dir), w)
       .filter(col("doc_id") >= benchBelow)
     val matched = runToMemory(spark,
       streamSpans.join(bench, col("span") === col("b_span"))
-        .select(col("doc_id"), col("span")),
-      s"stream_decon_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      mode = "append")
+        .select(col("doc_id"), col("span")), "stream_decon", mode = "append")
     matched.groupBy(col("doc_id"))
       .agg(countDistinct(col("span")).as("n_shared_spans"))
       .orderBy(col("doc_id"))
   }
+
+  /** The static bench span set (`b_span`) of docs below `benchBelow`. */
+  private def benchSpans(spark: SparkSession, dir: String, w: Int,
+                         benchBelow: Long): DataFrame =
+    graft.operators.Dedup.spanTable(graft.Tables.loadWide(spark, dir, "documents"), w)
+      .filter(col("doc_id") < benchBelow)
+      .select(col("span").as("b_span")).distinct()
 
   /** STREAMING BLOOM DECONTAMINATION: [[streamDecontaminateQuery]] with
     * the broadcast exact bench-span set replaced by
@@ -340,14 +381,8 @@ object StreamOps {
     val hits = streamSpans
       .filter(Dedup.bloomContainsCol(lit(bits), xxhash64(col("span")), k))
     val matched = runToMemory(spark,
-      hits.select(col("doc_id"), col("span")),
-      s"stream_bloom_decon_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      mode = "append")
-    val bench = broadcast(
-      Dedup.spanTable(graft.Tables.loadWide(spark, dir, "documents"), w)
-        .filter(col("doc_id") < benchBelow)
-        .select(col("span").as("b_span")).distinct())
-    matched.join(bench, col("span") === col("b_span"))
+      hits.select(col("doc_id"), col("span")), "stream_bloom_decon", mode = "append")
+    matched.join(broadcast(benchSpans(spark, dir, w, benchBelow)), col("span") === col("b_span"))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("span")).as("n_shared_spans"))
       .orderBy(col("doc_id"))
@@ -374,8 +409,7 @@ object StreamOps {
       .groupBy(col("event_type"), window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("event_type"), col("window.start").as("wstart"), col("cnt"))
-    val hourly = runToMemory(spark, hourlyStream,
-      s"stream_anomalies_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    val hourly = runToMemory(spark, hourlyStream, "stream_anomalies")
     Events.scoreAnomalies(hourly, stats)
   }
 
@@ -410,9 +444,7 @@ object StreamOps {
   def streamRangeJoinQuery(spark: SparkSession, dir: String): DataFrame = {
     val joined = clickPurchaseJoinStream(eventsStream(spark, dir))
       .select(col("p_id"))
-    runToMemory(spark, joined,
-      s"stream_range_join_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      mode = "append")
+    runToMemory(spark, joined, "stream_range_join", mode = "append")
       .groupBy(col("p_id"))
       .agg(count(lit(1)).as("n_clicks_1h"))
       .orderBy(col("p_id"))
@@ -441,13 +473,15 @@ object StreamOps {
 
   /** Staged one-file-per-document drop dir for the fixture (the
     * reference's upload loop replayed from disk). Cached per fixture
-    * dir per JVM — Bench reps and Verify share one staging. Harness
-    * code, not a query path: the collect materializes the fixture
-    * corpus once to write the files a FileStreamSource can replay. */
-  private val stagedDocs = scala.collection.concurrent.TrieMap.empty[(String, Int), String]
+    * dir and documents fingerprint per JVM — Bench reps and Verify
+    * share one staging. Harness code, not a query path: the collect
+    * materializes the fixture corpus once to write the files a
+    * FileStreamSource can replay. */
+  private val stagedDocs =
+    scala.collection.concurrent.TrieMap.empty[(String, Int), (String, String)]
   def stageDocsAsFiles(spark: SparkSession, dir: String,
                        cap: Int = Int.MaxValue): String =
-    stagedDocs.getOrElseUpdate((dir, cap), {
+    currentStaging(stagedDocs, (dir, cap), Seq(s"$dir/documents.parquet")) {
       import spark.implicits._
       val d = graft.Scratch.dir("docs_drop")
       graft.Tables.loadWide(spark, dir, "documents")
@@ -460,7 +494,7 @@ object StreamOps {
             text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         }
       d.toString
-    })
+    }
 
   /** Oracle-checkable streaming 7-stage doc pipeline: the fixture
     * corpus replayed as a file-drop stream in TWO micro-batches
@@ -489,8 +523,7 @@ object StreamOps {
       streamDocPipeline(spark, drop,
         p => regexp_extract(p, "doc_(\\d+)\\.txt$", 1).cast(LongType),
         maxFilesPerTrigger = Some(math.max(1, (nFiles + 1) / 2))),
-      s"stream_pipeline_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      mode = "append")
+      "stream_pipeline", mode = "append")
     res.select(
       col("doc_id"), col("success"), col("doc_type"), col("record_id"),
       col("file_url"), col("x_first_token"), col("x_n_tokens"),
@@ -529,24 +562,31 @@ object StreamOps {
     }
   }
 
-  /** Read the embeddings fixture as a file stream — same staging and
-    * schema-from-footer shape as [[eventsStream]]. */
-  def embeddingsStream(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stageParquetDir(java.nio.file.Paths.get(dir, "embeddings.parquet"))
-    spark.readStream
-      .schema(footerSchema(spark, staged))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged)
-  }
+  /** The embeddings fixture as a file stream. */
+  def embeddingsStream(spark: SparkSession, dir: String): DataFrame =
+    fixtureStream(spark, dir, "embeddings")
 
-  /** One maintained index per (fixture dir, bits) per JVM — bench reps
-    * and verify re-enter this builder; the store is append-only and the
-    * stream replays the same fixture, so rebuilding it per call would
-    * duplicate rows AND pay the streaming fixed cost every rep. */
-  private val lshStores = new scala.collection.concurrent.TrieMap[(String, Int), String]()
-  /** The materialized store dir (tests: layout-hygiene composition). */
-  private[graft] def lshStoreDirFor(dir: String, bits: Int): Option[String] =
-    lshStores.get((dir, bits))
+  /** The stream-maintained LSH bucket store — like every stream store
+    * here a [[graft.StoreCatalog]] store built once per source
+    * fingerprint (a rebuild per call would duplicate rows AND pay the
+    * streaming fixed cost every rep): family `stream_*`, sources =
+    * every table the build reads, config = the parameters and layout
+    * constants it bakes in, one part per store dir. */
+  private[graft] def lshStore(spark: SparkSession, dir: String, bits: Int): String =
+    graft.StoreCatalog.getOrBuild(spark, "stream_lsh_buckets",
+      Seq(s"$dir/embeddings.parquet"), Seq("bits" -> bits.toString),
+      Seq("store")) { parts =>
+      createParts(parts)
+      val in = embeddingsStream(spark, dir)
+        .select(col("vec_id"), col("embedding"),
+          graft.operators.Similarity.signBucket(col("embedding"), bits).as("bucket"))
+      runStream(in) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.write.mode("append").partitionBy("bucket").parquet(parts("store"))
+        }
+      }
+      Map.empty
+    }.parts("store")
 
   /** STREAMING ANN INDEX MAINTENANCE (SURVEY §2.13 + V3's serve path):
     * embeddings arrive as a stream; each micro-batch is sign-LSH-
@@ -563,20 +603,8 @@ object StreamOps {
     * stream cannot count its corpus up front. */
   def streamLshTopKQuery(spark: SparkSession, dir: String, k: Int = 3,
                          nQueries: Int = 10, bits: Int = 6): DataFrame = {
-    import graft.operators.Similarity
-    val storeDir = lshStores.getOrElseUpdate((dir, bits), {
-      val store = graft.Scratch.dir("graft_lsh_store").toString
-      val in = embeddingsStream(spark, dir)
-        .select(col("vec_id"), col("embedding"),
-          Similarity.signBucket(col("embedding"), bits).as("bucket"))
-      runStream(in) {
-        _.foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").partitionBy("bucket").parquet(store)
-        }
-      }
-      store
-    })
-    Similarity.serveLshTopKFromStore(spark, dir, storeDir, k, nQueries, bits)
+    graft.operators.Similarity.serveLshTopKFromStore(spark, dir,
+      lshStore(spark, dir, bits), k, nQueries, bits)
   }
 
   /** Per-user funnel progress: (v, c, p) are the stage-reaching
@@ -658,9 +686,7 @@ object StreamOps {
 
   def streamFunnelQuery(spark: SparkSession, dir: String): DataFrame = {
     val updates = funnelUpdates(eventsStream(spark, dir))
-    val sunk = runToMemory(spark, updates,
-      s"stream_funnel_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      mode = "append")
+    val sunk = runToMemory(spark, updates, "stream_funnel", mode = "append")
     val perUser = sunk.groupBy(col("user_id")).agg(max(col("stage")).as("stage"))
     val row = (ord: Int, label: String) =>
       perUser.filter(col("stage") >= ord)
@@ -723,9 +749,7 @@ object StreamOps {
 
   def streamRetentionQuery(spark: SparkSession, dir: String): DataFrame = {
     val tagged = retentionTagged(eventsStream(spark, dir))
-    val sunk = runToMemory(spark, tagged,
-      s"stream_retention_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      mode = "append")
+    val sunk = runToMemory(spark, tagged, "stream_retention", mode = "append")
     // a user's cohort is their FINAL (earliest) first_ts — rows tagged
     // before an earlier first event arrived would carry a later cohort,
     // so re-derive the per-user min before bucketing
@@ -776,21 +800,17 @@ object StreamOps {
     // O(docs per batch) and merge exactly (integer sc). This is the
     // streaming twin of map-side combine, and most of the
     // stream-vs-batch fixed-cost gap was that sink volume.
-    val partDir = graft.Scratch.dir("lm_parts").toString
-    runStream(scored, Some(4)) {
-      _.foreachBatch { (batch: DataFrame, epochId: Long) =>
-        batch.groupBy(col("doc_id"))
-          .agg(sum(col("sc")).as("s"), count(lit(1)).as("nb"))
-          .withColumn("epoch", lit(epochId))
-          .coalesce(1).write.mode("append").parquet(partDir)
-      }
+    val parts = runToParts(scored, "lm_parts") { (batch, epochId) =>
+      batch.groupBy(col("doc_id"))
+        .agg(sum(col("sc")).as("s"), count(lit(1)).as("nb"))
+        .withColumn("epoch", lit(epochId))
     }
     // epoch-stamped merge: max per (doc, epoch) absorbs an at-least-once
     // replay's IDENTICAL re-appended partial, sum across epochs carries
     // a document whose slots ever split across batches — correct under
     // both failure modes instead of silently undercounting if the
     // one-doc-one-batch staging invariant ever breaks
-    val perDoc = spark.read.parquet(partDir)
+    val perDoc = parts
       .groupBy(col("doc_id"), col("epoch"))
       .agg(max(col("s")).as("s"), max(col("nb")).as("nb"))
       .groupBy(col("doc_id"))
@@ -828,16 +848,11 @@ object StreamOps {
       .filter(col("w") =!= "")
       .join(segs, "w")
       .select(col("doc_id"), col("k"))
-    val partDir = graft.Scratch.dir("bpe_parts").toString
-    runStream(counted, Some(4)) {
-      _.foreachBatch { (batch: DataFrame, epochId: Long) =>
-        batch.groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("nw"), sum(col("k")).as("ns"))
-          .withColumn("epoch", lit(epochId))
-          .coalesce(1).write.mode("append").parquet(partDir)
-      }
-    }
-    mergeBpePartials(spark.read.parquet(partDir))
+    mergeBpePartials(runToParts(counted, "bpe_parts") { (batch, epochId) =>
+      batch.groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("nw"), sum(col("k")).as("ns"))
+        .withColumn("epoch", lit(epochId))
+    })
   }
 
   /** The BPE partial merge, factored out for the replay spec: one
@@ -864,21 +879,18 @@ object StreamOps {
     * batching — merge in the final top-k pass. On a true deployment the
     * model would come from yesterday's corpus; the fixture trains and
     * scores on the same replayed documents so the DuckDB twin checks
-    * every row. Oracle: dsirSelectSql itself. */
-  /** One partial store per (fixture dir, nBuckets, targetLang) per JVM
-    * (bench reps and verify re-enter this builder; partials carry
-    * batch_id so a replayed epoch dedupes at read instead of
-    * double-counting). Keyed on the scoring config (the lshStores
-    * precedent): partials scored under one model config must never
-    * serve a query asking for another. */
-  private val dsirPartStores =
-    new scala.collection.concurrent.TrieMap[(String, Int, String), String]()
-
+    * every row. Oracle: dsirSelectSql itself. The score partials are a
+    * store keyed on the scoring config; they carry batch_id so a
+    * replayed epoch dedupes at read instead of double-counting. */
   def streamDsirSelectQuery(spark: SparkSession, dir: String,
                             nBuckets: Int = 4096, k: Int = 100,
                             targetLang: String = "en"): DataFrame = {
     import graft.operators.TextAnalytics
-    val partDir = dsirPartStores.getOrElseUpdate((dir, nBuckets, targetLang), {
+    val partDir = graft.StoreCatalog.getOrBuild(spark, "stream_dsir_parts",
+      Seq(s"$dir/documents.parquet"),
+      Seq("nBuckets" -> nBuckets.toString, "targetLang" -> targetLang),
+      Seq("parts")) { parts =>
+      createParts(parts)
       val model = broadcast(
         TextAnalytics.dsirModel(spark, dir, nBuckets, targetLang)
           .localCheckpoint(true))
@@ -892,17 +904,16 @@ object StreamOps {
             lit(nBuckets.toLong)).as("b"))
         .join(model, "b")
         .select(col("doc_id"), col("lw").as("p"))
-      val pd = graft.Scratch.dir("dsir_parts").toString
       runStream(scored, Some(4)) {
         _.foreachBatch { (batch: DataFrame, epochId: Long) =>
           batch.groupBy(col("doc_id"))
             .agg(sum(col("p")).as("s"))
             .withColumn("batch_id", lit(epochId))
-            .coalesce(1).write.mode("append").parquet(pd)
+            .coalesce(1).write.mode("append").parquet(parts("parts"))
         }
       }
-      pd
-    })
+      Map.empty
+    }.parts("parts")
     val perDoc = spark.read.parquet(partDir)
       .groupBy(col("doc_id"), col("batch_id"))
       .agg(first(col("s")).as("s"))
@@ -911,14 +922,28 @@ object StreamOps {
     TextAnalytics.dsirTopK(perDoc, k)
   }
 
-  /** One refresh-store triple per (dir, nBuckets, targetLang) per JVM:
+  /** The refresh store built through [[ingestDsirRefreshBatch]]:
     * (features dir, count-partials dir, model-versions dir). */
-  private val dsirRefreshStores = new scala.collection.concurrent.TrieMap[
-    (String, Int, String), (String, String, String)]()
-  private[graft] def dsirRefreshStoresFor(
-      dir: String, nBuckets: Int = 4096,
-      targetLang: String = "en"): Option[(String, String, String)] =
-    dsirRefreshStores.get((dir, nBuckets, targetLang))
+  private[graft] def dsirRefreshStores(
+      spark: SparkSession, dir: String, nBuckets: Int = 4096,
+      targetLang: String = "en"): (String, String, String) = {
+    val h = graft.StoreCatalog.getOrBuild(spark, "stream_dsir_refresh",
+      Seq(s"$dir/documents.parquet"),
+      Seq("nBuckets" -> nBuckets.toString, "targetLang" -> targetLang),
+      Seq("feats", "counts", "models")) { parts =>
+      createParts(parts)
+      val in = docsStream(spark, dir)
+        .select(col("doc_id"), col("text"), col("lang"))
+      runStream(in, Some(4)) {
+        _.foreachBatch { (batch: DataFrame, epochId: Long) =>
+          ingestDsirRefreshBatch(batch, epochId, parts("feats"),
+            parts("counts"), parts("models"), nBuckets, targetLang)
+        }
+      }
+      Map.empty
+    }
+    (h.parts("feats"), h.parts("counts"), h.parts("models"))
+  }
 
   /** One micro-batch of the DSIR model-REFRESH pipeline, factored out
     * so the replay spec can re-run an epoch by hand. Three appends,
@@ -991,20 +1016,7 @@ object StreamOps {
                              targetLang: String = "en"): DataFrame = {
     import graft.operators.TextAnalytics
     val (featsDir, _, modelDir) =
-      dsirRefreshStores.getOrElseUpdate((dir, nBuckets, targetLang), {
-        val fd = graft.Scratch.dir("dsir_feats").toString
-        val cd = graft.Scratch.dir("dsir_counts").toString
-        val md = graft.Scratch.dir("dsir_models").toString
-        val in = docsStream(spark, dir)
-          .select(col("doc_id"), col("text"), col("lang"))
-        runStream(in, Some(4)) {
-          _.foreachBatch { (batch: DataFrame, epochId: Long) =>
-            ingestDsirRefreshBatch(batch, epochId, fd, cd, md,
-              nBuckets, targetLang)
-          }
-        }
-        (fd, cd, md)
-      })
+      dsirRefreshStores(spark, dir, nBuckets, targetLang)
     val versions = spark.read.parquet(modelDir)
     // head-of-store pick: ONE long of driver control state (partition
     // columns read back as int when values fit — widen via Number)
@@ -1048,12 +1060,14 @@ object StreamOps {
     }
   }
 
-  /** One sunk DuckDB file per fixture dir per JVM: bench reps and
-    * Verify re-enter this builder, and each re-entry REPLAYS the whole
-    * stream into the SAME database with the same epoch ids — the
-    * exactly-once merge absorbs the duplicate epochs, which is the
-    * idempotence claim itself, exercised on every rep. */
-  private val jdbcSinkDbs = new scala.collection.concurrent.TrieMap[String, String]()
+  /** One sunk DuckDB file per fixture dir (and events fingerprint) per
+    * JVM: bench reps and Verify re-enter this builder, and each
+    * re-entry REPLAYS the whole stream into the SAME database with the
+    * same epoch ids — the exactly-once merge absorbs the duplicate
+    * epochs, which is the idempotence claim itself, exercised on every
+    * rep. */
+  private val jdbcSinkDbs =
+    new scala.collection.concurrent.TrieMap[String, (String, String)]()
 
   /** Oracle-checkable streaming exactly-once sink twin: the events
     * fixture streamed micro-batch-wise through [[streamJdbcExactlyOnce]]
@@ -1061,7 +1075,7 @@ object StreamOps {
     * `SELECT .. FROM events` — exact row set, no dupes, across replays.
     */
   def streamSinkJdbcQuery(spark: SparkSession, dir: String): DataFrame = {
-    val url = jdbcSinkDbs.getOrElseUpdate(dir,
+    val url = currentStaging(jdbcSinkDbs, dir, Seq(s"$dir/events.parquet"))(
       s"jdbc:duckdb:${graft.Scratch.dir("jdbc_sink")}/sink.db")
     val rows = eventsStream(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
@@ -1078,12 +1092,6 @@ object StreamOps {
 
   def streamSinkJdbcOracleSql: String =
     "SELECT event_id, user_id, event_type, value FROM events"
-
-  /** One seen-store per fixture dir per JVM (bench reps / Verify
-    * re-enter; the dedup is idempotent on replay — every replayed doc
-    * is already admitted, so nothing appends — but rebuilding the store
-    * per call would pay the streaming fixed cost each rep). */
-  private val dedupStores = new scala.collection.concurrent.TrieMap[String, String]()
 
   /** Fingerprint-store partition fan-out: fp-prefix buckets, the
     * partition key of the at-rest layout. 64 suits the fixtures; a
@@ -1127,6 +1135,36 @@ object StreamOps {
     scoped.select(col("fp").as("seen_fp"))
   }
 
+  /** The rows of `keyed` (fp, bucket, ..) whose fp the seen-store does
+    * not hold yet. ONE bounded action decides the pushdown AND sizes the
+    * batch: getting ≤ FpPushdownLimit rows means we hold the WHOLE
+    * batch, so the same rows serve as the pushdown fp set and the
+    * complete touched-bucket set; only an over-limit batch pays a
+    * second action for its full bucket set. */
+  private def unseenFps(keyed: DataFrame, storeDir: String): DataFrame =
+    if (!storeNonEmpty(storeDir)) keyed
+    else {
+      val probe = keyed.select(col("fp"), col("bucket"))
+        .limit(FpPushdownLimit.toInt + 1).collect()
+      val small = probe.length <= FpPushdownLimit
+      val touched =
+        if (small) probe.map(_.getInt(1)).distinct.toSeq.sorted
+        else keyed.select(col("bucket")).distinct()
+          .collect().map(_.getInt(0)).toSeq.sorted
+      val fps = Option.when(small)(probe.map(_.getLong(0)).toSeq.sorted)
+      keyed.join(prunedSeenFps(keyed.sparkSession, storeDir, touched, fps),
+        col("fp") === col("seen_fp"), "left_anti")
+    }
+
+  /** Admit `fresh` into the seen-store: ONE file per touched bucket per
+    * batch (file count, not row count, dominates serve cost), fp-sorted
+    * so row-group min/max stats are tight for the point lookup. */
+  private def appendSeenFps(fresh: DataFrame, storeDir: String): Unit =
+    fresh.select(col("fp"), col("doc_id"), col("bucket"))
+      .repartition(col("bucket"))
+      .sortWithinPartitions(col("bucket"), col("fp"))
+      .write.mode("append").partitionBy("bucket").parquet(storeDir)
+
   /** STORE-BACKED streaming exact dedup — UNBOUNDED-HISTORY ingest
     * dedup: each micro-batch collapses its own duplicates (min doc_id
     * per content fingerprint), anti-joins the persistent seen-store,
@@ -1150,58 +1188,24 @@ object StreamOps {
     * codebook — never by batch or store size. */
   def streamExactDedupStoreQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.fingerprint
-    val store = dedupStores.getOrElseUpdate(dir, {
-      val storeDir = graft.Scratch.dir("dedup_store").toString
+    val store = graft.StoreCatalog.getOrBuild(spark, "stream_exact_dedup",
+      Seq(s"$dir/documents.parquet"),
+      Seq("buckets" -> DedupStoreBuckets.toString), Seq("store")) { parts =>
+      createParts(parts)
       val in = docsStream(spark, dir)
         .select(col("doc_id"), fingerprint(col("text")).as("fp"))
       runStream(in) {
         _.foreachBatch { (batch: DataFrame, _: Long) =>
-          val sp = batch.sparkSession
           val batchMin = batch.groupBy(col("fp"))
             .agg(min(col("doc_id")).as("doc_id"))
             .withColumn("bucket", fpBucket(col("fp")))
             .persist() // two consumers: the bucket-set probe + the join
-          try {
-            // ONE bounded action decides the pushdown AND sizes the
-            // batch: collect up to FpPushdownLimit+1 (fp, bucket) rows —
-            // getting ≤ limit rows means we hold the WHOLE batch, so the
-            // same rows serve as the pushdown fp set and the complete
-            // touched-bucket set (collect bounded by FpPushdownLimit,
-            // documented O(model) state). Only an over-limit batch pays
-            // a second action for its full bucket set.
-            val probe = batchMin.select(col("fp"), col("bucket"))
-              .limit(FpPushdownLimit.toInt + 1).collect()
-            val small = probe.length <= FpPushdownLimit
-            val touched =
-              if (small) probe.map(_.getInt(1)).distinct.toSeq.sorted
-              else batchMin.select(col("bucket")).distinct()
-                .collect().map(_.getInt(0)).toSeq.sorted
-            // small batches push their fp set into the scan: with the
-            // store fp-sorted per bucket, row-group stats skip — the
-            // seen side becomes a point lookup
-            val fps =
-              if (small) Some(probe.map(_.getLong(0)).toSeq.sorted)
-              else None
-            val fresh =
-              if (new java.io.File(storeDir).listFiles() == null ||
-                  new java.io.File(storeDir).list().isEmpty) batchMin
-              else batchMin.join(prunedSeenFps(sp, storeDir, touched, fps),
-                col("fp") === col("seen_fp"), "left_anti")
-            // clustered by bucket (ONE file per touched bucket per
-            // batch — an unclustered append writes every task's sliver
-            // into every bucket, and the file count, not the row count,
-            // dominates serve cost) and fp-sorted within each file so
-            // row-group min/max stats are tight for the point-lookup
-            // serve path
-            fresh.select(col("fp"), col("doc_id"), col("bucket"))
-              .repartition(col("bucket"))
-              .sortWithinPartitions(col("bucket"), col("fp"))
-              .write.mode("append").partitionBy("bucket").parquet(storeDir)
-          } finally batchMin.unpersist()
+          try appendSeenFps(unseenFps(batchMin, parts("store")), parts("store"))
+          finally batchMin.unpersist()
         }
       }
-      storeDir
-    })
+      Map.empty
+    }.parts("store")
     spark.read.parquet(store)
       .select(col("doc_id")).orderBy(col("doc_id"))
   }
@@ -1210,11 +1214,6 @@ object StreamOps {
     s"""SELECT min(doc_id) AS doc_id FROM documents
         GROUP BY ${graft.functions.TextFunctions.fingerprintSql("text")}
         ORDER BY 1"""
-
-  /** One signature store per fixture dir per JVM (same memoization
-    * contract as [[dedupStores]]: replays anti-join on doc_id, so
-    * nothing re-appends). */
-  private val neardupSigStores = new scala.collection.concurrent.TrieMap[String, String]()
 
   /** STREAMING-MAINTAINED NEAR-DUP INDEX: the MinHash-LSH analogue of
     * the store-backed exact dedup above, and the text-side sibling of
@@ -1240,45 +1239,68 @@ object StreamOps {
     * partition ([[storeDocIds]]); the arriving batch's signature pass is
     * the only text-touching work. */
   def streamNearDupStoreQuery(spark: SparkSession, dir: String): DataFrame = {
-    val store = neardupSigStores.getOrElseUpdate(dir, {
-      val storeDir = graft.Scratch.dir("neardup_sigs").toString
+    val (sigK, bandR) = (8, 2)
+    val store = graft.StoreCatalog.getOrBuild(spark, "stream_neardup_sigs",
+      Seq(s"$dir/documents.parquet"),
+      Seq("k" -> sigK.toString, "r" -> bandR.toString), Seq("store")) { parts =>
+      createParts(parts)
       val in = docsStream(spark, dir)
         .select(col("doc_id"), col("text"))
       runStream(in) {
         _.foreachBatch { (batch: DataFrame, _: Long) =>
-          val sp = batch.sparkSession
-          val sigs = graft.operators.Dedup.sigTableFrom(batch, k = 8)
-          val fresh =
-            if (new java.io.File(storeDir).list() == null ||
-                new java.io.File(storeDir).list().isEmpty) sigs
-            else sigs.join(storeDocIds(sp, storeDir),
-              col("doc_id") === col("seen_id"), "left_anti")
-          graft.operators.Dedup.bandedRows(fresh, k = 8, r = 2)
-            .repartition(col("band")) // one file per band per batch
-            .write.mode("append").partitionBy("band").parquet(storeDir)
+          appendUnseenBanded(graft.operators.Dedup.sigTableFrom(batch, k = sigK),
+            parts("store"))(graft.operators.Dedup.bandedRows(_, k = sigK, r = bandR))
         }
       }
-      storeDir
-    })
+      Map.empty
+    }.parts("store")
     graft.operators.Dedup.keepFromPairs(spark, dir,
       graft.operators.Dedup.lshPairsFromBanded(spark, dir,
         spark.read.parquet(store)))
   }
 
-  /** Replay-membership read over the band-partitioned signature store:
-    * every document has exactly ONE band-0 row, so membership needs only
-    * the `band=0` partition — the anti-join's seen side is
-    * partition-pruned to 1/nBands of the store. */
+  /** Replay-membership read over a band-partitioned store (signatures
+    * or image hashes): every document has exactly ONE band-0 row, so
+    * membership needs only the `band=0` partition — the anti-join's
+    * seen side is partition-pruned to 1/nBands of the store. */
   private[graft] def storeDocIds(spark: SparkSession, storeDir: String): DataFrame =
     spark.read.parquet(storeDir)
       .where(col("band") === 0)
       .select(col("doc_id").as("seen_id"))
 
+  /** Append the `banded` rows of `keyed`'s documents not in the store
+    * yet (replays append nothing), one file per band per batch. */
+  private def appendUnseenBanded(keyed: DataFrame, storeDir: String)(
+      banded: DataFrame => DataFrame): Unit = {
+    val fresh =
+      if (!storeNonEmpty(storeDir)) keyed
+      else keyed.join(storeDocIds(keyed.sparkSession, storeDir),
+        col("doc_id") === col("seen_id"), "left_anti")
+    banded(fresh).repartition(col("band"))
+      .write.mode("append").partitionBy("band").parquet(storeDir)
+  }
+
   def streamNearDupStoreOracleSql: String = graft.operators.Dedup.lshDedupKeepSql()
 
-  /** One image-hash store per fixture dir per JVM (same memoization
-    * contract as [[neardupSigStores]]). */
-  private val imageHashStores = new scala.collection.concurrent.TrieMap[String, String]()
+  /** The band-partitioned image-hash store the stream below builds. */
+  private[graft] def imageHashStore(spark: SparkSession, dir: String): String =
+    graft.StoreCatalog.getOrBuild(spark, "stream_image_hashes",
+      Seq(s"$dir/documents.parquet"),
+      Seq("bands" -> graft.operators.Multimodal.DhashBands.toString,
+        "bandBits" -> graft.operators.Multimodal.DhashBandBits.toString),
+      Seq("store")) { parts =>
+      createParts(parts)
+      val in = docsStream(spark, dir)
+        .select(col("doc_id"), col("text"))
+      runStream(in) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          appendUnseenBanded(graft.operators.Multimodal.imageDhashFrom(batch)
+            .withColumnRenamed("dhash", "hash"), parts("store"))(
+            graft.operators.Multimodal.dhashBandedRows(_))
+        }
+      }
+      Map.empty
+    }.parts("store")
 
   /** STREAMING-MAINTAINED IMAGE-HASH INDEX — the media member of the
     * persistent-store family (exact-dedup fp store / MinHash signature
@@ -1300,43 +1322,12 @@ object StreamOps {
     * the layout where they are decoded exactly once, the store accretes
     * ids + one long per band, replay membership reads the band=0
     * partition only, and serve touches no pixel data at all. */
-  def streamImageNearDupStoreQuery(spark: SparkSession, dir: String): DataFrame = {
-    val store = imageHashStores.getOrElseUpdate(dir, {
-      val storeDir = graft.Scratch.dir("image_hashes").toString
-      val in = docsStream(spark, dir)
-        .select(col("doc_id"), col("text"))
-      runStream(in) {
-        _.foreachBatch { (batch: DataFrame, _: Long) =>
-          val sp = batch.sparkSession
-          val hashes = graft.operators.Multimodal.imageDhashFrom(batch)
-            .withColumnRenamed("dhash", "hash")
-          val fresh =
-            if (new java.io.File(storeDir).list() == null ||
-                new java.io.File(storeDir).list().isEmpty) hashes
-            else hashes.join(imageStoreDocIds(sp, storeDir),
-              col("doc_id") === col("seen_id"), "left_anti")
-          graft.operators.Multimodal.dhashBandedRows(fresh)
-            .repartition(col("band")) // one file per band per batch
-            .write.mode("append").partitionBy("band").parquet(storeDir)
-        }
-      }
-      storeDir
-    })
-    graft.operators.Multimodal.pairsFromBandedHashes(spark.read.parquet(store))
-  }
-
-  /** Replay-membership read over the band-partitioned image-hash store:
-    * every image has exactly ONE band-0 row — the anti-join's seen side
-    * is partition-pruned to 1/nBands of the store. */
-  private[graft] def imageStoreDocIds(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(storeDir)
-      .where(col("band") === 0)
-      .select(col("doc_id").as("seen_id"))
+  def streamImageNearDupStoreQuery(spark: SparkSession, dir: String): DataFrame =
+    graft.operators.Multimodal.pairsFromBandedHashes(
+      spark.read.parquet(imageHashStore(spark, dir)))
 
   def streamImageNearDupStoreOracleSql: String =
     graft.operators.Multimodal.imageNearDupOracleSql()
-
-  private val kmvStores = new scala.collection.concurrent.TrieMap[String, String]()
 
   /** PERSISTENT STREAMING KMV STORE — unbounded-ingest distinct counting
     * with bounded per-batch state, and the one sketch whose streamed form
@@ -1377,8 +1368,9 @@ object StreamOps {
                                   k: Int): DataFrame = {
     import graft.functions.NativeFunctions.kmvMins
     import graft.operators.Sketches
-    val store = kmvStores.getOrElseUpdate(dir, {
-      val storeDir = graft.Scratch.dir("kmv_store").toString
+    val store = graft.StoreCatalog.getOrBuild(spark, "stream_kmv",
+      Seq(s"$dir/events.parquet"), Seq("k" -> k.toString), Seq("store")) { parts =>
+      createParts(parts)
       runStream(eventsStream(spark, dir)) {
         _.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
           batch.select(col("event_type"),
@@ -1387,11 +1379,11 @@ object StreamOps {
             .agg(kmvMins(col("h"), k).as("mins"))
             .withColumn("batch_id", lit(epochId))
             .coalesce(1) // a handful of k-long sketch rows per batch
-            .write.mode("append").parquet(storeDir)
+            .write.mode("append").parquet(parts("store"))
         }
       }
-      storeDir
-    })
+      Map.empty
+    }.parts("store")
     spark.read.parquet(store)
       .groupBy(col("event_type"), col("batch_id"))
       .agg(first(col("mins")).as("mins"))
@@ -1414,8 +1406,6 @@ object StreamOps {
       kmvStoreMins(spark, dir, k),
       graft.Tables.loadWide(spark, dir, "events"), k)
 
-  private val cmsStores = new scala.collection.concurrent.TrieMap[String, String]()
-
   /** PERSISTENT STREAMING SKETCH STORE — unbounded-ingest heavy-hitter
     * counting with O(1)-per-batch state: each micro-batch folds its
     * events into per-type Count-Min matrices (the same map-side-combined
@@ -1434,19 +1424,22 @@ object StreamOps {
   def streamCmsCountsQuery(spark: SparkSession, dir: String,
                            depth: Int = 4, width: Int = 8192): DataFrame = {
     import graft.functions.NativeFunctions.cmsAgg
-    val store = cmsStores.getOrElseUpdate(dir, {
-      val storeDir = graft.Scratch.dir("cms_store").toString
+    val store = graft.StoreCatalog.getOrBuild(spark, "stream_cms",
+      Seq(s"$dir/events.parquet"),
+      Seq("depth" -> depth.toString, "width" -> width.toString),
+      Seq("store")) { parts =>
+      createParts(parts)
       runStream(eventsStream(spark, dir)) {
         _.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
           batch.groupBy(col("event_type"))
             .agg(cmsAgg(col("user_id"), depth, width).as("cms"))
             .withColumn("batch_id", lit(epochId))
             .coalesce(1) // a handful of matrix rows per batch
-            .write.mode("append").parquet(storeDir)
+            .write.mode("append").parquet(parts("store"))
         }
       }
-      storeDir
-    })
+      Map.empty
+    }.parts("store")
     val parts = spark.read.parquet(store)
       .groupBy(col("event_type"), col("batch_id"))
       .agg(first(col("cms")).as("cms"))
@@ -1472,18 +1465,29 @@ object StreamOps {
       .orderBy(col("event_type"), col("user_id"))
   }
 
-  /** One streaming graph store per (fixture dir, deg, bits) per JVM
-    * (node store dir, edge store dir) — the dedupStores memoization
-    * contract: replays anti-join on vec_id against the node store, so
-    * nothing re-ingests. Keyed on the full index config (the lshStores
-    * precedent): a later call with a different deg or width builds its
-    * own store instead of silently serving the first call's config. */
-  private val knnGraphStreamStores =
-    new scala.collection.concurrent.TrieMap[(String, Int, Int), (String, String)]()
-  private[graft] def knnGraphStreamStoreFor(
-      dir: String, deg: Int = 8,
-      bits: Int = GraphStreamBits): Option[(String, String)] =
-    knnGraphStreamStores.get((dir, deg, bits))
+  /** The streaming graph store built through [[ingestGraphBatch]]:
+    * (node store dir, edge store dir). */
+  private[graft] def knnGraphStreamStore(
+      spark: SparkSession, dir: String, deg: Int = 8,
+      bits: Int = GraphStreamBits): (String, String) = {
+    val h = graft.StoreCatalog.getOrBuild(spark, "stream_knn_graph",
+      Seq(s"$dir/embeddings.parquet"),
+      Seq("deg" -> deg.toString, "bits" -> bits.toString,
+        "buckets" -> graft.operators.Similarity.GraphStoreBuckets.toString),
+      Seq("nodes", "edges")) { parts =>
+      createParts(parts)
+      val in = embeddingsStream(spark, dir)
+        .select(col("vec_id"), col("embedding"))
+      runStream(in) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          ingestGraphBatch(batch.sparkSession, batch, parts("nodes"),
+            parts("edges"), deg, bits)
+        }
+      }
+      Map.empty
+    }
+    (h.parts("nodes"), h.parts("edges"))
+  }
 
   /** Pinned sign-LSH width for the streaming graph build: a stream
     * cannot count its corpus up front, so the index config is fixed at
@@ -1550,8 +1554,7 @@ object StreamOps {
       // the batch's bucket set — bounded by 2^bits ints of control state
       val batchBuckets = nodes.select(col("bucket")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
-      val nodesEmpty = new java.io.File(nodeDir).list() == null ||
-        new java.io.File(nodeDir).list().isEmpty
+      val nodesEmpty = !storeNonEmpty(nodeDir)
       // replay membership: the seen side prunes to the batch's own
       // buckets (vec_id -> bucket is deterministic of the embedding)
       val fresh = (if (nodesEmpty) nodes
@@ -1597,8 +1600,7 @@ object StreamOps {
         val newCands = cand1.unionByName(reversed).persist()
         try {
           newCands.count()
-          val edgesEmpty = new java.io.File(edgeDir).list() == null ||
-            new java.io.File(edgeDir).list().isEmpty
+          val edgesEmpty = !storeNonEmpty(edgeDir)
           val withG = (df: DataFrame) => df
             .withColumn("gbucket", pmod(col("src"), lit(gb)).cast(IntegerType))
             .repartition(col("gbucket")) // one file per touched bucket
@@ -1666,18 +1668,7 @@ object StreamOps {
   def streamKnnGraphStoreQuery(spark: SparkSession, dir: String,
                                deg: Int = 8,
                                bits: Int = GraphStreamBits): DataFrame = {
-    val (_, edgeDir) = knnGraphStreamStores.getOrElseUpdate((dir, deg, bits), {
-      val nd = graft.Scratch.dir("knn_stream_nodes").toString
-      val ed = graft.Scratch.dir("knn_stream_edges").toString
-      val in = embeddingsStream(spark, dir)
-        .select(col("vec_id"), col("embedding"))
-      runStream(in) {
-        _.foreachBatch { (batch: DataFrame, _: Long) =>
-          ingestGraphBatch(batch.sparkSession, batch, nd, ed, deg, bits)
-        }
-      }
-      (nd, ed)
-    })
+    val (_, edgeDir) = knnGraphStreamStore(spark, dir, deg, bits)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("score").desc, col("dst"))
     spark.read.parquet(edgeDir)
@@ -1704,9 +1695,7 @@ object StreamOps {
                            beamWidth: Int = 8, steps: Int = 8,
                            k: Int = 3): DataFrame = {
     import graft.operators.{Similarity, WalkDriver}
-    // ensure the store exists (memoized; replays are no-ops)
-    streamKnnGraphStoreQuery(spark, dir, deg)
-    val (_, edgeDir) = knnGraphStreamStores((dir, deg, GraphStreamBits))
+    val (_, edgeDir) = knnGraphStreamStore(spark, dir, deg)
     val embT = graft.Tables.loadWide(spark, dir, "embeddings")
     // r13 bounded driver walk (see Similarity.graphBeamServeFrom): the
     // streamed edge store is collected once and the supersteps run
@@ -1833,10 +1822,7 @@ object StreamOps {
     try {
       val touched = firsts.select(col("wbucket")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
-      val empty = {
-        val l = new java.io.File(sd).list()
-        l == null || l.isEmpty
-      }
+      val empty = !storeNonEmpty(sd)
       val fresh =
         if (empty) firsts
         else firsts.join(prunedSeenWords(sp, sd, touched),
@@ -1850,11 +1836,37 @@ object StreamOps {
     } finally firsts.unpersist()
   }
 
-  private val corpusStatsStores =
-    new scala.collection.concurrent.TrieMap[(String, Int), (String, String)]()
-  private[graft] def corpusStatsStoresFor(
-      dir: String, nBuckets: Int = 20): Option[(String, String)] =
-    corpusStatsStores.get((dir, nBuckets))
+  /** The stores [[streamCorpusStatsQuery]] describes: (seen-words dir,
+    * token-partials dir). */
+  private[graft] def corpusStatsStores(
+      spark: SparkSession, dir: String, nBuckets: Int = 20): (String, String) = {
+    import graft.functions.TextFunctions.words
+    val h = graft.StoreCatalog.getOrBuild(spark, "stream_corpus_stats",
+      Seq(s"$dir/documents.parquet"),
+      Seq("nBuckets" -> nBuckets.toString,
+        "wbuckets" -> WordStoreBuckets.toString),
+      Seq("seen", "toks")) { parts =>
+      createParts(parts)
+      val mx = graft.Tables.load(spark, dir, "documents")
+        .agg(max(col("doc_id"))).head().getLong(0)
+      val width = mx / nBuckets + 1
+      val in = docsStream(spark, dir)
+        .select(col("doc_id"), explode(words(col("text"))).as("w"))
+        .filter(col("w") =!= "")
+        .select(expr(s"cast(doc_id div $width as int)").as("bucket"),
+          col("w"))
+      runStream(in, Some(4)) {
+        _.foreachBatch { (batch: DataFrame, epochId: Long) =>
+          batch.groupBy(col("bucket")).agg(count(lit(1)).as("toks"))
+            .withColumn("batch_id", lit(epochId))
+            .coalesce(1).write.mode("append").parquet(parts("toks"))
+          updateSeenWords(batch.sparkSession, parts("seen"), batch)
+        }
+      }
+      Map.empty
+    }
+    (h.parts("seen"), h.parts("toks"))
+  }
 
   /** STREAMING VOCABULARY-GROWTH TRACKING — the online form of
     * [[graft.operators.TextAnalytics.corpusStats]]: is the crawl still
@@ -1877,29 +1889,8 @@ object StreamOps {
     * corpusStatsSql. */
   def streamCorpusStatsQuery(spark: SparkSession, dir: String,
                              nBuckets: Int = 20): DataFrame = {
-    import graft.functions.TextFunctions.words
     import org.apache.spark.sql.expressions.Window
-    val mx = graft.Tables.load(spark, dir, "documents")
-      .agg(max(col("doc_id"))).head().getLong(0)
-    val width = mx / nBuckets + 1
-    val (seenDir, tokDir) = corpusStatsStores.getOrElseUpdate((dir, nBuckets), {
-      val sd = graft.Scratch.dir("corpus_seen_words").toString
-      val td = graft.Scratch.dir("corpus_tok_parts").toString
-      val in = docsStream(spark, dir)
-        .select(col("doc_id"), explode(words(col("text"))).as("w"))
-        .filter(col("w") =!= "")
-        .select(expr(s"cast(doc_id div $width as int)").as("bucket"),
-          col("w"))
-      runStream(in, Some(4)) {
-        _.foreachBatch { (batch: DataFrame, epochId: Long) =>
-          batch.groupBy(col("bucket")).agg(count(lit(1)).as("toks"))
-            .withColumn("batch_id", lit(epochId))
-            .coalesce(1).write.mode("append").parquet(td)
-          updateSeenWords(batch.sparkSession, sd, batch)
-        }
-      }
-      (sd, td)
-    })
+    val (seenDir, tokDir) = corpusStatsStores(spark, dir, nBuckets)
     val toks = spark.read.parquet(tokDir)
       .groupBy(col("batch_id"), col("bucket")).agg(max(col("toks")).as("toks"))
       .groupBy(col("bucket")).agg(sum(col("toks")).as("toks"))
@@ -1914,12 +1905,6 @@ object StreamOps {
         sum(coalesce(col("types"), lit(0L))).over(w).as("cum_types"))
       .orderBy(col("bucket"))
   }
-
-  private val weightedSampleStores =
-    new scala.collection.concurrent.TrieMap[(String, Int), String]()
-  private[graft] def weightedSampleStoreFor(
-      dir: String, n: Int = 50): Option[String] =
-    weightedSampleStores.get((dir, n))
 
   /** STREAMING WEIGHTED SAMPLE — priority sampling is ONE-PASS by
     * construction (Duffield-Lund-Thorup: the sample is the n smallest
@@ -1948,46 +1933,54 @@ object StreamOps {
       .agg(min(col("n_chars")).as("n_chars"), min(col("priority")).as("priority"))
       .orderBy(col("priority"), col("doc_id")).limit(n)
 
-  def streamWeightedSampleQuery(spark: SparkSession, dir: String,
-                                n: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val store = weightedSampleStores.getOrElseUpdate((dir, n), {
-      val sd = graft.Scratch.dir("wsample_store").toString
-      val in = docsStream(spark, dir)
-        .select(col("doc_id"), col("n_chars"),
-          expr(s"((((2654435761 * (doc_id % ${graft.operators.Dedup.P}))" +
-            s" % ${graft.operators.Dedup.P} + 40503)" +
-            s" % ${graft.operators.Dedup.P})" +
-            " * 100000) div (n_chars + 1)").as("priority"))
-      runStream(in, Some(4)) {
-        _.foreachBatch { (batch: DataFrame, _: Long) =>
-          val sp = batch.sparkSession
-          val prevTop =
-            if ({ val l = new java.io.File(sd).list(); l == null || l.isEmpty })
-              batch.limit(0)
-            else sp.read.parquet(s"$sd/top.parquet")
-          val merged = mergeTopPriorities(batch, prevTop, n)
-          // the store is O(n) rows BY CONTRACT (the reservoir bound),
-          // so collecting it is bounded control state — and the
-          // driver hop breaks the same-file read-then-overwrite cycle
-          val staged = merged.collect()
-          import sp.implicits._
-          staged.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-            .toDF("doc_id", "n_chars", "priority")
-            .coalesce(1).write.mode("overwrite").parquet(s"$sd/top.parquet")
-        }
-      }
-      sd
-    })
-    val top = spark.read.parquet(s"$store/top.parquet")
-    val w = Window.orderBy(col("priority"), col("doc_id"))
-    top.withColumn("rn", row_number().over(w).cast(IntegerType))
+  /** The batch weightedSample's deterministic priority. */
+  private def priorityCol: Column = {
+    val p = graft.operators.Dedup.P
+    expr(s"((((2654435761 * (doc_id % $p)) % $p + 40503) % $p) * 100000)" +
+      " div (n_chars + 1)").as("priority")
+  }
+
+  /** Fold priced rows into the reservoir file `top`. It is O(n) rows BY
+    * CONTRACT, so collecting it is bounded control state — and the
+    * driver hop breaks the same-file read-then-overwrite cycle. */
+  private def foldReservoir(priced: DataFrame, top: String, n: Int): Unit = {
+    val sp = priced.sparkSession
+    import sp.implicits._
+    val prev =
+      if (new java.io.File(top).exists()) sp.read.parquet(top) else priced.limit(0)
+    mergeTopPriorities(priced, prev, n).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      .toDF("doc_id", "n_chars", "priority")
+      .coalesce(1).write.mode("overwrite").parquet(top)
+  }
+
+  /** The served reservoir, ranked by (priority, doc_id). */
+  private def rankedReservoir(spark: SparkSession, top: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .orderBy(col("priority"), col("doc_id"))
+    spark.read.parquet(top)
+      .withColumn("rn", row_number().over(w).cast(IntegerType))
       .select(col("rn"), col("doc_id"), col("n_chars"), col("priority"))
       .orderBy(col("rn"))
   }
 
-  private val curationStores =
-    new scala.collection.concurrent.TrieMap[String, String]()
+  def streamWeightedSampleQuery(spark: SparkSession, dir: String,
+                                n: Int = 50): DataFrame = {
+    val store = graft.StoreCatalog.getOrBuild(spark, "stream_weighted_sample",
+      Seq(s"$dir/documents.parquet"), Seq("n" -> n.toString),
+      Seq("store")) { parts =>
+      createParts(parts)
+      val in = docsStream(spark, dir)
+        .select(col("doc_id"), col("n_chars"), priorityCol)
+      runStream(in, Some(4)) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          foldReservoir(batch, s"${parts("store")}/top.parquet", n)
+        }
+      }
+      Map.empty
+    }.parts("store")
+    rankedReservoir(spark, s"$store/top.parquet")
+  }
 
   /** STREAMED END-TO-END CORPUS CURATION — the batch capstone
     * ([[graft.operators.TextAnalytics.corpusCuration]]) run ONLINE, the
@@ -2029,50 +2022,30 @@ object StreamOps {
   def streamCorpusCurationQuery(spark: SparkSession, dir: String,
                                 n: Int = 100, benchBelow: Long = 10,
                                 w: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import graft.operators.{Dedup, TextAnalytics}
-    val root = curationStores.getOrElseUpdate(dir, {
-      val sd = graft.Scratch.dir("curation_store").toString
+    val root = graft.StoreCatalog.getOrBuild(spark, "stream_curation",
+      Seq(s"$dir/documents.parquet"),
+      Seq("n" -> n.toString, "benchBelow" -> benchBelow.toString,
+        "w" -> w.toString, "buckets" -> DedupStoreBuckets.toString),
+      Seq("store")) { parts =>
+      createParts(parts)
+      val sd = parts("store")
       val fpDir = s"$sd/fps"
-      val bench = Dedup.spanTable(
-          graft.Tables.loadWide(spark, dir, "documents"), w)
-        .filter(col("doc_id") < benchBelow)
-        .select(col("span").as("b_span")).distinct()
-        .localCheckpoint(true)
+      val bench = benchSpans(spark, dir, w, benchBelow).localCheckpoint(true)
       val in = docsStream(spark, dir)
         .select(col("doc_id"), col("text"), col("n_chars"),
           Dedup.chash(col("text")).as("fp"))
       runStream(in) {
         _.foreachBatch { (batch: DataFrame, _: Long) =>
-          val sp = batch.sparkSession
           val minIds = batch.groupBy(col("fp"))
             .agg(min(col("doc_id")).as("doc_id"))
           val keepers = batch.join(minIds, Seq("fp", "doc_id"))
             .withColumn("bucket", fpBucket(col("fp")))
             .persist()
           try {
-            // one bounded action decides pushdown AND sizes the batch
-            // (the streamExactDedupStoreQuery device)
-            val probe = keepers.select(col("fp"), col("bucket"))
-              .limit(FpPushdownLimit.toInt + 1).collect()
-            val small = probe.length <= FpPushdownLimit
-            val touched =
-              if (small) probe.map(_.getInt(1)).distinct.toSeq.sorted
-              else keepers.select(col("bucket")).distinct()
-                .collect().map(_.getInt(0)).toSeq.sorted
-            val fps =
-              if (small) Some(probe.map(_.getLong(0)).toSeq.sorted)
-              else None
-            val storeEmpty = {
-              val l = new java.io.File(fpDir).list(); l == null || l.isEmpty
-            }
             // materialized once: quality, spans, survivors, and the
             // membership append all read the fresh set
-            val fresh = (
-              if (storeEmpty) keepers
-              else keepers.join(prunedSeenFps(sp, fpDir, touched, fps),
-                col("fp") === col("seen_fp"), "left_anti")
-            ).localCheckpoint(true)
+            val fresh = unseenFps(keepers, fpDir).localCheckpoint(true)
             val qkeep = TextAnalytics.qualityFilterFrom(
                 fresh.select(col("doc_id"), col("text")))
               .filter(col("keep")).select(col("doc_id"))
@@ -2083,43 +2056,47 @@ object StreamOps {
             val survivors = fresh.join(qkeep, Seq("doc_id"))
               .filter(col("doc_id") >= benchBelow)
               .join(contaminated, Seq("doc_id"), "left_anti")
-              .select(col("doc_id"), col("n_chars"),
-                expr(s"((((2654435761 * (doc_id % ${Dedup.P})) % ${Dedup.P}" +
-                  s" + 40503) % ${Dedup.P}) * 100000)" +
-                  " div (n_chars + 1)").as("priority"))
-            val prevTop =
-              if (!new java.io.File(s"$sd/top.parquet").exists())
-                survivors.limit(0)
-              else sp.read.parquet(s"$sd/top.parquet")
-            val merged = mergeTopPriorities(survivors, prevTop, n)
-            // O(n) rows by the reservoir contract — bounded control
-            // state; the driver hop breaks read-then-overwrite
-            val staged = merged.collect()
-            import sp.implicits._
-            staged.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-              .toDF("doc_id", "n_chars", "priority")
-              .coalesce(1).write.mode("overwrite").parquet(s"$sd/top.parquet")
-            // membership LAST; one file per touched bucket, fp-sorted
-            fresh.select(col("fp"), col("doc_id"), col("bucket"))
-              .repartition(col("bucket"))
-              .sortWithinPartitions(col("bucket"), col("fp"))
-              .write.mode("append").partitionBy("bucket").parquet(fpDir)
+              .select(col("doc_id"), col("n_chars"), priorityCol)
+            foldReservoir(survivors, s"$sd/top.parquet", n)
+            appendSeenFps(fresh, fpDir) // membership LAST
           } finally keepers.unpersist()
         }
       }
-      sd
-    })
-    val top = spark.read.parquet(s"$root/top.parquet")
-    val wnd = Window.orderBy(col("priority"), col("doc_id"))
-    top.withColumn("rn", row_number().over(wnd).cast(IntegerType))
-      .select(col("rn"), col("doc_id"), col("n_chars"), col("priority"))
-      .orderBy(col("rn"))
+      Map.empty
+    }.parts("store")
+    rankedReservoir(spark, s"$root/top.parquet")
   }
 
-  private val bm25StreamStores =
-    new scala.collection.concurrent.TrieMap[String, (String, String)]()
-  private[graft] def bm25StreamStoreFor(dir: String): Option[(String, String)] =
-    bm25StreamStores.get(dir)
+  /** The store [[streamBm25StoreQuery]] describes: (postings, lengths). */
+  private[graft] def bm25StreamStore(spark: SparkSession,
+                                     dir: String): (String, String) = {
+    import graft.operators.{Dedup, TextAnalytics}
+    import graft.functions.TextFunctions.words
+    val h = graft.StoreCatalog.getOrBuild(spark, "stream_bm25_postings",
+      Seq(s"$dir/documents.parquet"),
+      Seq("buckets" -> TextAnalytics.PostingsBuckets.toString),
+      Seq("posts", "docs")) { parts =>
+      createParts(parts)
+      val in = docsStream(spark, dir)
+        .select(col("doc_id"), explode(words(col("text"))).as("word"))
+        .filter(col("word") =!= "")
+      runStream(in, Some(4)) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.groupBy(col("word"), col("doc_id"))
+            .agg(count(lit(1)).as("tf"))
+            .withColumn("tbucket",
+              pmod(Dedup.chash(col("word")),
+                lit(TextAnalytics.PostingsBuckets.toLong))
+                .cast(IntegerType))
+            .write.mode("append").partitionBy("tbucket").parquet(parts("posts"))
+          batch.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
+            .coalesce(1).write.mode("append").parquet(parts("docs"))
+        }
+      }
+      Map.empty
+    }
+    (h.parts("posts"), h.parts("docs"))
+  }
 
   /** BM25 SERVED OFF A STREAM-ACCRETED POSTINGS STORE: each arriving
     * micro-batch appends its documents' (word, doc_id, tf) rows into
@@ -2137,29 +2114,8 @@ object StreamOps {
   def streamBm25StoreQuery(spark: SparkSession, dir: String,
                            terms: Seq[String] = Seq("vector", "scan", "merge"),
                            k: Int = 20): DataFrame = {
-    import graft.operators.{Dedup, TextAnalytics}
-    import graft.functions.TextFunctions.words
-    val (pd, dd) = bm25StreamStores.getOrElseUpdate(dir, {
-      val p = graft.Scratch.dir("bm25_stream_posts").toString
-      val d = graft.Scratch.dir("bm25_stream_docs").toString
-      val in = docsStream(spark, dir)
-        .select(col("doc_id"), explode(words(col("text"))).as("word"))
-        .filter(col("word") =!= "")
-      runStream(in, Some(4)) {
-        _.foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.groupBy(col("word"), col("doc_id"))
-            .agg(count(lit(1)).as("tf"))
-            .withColumn("tbucket",
-              pmod(Dedup.chash(col("word")),
-                lit(TextAnalytics.PostingsBuckets.toLong))
-                .cast(IntegerType))
-            .write.mode("append").partitionBy("tbucket").parquet(p)
-          batch.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-            .coalesce(1).write.mode("append").parquet(d)
-        }
-      }
-      (p, d)
-    })
+    import graft.operators.TextAnalytics
+    val (pd, dd) = bm25StreamStore(spark, dir)
     val posts = TextAnalytics.prunedPostings(spark, pd, terms)
       .groupBy(col("tbucket"), col("word"), col("doc_id"))
       .agg(max(col("tf")).as("tf"))
@@ -2168,10 +2124,29 @@ object StreamOps {
     TextAnalytics.serveBm25(spark, dir, posts, docs, terms, k)
   }
 
-  private val phraseStreamStores =
-    new scala.collection.concurrent.TrieMap[String, String]()
-  private[graft] def phraseStreamStoreFor(dir: String): Option[String] =
-    phraseStreamStores.get(dir)
+  /** The positional postings store [[streamPhraseStoreQuery]] describes. */
+  private[graft] def phraseStreamStore(spark: SparkSession, dir: String): String = {
+    import graft.operators.{Dedup, TextAnalytics}
+    graft.StoreCatalog.getOrBuild(spark, "stream_phrase_postings",
+      Seq(s"$dir/documents.parquet"),
+      Seq("buckets" -> TextAnalytics.PostingsBuckets.toString),
+      Seq("posts")) { parts =>
+      createParts(parts)
+      val in = docsStream(spark, dir)
+        .select(col("doc_id"), col("text"))
+      runStream(in, Some(4)) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          TextAnalytics.phrasePostings(batch)
+            .withColumn("tbucket",
+              pmod(Dedup.chash(col("word")),
+                lit(TextAnalytics.PostingsBuckets.toLong))
+                .cast(IntegerType))
+            .write.mode("append").partitionBy("tbucket").parquet(parts("posts"))
+        }
+      }
+      Map.empty
+    }.parts("posts")
+  }
 
   /** PHRASE SEARCH SERVED OFF A STREAM-ACCRETED POSITIONAL POSTINGS
     * STORE: each arriving micro-batch appends its documents'
@@ -2204,24 +2179,8 @@ object StreamOps {
   private def streamPhraseServe(spark: SparkSession, dir: String,
                                 phrase: Seq[String], k: Int,
                                 slop: Int): DataFrame = {
-    import graft.operators.{Dedup, TextAnalytics}
-    val pd = phraseStreamStores.getOrElseUpdate(dir, {
-      val p = graft.Scratch.dir("phrase_stream_posts").toString
-      val in = docsStream(spark, dir)
-        .select(col("doc_id"), col("text"))
-      runStream(in, Some(4)) {
-        _.foreachBatch { (batch: DataFrame, _: Long) =>
-          TextAnalytics.phrasePostings(batch)
-            .withColumn("tbucket",
-              pmod(Dedup.chash(col("word")),
-                lit(TextAnalytics.PostingsBuckets.toLong))
-                .cast(IntegerType))
-            .write.mode("append").partitionBy("tbucket").parquet(p)
-        }
-      }
-      p
-    })
-    val pruned = spark.read.parquet(pd)
+    import graft.operators.TextAnalytics
+    val pruned = spark.read.parquet(phraseStreamStore(spark, dir))
       .where(col("tbucket").isin(
         phrase.map(TextAnalytics.termBucket(_)).distinct: _*) &&
         col("word").isin(phrase.distinct: _*))
@@ -2229,10 +2188,38 @@ object StreamOps {
     TextAnalytics.phraseRank(pruned, phrase, k, slop)
   }
 
-  private val trigramStreamStores =
-    new scala.collection.concurrent.TrieMap[String, (String, String)]()
-  private[graft] def trigramStreamStoreFor(dir: String): Option[(String, String)] =
-    trigramStreamStores.get(dir)
+  /** The trigram index [[streamSubstrStoreQuery]] describes:
+    * (postings, stored fields). */
+  private[graft] def trigramStreamStore(spark: SparkSession,
+                                        dir: String): (String, String) = {
+    import graft.operators.{Dedup, TextSearch}
+    val h = graft.StoreCatalog.getOrBuild(spark, "stream_trigram_postings",
+      Seq(s"$dir/documents.parquet"),
+      Seq("tgbuckets" -> TextSearch.TrigramBuckets.toString,
+        "dbuckets" -> TextSearch.DocBuckets.toString),
+      Seq("posts", "docs")) { parts =>
+      createParts(parts)
+      val in = docsStream(spark, dir)
+        .select(col("doc_id"), col("text"))
+      runStream(in, Some(4)) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          TextSearch.trigramPostings(batch)
+            .withColumn("tgbucket",
+              pmod(Dedup.chash(col("tg")),
+                lit(TextSearch.TrigramBuckets.toLong))
+                .cast(IntegerType))
+            .write.mode("append").partitionBy("tgbucket").parquet(parts("posts"))
+          batch.select(col("doc_id"), col("text"))
+            .withColumn("dbucket",
+              pmod(col("doc_id"), lit(TextSearch.DocBuckets.toLong))
+                .cast(IntegerType))
+            .write.mode("append").partitionBy("dbucket").parquet(parts("docs"))
+        }
+      }
+      Map.empty
+    }
+    (h.parts("posts"), h.parts("docs"))
+  }
 
   /** SUBSTRING SEARCH SERVED OFF A STREAM-ACCRETED TRIGRAM INDEX: each
     * arriving micro-batch appends its documents' distinct (tg, doc_id)
@@ -2249,31 +2236,10 @@ object StreamOps {
     * ints). Oracle: the batch substrSearchSql. */
   def streamSubstrStoreQuery(spark: SparkSession, dir: String,
                              pat: String = "le par", k: Int = 20): DataFrame = {
-    import graft.operators.{Dedup, TextSearch}
+    import graft.operators.TextSearch
     val grams = TextSearch.queryTrigrams(pat)
     require(grams.nonEmpty, "substring query needs >= 3 chars")
-    val (pd, dd) = trigramStreamStores.getOrElseUpdate(dir, {
-      val p = graft.Scratch.dir("trigram_stream_posts").toString
-      val d = graft.Scratch.dir("trigram_stream_docs").toString
-      val in = docsStream(spark, dir)
-        .select(col("doc_id"), col("text"))
-      runStream(in, Some(4)) {
-        _.foreachBatch { (batch: DataFrame, _: Long) =>
-          TextSearch.trigramPostings(batch)
-            .withColumn("tgbucket",
-              pmod(Dedup.chash(col("tg")),
-                lit(TextSearch.TrigramBuckets.toLong))
-                .cast(IntegerType))
-            .write.mode("append").partitionBy("tgbucket").parquet(p)
-          batch.select(col("doc_id"), col("text"))
-            .withColumn("dbucket",
-              pmod(col("doc_id"), lit(TextSearch.DocBuckets.toLong))
-                .cast(IntegerType))
-            .write.mode("append").partitionBy("dbucket").parquet(d)
-        }
-      }
-      (p, d)
-    })
+    val (pd, dd) = trigramStreamStore(spark, dir)
     val cands = TextSearch.candidateDocs(
       TextSearch.prunedTrigramPostings(spark, pd, grams).distinct(), grams)
       .localCheckpoint(true)
@@ -2291,17 +2257,30 @@ object StreamOps {
   private[graft] def hnswStreamBits(l: Int): Int =
     if (l == 0) GraphStreamBits else 4
 
-  /** One streaming hierarchy per (dir, deg) per JVM: per-level
-    * (node store dir, edge store dir), level 0 = base. */
-  private val hnswStreamStores = new scala.collection.concurrent.TrieMap[
-    (String, Int), IndexedSeq[(String, String)]]()
-  private[graft] def hnswStreamStoresFor(
-      dir: String, deg: Int = 8): Option[IndexedSeq[(String, String)]] =
-    hnswStreamStores.get((dir, deg))
-
-  private def storeNonEmpty(d: String): Boolean = {
-    val f = new java.io.File(d).list()
-    f != null && f.exists(n => !n.startsWith("_") && !n.startsWith("."))
+  /** The streaming hierarchy built through [[ingestHnswBatch]]:
+    * per-level (node store dir, edge store dir), level 0 = base. */
+  private[graft] def hnswStreamStores(
+      spark: SparkSession, dir: String, deg: Int = 8): IndexedSeq[(String, String)] = {
+    val levels = 0 to HnswStreamMaxLevel
+    val h = graft.StoreCatalog.getOrBuild(spark, "stream_hnsw_hierarchy",
+      Seq(s"$dir/embeddings.parquet"),
+      Seq("deg" -> deg.toString,
+        "maxLevel" -> HnswStreamMaxLevel.toString,
+        "bits" -> levels.map(hnswStreamBits).mkString(","),
+        "buckets" -> graft.operators.Similarity.GraphStoreBuckets.toString),
+      levels.flatMap(l => Seq(s"nodes_$l", s"edges_$l"))) { parts =>
+      createParts(parts)
+      val sts = levels.map(l => (parts(s"nodes_$l"), parts(s"edges_$l")))
+      val in = embeddingsStream(spark, dir)
+        .select(col("vec_id"), col("embedding"))
+      runStream(in) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          ingestHnswBatch(batch.sparkSession, batch, sts, deg)
+        }
+      }
+      Map.empty
+    }
+    levels.map(l => (h.parts(s"nodes_$l"), h.parts(s"edges_$l")))
   }
 
   /** One micro-batch of the incremental HIERARCHY build: levels are a
@@ -2350,20 +2329,7 @@ object StreamOps {
                             beamWidth: Int = 8, steps: Int = 8,
                             k: Int = 3): DataFrame = {
     import graft.operators.Similarity
-    val stores = hnswStreamStores.getOrElseUpdate((dir, deg), {
-      val sts = (0 to HnswStreamMaxLevel).map { l =>
-        (graft.Scratch.dir(s"hnsw_stream_nodes_$l").toString,
-          graft.Scratch.dir(s"hnsw_stream_edges_$l").toString)
-      }
-      val in = embeddingsStream(spark, dir)
-        .select(col("vec_id"), col("embedding"))
-      runStream(in) {
-        _.foreachBatch { (batch: DataFrame, _: Long) =>
-          ingestHnswBatch(batch.sparkSession, batch, sts, deg)
-        }
-      }
-      sts
-    })
+    val stores = hnswStreamStores(spark, dir, deg)
     val emb = graft.Tables.loadWide(spark, dir, "embeddings")
     // top populated level: a directory existence check per level —
     // O(levels) driver work against store METADATA, no data read
@@ -2460,12 +2426,23 @@ object StreamOps {
     graft.operators.Similarity.hnswSearchSql(
       deg = deg, layerBits = Some(hnswStreamBits))
 
-  /** One streaming IVF cell store per (dir, nCells) per JVM. */
-  private val ivfStreamStores =
-    new scala.collection.concurrent.TrieMap[(String, Int), String]()
-  private[graft] def ivfStreamStoreFor(dir: String,
-                                       nCells: Int = 8): Option[String] =
-    ivfStreamStores.get((dir, nCells))
+  /** The cell store built through [[ingestIvfBatch]]. */
+  private[graft] def ivfStreamStore(spark: SparkSession, dir: String,
+                                    nCells: Int,
+                                    codebook: Array[(Long, Array[Float])]): String =
+    graft.StoreCatalog.getOrBuild(spark, "stream_ivf_cells",
+      Seq(s"$dir/embeddings.parquet"), Seq("nCells" -> nCells.toString),
+      Seq("store")) { parts =>
+      createParts(parts)
+      val in = embeddingsStream(spark, dir)
+        .select(col("vec_id"), col("embedding"))
+      runStream(in) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          ingestIvfBatch(batch.sparkSession, batch, parts("store"), codebook)
+        }
+      }
+      Map.empty
+    }.parts("store")
 
   /** One micro-batch of the incremental IVF index: assign the batch
     * against the deploy-time codebook (broadcast O(nCells·dim) model —
@@ -2488,8 +2465,7 @@ object StreamOps {
       assigned.count() // materialize: two consumers below
       val batchCells = assigned.select(col("cell")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
-      val empty = new java.io.File(storeDir).list() == null ||
-        new java.io.File(storeDir).list().isEmpty
+      val empty = !storeNonEmpty(storeDir)
       val fresh =
         if (empty) assigned
         else assigned.join(
@@ -2523,18 +2499,8 @@ object StreamOps {
       return Seq.empty[(Long, Int, Long, Double)]
         .toDF("qid", "rn", "vec_id", "score")
     }
-    val storeDir = ivfStreamStores.getOrElseUpdate((dir, nCells), {
-      val sd = graft.Scratch.dir("ivf_stream_store").toString
-      val in = embeddingsStream(spark, dir)
-        .select(col("vec_id"), col("embedding"))
-      runStream(in) {
-        _.foreachBatch { (batch: DataFrame, _: Long) =>
-          ingestIvfBatch(batch.sparkSession, batch, sd, codebook)
-        }
-      }
-      sd
-    })
-    Similarity.serveIvfFromStore(spark, emb, storeDir, codebook,
+    Similarity.serveIvfFromStore(spark, emb,
+      ivfStreamStore(spark, dir, nCells, codebook), codebook,
       k, nQueries, nProbe)
   }
 
@@ -2542,12 +2508,24 @@ object StreamOps {
                              nProbe: Int = 2): String =
     graft.operators.Similarity.ivfTopKSql(k, nQueries, nCells, nProbe)
 
-  /** One streaming PQ code store per (dir, nCells, m) per JVM. */
-  private val pqStreamStores =
-    new scala.collection.concurrent.TrieMap[(String, Int, Int), String]()
-  private[graft] def pqStreamStoreFor(dir: String, nCells: Int = 8,
-                                      m: Int = 4): Option[String] =
-    pqStreamStores.get((dir, nCells, m))
+  /** The code store built through [[ingestPqBatch]]. */
+  private[graft] def pqStreamStore(spark: SparkSession, dir: String,
+                                   nCells: Int, m: Int, dim: Int,
+                                   codebook: Array[(Long, Array[Float])]): String =
+    graft.StoreCatalog.getOrBuild(spark, "stream_pq_codes",
+      Seq(s"$dir/embeddings.parquet"),
+      Seq("nCells" -> nCells.toString, "m" -> m.toString, "dim" -> dim.toString),
+      Seq("store")) { parts =>
+      createParts(parts)
+      val in = embeddingsStream(spark, dir)
+        .select(col("vec_id"), col("embedding"))
+      runStream(in) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          ingestPqBatch(batch.sparkSession, batch, parts("store"), codebook, m, dim)
+        }
+      }
+      Map.empty
+    }.parts("store")
 
   /** One micro-batch of the incremental PQ index: encode the batch
     * against the deploy-time codebook (the same per-subspace argmin
@@ -2566,9 +2544,7 @@ object StreamOps {
     import graft.operators.Similarity
     val encoded = batch.select(
       (col("vec_id") +: Similarity.pqEncodeCols(codebook, m, dim)): _*)
-    val empty = new java.io.File(storeDir).list() == null ||
-      !new java.io.File(storeDir).list().exists(n =>
-        !n.startsWith("_") && !n.startsWith("."))
+    val empty = !storeNonEmpty(storeDir)
     val fresh =
       if (empty) encoded
       else encoded.join(
@@ -2597,18 +2573,8 @@ object StreamOps {
       return Seq.empty[(Long, Int, Long, Double)]
         .toDF("qid", "rn", "vec_id", "score")
     }
-    val storeDir = pqStreamStores.getOrElseUpdate((dir, nCells, m), {
-      val sd = graft.Scratch.dir("pq_stream_store").toString
-      val in = embeddingsStream(spark, dir)
-        .select(col("vec_id"), col("embedding"))
-      runStream(in) {
-        _.foreachBatch { (batch: DataFrame, _: Long) =>
-          ingestPqBatch(batch.sparkSession, batch, sd, codebook, m, dim)
-        }
-      }
-      sd
-    })
-    Similarity.servePqFromStore(spark, dir, emb, storeDir,
+    Similarity.servePqFromStore(spark, dir, emb,
+      pqStreamStore(spark, dir, nCells, m, dim, codebook),
       Similarity.pqSliceFn(codebook, m, dim), m, dim / m, k, nQueries, budget)
   }
 
@@ -2616,11 +2582,6 @@ object StreamOps {
                             m: Int = 4, dim: Int = 64,
                             budget: Int = 32): String =
     graft.operators.Similarity.pqRerankTopKSql(k, nQueries, nCells, m, dim, budget)
-
-  /** Keyed on (dir, cap) — a partial folded at one cap cannot serve a
-    * query asking for another (the lshStores precedent). */
-  private val topFreqStores =
-    new scala.collection.concurrent.TrieMap[(String, Int), String]()
 
   /** The n-way Agarwal-et-al. merge of stored Misra-Gries partials,
     * as relational ops: dedupe replays on (group, batch), sum matching
@@ -2676,8 +2637,10 @@ object StreamOps {
   def streamTopFreqStoreQuery(spark: SparkSession, dir: String, k: Int = 5,
                               cap: Int = 256): DataFrame = {
     import graft.functions.TextFunctions.{langId, words}
-    val store = topFreqStores.getOrElseUpdate((dir, cap), {
-      val storeDir = graft.Scratch.dir("topfreq_store").toString
+    val store = graft.StoreCatalog.getOrBuild(spark, "stream_top_freq",
+      Seq(s"$dir/documents.parquet"), Seq("cap" -> cap.toString),
+      Seq("store")) { parts =>
+      createParts(parts)
       runStream(docsStream(spark, dir)) {
         _.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
           batch
@@ -2688,11 +2651,11 @@ object StreamOps {
             .agg(graft.functions.NativeFunctions.topFreq(col("word"), cap).as("tf"))
             .withColumn("batch_id", lit(epochId))
             .coalesce(1) // a handful of counter rows per batch
-            .write.mode("append").parquet(storeDir)
+            .write.mode("append").parquet(parts("store"))
         }
       }
-      storeDir
-    })
+      Map.empty
+    }.parts("store")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang_pred")).orderBy(col("cnt").desc, col("item"))
     mergedTopFreq(spark.read.parquet(store), cap)

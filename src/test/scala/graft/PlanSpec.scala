@@ -427,7 +427,8 @@ class PlanSpec extends AnyFunSuite {
     import graft.streaming.StreamOps
     // build the store off the fixture stream (memoized across tests)
     StreamOps.streamKnnGraphStoreQuery(spark, sfDir).limit(1).collect()
-    val (nodeDir, edgeDir) = StreamOps.knnGraphStreamStoreFor(sfDir).get
+    val (nodeDir, edgeDir) = TestSession.servedStore(
+      StreamOps.knnGraphStreamStore(spark, sfDir))
     val pn = StreamOps.prunedGraphNodes(spark, nodeDir, Seq(1, 5))
       .queryExecution.executedPlan.toString
     val pfN = pn.linesIterator.filter(_.contains("PartitionFilters:")).mkString("\n")

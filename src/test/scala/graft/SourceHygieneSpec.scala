@@ -25,4 +25,35 @@ class SourceHygieneSpec extends AnyFunSuite {
       .toList
     assert(offenders.isEmpty, offenders.mkString("; "))
   }
+
+  test("src/main holds no store memo outside StoreCatalog") {
+    import scala.jdk.CollectionConverters._
+    // the staging memos (each keyed on its source fingerprint) and the
+    // synthetic d384 corpus, which has no source that could go stale
+    val allowed = Map(
+      "streaming/StreamOps.scala" ->
+        Set("stagedStreamDirs", "footerSchemas", "stagedDocs", "jdbcSinkDbs"),
+      "operators/Similarity.scala" -> Set("d384Dirs"))
+    val decl = ("""\bval\s+(\w+)\s*(?::[^=]*)?=\s*(?:new\s+)?""" +
+      """(?:scala\.collection\.concurrent\.)?TrieMap""").r
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val st = java.nio.file.Files.walk(root)
+    val files = try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally st.close()
+    val offenders = files.filterNot(_.getFileName.toString == "StoreCatalog.scala")
+      .flatMap { p =>
+        val rel = root.relativize(p).toString
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        val declared = decl.findAllMatchIn(src).map(m => m.end -> m.group(1)).toMap
+        "TrieMap".r.findAllMatchIn(src).map(_.end).toList.flatMap { end =>
+          declared.get(end) match {
+            case Some(name) if allowed.getOrElse(rel, Set.empty)(name) => None
+            case Some(name) => Some(s"$rel: TrieMap memo `$name`")
+            case None =>
+              Some(s"$rel: TrieMap outside a declaration at offset $end")
+          }
+        }
+      }
+    assert(offenders.isEmpty, offenders.mkString("; "))
+  }
 }

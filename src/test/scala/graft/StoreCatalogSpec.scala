@@ -598,4 +598,108 @@ class StoreCatalogSpec extends AnyFunSuite {
       }
     }
   }
+
+  /** Run `body` under a fresh store root and an empty session memo,
+    * restoring the previous root afterwards. */
+  private def withFreshRoot(prefix: String)(body: String => Unit): Unit = {
+    val root = Scratch.dir(prefix).toString
+    val key = "spark.graft.storeRoot"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, root)
+    StoreCatalog.dropSessionMemo()
+    try body(root)
+    finally {
+      StoreCatalog.dropSessionMemo()
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
+  test("stream twins see an in-session source rewrite: the exact-dedup and " +
+    "DSIR-refresh stores rebuild once and equal their batch twins on the new rows") {
+    import graft.streaming.StreamOps
+    import graft.functions.TextFunctions.fingerprint
+    type Q = (org.apache.spark.sql.SparkSession, String) =>
+      Seq[org.apache.spark.sql.Row]
+    // (name, stream twin, batch twin): an append-only seen-store and a
+    // multi-part store whose every batch also rewrites a model version
+    val cases = Seq[(String, Q, Q)](
+      ("exact_dedup",
+        (s, d) => StreamOps.streamExactDedupStoreQuery(s, d).collect().toSeq,
+        (s, d) => Tables.load(s, d, "documents")
+          .groupBy(fingerprint(col("text"))).agg(min(col("doc_id")).as("doc_id"))
+          .select(col("doc_id")).orderBy(col("doc_id")).collect().toSeq),
+      ("dsir_refresh",
+        (s, d) => StreamOps.streamDsirRefreshQuery(s, d).collect().toSeq,
+        (s, d) => TextAnalytics.dsirSelect(s, d).collect().toSeq))
+    withFreshRoot("catalog_stream_rewrite_root") { _ =>
+      cases.foreach { case (name, streamed, twin) =>
+        val dir = Scratch.dir(s"catalog_stream_rewrite_$name")
+        StoreCatalog.linkTree(Paths.get(TestSession.sfDir), dir)
+        val before = streamed(spark, dir.toString)
+        assert(before.nonEmpty && before == twin(spark, dir.toString), name)
+        TestSession.replaceTableByMove(dir, "documents", col("doc_id") % 3 =!= 2)
+        val b0 = StoreCatalog.buildCount.get()
+        val after = streamed(spark, dir.toString)
+        assert(StoreCatalog.buildCount.get() == b0 + 1,
+          s"$name: the rewritten source did not rebuild its store exactly once")
+        assert(after != before, s"$name: the rewrite did not change the answer")
+        assert(after == twin(spark, dir.toString),
+          s"$name: the twin answered from the pre-rewrite store")
+      }
+    }
+  }
+
+  test("stream stores serve a SECOND session from disk: no rebuild, no " +
+    "stream started — an HNSW layer no batch wrote included") {
+    import graft.streaming.StreamOps
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    withFreshRoot("catalog_stream_session_root") { root =>
+      val full = Scratch.dir("catalog_stream_full")
+      StoreCatalog.linkTree(Paths.get(TestSession.sfDir), full)
+      // every vector on level 0: the upper layers' stores are never
+      // written, only pre-created
+      val base = Scratch.dir("catalog_stream_level0")
+      StoreCatalog.linkTree(Paths.get(TestSession.sfDir), base)
+      TestSession.replaceTableByMove(base, "embeddings",
+        Similarity.hnswLevelCol(col("vec_id")) === 0)
+      def runAll(s: org.apache.spark.sql.SparkSession) = Map(
+        "dedup" -> StreamOps.streamExactDedupStoreQuery(s, full.toString)
+          .collect().toSeq,
+        "hnsw" -> StreamOps.streamHnswSearchQuery(s, full.toString, nQueries = 5,
+          stepsUpper = 2, beamWidth = 4, steps = 3).collect().toSeq,
+        "hnsw_level0" -> StreamOps.streamHnswSearchQuery(s, base.toString,
+          nQueries = 5, stepsUpper = 2, beamWidth = 4, steps = 3).collect().toSeq)
+      val b0 = StoreCatalog.buildCount.get()
+      val built = runAll(spark)
+      val afterBuild = StoreCatalog.buildCount.get()
+      assert(afterBuild - b0 == 3, s"expected 3 store builds, got ${afterBuild - b0}")
+      assert(built.values.forall(_.nonEmpty))
+      val upper = StreamOps.hnswStreamStores(spark, base.toString).drop(1)
+      assert(upper.nonEmpty && upper.forall { case (n, e) =>
+        Seq(n, e).forall(d => Option(new java.io.File(d).list()).exists(_.isEmpty))
+      }, s"expected empty, present upper-layer parts: $upper")
+
+      StoreCatalog.dropSessionMemo()
+      val session2 = spark.newSession()
+      session2.conf.set("spark.graft.storeRoot", root)
+      val started = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new StreamingQueryListener {
+        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+          started.incrementAndGet()
+        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      }
+      Seq(spark, session2).foreach(_.streams.addListener(listener))
+      val served =
+        try runAll(session2)
+        finally Seq(spark, session2).foreach(_.streams.removeListener(listener))
+      assert(StoreCatalog.buildCount.get() == afterBuild,
+        "a second session rebuilt a stream store the catalog already holds")
+      assert(started.get == 0, s"${started.get} streams started on the serve path")
+      assert(served == built, "served results differ from the build session")
+    }
+  }
 }

@@ -16,6 +16,21 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(streamed == batch)
   }
 
+  test("a fixture file replaced in-session is restaged: the tumbling twin " +
+    "replays the new file, not the one staged before the rewrite") {
+    import java.nio.file.Paths
+    val dir = Scratch.dir("srestage")
+    StoreCatalog.linkTree(Paths.get(TestSession.sfDir), dir)
+    def streamed = StreamOps.streamTumblingQuery(spark, dir.toString)
+      .collect().map(_.toSeq).toSet
+    val before = streamed
+    TestSession.replaceTableByMove(dir, "events", col("event_id") % 3 =!= 2)
+    val after = streamed
+    val batch = Events.tumbling(spark, dir.toString).collect().map(_.toSeq).toSet
+    assert(after != before, "the rewrite did not change the answer")
+    assert(after == batch, "the stream replayed the file staged before the rewrite")
+  }
+
   test("stream-stream interval join equals the batch range join on a replayed stream") {
     val streamed = StreamOps.streamRangeJoinQuery(spark, TestSession.sfDir)
       .collect().map(_.toSeq).toSet
@@ -475,7 +490,7 @@ class StreamOpsSpec extends AnyFunSuite {
     // compactPartitioned per bucket dir, serving unchanged after
     val before = StreamOps.streamLshTopKQuery(spark, TestSession.sfDir)
       .collect().map(_.toSeq).toSeq
-    val store = StreamOps.lshStoreDirFor(TestSession.sfDir, 6).get
+    val store = TestSession.servedStore(StreamOps.lshStore(spark, TestSession.sfDir, 6))
     val rewritten = graft.operators.Sinks.compactPartitioned(spark, store,
       targetBytes = 1L << 30)
     assert(rewritten > 0, "expected the store's buckets to compact")
@@ -583,8 +598,8 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(streamed.contains((0L, 3L, 0)), s"cross-batch pair missing: $streamed")
     // at-rest layout: band-partitioned directories (the serve path's
     // join key and the membership read's pruning column)
-    val store = graft.Scratch.root.toFile.listFiles()
-      .filter(_.getName.startsWith("image_hashes")).maxBy(_.lastModified)
+    val store = new java.io.File(TestSession.servedStore(
+      StreamOps.imageHashStore(spark, base.toString)))
     val bands = store.listFiles().filter(_.isDirectory).map(_.getName).sorted
     assert(bands.toSeq == (0 until 4).map(b => s"band=$b"),
       s"expected band partitions, got ${bands.toSeq}")
@@ -657,7 +672,8 @@ class StreamOpsSpec extends AnyFunSuite {
     // accretes files; same layout-hygiene composition as the ANN store
     val before = StreamOps.streamKnnGraphStoreQuery(spark, TestSession.sfDir)
       .collect().map(_.toSeq).toSeq
-    val (_, edgeDir) = StreamOps.knnGraphStreamStoreFor(TestSession.sfDir).get
+    val (_, edgeDir) = TestSession.servedStore(
+      StreamOps.knnGraphStreamStore(spark, TestSession.sfDir))
     val rewritten = graft.operators.Sinks.compactPartitioned(spark, edgeDir,
       targetBytes = 1L << 30)
     assert(rewritten > 0, "expected the edge store's buckets to compact")
@@ -706,7 +722,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSeq
     assert(served == batch && served.nonEmpty)
     val (featsDir, countsDir, modelDir) =
-      StreamOps.dsirRefreshStoresFor(TestSession.sfDir).get
+      TestSession.servedStore(StreamOps.dsirRefreshStores(spark, TestSession.sfDir))
     val epochsBefore = spark.read.parquet(modelDir)
       .select("epoch").distinct().count()
     assert(epochsBefore >= 1)
@@ -766,7 +782,8 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(streamed == batch && streamed.nonEmpty)
     // layout hygiene: node store partitioned by sign bucket, edge store
     // by src bucket — the prune keys of the ingest path's reads
-    val (nodeDir, edgeDir) = StreamOps.knnGraphStreamStoreFor(base.toString).get
+    val (nodeDir, edgeDir) = TestSession.servedStore(
+      StreamOps.knnGraphStreamStore(spark, base.toString))
     assert(new java.io.File(nodeDir).list().exists(_.startsWith("bucket=")))
     assert(new java.io.File(edgeDir).list().exists(_.startsWith("gbucket=")))
     // the merge path genuinely ran: batch 2/3 must have rewritten
@@ -806,14 +823,16 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(streamed == inPlan && streamed.nonEmpty)
     // layout hygiene + replay: cell partitions on disk, and a replayed
     // batch anti-joins away against its own cells
-    val storeDir = StreamOps.ivfStreamStoreFor(base.toString).get
+    val codebook = Similarity.seedCodebook(
+      spark.read.parquet(base.toString + "/embeddings.parquet"), 8)
+    val storeDir = TestSession.servedStore(
+      StreamOps.ivfStreamStore(spark, base.toString, 8, codebook))
     assert(new java.io.File(storeDir).list().exists(_.startsWith("cell=")))
     val countBefore = spark.read.parquet(storeDir).count()
     StreamOps.ingestIvfBatch(spark,
       emb.filter(col("vec_id") >= 0 && col("vec_id") < 120)
         .select(col("vec_id"), col("embedding")),
-      storeDir, Similarity.seedCodebook(
-        spark.read.parquet(base.toString + "/embeddings.parquet"), 8))
+      storeDir, codebook)
     assert(spark.read.parquet(storeDir).count() == countBefore,
       "replayed batch re-admitted rows")
     val replayed = StreamOps.streamIvfTopKQuery(spark, base.toString, nQueries = 5)
@@ -851,14 +870,14 @@ class StreamOpsSpec extends AnyFunSuite {
       .collect().map(key).toSeq
     assert(streamed == inPlan && streamed.nonEmpty)
     // replay: re-encode batch 1 by hand — the anti-join admits nothing
-    val storeDir = StreamOps.pqStreamStoreFor(base.toString).get
+    val codebook = Similarity.seedCodebook(
+      spark.read.parquet(base.toString + "/embeddings.parquet"), 8)
+    val storeDir = TestSession.servedStore(
+      StreamOps.pqStreamStore(spark, base.toString, 8, 4, 64, codebook))
     val countBefore = spark.read.parquet(storeDir).count()
     StreamOps.ingestPqBatch(spark,
       emb.filter(col("vec_id") < 150).select(col("vec_id"), col("embedding")),
-      storeDir,
-      Similarity.seedCodebook(
-        spark.read.parquet(base.toString + "/embeddings.parquet"), 8),
-      m = 4, dim = 64)
+      storeDir, codebook, m = 4, dim = 64)
     assert(spark.read.parquet(storeDir).count() == countBefore,
       "replayed batch re-admitted rows")
     val replayed = StreamOps.streamPqTopKQuery(spark, base.toString, nQueries = 5)
@@ -873,7 +892,7 @@ class StreamOpsSpec extends AnyFunSuite {
     // to bits 8 — the bucket is a pure function of the stored vector
     StreamOps.streamLshTopKQuery(spark, TestSession.sfDir, bits = 6)
       .limit(1).collect()
-    val store6 = StreamOps.lshStoreDirFor(TestSession.sfDir, 6).get
+    val store6 = TestSession.servedStore(StreamOps.lshStore(spark, TestSession.sfDir, 6))
     val store8 = java.nio.file.Files.createTempDirectory("lsh_rebucket").toString
     val n = Sinks.rebucketPartitioned(spark, store6, store8, "bucket",
       Similarity.signBucket(col("embedding"), 8), sortCols = Seq("vec_id"))
@@ -895,7 +914,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val before = StreamOps.streamHnswSearchQuery(spark, TestSession.sfDir,
         nQueries = 5, stepsUpper = 2, beamWidth = 4, steps = 3)
       .collect().map(_.toSeq).toSeq
-    val stores = StreamOps.hnswStreamStoresFor(TestSession.sfDir).get
+    val stores = TestSession.servedStore(StreamOps.hnswStreamStores(spark, TestSession.sfDir))
     // a layer whose batch had no candidates holds only a _SUCCESS
     // marker — nothing to compact (and nothing read at serve either)
     val rewritten = stores.map { case (_, edgeDir) =>
@@ -915,7 +934,10 @@ class StreamOpsSpec extends AnyFunSuite {
   test("streaming IVF cell store: per-cell compaction preserves serving results") {
     val before = StreamOps.streamIvfTopKQuery(spark, TestSession.sfDir, nQueries = 5)
       .collect().map(_.toSeq).toSeq
-    val storeDir = StreamOps.ivfStreamStoreFor(TestSession.sfDir).get
+    val storeDir = TestSession.servedStore(
+      StreamOps.ivfStreamStore(spark, TestSession.sfDir, 8,
+        graft.operators.Similarity.seedCodebook(
+          Tables.loadWide(spark, TestSession.sfDir, "embeddings"), 8)))
     val rewritten = graft.operators.Sinks.compactPartitioned(spark, storeDir,
       targetBytes = 1L << 30)
     assert(rewritten > 0, "expected the cell store's partitions to compact")
@@ -927,7 +949,8 @@ class StreamOpsSpec extends AnyFunSuite {
   test("streaming BM25 postings store: per-bucket compaction preserves the served ranking") {
     val before = StreamOps.streamBm25StoreQuery(spark, TestSession.sfDir)
       .collect().map(_.toSeq).toSeq
-    val (postingsDir, _) = StreamOps.bm25StreamStoreFor(TestSession.sfDir).get
+    val (postingsDir, _) = TestSession.servedStore(
+      StreamOps.bm25StreamStore(spark, TestSession.sfDir))
     val rewritten = graft.operators.Sinks.compactPartitioned(spark, postingsDir,
       targetBytes = 1L << 30)
     assert(rewritten > 0, "expected the postings store's partitions to compact")
@@ -971,7 +994,7 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(streamed == inPlan && streamed.nonEmpty)
     // per-layer layout hygiene: every populated layer store carries its
     // prune keys as partition dirs
-    val stores = StreamOps.hnswStreamStoresFor(base.toString).get
+    val stores = TestSession.servedStore(StreamOps.hnswStreamStores(spark, base.toString))
     assert(new java.io.File(stores(0)._1).list().exists(_.startsWith("bucket=")))
     assert(new java.io.File(stores(0)._2).list().exists(_.startsWith("gbucket=")))
     // crash-replay: re-ingest the SECOND batch by hand (at-least-once);
@@ -1073,7 +1096,7 @@ class StreamOpsSpec extends AnyFunSuite {
     // — the max-merge key) and a duplicate slice of seen words (the
     // min-merge absorbs them); the served curve must not move
     val (seenDir, tokDir) =
-      StreamOps.corpusStatsStoresFor(TestSession.sfDir).get
+      TestSession.servedStore(StreamOps.corpusStatsStores(spark, TestSession.sfDir))
     val parts = spark.read.parquet(tokDir)
     parts.filter(col("batch_id") === parts.agg(min(col("batch_id")))
         .head().getLong(0))
@@ -1097,7 +1120,7 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(first == batch && first.nonEmpty)
     // replay: re-append one batch's worth of identical postings + dl
     // rows (what an at-least-once restart does); max-merge must absorb it
-    val (pd, dd) = StreamOps.bm25StreamStoreFor(TestSession.sfDir).get
+    val (pd, dd) = TestSession.servedStore(StreamOps.bm25StreamStore(spark, TestSession.sfDir))
     val replay = Tables.load(spark, TestSession.sfDir, "documents")
       .limit(50)
       .select(col("doc_id"), explode(words(col("text"))).as("word"))
@@ -1126,7 +1149,7 @@ class StreamOpsSpec extends AnyFunSuite {
     // replay: re-append one batch's worth of identical positional rows
     // (what an at-least-once restart does); the serve's distinct over
     // (word, doc_id, pos) must absorb them
-    val pd = StreamOps.phraseStreamStoreFor(TestSession.sfDir).get
+    val pd = TestSession.servedStore(StreamOps.phraseStreamStore(spark, TestSession.sfDir))
     TextAnalytics.phrasePostings(
         Tables.load(spark, TestSession.sfDir, "documents").limit(50))
       .withColumn("tbucket",

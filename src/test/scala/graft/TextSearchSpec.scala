@@ -215,7 +215,7 @@ class TextSearchSpec extends AnyFunSuite {
     import graft.streaming.StreamOps
     val before = StreamOps.streamSubstrStoreQuery(spark, sfDir)
       .collect().map(_.toSeq).toSeq
-    val (pd, dd) = StreamOps.trigramStreamStoreFor(sfDir).get
+    val (pd, dd) = TestSession.servedStore(StreamOps.trigramStreamStore(spark, sfDir))
     // re-append the ENTIRE store to itself — a strictly worse duplication
     // than any real epoch replay (which re-appends one batch)
     val posts = spark.read.parquet(pd).localCheckpoint(true)
