@@ -277,7 +277,8 @@ object ScaleProbe {
     for ((label, dir) <- Seq("1x" -> sfDir, "10x" -> bigDir)) {
       val n = spark.read.parquet(s"$dir/embeddings.parquet").count()
       val d = t2(Similarity.graphBeamSearch(spark, dir))
-      val f = t2(Similarity.graphBeamSearchDistributed(spark, dir))
+      val f = t2(BeamDescent.distributed(spark,
+        Similarity.graphBeamDescent(spark, dir)))
       println(f"| beam_walk | $label | $n nodes | $d%.2f | $f%.2f |")
     }
     for ((label, dir) <- Seq("1x" -> sfDir, "10x" -> bigDir)) {

@@ -1574,27 +1574,19 @@ object Similarity {
   def graphGreedySearch(spark: SparkSession, dir: String, deg: Int = 8,
                         nQueries: Int = 10, nEntries: Int = 8,
                         maxSteps: Int = 16): DataFrame = {
-    val emb = Tables.loadWide(spark, dir, "embeddings")
     // r13: the supersteps were the wall (8/32-core ratio ~1 — driver
-    // actions, not data). When the corpus fits WalkDriver.NodeCap the
-    // whole walk runs driver-side off ONE graph collect (the r12
-    // union-find probe/fallback pattern); above cap the distributed
-    // loop below is unchanged. deg ≤ 16 keeps the knnGraph under
-    // EdgeCap whenever the corpus fits NodeCap, so the edge probe
-    // cannot waste a build.
-    WalkDriver.collectEmb(emb.select(col("vec_id"), col("embedding")))
-      .flatMap { case (embMap, n) =>
-        WalkDriver.collectAdj(
-          knnGraph(spark, dir, deg).select(col("src"), col("dst"))).map { adj =>
-          val queries = WalkDriver.queriesOf(embMap, nQueries)
-          val entries = WalkDriver.spreadEntries(n, nQueries,
-            nEntries, embMap)
-          WalkDriver.greedyResultDF(spark,
-            WalkDriver.greedyWalk(queries, entries, embMap, adj, maxSteps))
-        }
-      }.getOrElse(
-        graphGreedySearchDistributed(spark, dir, deg, nQueries, nEntries,
-          maxSteps))
+    // actions, not data). When the corpus and graph fit the WalkDriver
+    // caps the walk runs driver-side off the inputs the flat beam
+    // descent collects, with greedy's own move rule; above cap the
+    // distributed loop below runs.
+    val d = graphBeamDescent(spark, dir, deg, nQueries, nEntries,
+      beamWidth = 1, steps = maxSteps, k = 1)
+    BeamDescent.collect(d).map { c =>
+      WalkDriver.greedyResultDF(spark,
+        WalkDriver.greedyWalk(c.queries, c.entries, c.emb, c.adjs(0), maxSteps))
+    }.getOrElse(
+      graphGreedySearchDistributed(spark, dir, deg, nQueries, nEntries,
+        maxSteps))
   }
 
   /** The pre-r13 distributed superstep loop — the above-cap fallback,
@@ -1618,12 +1610,8 @@ object Similarity {
       .localCheckpoint(true)
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-    // entry nodes: evenly spread over the non-query id range,
-    // entry_i = nQueries + (i·(n − nQueries)) div nEntries — integer
-    // arithmetic only, so the oracle reproduces the exact id set
-    val entryIds = (0 until nEntries).map(i =>
-      nQueries + i.toLong * (n - nQueries) / nEntries)
-    val entries = emb.filter(col("vec_id").isin(entryIds: _*))
+    val entries = emb.filter(
+        col("vec_id").isin(BeamDescent.spreadIds(n, nQueries, nEntries): _*))
       .select(col("vec_id").as("entry"), col("embedding").as("e_emb"))
     var frontier = queries.join(broadcast(entries), col("entry") =!= col("qid"))
       .select(col("qid"), col("q_emb"), col("entry"),
@@ -1693,106 +1681,26 @@ object Similarity {
   def graphBeamSearch(spark: SparkSession, dir: String, deg: Int = 8,
                       nQueries: Int = 10, nEntries: Int = 8,
                       beamWidth: Int = 8, steps: Int = 8,
-                      k: Int = 3): DataFrame = {
-    val emb = Tables.loadWide(spark, dir, "embeddings")
-    // r13 bounded driver walk — see graphGreedySearch; the distributed
-    // superstep loop below is the unchanged above-cap fallback.
-    WalkDriver.collectEmb(emb.select(col("vec_id"), col("embedding")))
-      .flatMap { case (embMap, n) =>
-        WalkDriver.collectAdj(
-          knnGraph(spark, dir, deg).select(col("src"), col("dst"))).map { adj =>
-          val queries = WalkDriver.queriesOf(embMap, nQueries)
-          val entries = WalkDriver.spreadEntries(n, nQueries,
-            nEntries, embMap)
-          WalkDriver.beamResultDF(spark,
-            WalkDriver.beamWalk(queries, entries, embMap,
-              Seq((adj, beamWidth, steps)), k))
-        }
-      }.getOrElse(
-        graphBeamSearchDistributed(spark, dir, deg, nQueries, nEntries,
-          beamWidth, steps, k))
-  }
+                      k: Int = 3): DataFrame =
+    BeamDescent.run(spark, graphBeamDescent(spark, dir, deg, nQueries,
+      nEntries, beamWidth, steps, k))
 
-  /** The pre-r13 distributed superstep loop — the above-cap fallback
-    * and R13WalkDriverSpec's equivalence anchor. */
-  private[graft] def graphBeamSearchDistributed(
-      spark: SparkSession, dir: String, deg: Int = 8,
-      nQueries: Int = 10, nEntries: Int = 8,
-      beamWidth: Int = 8, steps: Int = 8,
-      k: Int = 3): DataFrame = {
-    val emb = Tables.loadWide(spark, dir, "embeddings")
-    val n = emb.count()
-    val moves = knnGraph(spark, dir, deg)
-      .select(col("src"), col("dst"))
-      .join(emb.select(col("vec_id").as("dst"), col("embedding").as("dst_emb")),
-        "dst")
-      .select(col("src"), col("dst"), col("dst_emb"))
-      .localCheckpoint(true)
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-      .localCheckpoint(true)
-    val entryIds = (0 until nEntries).map(i =>
-      nQueries + i.toLong * (n - nQueries) / nEntries)
-    val entries = emb.filter(col("vec_id").isin(entryIds: _*))
-      .select(col("vec_id").as("node"), col("embedding").as("e_emb"))
-    var visited = queries.join(broadcast(entries), col("node") =!= col("qid"))
-      .select(col("qid"), col("node"),
-        cosine(col("q_emb"), col("e_emb")).as("score"))
-      .filter(col("score").isNotNull)
-      .localCheckpoint(true)
-    val wb = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("node"))
-    for (_ <- 1 to steps) {
-      val beam = visited.withColumn("rn", row_number().over(wb))
-        .filter(col("rn") <= beamWidth).select(col("qid"), col("node"))
-      val expanded = beam.join(moves, col("node") === col("src"))
-        .filter(col("dst") =!= col("qid"))
-        .join(queries, "qid")
-        .select(col("qid"), col("dst").as("node"),
-          cosine(col("q_emb"), col("dst_emb")).as("score"))
-        .filter(col("score").isNotNull)
-      // same (qid, node) always rescores to the identical double, so a
-      // plain distinct dedupes revisits
-      visited = visited.union(expanded).distinct().localCheckpoint(true)
-    }
-    visited.withColumn("rn", row_number().over(wb)).filter(col("rn") <= k)
-      .select(col("qid"), col("rn"), col("node"), col("score"))
-      .orderBy(col("qid"), col("rn"))
-  }
+  /** [[graphBeamSearch]] as a descent: spread entries, one phase over
+    * the in-plan [[knnGraph]]. */
+  private[graft] def graphBeamDescent(spark: SparkSession, dir: String,
+                                      deg: Int = 8, nQueries: Int = 10,
+                                      nEntries: Int = 8, beamWidth: Int = 8,
+                                      steps: Int = 8, k: Int = 3): BeamDescent.Descent =
+    BeamDescent.Descent(corpusOf(spark, dir), nQueries,
+      BeamDescent.Spread(nEntries),
+      Seq(BeamDescent.Phase(BeamDescent.Graph(
+        knnGraph(spark, dir, deg).select(col("src"), col("dst"))), beamWidth, steps)),
+      k)
+
+  private def corpusOf(spark: SparkSession, dir: String): DataFrame =
+    Tables.loadWide(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
 
   private[graft] val GraphStoreBuckets = 64
-
-  /** Collect the superstep's beam ONCE — O(nQueries·width) (qid, node)
-    * rows, the bounded driver-control-state class — returning the rows
-    * plus the frontier's bucket set derived DRIVER-SIDE from them. This
-    * is the single action a store-served superstep pays: it also
-    * materializes the previous round's lazily checkpointed visited set,
-    * so the per-superstep job count drops from three (eager beam
-    * checkpoint + bucket distinct-collect + eager visited checkpoint)
-    * to one — the serve-latency floor at any store size, since the
-    * store read itself is partition-pruned to these buckets. */
-  private[graft] def collectBeam(visited: DataFrame, width: Int,
-                                 nBuckets: Int = GraphStoreBuckets)
-      : (Array[(Long, Long)], Seq[Int]) = {
-    import org.apache.spark.sql.expressions.Window
-    val wb = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("node"))
-    val rows = visited.withColumn("rn", row_number().over(wb))
-      .filter(col("rn") <= width).select(col("qid"), col("node"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    // node ids are non-negative, so % == pmod here
-    val buckets = rows.map(t => (t._2 % nBuckets).toInt)
-      .toSeq.distinct.sorted
-    (rows, buckets)
-  }
-
-  /** The collected beam fed back as a LOCAL relation — plan-embedded
-    * data for the broadcast side of the superstep's edge join: no job,
-    * no shuffle, no re-run of the windowed beam. */
-  private[graft] def beamFrame(spark: SparkSession,
-                               rows: Array[(Long, Long)]): DataFrame = {
-    import spark.implicits._
-    rows.toSeq.toDF("qid", "node")
-  }
 
   /** The pruned edge read: only the partitions holding the frontier's
     * buckets are listed and scanned — the store-serve analogue of
@@ -1878,78 +1786,22 @@ object Similarity {
                                         storeDir: String, nBuckets: Int,
                                         nQueries: Int = 10, nEntries: Int = 8,
                                         beamWidth: Int = 8, steps: Int = 8,
-                                        k: Int = 3): DataFrame = {
-    val emb = Tables.loadWide(spark, dir, "embeddings")
-    // r13 bounded driver walk: when the corpus fits the cap the edge
-    // store is collected ONCE ((src, dst) pairs only — dst vectors come
-    // from the collected corpus map, the same floats the store carries)
-    // and all supersteps run driver-side. Above cap the bucket-pruned
-    // superstep serve below is unchanged — at store sizes where pruning
-    // matters, that is the path that runs.
-    WalkDriver.collectEmb(emb.select(col("vec_id"), col("embedding")))
-      .flatMap { case (embMap, n) =>
-        WalkDriver.collectAdj(
-          spark.read.parquet(storeDir).select(col("src"), col("dst"))).map { adj =>
-          val queries = WalkDriver.queriesOf(embMap, nQueries)
-          val entries = WalkDriver.spreadEntries(n, nQueries,
-            nEntries, embMap)
-          WalkDriver.beamResultDF(spark,
-            WalkDriver.beamWalk(queries, entries, embMap,
-              Seq((adj, beamWidth, steps)), k))
-        }
-      }.getOrElse(
-        graphBeamServeFromDistributed(spark, dir, storeDir, nBuckets,
-          nQueries, nEntries, beamWidth, steps, k))
-  }
+                                        k: Int = 3): DataFrame =
+    BeamDescent.run(spark, graphBeamServeDescent(spark, dir, storeDir,
+      nBuckets, nQueries, nEntries, beamWidth, steps, k))
 
-  /** The pre-r13 bucket-pruned superstep serve — the above-cap
-    * fallback and R13WalkDriverSpec's equivalence anchor. */
-  private[graft] def graphBeamServeFromDistributed(
-      spark: SparkSession, dir: String,
-      storeDir: String, nBuckets: Int,
-      nQueries: Int = 10, nEntries: Int = 8,
-      beamWidth: Int = 8, steps: Int = 8,
-      k: Int = 3): DataFrame = {
-    val emb = Tables.loadWide(spark, dir, "embeddings")
-    val n = emb.count()
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-      .localCheckpoint(true)
-    val entryIds = (0 until nEntries).map(i =>
-      nQueries + i.toLong * (n - nQueries) / nEntries)
-    val entries = emb.filter(col("vec_id").isin(entryIds: _*))
-      .select(col("vec_id").as("node"), col("embedding").as("e_emb"))
-    var visited = queries.join(broadcast(entries), col("node") =!= col("qid"))
-      .select(col("qid"), col("node"),
-        cosine(col("q_emb"), col("e_emb")).as("score"))
-      .filter(col("score").isNotNull)
-      .localCheckpoint(eager = false) // the first beam collect materializes it
-    val wb = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("node"))
-    // list the store's partitions ONCE: read.parquet pays partition
-    // discovery (a walk of every bucket directory) at relation-build
-    // time, so re-reading per superstep puts a listing floor under every
-    // step — the pruning .where below is plan-time either way
-    val store = spark.read.parquet(storeDir)
-    for (_ <- 1 to steps) {
-      // ONE action per superstep: collect the beam (bounded control
-      // state), derive the bucket set driver-side, feed the beam back
-      // as a broadcast local relation
-      val (beamRows, buckets) = collectBeam(visited, beamWidth, nBuckets)
-      val expanded = broadcast(beamFrame(spark, beamRows))
-        .join(store.where(col("gbucket").isin(buckets: _*)),
-          col("node") === col("src"))
-        .filter(col("dst") =!= col("qid"))
-        .join(queries, "qid")
-        .select(col("qid"), col("dst").as("node"),
-          cosine(col("q_emb"), col("dst_emb")).as("score"))
-        .filter(col("score").isNotNull)
-      visited = visited.union(expanded).distinct()
-        .localCheckpoint(eager = false) // the next collect materializes it
-    }
-    visited.withColumn("rn", row_number().over(wb)).filter(col("rn") <= k)
-      .select(col("qid"), col("rn"), col("node"), col("score"))
-      .orderBy(col("qid"), col("rn"))
-  }
+  /** [[graphBeamServeFrom]] as a descent: spread entries, one phase
+    * over the edge store (dst vectors stored with each edge). */
+  private[graft] def graphBeamServeDescent(spark: SparkSession, dir: String,
+                                           storeDir: String, nBuckets: Int,
+                                           nQueries: Int = 10, nEntries: Int = 8,
+                                           beamWidth: Int = 8, steps: Int = 8,
+                                           k: Int = 3): BeamDescent.Descent =
+    BeamDescent.Descent(corpusOf(spark, dir), nQueries,
+      BeamDescent.Spread(nEntries),
+      Seq(BeamDescent.Phase(BeamDescent.Store(spark.read.parquet(storeDir),
+        nBuckets), beamWidth, steps)),
+      k)
 
   /** Oracle twin of [[graphBeamSearch]]: the fixed-depth loop unrolled
     * into chained CTEs v0..v`steps` (beam = windowed top-b of the
@@ -2120,110 +1972,51 @@ object Similarity {
                  nQueries: Int = 10, stepsUpper: Int = 4,
                  beamWidth: Int = 8, steps: Int = 8,
                  k: Int = 3,
-                 layerBits: Option[Int => Int] = None): DataFrame = {
-    val emb = Tables.loadWide(spark, dir, "embeddings")
-    // r13 bounded driver walk: the per-layer GRAPH BUILDS stay
-    // distributed (knnGraphFrom, identical bits), but their edges are
-    // collected once each and all 2·stepsUpper + steps supersteps run
-    // driver-side — see graphGreedySearch. Above any cap the
-    // distributed loop below is unchanged.
-    WalkDriver.collectEmb(emb.select(col("vec_id"), col("embedding")))
-      .flatMap { case (embMap, n) =>
-        val lvl = emb.select(col("vec_id"), col("embedding"),
-          hnswLevelCol(col("vec_id")).as("lvl")).localCheckpoint(true)
-        val maxl = lvl.agg(max(col("lvl"))).collect()(0).getInt(0)
-        def bitsFor(l: Int, count: => Long): Int =
-          layerBits.map(f => f(l)).getOrElse(adaptiveBits(count))
-        def layerAdj(l: Int) = {
-          val nodes = lvl.filter(col("lvl") >= l)
-            .select(col("vec_id"), col("embedding"))
-          WalkDriver.collectAdj(
-            knnGraphFrom(nodes, deg, bitsFor(l, nodes.count()))
-              .select(col("src"), col("dst")))
-        }
-        val baseAdj = WalkDriver.collectAdj(
-          knnGraphFrom(emb.select(col("vec_id"), col("embedding")), deg,
-            bitsFor(0, n)).select(col("src"), col("dst")))
-        val upperAdjs = (maxl to 1 by -1).map(l => layerAdj(l))
-        val entriesOpt = WalkDriver.collectUnder(
-          lvl.filter(col("lvl") === maxl).select(col("vec_id")),
-          WalkDriver.NodeCap)
-        if (baseAdj.isEmpty || upperAdjs.exists(_.isEmpty) || entriesOpt.isEmpty)
-          None
-        else {
-          val queries = WalkDriver.queriesOf(embMap, nQueries)
-          val entries = entriesOpt.get.map(_.getLong(0))
-          val phases =
-            upperAdjs.map(a => (a.get, 1, stepsUpper)) :+
-              ((baseAdj.get, beamWidth, steps))
-          Some(WalkDriver.beamResultDF(spark,
-            WalkDriver.beamWalk(queries, entries, embMap, phases, k)))
-        }
-      }.getOrElse(
-        hnswSearchDistributed(spark, dir, deg, nQueries, stepsUpper,
-          beamWidth, steps, k, layerBits))
+                 layerBits: Option[Int => Int] = None): DataFrame =
+    BeamDescent.run(spark, hnswDescent(spark, dir, deg, nQueries, stepsUpper,
+      beamWidth, steps, k, layerBits))
+
+  /** [[hnswSearch]] as a descent: entered at the top populated layer's
+    * nodes, one phase per layer over its in-plan k-NN graph (identical
+    * [[knnGraphFrom]] builds, adaptive width per layer population).
+    * `layerBits` pins per-layer widths (the streaming-store contract —
+    * a stream cannot count its corpus up front). ONE aggregate yields
+    * the layer populations: the top populated level and every adaptive
+    * width come from it. */
+  private[graft] def hnswDescent(spark: SparkSession, dir: String, deg: Int = 8,
+                                 nQueries: Int = 10, stepsUpper: Int = 4,
+                                 beamWidth: Int = 8, steps: Int = 8,
+                                 k: Int = 3,
+                                 layerBits: Option[Int => Int] = None): BeamDescent.Descent = {
+    val corpus = corpusOf(spark, dir)
+    val lvl = corpus.withColumn("lvl", hnswLevelCol(col("vec_id")))
+      .localCheckpoint(true)
+    val perLevel = lvl.groupBy(col("lvl")).count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val maxl = perLevel.keys.maxOption.getOrElse(0)
+    def layer(l: Int): BeamDescent.Edges = {
+      val nodes = lvl.filter(col("lvl") >= l).select(col("vec_id"), col("embedding"))
+      val bits = layerBits.map(f => f(l)).getOrElse(
+        adaptiveBits(perLevel.collect { case (m, c) if m >= l => c }.sum))
+      BeamDescent.Graph(knnGraphFrom(nodes, deg, bits).select(col("src"), col("dst")))
+    }
+    hnswPhases(corpus, nQueries,
+      lvl.filter(col("lvl") === maxl).select(col("vec_id"), col("embedding")),
+      maxl, layer, stepsUpper, beamWidth, steps, k)
   }
 
-  /** The pre-r13 distributed superstep loop — the above-cap fallback
-    * and R13WalkDriverSpec's equivalence anchor. */
-  private[graft] def hnswSearchDistributed(
-      spark: SparkSession, dir: String, deg: Int = 8,
-      nQueries: Int = 10, stepsUpper: Int = 4,
-      beamWidth: Int = 8, steps: Int = 8,
-      k: Int = 3,
-      layerBits: Option[Int => Int] = None): DataFrame = {
-    val emb = Tables.loadWide(spark, dir, "embeddings")
-    val lvl = emb.select(col("vec_id"), col("embedding"),
-      hnswLevelCol(col("vec_id")).as("lvl")).localCheckpoint(true)
-    // ONE int of driver control state: the highest populated level
-    val maxl = lvl.agg(max(col("lvl"))).collect()(0).getInt(0)
-    def movesFor(g: DataFrame) = g.select(col("src"), col("dst"))
-      .join(emb.select(col("vec_id").as("dst"), col("embedding").as("dst_emb")),
-        "dst")
-      .select(col("src"), col("dst"), col("dst_emb"))
-      .localCheckpoint(true)
-    // layerBits pins per-layer widths (the streaming-store contract —
-    // a stream cannot count its corpus up front); None = adaptive
-    def bitsFor(l: Int, nodes: DataFrame): Int =
-      layerBits.map(f => f(l)).getOrElse(adaptiveBits(nodes.count()))
-    def layer(l: Int): DataFrame = {
-      val nodes = lvl.filter(col("lvl") >= l)
-        .select(col("vec_id"), col("embedding"))
-      movesFor(knnGraphFrom(nodes, deg, bitsFor(l, nodes)))
-    }
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-      .localCheckpoint(true)
-    val entries = lvl.filter(col("lvl") === maxl)
-      .select(col("vec_id").as("node"), col("embedding").as("e_emb"))
-    var visited = queries.join(broadcast(entries), col("node") =!= col("qid"))
-      .select(col("qid"), col("node"),
-        cosine(col("q_emb"), col("e_emb")).as("score"))
-      .filter(col("score").isNotNull)
-      .localCheckpoint(true)
-    val wb = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("node"))
-    // descend: width-1 routing on each populated upper layer, then the
-    // full beam on the base layer
-    val phases =
-      (maxl to 1 by -1).map(l => (layer(l), 1, stepsUpper)) :+
-        ((movesFor(knnGraphFrom(emb, deg,
-          bitsFor(0, emb.select(col("vec_id"), col("embedding"))))),
-          beamWidth, steps))
-    for ((moves, width, s) <- phases; _ <- 1 to s) {
-      val beam = visited.withColumn("rn", row_number().over(wb))
-        .filter(col("rn") <= width).select(col("qid"), col("node"))
-      val expanded = beam.join(moves, col("node") === col("src"))
-        .filter(col("dst") =!= col("qid"))
-        .join(queries, "qid")
-        .select(col("qid"), col("dst").as("node"),
-          cosine(col("q_emb"), col("dst_emb")).as("score"))
-        .filter(col("score").isNotNull)
-      visited = visited.union(expanded).distinct().localCheckpoint(true)
-    }
-    visited.withColumn("rn", row_number().over(wb)).filter(col("rn") <= k)
-      .select(col("qid"), col("rn"), col("node"), col("score"))
-      .orderBy(col("qid"), col("rn"))
-  }
+  /** The HNSW descent shape shared by every hierarchy: width-1 routing
+    * on each layer from `maxl` down to 1, then the `beamWidth` beam on
+    * the base layer, entered at `entries` (vec_id, embedding). */
+  private[graft] def hnswPhases(corpus: DataFrame, nQueries: Int,
+                                entries: DataFrame, maxl: Int,
+                                layer: Int => BeamDescent.Edges,
+                                stepsUpper: Int, beamWidth: Int, steps: Int,
+                                k: Int): BeamDescent.Descent =
+    BeamDescent.Descent(corpus, nQueries, BeamDescent.Nodes(entries),
+      (maxl to 1 by -1).map(l => BeamDescent.Phase(layer(l), 1, stepsUpper)) :+
+        BeamDescent.Phase(layer(0), beamWidth, steps),
+      k)
 
   /** The pruned hierarchy read: ONE layer, frontier-many buckets. Both
     * `lvl` and `gbucket` are partition columns, so the equality and the
@@ -2308,7 +2101,7 @@ object Similarity {
         "buckets" -> GraphStoreBuckets.toString,
         "maxcap" -> toCap.toString),
       Seq("edges")) { parts =>
-      linkTree(java.nio.file.Paths.get(oldDir),
+      graft.StoreCatalog.linkTree(java.nio.file.Paths.get(oldDir),
         java.nio.file.Paths.get(parts("edges")))
       val emb = Tables.loadWide(spark, dir, "embeddings")
       val lvl = emb.select(col("vec_id"), col("embedding"),
@@ -2334,10 +2127,6 @@ object Similarity {
     }
     (h.parts("edges"), h.meta("maxl").toInt)
   }
-
-  private def linkTree(src: java.nio.file.Path,
-                       dest: java.nio.file.Path): Unit =
-    graft.StoreCatalog.linkTree(src, dest)
 
   /** [[hnswSearch]] served from the MATERIALIZED hierarchy — the
     * production ANN serve shape: the per-layer graphs are built ONCE
@@ -2374,88 +2163,25 @@ object Similarity {
                                         storeDir: String, maxl: Int,
                                         nQueries: Int = 10, stepsUpper: Int = 4,
                                         beamWidth: Int = 8, steps: Int = 8,
-                                        k: Int = 3): DataFrame = {
-    val emb = Tables.loadWide(spark, dir, "embeddings")
-    // r13 bounded driver walk over the collected hierarchy — see
-    // graphBeamServeFrom; the (lvl, gbucket)-pruned superstep serve
-    // below is the unchanged above-cap fallback.
-    val driverResult =
-      WalkDriver.collectEmb(emb.select(col("vec_id"), col("embedding")))
-        .flatMap { case (embMap, _) =>
-          WalkDriver.collectUnder(
-            spark.read.parquet(storeDir)
-              .select(col("lvl").cast(IntegerType), col("src"), col("dst")),
-            WalkDriver.EdgeCap).flatMap { edgeRows =>
-            val adjByLvl = edgeRows.groupBy(_.getInt(0)).map { case (l, rs) =>
-              l -> WalkDriver.adjOf(rs.map(r =>
-                org.apache.spark.sql.Row(r.getLong(1), r.getLong(2))))
-            }
-            val empty = new scala.collection.mutable.LongMap[Array[Long]]()
-            WalkDriver.collectUnder(
-              emb.filter(hnswLevelCol(col("vec_id"), maxl) === maxl)
-                .select(col("vec_id")),
-              WalkDriver.NodeCap).map { entryRows =>
-              val queries = WalkDriver.queriesOf(embMap, nQueries)
-              val entries = entryRows.map(_.getLong(0))
-              val phases =
-                (maxl to 1 by -1).map(l =>
-                  (adjByLvl.getOrElse(l, empty), 1, stepsUpper)) :+
-                  ((adjByLvl.getOrElse(0, empty), beamWidth, steps))
-              WalkDriver.beamResultDF(spark,
-                WalkDriver.beamWalk(queries, entries, embMap, phases, k))
-            }
-          }
-        }
-    driverResult.getOrElse(
-      hnswServeFromStoreDistributed(spark, dir, storeDir, maxl, nQueries,
-        stepsUpper, beamWidth, steps, k))
-  }
+                                        k: Int = 3): DataFrame =
+    BeamDescent.run(spark, hnswStoreDescent(spark, dir, storeDir, maxl,
+      nQueries, stepsUpper, beamWidth, steps, k))
 
-  /** The pre-r13 (lvl, gbucket)-pruned superstep serve — the above-cap
-    * fallback and R13WalkDriverSpec's equivalence anchor. */
-  private[graft] def hnswServeFromStoreDistributed(
-      spark: SparkSession, dir: String,
-      storeDir: String, maxl: Int,
-      nQueries: Int = 10, stepsUpper: Int = 4,
-      beamWidth: Int = 8, steps: Int = 8,
-      k: Int = 3): DataFrame = {
-    val emb = Tables.loadWide(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-      .localCheckpoint(true)
-    val entries = emb
-      .filter(hnswLevelCol(col("vec_id"), maxl) === maxl)
-      .select(col("vec_id").as("node"), col("embedding").as("e_emb"))
-    var visited = queries.join(broadcast(entries), col("node") =!= col("qid"))
-      .select(col("qid"), col("node"),
-        cosine(col("q_emb"), col("e_emb")).as("score"))
-      .filter(col("score").isNotNull)
-      .localCheckpoint(eager = false) // the first beam collect materializes it
-    val wb = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("node"))
-    val phases =
-      (maxl to 1 by -1).map(l => (l, 1, stepsUpper)) :+ ((0, beamWidth, steps))
-    // list the hierarchy's partitions ONCE (see graphBeamSearchFromStore:
-    // per-superstep read.parquet re-walks every (lvl, gbucket) directory)
+  /** [[hnswServeFromStore]] as a descent: each phase walks one `lvl` of
+    * the hierarchy store (dst vectors stored with each edge). The store
+    * is listed ONCE: read.parquet pays partition discovery at relation
+    * build, so per-layer frames share it. */
+  private[graft] def hnswStoreDescent(spark: SparkSession, dir: String,
+                                      storeDir: String, maxl: Int,
+                                      nQueries: Int = 10, stepsUpper: Int = 4,
+                                      beamWidth: Int = 8, steps: Int = 8,
+                                      k: Int = 3): BeamDescent.Descent = {
+    val corpus = corpusOf(spark, dir)
     val store = spark.read.parquet(storeDir)
-    for ((l, width, s) <- phases; _ <- 1 to s) {
-      // ONE action per superstep: collect the beam (bounded control
-      // state), derive the bucket set driver-side, feed the beam back
-      // as a broadcast local relation
-      val (beamRows, buckets) = collectBeam(visited, width)
-      val expanded = broadcast(beamFrame(spark, beamRows))
-        .join(store.where(col("lvl") === l && col("gbucket").isin(buckets: _*)),
-          col("node") === col("src"))
-        .filter(col("dst") =!= col("qid"))
-        .join(queries, "qid")
-        .select(col("qid"), col("dst").as("node"),
-          cosine(col("q_emb"), col("dst_emb")).as("score"))
-        .filter(col("score").isNotNull)
-      visited = visited.union(expanded).distinct()
-        .localCheckpoint(eager = false) // the next collect materializes it
-    }
-    visited.withColumn("rn", row_number().over(wb)).filter(col("rn") <= k)
-      .select(col("qid"), col("rn"), col("node"), col("score"))
-      .orderBy(col("qid"), col("rn"))
+    hnswPhases(corpus, nQueries,
+      corpus.filter(hnswLevelCol(col("vec_id"), maxl) === maxl), maxl,
+      l => BeamDescent.Store(store.where(col("lvl") === l)),
+      stepsUpper, beamWidth, steps, k)
   }
 
   /** Oracle twin of [[hnswSearch]]: level table + the three per-layer

@@ -16,12 +16,16 @@ import scala.collection.mutable
   *
   * Legitimacy pattern (the r12 union-find / BPE / perceptron class):
   * one bounded `limit(cap+1).collect()` probe per input; if anything
-  * exceeds its cap the caller falls back to the UNCHANGED distributed
-  * superstep loop. Caps:
-  *  - [[NodeCap]] (2^16): the embeddings map — 64-dim floats ⇒ ~16 MB.
-  *  - [[EdgeCap]] (2^20): adjacency pairs — ~16 MB. With deg ≤ 16 a
-  *    knnGraph over ≤ NodeCap nodes is always under EdgeCap, so the
-  *    edge probe never wastes a build.
+  * exceeds its cap the caller falls back to the distributed superstep
+  * loop ([[BeamDescent.distributed]] for every beam descent). Caps:
+  *  - [[NodeCap]] (2^16): the embeddings map — 64-dim floats ⇒ ~16 MB —
+  *    and HNSW's entry-node set.
+  *  - [[EdgeCap]] (2^20): ONE edge budget per walk — ~16 MB. A descent
+  *    collects the (src, dst) pairs of all its phases in one probe, so
+  *    the SUM over every layer it walks must fit, whether the layers
+  *    are in-plan graphs, a batch store or per-layer stream stores.
+  *    With deg ≤ 16 a knnGraph over ≤ NodeCap nodes is always under
+  *    EdgeCap, so the edge probe never wastes a build.
   *
   * Equivalence: scores reproduce [[graft.plans.CosineSimilarity]]'s
   * left-to-right double fold exactly (same ops, same order — IEEE
@@ -62,8 +66,9 @@ private[graft] object WalkDriver {
     else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** The bounded probe: collect `df` iff it has ≤ cap rows (ONE job —
-    * the limit caps what crosses to the driver either way). */
+  /** The bounded probe: collect `df` iff it has ≤ cap rows (the limit
+    * caps what crosses to the driver either way). It is an incremental
+    * take: one job per scale-up round over `df`'s partitions. */
   def collectUnder(df: DataFrame, cap: Int): Option[Array[Row]] = {
     val rows = df.limit(cap + 1).collect()
     if (rows.length > cap) None else Some(rows)
@@ -86,16 +91,13 @@ private[graft] object WalkDriver {
       (m, rows.length.toLong)
     }
 
-  /** src → dst-array adjacency from a (bigint src, bigint dst) frame
-    * under [[EdgeCap]]. Expansion order is immaterial (the distributed
-    * loop unions + distincts), so dsts keep collect order. */
-  def collectAdj(df: DataFrame, cap: Int = EdgeCap): Option[mutable.LongMap[Array[Long]]] =
-    collectUnder(df, cap).map(adjOf)
-
+  /** src → dst-array adjacency from collected (phase, src, dst) rows.
+    * Expansion order is immaterial (the distributed loop unions +
+    * distincts), so dsts keep collect order. */
   def adjOf(rows: Array[Row]): mutable.LongMap[Array[Long]] = {
     val buf = new mutable.LongMap[mutable.ArrayBuilder.ofLong]()
     rows.foreach { r =>
-      buf.getOrElseUpdate(r.getLong(0), new mutable.ArrayBuilder.ofLong()) += r.getLong(1)
+      buf.getOrElseUpdate(r.getLong(1), new mutable.ArrayBuilder.ofLong()) += r.getLong(2)
     }
     val m = new mutable.LongMap[Array[Long]](buf.size * 2)
     buf.foreach { case (k, b) => m.update(k, b.result()) }
@@ -108,13 +110,12 @@ private[graft] object WalkDriver {
                 nQueries: Int): Array[(Long, Array[Float])] =
     emb.iterator.filter(_._1 < nQueries).toArray.sortBy(_._1)
 
-  /** Driver twin of the evenly-spread entry id set (integer arithmetic
-    * identical to the distributed entryIds); the isin-filter semantics
-    * collapse duplicates and drop ids absent from the corpus. */
+  /** Driver twin of the evenly-spread entry set
+    * ([[BeamDescent.spreadIds]]); the isin-filter semantics collapse
+    * duplicates and drop ids absent from the corpus. */
   def spreadEntries(n: Long, nQueries: Int, nEntries: Int,
                     emb: mutable.LongMap[Array[Float]]): Array[Long] =
-    (0 until nEntries).map(i => nQueries + i.toLong * (n - nQueries) / nEntries)
-      .distinct.filter(emb.contains).toArray
+    BeamDescent.spreadIds(n, nQueries, nEntries).distinct.filter(emb.contains).toArray
 
   /** Per-query top-`n` visited nodes by (score DESC, node ASC) — the
     * beam window's total order. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import graft.operators.BeamDescent
 
 /** Structured Streaming surface (SURVEY §1.5, §2.13): the reference's
   * continuous one-document-per-HTTP-request ingest becomes a stream of
@@ -1693,75 +1694,28 @@ object StreamOps {
   def streamGraphBeamQuery(spark: SparkSession, dir: String, deg: Int = 8,
                            nQueries: Int = 10, nEntries: Int = 8,
                            beamWidth: Int = 8, steps: Int = 8,
-                           k: Int = 3): DataFrame = {
-    import graft.operators.{Similarity, WalkDriver}
+                           k: Int = 3): DataFrame =
+    BeamDescent.run(spark, streamGraphBeamDescent(spark, dir, deg, nQueries,
+      nEntries, beamWidth, steps, k))
+
+  /** [[streamGraphBeamQuery]] as a descent: spread entries, one phase
+    * over the streamed edge store (no vectors at rest — the walk joins
+    * them from the corpus). */
+  private[graft] def streamGraphBeamDescent(spark: SparkSession, dir: String,
+                                            deg: Int = 8, nQueries: Int = 10,
+                                            nEntries: Int = 8, beamWidth: Int = 8,
+                                            steps: Int = 8, k: Int = 3): BeamDescent.Descent = {
     val (_, edgeDir) = knnGraphStreamStore(spark, dir, deg)
-    val embT = graft.Tables.loadWide(spark, dir, "embeddings")
-    // r13 bounded driver walk (see Similarity.graphBeamServeFrom): the
-    // streamed edge store is collected once and the supersteps run
-    // driver-side; the bucket-pruned serve below is the unchanged
-    // above-cap fallback.
-    val driverResult =
-      WalkDriver.collectEmb(embT.select(col("vec_id"), col("embedding")))
-        .flatMap { case (embMap, n) =>
-          WalkDriver.collectAdj(
-            spark.read.parquet(edgeDir).select(col("src"), col("dst"))).map { adj =>
-            val dq = WalkDriver.queriesOf(embMap, nQueries)
-            val de = WalkDriver.spreadEntries(n, nQueries,
-              nEntries, embMap)
-            WalkDriver.beamResultDF(spark,
-              WalkDriver.beamWalk(dq, de, embMap,
-                Seq((adj, beamWidth, steps)), k))
-          }
-        }
-    if (driverResult.isDefined) return driverResult.get
-    val gb = Similarity.GraphStoreBuckets.toLong
-    val emb = embT
-    val n = emb.count()
-    val dstEmb = emb.select(col("vec_id").as("dst"),
-      col("embedding").as("dst_emb")).localCheckpoint(true)
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-      .localCheckpoint(true)
-    val entryIds = (0 until nEntries).map(i =>
-      nQueries + i.toLong * (n - nQueries) / nEntries)
-    val entries = emb.filter(col("vec_id").isin(entryIds: _*))
-      .select(col("vec_id").as("node"), col("embedding").as("e_emb"))
-    var visited = queries.join(broadcast(entries), col("node") =!= col("qid"))
-      .select(col("qid"), col("node"),
-        graft.functions.VectorFunctions.cosine(
-          col("q_emb"), col("e_emb")).as("score"))
-      .filter(col("score").isNotNull)
-      .localCheckpoint(eager = false) // the first beam collect materializes it
-    val wb = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("score").desc, col("node"))
-    // list the store's partitions ONCE (per-superstep read.parquet
-    // re-walks every bucket directory; pruning is plan-time either way)
-    val store = spark.read.parquet(edgeDir)
-      .select(col("src"), col("dst"), col("score"), col("gbucket"))
-    for (_ <- 1 to steps) {
-      // ONE action per superstep: collect the beam (bounded control
-      // state), derive the bucket set driver-side, feed the beam back
-      // as a broadcast local relation
-      val (beamRows, buckets) = Similarity.collectBeam(visited, beamWidth)
-      val expanded = broadcast(Similarity.beamFrame(spark, beamRows))
-        .join(store.where(col("gbucket").isin(buckets: _*))
-            .select(col("src"), col("dst"), col("score")),
-          col("node") === col("src"))
-        .filter(col("dst") =!= col("qid"))
-        .join(dstEmb, "dst")
-        .join(queries, "qid")
-        .select(col("qid"), col("dst").as("node"),
-          graft.functions.VectorFunctions.cosine(
-            col("q_emb"), col("dst_emb")).as("score"))
-        .filter(col("score").isNotNull)
-      visited = visited.union(expanded).distinct()
-        .localCheckpoint(eager = false) // the next collect materializes it
-    }
-    visited.withColumn("rn", row_number().over(wb)).filter(col("rn") <= k)
-      .select(col("qid"), col("rn"), col("node"), col("score"))
-      .orderBy(col("qid"), col("rn"))
+    BeamDescent.Descent(embeddingsCorpus(spark, dir), nQueries,
+      BeamDescent.Spread(nEntries),
+      Seq(BeamDescent.Phase(BeamDescent.Store(spark.read.parquet(edgeDir)),
+        beamWidth, steps)),
+      k)
   }
+
+  private def embeddingsCorpus(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.loadWide(spark, dir, "embeddings")
+      .select(col("vec_id"), col("embedding"))
 
   def streamGraphBeamOracleSql(deg: Int = 8): String =
     graft.operators.Similarity.graphBeamSearchSql(
@@ -2327,99 +2281,29 @@ object StreamOps {
   def streamHnswSearchQuery(spark: SparkSession, dir: String, deg: Int = 8,
                             nQueries: Int = 10, stepsUpper: Int = 4,
                             beamWidth: Int = 8, steps: Int = 8,
-                            k: Int = 3): DataFrame = {
-    import graft.operators.Similarity
+                            k: Int = 3): DataFrame =
+    BeamDescent.run(spark, streamHnswDescent(spark, dir, deg, nQueries,
+      stepsUpper, beamWidth, steps, k))
+
+  /** [[streamHnswSearchQuery]] as a descent: entered at the top
+    * populated layer's node store (a directory existence check per
+    * level — O(levels) driver work against store METADATA, no data
+    * read), one phase per layer's edge store; a layer no batch wrote
+    * is a no-op phase. */
+  private[graft] def streamHnswDescent(spark: SparkSession, dir: String,
+                                       deg: Int = 8, nQueries: Int = 10,
+                                       stepsUpper: Int = 4, beamWidth: Int = 8,
+                                       steps: Int = 8, k: Int = 3): BeamDescent.Descent = {
     val stores = hnswStreamStores(spark, dir, deg)
-    val emb = graft.Tables.loadWide(spark, dir, "embeddings")
-    // top populated level: a directory existence check per level —
-    // O(levels) driver work against store METADATA, no data read
     val maxl = (HnswStreamMaxLevel to 0 by -1)
       .find(l => storeNonEmpty(stores(l)._1)).getOrElse(0)
-    // r13 bounded driver walk over the streamed hierarchy (see
-    // Similarity.hnswServeFromStore): each populated layer's edge store
-    // is collected once, the descent runs driver-side; the pruned
-    // superstep serve below is the unchanged above-cap fallback.
-    import graft.operators.WalkDriver
-    val driverResult =
-      WalkDriver.collectEmb(emb.select(col("vec_id"), col("embedding")))
-        .flatMap { case (embMap, _) =>
-          val empty = new scala.collection.mutable.LongMap[Array[Long]]()
-          val adjOpts: Seq[(Int, Option[scala.collection.mutable.LongMap[Array[Long]]])] =
-            (0 to maxl).map { l =>
-              val edgeDir = stores(l)._2
-              if (storeNonEmpty(edgeDir))
-                l -> WalkDriver.collectAdj(
-                  spark.read.parquet(edgeDir).select(col("src"), col("dst")))
-              else l -> Some(empty)
-            }
-          if (adjOpts.exists(_._2.isEmpty)) None
-          else WalkDriver.collectUnder(
-            spark.read.parquet(stores(maxl)._1).select(col("vec_id")),
-            WalkDriver.NodeCap).map { entryRows =>
-            val adjByLvl = adjOpts.map { case (l, a) => l -> a.get }.toMap
-            val dq = WalkDriver.queriesOf(embMap, nQueries)
-            val de = entryRows.map(_.getLong(0))
-            val phases =
-              (maxl to 1 by -1).map(l => (adjByLvl(l), 1, stepsUpper)) :+
-                ((adjByLvl(0), beamWidth, steps))
-            WalkDriver.beamResultDF(spark,
-              WalkDriver.beamWalk(dq, de, embMap, phases, k))
-          }
-        }
-    if (driverResult.isDefined) return driverResult.get
-    val gb = Similarity.GraphStoreBuckets.toLong
-    val dstEmb = emb.select(col("vec_id").as("dst"),
-      col("embedding").as("dst_emb")).localCheckpoint(true)
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-      .localCheckpoint(true)
-    val entries = spark.read.parquet(stores(maxl)._1)
-      .select(col("vec_id").as("node"), col("embedding").as("e_emb"))
-    var visited = queries.join(broadcast(entries), col("node") =!= col("qid"))
-      .select(col("qid"), col("node"),
-        graft.functions.VectorFunctions.cosine(
-          col("q_emb"), col("e_emb")).as("score"))
-      .filter(col("score").isNotNull)
-      .localCheckpoint(eager = false) // the first beam collect materializes it
-    val wb = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("score").desc, col("node"))
-    val phases =
-      (maxl to 1 by -1).map(l => (l, 1, stepsUpper)) :+ ((0, beamWidth, steps))
-    // list each populated layer's edge partitions ONCE (per-superstep
-    // read.parquet re-walks every bucket directory; a layer's descent
-    // phase alone is stepsUpper/steps supersteps over the same store)
-    val layerEdges: Map[Int, DataFrame] =
-      (0 to maxl).flatMap { l =>
-        val edgeDir = stores(l)._2
-        if (storeNonEmpty(edgeDir))
-          Some(l -> spark.read.parquet(edgeDir)
-            .select(col("src"), col("dst"), col("score"), col("gbucket")))
-        else None
-      }.toMap
-    for ((l, width, s) <- phases; _ <- 1 to s) {
-      if (layerEdges.contains(l)) { // empty layer graph = no-op steps
-        // ONE action per superstep: collect the beam (bounded control
-        // state), derive the bucket set driver-side, feed the beam back
-        // as a broadcast local relation
-        val (beamRows, buckets) = Similarity.collectBeam(visited, width)
-        val expanded = broadcast(Similarity.beamFrame(spark, beamRows))
-          .join(layerEdges(l).where(col("gbucket").isin(buckets: _*))
-              .select(col("src"), col("dst"), col("score")),
-            col("node") === col("src"))
-          .filter(col("dst") =!= col("qid"))
-          .join(dstEmb, "dst")
-          .join(queries, "qid")
-          .select(col("qid"), col("dst").as("node"),
-            graft.functions.VectorFunctions.cosine(
-              col("q_emb"), col("dst_emb")).as("score"))
-          .filter(col("score").isNotNull)
-        visited = visited.union(expanded).distinct()
-          .localCheckpoint(eager = false) // the next collect materializes it
-      }
-    }
-    visited.withColumn("rn", row_number().over(wb)).filter(col("rn") <= k)
-      .select(col("qid"), col("rn"), col("node"), col("score"))
-      .orderBy(col("qid"), col("rn"))
+    def layer(l: Int): BeamDescent.Edges =
+      if (storeNonEmpty(stores(l)._2))
+        BeamDescent.Store(spark.read.parquet(stores(l)._2))
+      else BeamDescent.NoEdges
+    graft.operators.Similarity.hnswPhases(embeddingsCorpus(spark, dir), nQueries,
+      spark.read.parquet(stores(maxl)._1).select(col("vec_id"), col("embedding")),
+      maxl, layer, stepsUpper, beamWidth, steps, k)
   }
 
   def streamHnswSearchOracleSql(deg: Int = 8): String =

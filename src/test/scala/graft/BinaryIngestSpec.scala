@@ -8,7 +8,7 @@ class BinaryIngestSpec extends AnyFunSuite {
   import TestSession.spark
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("ingest")
+    val d = Scratch.dir("ingest")
     def put(name: String, content: Array[Byte]): Unit =
       java.nio.file.Files.write(d.resolve(name), content)
     def putText(name: String, content: String): Unit =

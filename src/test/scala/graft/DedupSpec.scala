@@ -11,7 +11,7 @@ class DedupSpec extends AnyFunSuite {
   // synthetic corpus with a known dup structure, written once as parquet
   // so the operators' Tables.load path is exercised end-to-end
   private lazy val corpusDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("dedup").toString
+    val dir = Scratch.dir("dedup").toString
     Seq(
       (0L, "the quick brown fox jumps over the lazy dog", "en", "s0", 43L),
       (1L, "the quick brown fox jumps over the lazy dog", "en", "s1", 43L), // exact dup of 0
@@ -135,7 +135,7 @@ class DedupSpec extends AnyFunSuite {
         else (0 until 12).map(w => s"d${i}_$w")
       (i.toLong, words.mkString(" "))
     }
-    val dir = java.nio.file.Files.createTempDirectory("lshprop").toString
+    val dir = Scratch.dir("lshprop").toString
     docs.toDF("doc_id", "text").withColumn("lang", lit("en"))
       .withColumn("source", lit("s")).withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -178,7 +178,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("maximalSpans: non-adjacent duplicated regions stay separate islands") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("maxspan").toString
+    val dir = Scratch.dir("maxspan").toString
     Seq(
       (0L, "alpha beta gamma delta epsilon u1 u2 u3 zeta eta theta iota kappa", "en", "s0", 65L),
       (1L, "alpha beta gamma delta epsilon v1 v2 v3 zeta eta theta iota kappa", "en", "s1", 65L))
@@ -339,7 +339,7 @@ class DedupSpec extends AnyFunSuite {
     // whitespace-edged text: trim() strips spaces only, so "\ta b" splits
     // to ["", "a", "b"] — the phantom '' must not create a phantom bigram
     // (the oracle filters before forming bigrams; so must the engine)
-    val dir = java.nio.file.Files.createTempDirectory("wsedge").toString
+    val dir = Scratch.dir("wsedge").toString
     Seq((0L, "\ta b", "en", "s", 4L)).toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val edge = graft.operators.TextAnalytics.docRepetition(spark, dir).collect()(0)
@@ -458,7 +458,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("round-4 operators survive an EMPTY corpus (no div-by-zero, no planner errors)") {
-    val dir = java.nio.file.Files.createTempDirectory("empty").toString
+    val dir = Scratch.dir("empty").toString
     Seq.empty[(Long, String, String, String, Long)]
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -521,7 +521,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("bpe merges: greedy frequency-weighted pair induction, exhausted rounds vanish") {
     import graft.operators.TextAnalytics
-    val dir = java.nio.file.Files.createTempDirectory("bpe").toString
+    val dir = Scratch.dir("bpe").toString
     // wf: "ab" x3, "abc" x1 -> pairs round 1: (a b)=4, (b c)=1 -> merge
     // "a b"(4); round 2: (ab c)=1 -> merge "ab c"(1); rounds 3..8 have no
     // pairs left and must emit nothing (engine skips; oracle's empty
@@ -732,7 +732,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("langTrigramClassify: trained profiles discriminate scripts; short/null text -> und") {
     import graft.operators.TextAnalytics
-    val dir = java.nio.file.Files.createTempDirectory("langid").toString
+    val dir = Scratch.dir("langid").toString
     val en = Seq("the quick brown fox jumps over the lazy dog and runs through the green fields",
       "she sells sea shells by the sea shore while the sun shines over the water")
     val de = Seq("der schnelle braune fuchs springt über den faulen hund und läuft durch die wiese",
@@ -781,7 +781,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("collocations: an always-together pair outranks frequent generic neighbors") {
     import graft.operators.TextAnalytics
-    val dir = java.nio.file.Files.createTempDirectory("colloc").toString
+    val dir = Scratch.dir("colloc").toString
     // 'san francisco' co-occur exclusively; 'the data' co-occur often but
     // both words roam: lift must rank the exclusive pair first
     val docs = (0 until 10).map { i =>
@@ -826,7 +826,7 @@ class DedupSpec extends AnyFunSuite {
   test("phraseSearch: hand-computed consecutive matches (overlaps count per " +
     "start, order matters); positional store serve equals in-plan") {
     import graft.operators.TextAnalytics
-    val dir = java.nio.file.Files.createTempDirectory("phrase").toString
+    val dir = Scratch.dir("phrase").toString
     Seq(
       (0L, "a b a b a", "en", "s0", 9L), // "a b" at 1,3; "b a" at 2,4
       (1L, "b a  b", "en", "s1", 6L), // "a b" once (positions over REAL words)
@@ -900,7 +900,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("corpusStats: Heaps checkpoints hand-computed; types charge their first bucket") {
     import graft.operators.TextAnalytics
-    val dir = java.nio.file.Files.createTempDirectory("heaps").toString
+    val dir = Scratch.dir("heaps").toString
     // max id 2, nBuckets 20 -> width (2 div 20)+1 = 1: one bucket per doc.
     // doc 0 "a b": 2 new types; doc 1 "a c": 1 new; doc 2 "b c": 0 new
     Seq((0L, "a b", "en", "s0", 3L), (1L, "a c", "en", "s1", 3L),
@@ -925,7 +925,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("weightedSample: exact priority-sampling order, replayed bit-identically") {
     import graft.operators.TextAnalytics
-    val dir = java.nio.file.Files.createTempDirectory("wsample").toString
+    val dir = Scratch.dir("wsample").toString
     val docs = Seq((0L, "x", "en", "s0", 10L), (1L, "x", "en", "s1", 10000L),
       (2L, "x", "en", "s2", 3L), (3L, "x", "en", "s3", 500L))
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -949,7 +949,7 @@ class DedupSpec extends AnyFunSuite {
     // instead assert the scale-free property directly: doubling every
     // weight halves every priority ratio-preservingly, so the selection
     // order is scale-invariant.
-    val dir2 = java.nio.file.Files.createTempDirectory("wsample2").toString
+    val dir2 = Scratch.dir("wsample2").toString
     docs.map { case (id, t, l, s, nc) => (id, t, l, s, 2 * nc + 1) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir2/documents.parquet")

@@ -11,7 +11,7 @@ class DocPipelineSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val corpusDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("pipe").toString
+    val dir = Scratch.dir("pipe").toString
     Seq(
       // clean invoice: amount, email, date, phone all extractable
       (0L, "INVOICE amount due 250.00 bill to sam@acme.io on 2024-03-01 call 555-111-2222", "en", "s0", 10L),

@@ -62,7 +62,7 @@ class EmbeddingStoreSpec extends AnyFunSuite {
   }
 
   test("upsertToStore round-trips through parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("store").toString + "/emb"
+    val dir = Scratch.dir("store").toString + "/emb"
     val v1 = Seq((1L, "a"), (2L, "b")).toDF("vec_id", "payload")
     EmbeddingStore.upsertToStore(spark, dir, v1)
     val v2 = Seq((2L, "b2")).toDF("vec_id", "payload")

@@ -9,7 +9,7 @@ class EventsSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("events").toString
+    val d = Scratch.dir("events").toString
     Seq(
       (0L, "2024-01-01 10:00:00", 1L, "click", 1.00, """{"k": 1}"""),
       (1L, "2024-01-01 10:10:00", 1L, "click", 2.00, """{"k": 2}"""),
@@ -64,7 +64,7 @@ class EventsSpec extends AnyFunSuite {
   }
 
   test("funnel: stages require STRICT event-time order per user") {
-    val d = java.nio.file.Files.createTempDirectory("funnel").toString
+    val d = Scratch.dir("funnel").toString
     Seq(
       // u1: full ordered funnel
       (0L, "2024-01-01 10:00:00", 1L, "view", 0.0, "{}"),
@@ -92,7 +92,7 @@ class EventsSpec extends AnyFunSuite {
   }
 
   test("retention: week offsets count whole weeks from the cohort week") {
-    val d = java.nio.file.Files.createTempDirectory("retention").toString
+    val d = Scratch.dir("retention").toString
     Seq(
       // u1 first active Mon Jan 1 week; active again 2 weeks later
       (0L, "2024-01-02 10:00:00", 1L, "view", 0.0, "{}"),
@@ -115,7 +115,7 @@ class EventsSpec extends AnyFunSuite {
   }
 
   test("anomalies: an injected hourly spike is flagged with the hand-computed z") {
-    val d = java.nio.file.Files.createTempDirectory("anom").toString
+    val d = Scratch.dir("anom").toString
     // 9 quiet hours at 1 event + one spike hour with 11 events
     val rows = (0 until 9).map { h =>
       (h.toLong, f"2024-01-01 $h%02d:15:00", 1L, "click", 0.0, "{}")

@@ -261,7 +261,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("dedup fingerprint store: per-batch anti-join seen side prunes to touched buckets") {
     import org.apache.spark.sql.functions._
-    val store = java.nio.file.Files.createTempDirectory("planspec_fpstore").toString
+    val store = Scratch.dir("planspec_fpstore").toString
     spark.range(0, 1000)
       .select(col("id").as("fp"), col("id").as("doc_id"),
         graft.streaming.StreamOps.fpBucket(col("id")).as("bucket"))
@@ -278,7 +278,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("dedup fingerprint store: small-batch fp set lands in PushedFilters (row-group point lookup)") {
     import org.apache.spark.sql.functions._
-    val store = java.nio.file.Files.createTempDirectory("planspec_fpstore2").toString
+    val store = Scratch.dir("planspec_fpstore2").toString
     spark.range(0, 1000)
       .select(col("id").as("fp"), col("id").as("doc_id"),
         graft.streaming.StreamOps.fpBucket(col("id")).as("bucket"))
@@ -296,7 +296,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("neardup signature store: replay-membership read prunes to the band=0 partition") {
     import org.apache.spark.sql.functions._
-    val store = java.nio.file.Files.createTempDirectory("planspec_sigstore").toString
+    val store = Scratch.dir("planspec_sigstore").toString
     spark.range(0, 100)
       .select(col("id").as("doc_id"),
         explode(array(lit(0), lit(1), lit(2), lit(3))).as("band"),

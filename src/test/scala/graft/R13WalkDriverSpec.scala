@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Similarity, WalkDriver}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import graft.operators.{BeamDescent, Similarity, WalkDriver}
+import graft.streaming.StreamOps
 
 /** r13: the bounded driver walk must be indistinguishable from the
   * distributed superstep loop it replaces — same rows, same order,
@@ -15,6 +17,37 @@ class R13WalkDriverSpec extends AnyFunSuite {
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
+
+  /** Every beam descent over the corpus in `d`: name -> (its entry
+    * point, its descent). */
+  private def descents(d: String): Map[String, (() => DataFrame, () => BeamDescent.Descent)] = {
+    lazy val store = Similarity.buildGraphStore(spark, d, 8)
+    lazy val (hStore, maxl) = Similarity.buildHnswStore(spark, d, 8)
+    val nb = Similarity.GraphStoreBuckets
+    Map(
+      "graph_beam_search" -> (() => Similarity.graphBeamSearch(spark, d),
+        () => Similarity.graphBeamDescent(spark, d)),
+      "graph_beam_store" -> (() => Similarity.graphBeamServeFrom(spark, d, store, nb),
+        () => Similarity.graphBeamServeDescent(spark, d, store, nb)),
+      "graph_hnsw_search" -> (() => Similarity.hnswSearch(spark, d),
+        () => Similarity.hnswDescent(spark, d)),
+      "graph_hnsw_store" -> (() => Similarity.hnswServeFromStore(spark, d, hStore, maxl),
+        () => Similarity.hnswStoreDescent(spark, d, hStore, maxl)),
+      "stream_hnsw_search" -> (() => StreamOps.streamHnswSearchQuery(spark, d),
+        () => StreamOps.streamHnswDescent(spark, d)),
+      "stream_graph_beam" -> (() => StreamOps.streamGraphBeamQuery(spark, d),
+        () => StreamOps.streamGraphBeamDescent(spark, d)))
+  }
+
+  /** The entry point takes the driver walk (fixture scale fits every
+    * cap) and returns exactly what the distributed executor returns. */
+  private def assertDriverEqualsDistributed(d: String, name: String): Unit = {
+    val (entry, descent) = descents(d)(name)
+    val dsc = descent()
+    assert(BeamDescent.collect(dsc).isDefined, s"$name: driver path refused")
+    val driver = rows(entry())
+    assert(driver.nonEmpty && driver == rows(BeamDescent.distributed(spark, dsc)), name)
+  }
 
   test("driver cosine reproduces the CosineSimilarity expression " +
     "bit-for-bit on fixture embeddings") {
@@ -45,8 +78,7 @@ class R13WalkDriverSpec extends AnyFunSuite {
   }
 
   test("graphBeamSearch: driver walk == distributed superstep loop") {
-    assert(rows(Similarity.graphBeamSearch(spark, dir)) ==
-      rows(Similarity.graphBeamSearchDistributed(spark, dir)))
+    assertDriverEqualsDistributed(dir, "graph_beam_search")
   }
 
   test("graphGreedySearch: driver walk == distributed superstep loop") {
@@ -55,22 +87,59 @@ class R13WalkDriverSpec extends AnyFunSuite {
   }
 
   test("hnswSearch: driver walk == distributed superstep loop") {
-    assert(rows(Similarity.hnswSearch(spark, dir)) ==
-      rows(Similarity.hnswSearchDistributed(spark, dir)))
+    assertDriverEqualsDistributed(dir, "graph_hnsw_search")
   }
 
   test("graphBeamServeFrom: driver walk == bucket-pruned distributed serve") {
-    val store = Similarity.buildGraphStore(spark, dir, 8)
-    assert(rows(Similarity.graphBeamServeFrom(spark, dir, store,
-        Similarity.GraphStoreBuckets)) ==
-      rows(Similarity.graphBeamServeFromDistributed(spark, dir, store,
-        Similarity.GraphStoreBuckets)))
+    assertDriverEqualsDistributed(dir, "graph_beam_store")
   }
 
   test("hnswServeFromStore: driver walk == pruned distributed serve") {
-    val (store, maxl) = Similarity.buildHnswStore(spark, dir, 8)
-    assert(rows(Similarity.hnswServeFromStore(spark, dir, store, maxl)) ==
-      rows(Similarity.hnswServeFromStoreDistributed(spark, dir, store, maxl)))
+    assertDriverEqualsDistributed(dir, "graph_hnsw_store")
+  }
+
+  test("streamHnswSearchQuery: driver walk == per-layer pruned distributed serve") {
+    assertDriverEqualsDistributed(dir, "stream_hnsw_search")
+  }
+
+  test("streamGraphBeamQuery: driver walk == bucket-pruned distributed serve") {
+    assertDriverEqualsDistributed(dir, "stream_graph_beam")
+  }
+
+  test("beam descent at the caps: n nodes at nodeCap = n walk on the driver, " +
+    "nodeCap = n - 1 falls back with equal rows; the edge budget is the sum " +
+    "over every phase") {
+    val d = Similarity.graphBeamDescent(spark, dir)
+    val n = Tables.load(spark, dir, "embeddings").count().toInt
+    assert(BeamDescent.collect(d, nodeCap = n).isDefined)
+    assert(BeamDescent.collect(d, nodeCap = n - 1).isEmpty)
+    val atCap = rows(BeamDescent.run(spark, d, nodeCap = n))
+    assert(atCap.nonEmpty && atCap == rows(BeamDescent.run(spark, d, nodeCap = n - 1)))
+    val h = Similarity.hnswDescent(spark, dir)
+    val perPhase = h.phases.map(_.edges).collect {
+      case BeamDescent.Graph(g) => g.count().toInt
+    }
+    assert(perPhase.size == h.phases.size && perPhase.count(_ > 0) >= 2, perPhase)
+    val total = perPhase.sum
+    assert(BeamDescent.collect(h, edgeCap = total).isDefined)
+    // every layer fits the cap alone; only their sum is over it
+    assert(perPhase.max < total - 1)
+    assert(BeamDescent.collect(h, edgeCap = total - 1).isEmpty)
+  }
+
+  test("nQueries = 0: both executors return an empty frame of the " +
+    "(qid, rn, node, score) schema") {
+    val schema = Seq("qid" -> LongType, "rn" -> IntegerType,
+      "node" -> LongType, "score" -> DoubleType)
+    val (hStore, maxl) = Similarity.buildHnswStore(spark, dir, 8)
+    for (d <- Seq(Similarity.graphBeamDescent(spark, dir, nQueries = 0),
+                  Similarity.hnswStoreDescent(spark, dir, hStore, maxl, nQueries = 0))) {
+      assert(BeamDescent.collect(d).isDefined)
+      for (f <- Seq(BeamDescent.run(spark, d), BeamDescent.distributed(spark, d))) {
+        assert(f.collect().isEmpty)
+        assert(f.schema.map(c => c.name -> c.dataType) == schema)
+      }
+    }
   }
 
   test("pageRankLoop: driver rounds == iterate-by-join rounds, uniform " +
@@ -114,8 +183,10 @@ class R13WalkDriverSpec extends AnyFunSuite {
     assert(WalkDriver.collectEmb(emb).isDefined)
     val pairs = emb.select(col("vec_id").as("src"),
       (col("vec_id") + 1).as("dst"))
-    assert(WalkDriver.collectAdj(pairs, cap = 3).isEmpty)
-    assert(WalkDriver.collectAdj(pairs).isDefined)
+    val d = BeamDescent.Descent(emb, 10, BeamDescent.Spread(8),
+      Seq(BeamDescent.Phase(BeamDescent.Graph(pairs), 8, 8)), 3)
+    assert(BeamDescent.collect(d, edgeCap = 3).isEmpty)
+    assert(BeamDescent.collect(d).isDefined)
   }
 
   test("a NULL embedding: collectEmb skips its row but counts it, and " +
@@ -125,7 +196,7 @@ class R13WalkDriverSpec extends AnyFunSuite {
     // an entry node of the spread (i = 1): the entry ids are a function
     // of the distributed loop's emb.count(), NULL row included
     val nullId = 10 + (n - 10) / 8
-    val nullDir = java.nio.file.Files.createTempDirectory("emb_null").toString
+    val nullDir = Scratch.dir("emb_null").toString
     src.withColumn("embedding",
         when(col("vec_id") === nullId, lit(null)).otherwise(col("embedding")))
       .write.parquet(s"$nullDir/embeddings.parquet")
@@ -133,12 +204,10 @@ class R13WalkDriverSpec extends AnyFunSuite {
       Tables.load(spark, nullDir, "embeddings")
         .select(col("vec_id"), col("embedding"))).get
     assert(count == n && embMap.size == n - 1 && !embMap.contains(nullId))
-    assert(rows(Similarity.graphBeamSearch(spark, nullDir)) ==
-      rows(Similarity.graphBeamSearchDistributed(spark, nullDir)))
+    descents(nullDir).keys.toSeq.sorted
+      .foreach(assertDriverEqualsDistributed(nullDir, _))
     assert(rows(Similarity.graphGreedySearch(spark, nullDir)) ==
       rows(Similarity.graphGreedySearchDistributed(spark, nullDir)))
-    assert(rows(Similarity.hnswSearch(spark, nullDir)) ==
-      rows(Similarity.hnswSearchDistributed(spark, nullDir)))
   }
 
   test("the driver walk removes the per-superstep jobs: beam store " +
@@ -150,8 +219,9 @@ class R13WalkDriverSpec extends AnyFunSuite {
       }
     val driverJobs = run(Similarity.graphBeamServeFrom(spark, dir, store,
       Similarity.GraphStoreBuckets))
-    val distJobs = run(Similarity.graphBeamServeFromDistributed(spark, dir,
-      store, Similarity.GraphStoreBuckets))
+    val distJobs = run(BeamDescent.distributed(spark,
+      Similarity.graphBeamServeDescent(spark, dir, store,
+        Similarity.GraphStoreBuckets)))
     // distributed: one action per superstep (8) + entry/final; driver:
     // corpus probe + edge collect + the result write (each bounded
     // collect is an incremental executeTake, so 1-3 jobs apiece)

@@ -112,7 +112,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ivfTopK on an empty corpus returns the empty contract schema, no crash") {
-    val dir = java.nio.file.Files.createTempDirectory("emptyemb").toString
+    val dir = Scratch.dir("emptyemb").toString
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       Tables.load(spark, TestSession.sfDir, "embeddings").schema)
@@ -145,7 +145,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("pqTopK on an empty corpus returns the empty contract schema, no crash") {
-    val dir = java.nio.file.Files.createTempDirectory("emptyemb2").toString
+    val dir = Scratch.dir("emptyemb2").toString
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       Tables.load(spark, TestSession.sfDir, "embeddings").schema)
@@ -515,7 +515,7 @@ class SimilaritySpec extends AnyFunSuite {
       }
       (i, emb, (i % 3).toInt)
     }
-    val dir = java.nio.file.Files.createTempDirectory("dim384_fix").toString
+    val dir = Scratch.dir("dim384_fix").toString
     rows.toDF("vec_id", "embedding", "label")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

@@ -10,7 +10,7 @@ class SinksSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    Scratch.dir(prefix).toString
 
   test("K2 writeDocumentsOut: documents_out shape, appendable, uuid fallback") {
     val dir = tmp("docsout") + "/documents_out"
@@ -463,7 +463,7 @@ class SinksSpec extends AnyFunSuite {
 
   test("sorted compaction: per-bucket files merge to one, re-sorted on the skip key") {
     val spark = TestSession.spark
-    val store = java.nio.file.Files.createTempDirectory("sinks_sorted_compact").toString
+    val store = Scratch.dir("sinks_sorted_compact").toString
     // accrete UNSORTED appends across several "micro-batches"
     for (batch <- 0 until 4) {
       spark.range(0, 200)

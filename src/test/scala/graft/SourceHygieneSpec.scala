@@ -56,4 +56,21 @@ class SourceHygieneSpec extends AnyFunSuite {
       }
     assert(offenders.isEmpty, offenders.mkString("; "))
   }
+
+  test("no spec makes a temp dir outside graft.Scratch") {
+    import scala.jdk.CollectionConverters._
+    // a JDK temp dir outlives the test JVM; Scratch.dir is deleted on exit
+    val call = "Files." + "createTempDirectory"
+    val root = java.nio.file.Paths.get("src/test")
+    val st = java.nio.file.Files.walk(root)
+    val files = try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally st.close()
+    val offenders = files.flatMap { p =>
+      val lines = java.nio.file.Files.readAllLines(p).asScala
+      lines.zipWithIndex.collect {
+        case (l, i) if l.contains(call) => s"$p:${i + 1}"
+      }
+    }
+    assert(offenders.isEmpty, offenders.mkString("; "))
+  }
 }

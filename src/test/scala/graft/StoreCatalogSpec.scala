@@ -17,7 +17,7 @@ class StoreCatalogSpec extends AnyFunSuite {
   test("a SECOND session serves hnsw/bm25/ivf/graph/pq stores from disk " +
     "with zero rebuild and identical results") {
     val dir = TestSession.sfDir
-    val root = Files.createTempDirectory("catalog_spec_root").toString
+    val root = Scratch.dir("catalog_spec_root").toString
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
@@ -71,12 +71,12 @@ class StoreCatalogSpec extends AnyFunSuite {
 
   test("create-if-absent: same (source, config) resolves to the same store; " +
     "a config change or a source-file change rebuilds") {
-    val root = Files.createTempDirectory("catalog_unit_root").toString
+    val root = Scratch.dir("catalog_unit_root").toString
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
     try {
-      val src = Files.createTempDirectory("catalog_src")
+      val src = Scratch.dir("catalog_src")
       Files.write(src.resolve("data.bin"), Array.fill(64)(7.toByte))
       def resolve(tag: String) = {
         StoreCatalog.dropSessionMemo()
@@ -117,13 +117,13 @@ class StoreCatalogSpec extends AnyFunSuite {
 
   test("catalog admin: list inventories stores with currency; gcStale removes " +
     "exactly the stores whose sources changed") {
-    val root = Files.createTempDirectory("catalog_admin_root").toString
+    val root = Scratch.dir("catalog_admin_root").toString
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
     try {
-      val srcA = Files.createTempDirectory("catalog_src_a")
-      val srcB = Files.createTempDirectory("catalog_src_b")
+      val srcA = Scratch.dir("catalog_src_a")
+      val srcB = Scratch.dir("catalog_src_b")
       Files.write(srcA.resolve("a"), "a".getBytes)
       Files.write(srcB.resolve("b"), "b".getBytes)
       def build(fam: String, src: java.nio.file.Path) =
@@ -166,12 +166,12 @@ class StoreCatalogSpec extends AnyFunSuite {
 
   test("a memo HIT re-validates the source fingerprint: an in-session " +
     "source regeneration rebuilds instead of serving the stale store") {
-    val root = Files.createTempDirectory("catalog_memo_root").toString
+    val root = Scratch.dir("catalog_memo_root").toString
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
     try {
-      val src = Files.createTempDirectory("catalog_memo_src")
+      val src = Scratch.dir("catalog_memo_src")
       Files.write(src.resolve("d"), "one".getBytes)
       def resolve() =
         StoreCatalog.getOrBuild(spark, "memofp", Seq(src.toString),
@@ -212,13 +212,13 @@ class StoreCatalogSpec extends AnyFunSuite {
         (s, d) => Similarity.ivfTopKFromStore(s, d, nQueries = 5)
           .collect().toSeq,
         (s, d) => Similarity.ivfTopK(s, d, nQueries = 5).collect().toSeq))
-    val root = Files.createTempDirectory("catalog_rewrite_root").toString
+    val root = Scratch.dir("catalog_rewrite_root").toString
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
     StoreCatalog.dropSessionMemo()
     try cases.foreach { case (name, table, id, served, twin) =>
-      val dir = Files.createTempDirectory(s"catalog_rewrite_$name")
+      val dir = Scratch.dir(s"catalog_rewrite_$name")
       StoreCatalog.linkTree(Paths.get(TestSession.sfDir), dir)
       val before = served(spark, dir.toString)
       // regenerate the source with a different row set
@@ -243,7 +243,7 @@ class StoreCatalogSpec extends AnyFunSuite {
 
   test("fingerprint sees a content change even at identical (size, mtime): " +
     "the tail sentinel catches same-millisecond regeneration") {
-    val src = Files.createTempDirectory("catalog_sentinel_src")
+    val src = Scratch.dir("catalog_sentinel_src")
     val f = src.resolve("d")
     Files.write(f, "aaaaaaaaaaaaaaaaaaaaaaaa".getBytes)
     val mtime = Files.getLastModifiedTime(f)
@@ -260,12 +260,12 @@ class StoreCatalogSpec extends AnyFunSuite {
 
   test("gcStale leaves CURRENT stores alone; drop retires a CURRENT " +
     "store by exact (family, sources, config)") {
-    val root = Files.createTempDirectory("catalog_drop_root").toString
+    val root = Scratch.dir("catalog_drop_root").toString
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
     try {
-      val src = Files.createTempDirectory("catalog_drop_src")
+      val src = Scratch.dir("catalog_drop_src")
       Files.write(src.resolve("d"), "d".getBytes)
       def build(cfg: Seq[(String, String)]) =
         StoreCatalog.getOrBuild(spark, "dropfam", Seq(src.toString),
@@ -305,12 +305,12 @@ class StoreCatalogSpec extends AnyFunSuite {
   test("two concurrent resolvers of the same STALE store both finish with " +
     "a valid handle (the move-aside race: loser retries or adopts, " +
     "staging never leaks)") {
-    val root = Files.createTempDirectory("catalog_race_root").toString
+    val root = Scratch.dir("catalog_race_root").toString
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
     try {
-      val src = Files.createTempDirectory("catalog_race_src")
+      val src = Scratch.dir("catalog_race_src")
       Files.write(src.resolve("d"), "d".getBytes)
       def resolve(sleepMs: Long) =
         StoreCatalog.getOrBuild(spark, "racefam", Seq(src.toString),
@@ -365,7 +365,7 @@ class StoreCatalogSpec extends AnyFunSuite {
     "byte-identical walks; drop retires the old layout with zero stale " +
     "reads and zero rebuilds of the new one") {
     val dir = TestSession.sfDir
-    val root = Files.createTempDirectory("catalog_rebucket_root").toString
+    val root = Scratch.dir("catalog_rebucket_root").toString
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
@@ -419,7 +419,7 @@ class StoreCatalogSpec extends AnyFunSuite {
     "across, and after dropping the old layout the new one resolves " +
     "with zero rebuild") {
     val dir = TestSession.sfDir
-    val root = Files.createTempDirectory("catalog_postings_root").toString
+    val root = Scratch.dir("catalog_postings_root").toString
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
@@ -475,7 +475,7 @@ class StoreCatalogSpec extends AnyFunSuite {
     "byte-identical at the old parameters; the new top layer equals a " +
     "direct build and re-caps the entry set 16x") {
     val dir = TestSession.sfDir
-    val root = Files.createTempDirectory("catalog_raise_root").toString
+    val root = Scratch.dir("catalog_raise_root").toString
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
@@ -568,12 +568,12 @@ class StoreCatalogSpec extends AnyFunSuite {
   }
 
   test("a crashed build publishes nothing; the next resolve builds cleanly") {
-    val root = Files.createTempDirectory("catalog_crash_root").toString
+    val root = Scratch.dir("catalog_crash_root").toString
     val key = "spark.graft.storeRoot"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, root)
     try {
-      val src = Files.createTempDirectory("catalog_crash_src")
+      val src = Scratch.dir("catalog_crash_src")
       Files.write(src.resolve("d"), "d".getBytes)
       intercept[RuntimeException] {
         StoreCatalog.getOrBuild(spark, "crash", Seq(src.toString),

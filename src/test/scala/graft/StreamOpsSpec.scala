@@ -43,7 +43,7 @@ class StreamOpsSpec extends AnyFunSuite {
     // replay the same file twice by unioning two reads of the stream dir
     // through a dedup stage: batch-side check of the streaming op's
     // semantics using a duplicated static frame run through the same plan
-    val dir = java.nio.file.Files.createTempDirectory("stream").toString
+    val dir = Scratch.dir("stream").toString
     import spark.implicits._
     def put(name: String, rows: Seq[(Long, String, String)]): Unit = {
       // FileStreamSource does not recurse into subdirectories: write via
@@ -75,7 +75,7 @@ class StreamOpsSpec extends AnyFunSuite {
 
   test("streaming document pipeline: full 7-stage ETL on a file stream equals the batch pipeline") {
     import spark.implicits._
-    val drop = java.nio.file.Files.createTempDirectory("drop").toString
+    val drop = Scratch.dir("drop").toString
     def putTxt(name: String, text: String): Unit = {
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$drop/$name"),
         text.getBytes("UTF-8"))
@@ -103,7 +103,7 @@ class StreamOpsSpec extends AnyFunSuite {
 
   test("streaming upsert sink: per-micro-batch last-writer-wins into the store") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("supsert").toString
+    val dir = Scratch.dir("supsert").toString
     val in = s"$dir/in"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     def put(name: String, rows: Seq[(Long, Int)]): Unit = {
@@ -217,11 +217,11 @@ class StreamOpsSpec extends AnyFunSuite {
     // mtime so the replay order is pinned — and cross-batch state carry
     // (u1's view in batch 1 enabling its click in batch 2) is actually
     // exercised.
-    val base = Files.createTempDirectory("sfunnel")
+    val base = Scratch.dir("sfunnel")
     val streamDir = Files.createDirectory(base.resolve("events.parquet"))
     def writeBatch(rows: Seq[(Long, String, Long, String, Double, String)],
                    name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("sfunnel_part").toString
+      val tmp = Scratch.dir("sfunnel_part").toString
       rows.toDF("event_id", "ts_s", "user_id", "event_type", "value", "props")
         .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -265,11 +265,11 @@ class StreamOpsSpec extends AnyFunSuite {
     // below batch 2's watermark (day 60 - 2h), so u1's state must be
     // REMOVED during batch 2 — state tracks users active within the
     // horizon, not all users ever seen.
-    val base = Files.createTempDirectory("sevict")
+    val base = Scratch.dir("sevict")
     val streamDir = Files.createDirectory(base.resolve("in"))
     def writeBatch(rows: Seq[(Long, String, String)], name: String,
                    mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("sevict_part").toString
+      val tmp = Scratch.dir("sevict_part").toString
       rows.toDF("user_id", "event_type", "ts_s")
         .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
         .select("user_id", "event_type", "ts")
@@ -320,11 +320,11 @@ class StreamOpsSpec extends AnyFunSuite {
     // max event time pushes the watermark past a row's timestamp plus
     // the 2 h delay, that row arriving in batch 2 is DROPPED — it
     // neither resurrects evicted state nor perturbs emitted totals.
-    val base = Files.createTempDirectory("slate")
+    val base = Scratch.dir("slate")
     val streamDir = Files.createDirectory(base.resolve("in"))
     def writeBatch(rows: Seq[(Long, String, Double)], name: String,
                    mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("slate_part").toString
+      val tmp = Scratch.dir("slate_part").toString
       rows.toDF("user_id", "ts_s", "value")
         .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
         .select("user_id", "ts", "value")
@@ -379,10 +379,10 @@ class StreamOpsSpec extends AnyFunSuite {
     // the streaming checkpoint records the epoch — the at-least-once
     // window. The restarted run replays epoch 0 with the same epochId;
     // the epoch-keyed stage-and-merge must absorb it.
-    val base = Files.createTempDirectory("sjdbc")
+    val base = Scratch.dir("sjdbc")
     val streamDir = Files.createDirectory(base.resolve("in"))
     def writeBatch(ids: Seq[Long], name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("sjdbc_part").toString
+      val tmp = Scratch.dir("sjdbc_part").toString
       ids.toDF("event_id").coalesce(1).write.mode("overwrite").parquet(tmp)
       import scala.jdk.CollectionConverters._
       val part = Files.list(Paths.get(tmp)).iterator().asScala
@@ -448,10 +448,10 @@ class StreamOpsSpec extends AnyFunSuite {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
     import graft.functions.TextFunctions.fingerprint
-    val base = Files.createTempDirectory("sdedupstore")
+    val base = Scratch.dir("sdedupstore")
     val streamDir = Files.createDirectory(base.resolve("documents.parquet"))
     def writeBatch(rows: Seq[(Long, String)], name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("sdedup_part").toString
+      val tmp = Scratch.dir("sdedup_part").toString
       rows.toDF("doc_id", "text")
         .withColumn("lang", lit("en")).withColumn("source", lit("s"))
         .withColumn("n_chars", length(col("text")).cast("long"))
@@ -519,10 +519,10 @@ class StreamOpsSpec extends AnyFunSuite {
   test("store-backed near-dup: cross-batch signatures feed the LSH keep, matching batch") {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("sneardupstore")
+    val base = Scratch.dir("sneardupstore")
     val streamDir = Files.createDirectory(base.resolve("documents.parquet"))
     def writeBatch(rows: Seq[(Long, String)], name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("sneardup_part").toString
+      val tmp = Scratch.dir("sneardup_part").toString
       rows.toDF("doc_id", "text")
         .withColumn("lang", lit("en")).withColumn("source", lit("s"))
         .withColumn("n_chars", length(col("text")).cast("long"))
@@ -559,10 +559,10 @@ class StreamOpsSpec extends AnyFunSuite {
   test("store-backed image near-dup: cross-batch hashes pair, band-partitioned at rest") {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("simgstore")
+    val base = Scratch.dir("simgstore")
     val streamDir = Files.createDirectory(base.resolve("documents.parquet"))
     def writeBatch(rows: Seq[(Long, String)], name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("simg_part").toString
+      val tmp = Scratch.dir("simg_part").toString
       rows.toDF("doc_id", "text")
         .withColumn("lang", lit("en")).withColumn("source", lit("s"))
         .withColumn("n_chars", length(col("text")).cast("long"))
@@ -752,13 +752,13 @@ class StreamOpsSpec extends AnyFunSuite {
     "running top-deg rewrite)") {
     import java.nio.file.{Files, Paths}
     import graft.operators.Similarity
-    val base = Files.createTempDirectory("sknngraph")
+    val base = Scratch.dir("sknngraph")
     val streamDir = Files.createDirectory(base.resolve("embeddings.parquet"))
     val emb = spark.read.parquet(TestSession.sfDir + "/embeddings.parquet")
     // three arbitrary id-range batches with pinned strictly-increasing
     // mtimes (FileStreamSource replays in modification-time order)
     def writeBatch(lo: Long, hi: Long, name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("sknn_part").toString
+      val tmp = Scratch.dir("sknn_part").toString
       emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       import scala.jdk.CollectionConverters._
@@ -797,11 +797,11 @@ class StreamOpsSpec extends AnyFunSuite {
     "changes nothing") {
     import java.nio.file.{Files, Paths}
     import graft.operators.Similarity
-    val base = Files.createTempDirectory("sivf")
+    val base = Scratch.dir("sivf")
     val streamDir = Files.createDirectory(base.resolve("embeddings.parquet"))
     val emb = spark.read.parquet(TestSession.sfDir + "/embeddings.parquet")
     def writeBatch(lo: Long, hi: Long, name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("sivf_part").toString
+      val tmp = Scratch.dir("sivf_part").toString
       emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       import scala.jdk.CollectionConverters._
@@ -845,11 +845,11 @@ class StreamOpsSpec extends AnyFunSuite {
     "changes nothing") {
     import java.nio.file.{Files, Paths}
     import graft.operators.Similarity
-    val base = Files.createTempDirectory("spq")
+    val base = Scratch.dir("spq")
     val streamDir = Files.createDirectory(base.resolve("embeddings.parquet"))
     val emb = spark.read.parquet(TestSession.sfDir + "/embeddings.parquet")
     def writeBatch(lo: Long, hi: Long, name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("spq_part").toString
+      val tmp = Scratch.dir("spq_part").toString
       emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       import scala.jdk.CollectionConverters._
@@ -893,7 +893,7 @@ class StreamOpsSpec extends AnyFunSuite {
     StreamOps.streamLshTopKQuery(spark, TestSession.sfDir, bits = 6)
       .limit(1).collect()
     val store6 = TestSession.servedStore(StreamOps.lshStore(spark, TestSession.sfDir, 6))
-    val store8 = java.nio.file.Files.createTempDirectory("lsh_rebucket").toString
+    val store8 = Scratch.dir("lsh_rebucket").toString
     val n = Sinks.rebucketPartitioned(spark, store6, store8, "bucket",
       Similarity.signBucket(col("embedding"), 8), sortCols = Seq("vec_id"))
     assert(n > 0)
@@ -964,11 +964,11 @@ class StreamOpsSpec extends AnyFunSuite {
     "and a crash-replayed batch changes nothing") {
     import java.nio.file.{Files, Paths}
     import graft.operators.Similarity
-    val base = Files.createTempDirectory("shnsw")
+    val base = Scratch.dir("shnsw")
     val streamDir = Files.createDirectory(base.resolve("embeddings.parquet"))
     val emb = spark.read.parquet(TestSession.sfDir + "/embeddings.parquet")
     def writeBatch(lo: Long, hi: Long, name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("shnsw_part").toString
+      val tmp = Scratch.dir("shnsw_part").toString
       emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       import scala.jdk.CollectionConverters._
@@ -1012,16 +1012,15 @@ class StreamOpsSpec extends AnyFunSuite {
   test("streaming k-NN graph store: a crash-replayed batch (edges written, " +
     "nodes not yet admitted) merges to the identical graph — no duplicate " +
     "neighbor slots") {
-    import java.nio.file.Files
     import graft.operators.Similarity
     val emb = spark.read.parquet(TestSession.sfDir + "/embeddings.parquet")
-    val nodeDir = Files.createTempDirectory("crash_nodes").toString
-    val edgeDir = Files.createTempDirectory("crash_edges").toString
+    val nodeDir = Scratch.dir("crash_nodes").toString
+    val edgeDir = Scratch.dir("crash_edges").toString
     val b1 = emb.filter(col("vec_id") < 200)
     val b2 = emb.filter(col("vec_id") >= 200)
     // first attempt of batch 1 "crashes" after the edge write: replicate
     // by ingesting into scratch stores and keeping only the edge dir
-    val scratchNodes = Files.createTempDirectory("crash_scratch").toString
+    val scratchNodes = Scratch.dir("crash_scratch").toString
     StreamOps.ingestGraphBatch(spark, b1, scratchNodes, edgeDir, 8, 6)
     // the re-run sees its edges persisted but its nodes still fresh
     StreamOps.ingestGraphBatch(spark, b1, nodeDir, edgeDir, 8, 6)
@@ -1197,7 +1196,7 @@ class StreamOpsSpec extends AnyFunSuite {
   test("seen-word store charges a word to its MIN bucket in any arrival " +
     "order; replays are no-ops") {
     import spark.implicits._
-    val sd = java.nio.file.Files.createTempDirectory("seen_ooo").toString
+    val sd = Scratch.dir("seen_ooo").toString
     def upd(rows: Seq[(String, Int)]): Unit =
       StreamOps.updateSeenWords(spark, sd, rows.toDF("w", "bucket"))
     def served = spark.read.parquet(sd)
@@ -1224,13 +1223,13 @@ class StreamOpsSpec extends AnyFunSuite {
     "reservoir, composed online)") {
     import java.nio.file.{Files, Paths}
     import graft.operators.TextAnalytics
-    val base = Files.createTempDirectory("scuration")
+    val base = Scratch.dir("scuration")
     val streamDir = Files.createDirectory(base.resolve("documents.parquet"))
     val docs = spark.read.parquet(TestSession.sfDir + "/documents.parquet")
     // ascending doc_id ranges: the fp store's keeper contract is
     // arrival in doc order (first-seen = min doc_id), like ingest
     def writeBatch(lo: Long, hi: Long, name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("scur_part").toString
+      val tmp = Scratch.dir("scur_part").toString
       docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       import scala.jdk.CollectionConverters._

@@ -16,7 +16,7 @@ class TextSearchSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val corpusDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("textsearch").toString
+    val dir = Scratch.dir("textsearch").toString
     Seq(
       (0L, "zab cdz ab cd", "en", "s0", 13L), // "ab cd" twice
       (1L, "ab cx", "en", "s1", 5L), // no " cd" trigram: never a candidate
@@ -136,7 +136,7 @@ class TextSearchSpec extends AnyFunSuite {
   }
 
   test("fuzzySearch: multi-word single-edit matches, hand-computed") {
-    val dir = java.nio.file.Files.createTempDirectory("fuzzy").toString
+    val dir = Scratch.dir("fuzzy").toString
     Seq(
       (0L, "slow row slow", "en", "s0", 13L), // 3 matches of {slow, row}
       (1L, "sort sow", "en", "s1", 8L), // sow exact (dist 0); sort is dist 2
@@ -170,7 +170,7 @@ class TextSearchSpec extends AnyFunSuite {
 
   test("phraseFuzzySearch: multi-expansion slots, hand-computed; store " +
     "composition equals in-plan") {
-    val dir = java.nio.file.Files.createTempDirectory("pfuzzy").toString
+    val dir = Scratch.dir("pfuzzy").toString
     Seq(
       (0L, "slow table row table", "en", "s0", 20L), // both expansions hit
       (1L, "row cable", "en", "s1", 9L), // second slot dist 1: cable? lev(cable,table)=1
