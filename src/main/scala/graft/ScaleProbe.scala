@@ -290,7 +290,7 @@ object ScaleProbe {
       val eCnt = edges.count()
       val d = t2(Dedup.connectedComponents(edges))
       val f = t2(Dedup.connectedComponents(edges, driverEdgeCap = 0))
-      println(f"| cc (cap=${Dedup.CcDriverEdgeCap}) | $label | $eCnt edges | $d%.2f | $f%.2f |")
+      println(f"| cc (cap=${DriverCap.CcDriverEdgeCap}) | $label | $eCnt edges | $d%.2f | $f%.2f |")
     }
     for ((label, dir) <- Seq("1x" -> sfDir, "10x" -> bigDir)) {
       val d = t2(TextAnalytics.perceptronScoredFeats(spark, dir))

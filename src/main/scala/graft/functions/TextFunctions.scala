@@ -29,12 +29,6 @@ object TextFunctions {
   def cleanTextSql(c: String): String =
     s"trim(regexp_replace(regexp_replace($c, '\\s+', ' ', 'g'), '[^\\w\\s.,\\-():]', '', 'g'))"
 
-  // --- P4 label normalization (reference: src/agents.py:94) ---
-  def labelNorm(c: Column): Column =
-    lower(trim(split(c, "\n").getItem(0)))
-  def labelNormSql(c: String): String =
-    s"lower(trim(split_part($c, chr(10), 1)))"
-
   // --- token count: whitespace tokenization (north star: text analysis) ---
   def tokenCount(c: Column): Column =
     when(length(trim(c)) === 0, lit(0)).otherwise(size(split(trim(c), "\\s+")))

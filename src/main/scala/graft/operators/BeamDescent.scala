@@ -22,7 +22,7 @@ import graft.functions.VectorFunctions.cosine
   * (qid, rn, node, score) ordered by (qid, rn).
   *
   * [[run]] takes the bounded driver walk when the corpus and the edges
-  * fit the [[WalkDriver]] caps and otherwise [[distributed]], the one
+  * fit the [[DriverCap]] caps and otherwise [[distributed]], the one
   * superstep loop. */
 private[graft] object BeamDescent {
 
@@ -66,7 +66,7 @@ private[graft] object BeamDescent {
   /** The driver walk ([[WalkDriver.beamWalk]]) when [[collect]] fits
     * every cap, else [[distributed]]. */
   def run(spark: SparkSession, d: Descent,
-          nodeCap: Int = WalkDriver.NodeCap): DataFrame =
+          nodeCap: Int = DriverCap.NodeCap): DataFrame =
     collect(d, nodeCap).map { c =>
       WalkDriver.beamResultDF(spark, WalkDriver.beamWalk(c.queries, c.entries,
         c.emb, d.phases.zip(c.adjs).map(t => (t._2, t._1.width, t._1.steps)), d.k))
@@ -77,25 +77,23 @@ private[graft] object BeamDescent {
     * budget, their sum ≤ `edgeCap` — then explicit entry ids under
     * `nodeCap`. None as soon as any input is over its cap. Only the
     * pairs cross: destination vectors come from the collected corpus. */
-  def collect(d: Descent, nodeCap: Int = WalkDriver.NodeCap,
-              edgeCap: Int = WalkDriver.EdgeCap): Option[Collected] =
+  def collect(d: Descent, nodeCap: Int = DriverCap.NodeCap,
+              edgeCap: Int = DriverCap.EdgeCap): Option[Collected] =
     WalkDriver.collectEmb(d.corpus.select(col("vec_id"), col("embedding")),
         nodeCap).flatMap { case (emb, n) =>
       val pairs = d.phases.zipWithIndex.flatMap { case (p, i) =>
         def tagged(e: DataFrame) = e.select(lit(i).as("phase"), col("src"), col("dst"))
         p.edges match {
           case Graph(g) => Some(tagged(g))
-          // a store layer is many small bucket files: one partition keeps
-          // the bounded take from paying a job per scale-up round
-          case Store(s, _) => Some(tagged(s).coalesce(1))
+          case Store(s, _) => Some(tagged(s))
           case NoEdges => None
         }
       }
       val edgeRows = pairs.reduceOption(_ union _)
-        .fold(Option(Array.empty[Row]))(WalkDriver.collectUnder(_, edgeCap))
+        .fold(Option(Array.empty[Row]))(DriverCap.collect(_, edgeCap))
       def entries: Option[Array[Long]] = d.entry match {
         case Spread(ne) => Some(WalkDriver.spreadEntries(n, d.nQueries, ne, emb))
-        case Nodes(nodes) => WalkDriver.collectUnder(nodes.select(col("vec_id")),
+        case Nodes(nodes) => DriverCap.collect(nodes.select(col("vec_id")),
           nodeCap).map(_.map(_.getLong(0)))
       }
       for (rows <- edgeRows; es <- entries) yield {

@@ -441,14 +441,6 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("jaccard"))
   }
 
-  /** LSH pairs served from a PREPARED signature frame (the streaming
-    * sig-store: signatures computed once on arrival, band-joined at
-    * serve time), verified with exact Jaccard like [[lshPairs]]. */
-  private[graft] def lshPairsFromSigs(spark: SparkSession, dir: String,
-                                      sig: DataFrame, k: Int = 8, r: Int = 2,
-                                      minJ: Double = 0.5): DataFrame =
-    verifyJaccard(spark, dir, bandJoinCandidates(sig, k, r), minJ)
-
   /** LSH pairs served from a PREPARED BANDED frame — the band-partitioned
     * streaming signature store's serving path: candidates come from the
     * store's own (doc_id, band, bh) layout, verification fetches shingles
@@ -955,15 +947,8 @@ object Dedup {
     *
     * Output: one row per node that appears in any edge —
     * (doc_id, cluster_id = min doc_id of its component). */
-  /** Edge cap for the driver-resident union-find (r12): a duplicate-pair
-    * graph under this many canonical edges resolves as driver arithmetic
-    * (the expensive part — pair detection — stays distributed); above it
-    * the large-star/small-star contraction runs unchanged. Both paths
-    * emit the identical (node, component-min) assignment. */
-  private[graft] val CcDriverEdgeCap = 1 << 17
-
   private[graft] def connectedComponents(pairs: DataFrame,
-                                         driverEdgeCap: Int = CcDriverEdgeCap)
+                                         driverEdgeCap: Int = DriverCap.CcDriverEdgeCap)
       : DataFrame = {
     def canon(e: DataFrame): DataFrame = e
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
@@ -992,19 +977,18 @@ object Dedup {
       (r.getLong(0),
         Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
     }
-    // LAZY checkpoint (r13, ADVICE item): the bounded probe below
-    // materializes only the partitions it touches; an above-cap run
-    // then COMPLETES the same checkpoint via its first stats() action
-    // instead of re-running the expensive canon(pairs) lineage that the
-    // probe partially computed and discarded.
+    // LAZY checkpoint: the probe below computes its partitions into it,
+    // so an above-cap run's first stats() reads them back instead of
+    // re-running the expensive canon(pairs) lineage.
     val canonical = canon(pairs).localCheckpoint(eager = false)
     // bounded fetch: if every canonical edge fits under the cap, the
     // component minima come from a driver union-find (one job instead
     // of 2-3 per contraction round); the star-contraction output after
     // convergence is exactly the star {(min, node)} + root self-rows,
     // which is what the union-find emits
-    val head = canonical.limit(driverEdgeCap + 1).collect()
-    if (head.length <= driverEdgeCap) {
+    val probe = DriverCap.collect(canonical, driverEdgeCap)
+    if (probe.isDefined) {
+      val head = probe.get
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x

@@ -82,11 +82,6 @@ object DocPipeline {
     s"(doc_type IS NULL OR doc_type NOT IN ($all) OR doc_type IN ($want))"
   }
 
-  def schemaTable(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    schemaRows.toDF("schema_doc_type", "schema_json", "schema_description")
-  }
-
   /** The built-in index as literal lookup maps (the degenerate broadcast
     * of an 8-row dimension — see schemaLookup). */
   private val schemaJsonByType: Column =

@@ -188,11 +188,12 @@ object Events {
     * [[propsExtract]]'s `get_json_object`, which re-parses the JSON
     * text per extracted field. The fixture's one-key props is enriched
     * into a nested object in-plan so the query exercises multi-field /
-    * nested-path access. [[graft.VariantProbe]] measures the shapes at
-    * sf0.1: parity at 3 fields of a tiny object (plan floor dominates),
-    * ~1.2× over per-field text re-parse at 8 fields of a 21-field
-    * object, growing with field count and object size. Output is plain
-    * longs, so the DuckDB twin needs no variant support. */
+    * nested-path access. Measured at sf0.1 (min of 3 noop-sink runs):
+    * parity at 3 fields of a tiny object (plan floor dominates), ~1.2×
+    * (0.19-0.22 s vs 0.22-0.25 s) over per-field text re-parse at 8
+    * fields of a 21-field object, growing with field count and object
+    * size. Output is plain longs, so the DuckDB twin needs no variant
+    * support. */
   def propsExtractVariant(spark: SparkSession, dir: String): DataFrame = {
     val j = concat(lit("""{"p": """), col("props"),
       lit(""", "u": """), col("user_id").cast("string"),

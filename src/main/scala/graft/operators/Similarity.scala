@@ -1504,13 +1504,13 @@ object Similarity {
       .select(col("src"), posexplode(col("top")).as(Seq("pos", "p")))
       .select(col("src"), (col("pos") + 1).cast(IntegerType).as("rn"),
         col("p.id").as("dst"), col("p.score").as("score"))
-      .orderBy(col("src"), col("rn"))
   }
 
   def knnGraph(spark: SparkSession, dir: String, deg: Int = 8,
                bitsOpt: Option[Int] = None): DataFrame = {
     val emb = Tables.loadWide(spark, dir, "embeddings")
     knnGraphFrom(emb, deg, bitsOpt.getOrElse(adaptiveBits(emb.count())))
+      .orderBy(col("src"), col("rn"))
   }
 
   /** Shared SQL for the graph CTEs (radius-1 probes, per-src top-deg by
@@ -1690,12 +1690,16 @@ object Similarity {
   private[graft] def graphBeamDescent(spark: SparkSession, dir: String,
                                       deg: Int = 8, nQueries: Int = 10,
                                       nEntries: Int = 8, beamWidth: Int = 8,
-                                      steps: Int = 8, k: Int = 3): BeamDescent.Descent =
-    BeamDescent.Descent(corpusOf(spark, dir), nQueries,
+                                      steps: Int = 8, k: Int = 3): BeamDescent.Descent = {
+    val corpus = corpusOf(spark, dir)
+    // unsorted: an output sort costs the edge probe a range-partition pass
+    BeamDescent.Descent(corpus, nQueries,
       BeamDescent.Spread(nEntries),
       Seq(BeamDescent.Phase(BeamDescent.Graph(
-        knnGraph(spark, dir, deg).select(col("src"), col("dst"))), beamWidth, steps)),
+        knnGraphFrom(corpus, deg, adaptiveBits(corpus.count()))
+          .select(col("src"), col("dst"))), beamWidth, steps)),
       k)
+  }
 
   private def corpusOf(spark: SparkSession, dir: String): DataFrame =
     Tables.loadWide(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
@@ -2261,7 +2265,7 @@ object Similarity {
     * independent of corpus size. Ties break on vec_id everywhere. */
   def mmrRerank(spark: SparkSession, dir: String, kSel: Int = 5,
                 poolSize: Int = 20, nQueries: Int = 8,
-                poolCap: Int = MmrDriverPoolCap): DataFrame = {
+                poolCap: Int = DriverCap.MmrDriverPoolCap): DataFrame = {
     val emb = Tables.loadWide(spark, dir, "embeddings")
     val corpus = emb.select(col("vec_id"), col("embedding"))
     val queries = broadcast(
@@ -2285,13 +2289,9 @@ object Similarity {
     // graft.plans.CosineSimilarity's left-to-right double fold exactly
     // (same ops, same order — bit-identical, see CosineSimilarity's
     // semantics note), so the result is the oracle's bit-for-bit.
-    // r13 (VERDICT item 6): the collect now carries the same
-    // cap-guard + distributed fallback as the round's other driver
-    // rewrites — the pool is nQueries·poolSize rows BY CONSTRUCTION
-    // (prn <= poolSize upstream), but a caller raising nQueries past
-    // the cap now falls back to the pre-r12 in-plan selection loop
-    // instead of an unbounded collect.
-    val poolProbe = WalkDriver.collectUnder(pool, poolCap)
+    // The pool is nQueries·poolSize rows by construction; a caller
+    // raising nQueries past the cap falls back to the in-plan loop.
+    val poolProbe = DriverCap.collect(pool, poolCap)
     if (poolProbe.isEmpty)
       return mmrRerankInPlan(pool.localCheckpoint(true), kSel)
     val poolRows = poolProbe.get
@@ -2343,10 +2343,6 @@ object Similarity {
     out.toSeq.toDF("qid", "vec_id", "pos", "mmr")
       .orderBy(col("qid"), col("pos"))
   }
-
-  /** Driver-pool cap for [[mmrRerank]] — 2^14 (qid, vec_id, embedding,
-    * rel) rows, far above the declared 8×20 pool. */
-  private[graft] val MmrDriverPoolCap: Int = 1 << 14
 
   /** The pre-r12 in-plan greedy selection — [[mmrRerank]]'s above-cap
     * fallback (one anti-join + pairwise-max aggregate + argmax window
@@ -2500,12 +2496,12 @@ object Similarity {
     // driver re-derivation. Both inputs are already materialized by the
     // callers (pageRankPrep), so an above-cap probe wastes nothing.
     val spark = nodes.sparkSession
-    val driverResult = WalkDriver.collectUnder(
+    val driverResult = DriverCap.collect(
       nodes.select(col("id"), init.cast(LongType), restart.cast(LongType)),
-      WalkDriver.NodeCap).flatMap { nRows =>
-      WalkDriver.collectUnder(
+      DriverCap.NodeCap).flatMap { nRows =>
+      DriverCap.collect(
         e.select(col("src"), col("dst"), col("outdeg")),
-        WalkDriver.EdgeCap).map { eRows =>
+        DriverCap.EdgeCap).map { eRows =>
         WalkDriver.pageRankResultDF(spark,
           WalkDriver.pageRank(nRows, eRows, iters, k))
       }

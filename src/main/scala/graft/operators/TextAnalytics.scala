@@ -1410,7 +1410,7 @@ object TextAnalytics {
     * WindowGroupLimit argmax. */
   def langTrigramClassify(spark: SparkSession, dir: String,
                           k: Int = 40,
-                          profCap: Int = 1 << 14): DataFrame = {
+                          profCap: Int = DriverCap.TrigramProfileCap): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.NativeFunctions.charTrigrams
     val docs = Tables.loadWide(spark, dir, "documents")
@@ -1428,7 +1428,7 @@ object TextAnalytics {
     // only profile-matched slots. Above the cap (a degenerate corpus
     // with > 2^14 languages) the r12 checkpoint shape below is the
     // unchanged fallback.
-    val profLocal = WalkDriver.collectUnder(
+    val profLocal = DriverCap.collect(
       slots.groupBy(col("lang"), col("tg"))
         .agg(count(lit(1)).as("c"))
         .withColumn("rk", row_number().over(
@@ -1949,14 +1949,6 @@ object TextAnalytics {
       .select(col("doc_id"), col("y"), col("margin"), col("pred"))
       .orderBy(col("doc_id"))
 
-  /** Distinct-feature histogram cap for the driver-side epoch loop: the
-    * feature space is (x1, x2) integer pairs, so the histogram is
-    * usually tiny (≤ distinct (word count, distinct-word count) pairs),
-    * but it is DATA-derived — above this cap training falls back to the
-    * per-epoch distributed aggregate. 64k rows × 4 longs is well under
-    * a MB of driver state. */
-  private val MaxPerceptronHist = 1 << 16
-
   /** Trained scores WITH the features still attached: (doc_id, y, x1,
     * margin, pred) — [[curriculumPacking]] reuses x1 as its exact token
     * count instead of re-tokenizing the corpus.
@@ -1975,7 +1967,7 @@ object TextAnalytics {
     * either way. */
   private[graft] def perceptronScoredFeats(spark: SparkSession, dir: String,
                                            epochs: Int = 16,
-                                           histCap: Int = MaxPerceptronHist)
+                                           histCap: Int = DriverCap.MaxPerceptronHist)
       : DataFrame = {
     val d = 3
     val feats = Tables.loadWide(spark, dir, "documents")
@@ -1991,13 +1983,11 @@ object TextAnalytics {
     val w = Array.fill(d)(0L)
     def marginCol: org.apache.spark.sql.Column =
       (0 until d).map(j => col(s"x$j") * lit(w(j))).reduce(_ + _)
-    // limit(cap+1) keeps the fetch bounded; if it returned every row the
-    // histogram is complete and the loop runs on the driver
-    val hist = feats.groupBy(col("y"), col("x1"), col("x2"))
-      .agg(count(lit(1)).as("cnt"))
-      .limit(histCap + 1).collect()
-    if (hist.length <= histCap) {
-      val rows = hist.map(r =>
+    // (x1, x2) integer pairs: usually a tiny histogram, but data-derived
+    val hist = DriverCap.collect(feats.groupBy(col("y"), col("x1"), col("x2"))
+      .agg(count(lit(1)).as("cnt")), histCap)
+    if (hist.isDefined) {
+      val rows = hist.get.map(r =>
         (r.getLong(0), Array(1L, r.getLong(1), r.getLong(2)), r.getLong(3)))
       for (t <- 1 to epochs) {
         val dj = Array.fill(d)(0L)
@@ -2191,15 +2181,6 @@ object TextAnalytics {
     * depth — not data — is what grows with the round count. */
   private val CkptEvery = 8
 
-  /** Word-frequency-table cap for the driver-resident merge loop (r12):
-    * BPE refinement runs over the O(distinct words) vocabulary, never
-    * the corpus, so up to this many distinct words the merge rounds are
-    * pure driver arithmetic (the corpus pass that BUILT the table stays
-    * distributed — this is guide §8's "decide with small rows" applied
-    * to training). Above the cap the distributed per-round loop runs
-    * instead; both paths compute the identical merge sequence. */
-  private[graft] val BpeDriverVocabCap = 1 << 17
-
   /** The merge loop of [[bpeTrain]] run as driver arithmetic over the
     * collected (word, freq) table. Replicates the distributed loop's
     * semantics EXACTLY: the same Java-regex char spacing, the same
@@ -2271,7 +2252,7 @@ object TextAnalytics {
   private[graft] def bpeTrain(spark: SparkSession, dir: String,
                               nMerges: Int, batch: Int = 1,
                               wfOpt: Option[DataFrame] = None,
-                              driverVocabCap: Int = BpeDriverVocabCap)
+                              driverVocabCap: Int = DriverCap.BpeDriverVocabCap)
       : (Seq[(Int, String, Long)], DataFrame, Int) = {
     import graft.functions.TextFunctions.words
     // Word frequencies: callers that already tokenized the corpus for
@@ -2285,9 +2266,9 @@ object TextAnalytics {
         .filter(col("w") =!= "")
         .groupBy(col("w")).agg(count(lit(1)).as("n"))
     }
-    val wfHead = wf.limit(driverVocabCap + 1).collect()
-    if (wfHead.length <= driverVocabCap)
-      return bpeTrainDriver(spark, wfHead.map(r => (r.getString(0), r.getLong(1))),
+    val wfHead = DriverCap.collect(wf, driverVocabCap)
+    if (wfHead.isDefined)
+      return bpeTrainDriver(spark, wfHead.get.map(r => (r.getString(0), r.getLong(1))),
         nMerges, batch)
     var vocab = wf
       .select(col("w"), concat(lit(" "),

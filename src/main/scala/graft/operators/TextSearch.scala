@@ -72,9 +72,6 @@ object TextSearch {
     }.distinct
   }
 
-  private[graft] def tgBucket(tg: String): Int =
-    TextAnalytics.termBucket(tg, TrigramBuckets)
-
   /** Distinct character trigrams per document, exploded —
     * `array_distinct` BEFORE the explode keeps the dedup inside the
     * scan's codegen stage (no (doc, tg) shuffle at build time). */

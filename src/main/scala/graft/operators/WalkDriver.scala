@@ -14,18 +14,12 @@ import scala.collection.mutable
   * pure arithmetic over collected arrays and every superstep action
   * disappears.
   *
-  * Legitimacy pattern (the r12 union-find / BPE / perceptron class):
-  * one bounded `limit(cap+1).collect()` probe per input; if anything
-  * exceeds its cap the caller falls back to the distributed superstep
-  * loop ([[BeamDescent.distributed]] for every beam descent). Caps:
-  *  - [[NodeCap]] (2^16): the embeddings map — 64-dim floats ⇒ ~16 MB —
-  *    and HNSW's entry-node set.
-  *  - [[EdgeCap]] (2^20): ONE edge budget per walk — ~16 MB. A descent
-  *    collects the (src, dst) pairs of all its phases in one probe, so
-  *    the SUM over every layer it walks must fit, whether the layers
-  *    are in-plan graphs, a batch store or per-layer stream stores.
-  *    With deg ≤ 16 a knnGraph over ≤ NodeCap nodes is always under
-  *    EdgeCap, so the edge probe never wastes a build.
+  * The inputs cross through [[DriverCap.collect]]: one job per input
+  * ([[DriverCap.NodeCap]] for the embeddings map and HNSW's entry
+  * nodes, [[DriverCap.EdgeCap]] for the edges of every phase of a
+  * walk); if anything exceeds its cap the caller falls back to the
+  * distributed superstep loop ([[BeamDescent.distributed]] for every
+  * beam descent).
   *
   * Equivalence: scores reproduce [[graft.plans.CosineSimilarity]]'s
   * left-to-right double fold exactly (same ops, same order — IEEE
@@ -38,11 +32,6 @@ import scala.collection.mutable
   * rows.
   */
 private[graft] object WalkDriver {
-
-  /** Corpus cap for the collected (vec_id → embedding) map. */
-  val NodeCap: Int = 1 << 16
-  /** Edge cap for collected adjacency / rank edges. */
-  val EdgeCap: Int = 1 << 20
 
   /** Spark SQL's double total order restricted to non-NaN inputs
     * (SQLOrderingUtil.compareDoubles: −0.0 == 0.0). */
@@ -66,24 +55,16 @@ private[graft] object WalkDriver {
     else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** The bounded probe: collect `df` iff it has ≤ cap rows (the limit
-    * caps what crosses to the driver either way). It is an incremental
-    * take: one job per scale-up round over `df`'s partitions. */
-  def collectUnder(df: DataFrame, cap: Int): Option[Array[Row]] = {
-    val rows = df.limit(cap + 1).collect()
-    if (rows.length > cap) None else Some(rows)
-  }
-
   /** (vec_id → embedding) for a (bigint, array<float>) frame under
-    * [[NodeCap]], with the frame's row count. A row whose embedding is
+    * `cap`, with the frame's row count. A row whose embedding is
     * SQL NULL is left out of the map: every walk reads vectors through
     * `emb.get`, so a missing id scores like the distributed loop's NULL
     * cosine (dropped). The count still includes it — the distributed
     * entry spread and adaptive bucket width are functions of
     * `emb.count()`. */
   def collectEmb(df: DataFrame,
-                 cap: Int = NodeCap): Option[(mutable.LongMap[Array[Float]], Long)] =
-    collectUnder(df, cap).map { rows =>
+                 cap: Int = DriverCap.NodeCap): Option[(mutable.LongMap[Array[Float]], Long)] =
+    DriverCap.collect(df, cap).map { rows =>
       val m = new mutable.LongMap[Array[Float]](rows.length * 2)
       rows.foreach { r =>
         if (!r.isNullAt(1)) m.update(r.getLong(0), r.getSeq[Float](1).toArray)

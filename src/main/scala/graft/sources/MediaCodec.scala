@@ -10,7 +10,7 @@ import java.awt.image.BufferedImage
   * `ImageIO.useCache` defaults to true — a DISK-backed
   * `FileCacheImageInputStream` whose temp-file creation serializes
   * across the 32 executor threads all decoding tiny frames at once.
-  * Measured (CodecProbe, single thread, 24×24 frames): 124 µs/op via
+  * Measured (a single-thread micro-benchmark, 24×24 frames): 124 µs/op via
   * `ImageIO.read` vs 34 µs/op via a cached reader + memory stream;
   * under 32-way concurrency the gap widens further (temp-file churn).
   *

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import graft.operators.BeamDescent
+import graft.operators.{BeamDescent, DriverCap}
 
 /** Structured Streaming surface (SURVEY §1.5, §2.13): the reference's
   * continuous one-document-per-HTTP-request ingest becomes a stream of
@@ -1104,23 +1104,13 @@ object StreamOps {
   private[graft] def fpBucket(fp: Column): Column =
     pmod(fp, lit(DedupStoreBuckets.toLong)).cast("int")
 
-  /** Point-lookup threshold: a batch with at most this many distinct
-    * fingerprints ALSO pushes its fp set into the seen-side scan (an
-    * `In` filter on the store's sort key), so parquet row-group
-    * statistics skip within the touched buckets — per-batch cost then
-    * decouples from bucket CONTENT size too, not just from untouched
-    * history. The collect behind it is bounded by this constant
-    * (model-state-sized, like the IVF codebook); batches above it keep
-    * the pure pruned join. */
-  private[graft] val FpPushdownLimit = 10000L
-
   /** The seen-side of the per-micro-batch anti-join, PRUNED to the
     * buckets the arriving batch touches: `bucket` is the store's
     * partition column, so the static isin filter prunes directory
     * listings before any bytes are read — per-batch cost tracks the
     * batch's bucket fan-out, not the store's total history (the same
     * probe-pruning shape as [[graft.operators.Similarity.serveLshTopKFromStore]]).
-    * `fps` (small batches only, [[FpPushdownLimit]]) additionally lands
+    * `fps` (small batches only, [[DriverCap.FpPushdownLimit]]) also lands
     * in PushedFilters: the store is written fp-sorted within each
     * bucket, so row-group min/max stats turn the anti-join's seen side
     * into a point lookup. */
@@ -1145,14 +1135,14 @@ object StreamOps {
   private def unseenFps(keyed: DataFrame, storeDir: String): DataFrame =
     if (!storeNonEmpty(storeDir)) keyed
     else {
-      val probe = keyed.select(col("fp"), col("bucket"))
-        .limit(FpPushdownLimit.toInt + 1).collect()
-      val small = probe.length <= FpPushdownLimit
-      val touched =
-        if (small) probe.map(_.getInt(1)).distinct.toSeq.sorted
-        else keyed.select(col("bucket")).distinct()
+      val probe = DriverCap.collect(keyed.select(col("fp"), col("bucket")),
+        DriverCap.FpPushdownLimit)
+      val touched = probe match {
+        case Some(rows) => rows.map(_.getInt(1)).distinct.toSeq.sorted
+        case None => keyed.select(col("bucket")).distinct()
           .collect().map(_.getInt(0)).toSeq.sorted
-      val fps = Option.when(small)(probe.map(_.getLong(0)).toSeq.sorted)
+      }
+      val fps = probe.map(_.map(_.getLong(0)).toSeq.sorted)
       keyed.join(prunedSeenFps(keyed.sparkSession, storeDir, touched, fps),
         col("fp") === col("seen_fp"), "left_anti")
     }

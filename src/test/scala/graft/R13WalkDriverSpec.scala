@@ -223,9 +223,27 @@ class R13WalkDriverSpec extends AnyFunSuite {
       Similarity.graphBeamServeDescent(spark, dir, store,
         Similarity.GraphStoreBuckets)))
     // distributed: one action per superstep (8) + entry/final; driver:
-    // corpus probe + edge collect + the result write (each bounded
-    // collect is an incremental executeTake, so 1-3 jobs apiece)
+    // corpus probe + edge collect (one DriverCap job apiece) + the
+    // result write
     assert(driverJobs + 3 <= distJobs,
       s"driver=$driverJobs dist=$distJobs")
+  }
+
+  test("driver-path Spark jobs per walk, stores prebuilt, stay at or " +
+    "below their pinned counts") {
+    // one DriverCap job per probe; the edge probe reads knnGraph's
+    // unsorted build, so no range-partitioning pass
+    val pinned = Seq("graph_beam_search" -> 11, "graph_beam_store" -> 7,
+      "graph_hnsw_search" -> 16, "graph_hnsw_store" -> 10,
+      "stream_hnsw_search" -> 11, "stream_graph_beam" -> 7,
+      "graph_greedy_search" -> 11)
+    val counts = pinned.map { case (name, cap) =>
+      def run(): Unit = SparkEntry.queries(name)(spark, dir)
+        .write.format("noop").mode("overwrite").save()
+      run() // builds the stores
+      (name, TestSession.countJobs(run()), cap)
+    }
+    assert(counts.forall(c => c._2 <= c._3),
+      counts.map(c => s"${c._1}: ${c._2} (pinned ${c._3})").mkString("; "))
   }
 }

@@ -8,6 +8,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * bytes below 0x20 belong in \\uXXXX escapes, not raw in the source. */
 class SourceHygieneSpec extends AnyFunSuite {
 
+  /** Every src/main source: (path relative to src/main/scala/graft, text). */
+  private def mainSources: List[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val st = java.nio.file.Files.walk(root)
+    val files = try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally st.close()
+    files.map(p => root.relativize(p).toString ->
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+  }
+
   test("no .scala source contains non-printable bytes (except \\t \\n \\r)") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src")
@@ -27,7 +38,6 @@ class SourceHygieneSpec extends AnyFunSuite {
   }
 
   test("src/main holds no store memo outside StoreCatalog") {
-    import scala.jdk.CollectionConverters._
     // the staging memos (each keyed on its source fingerprint) and the
     // synthetic d384 corpus, which has no source that could go stale
     val allowed = Map(
@@ -36,14 +46,8 @@ class SourceHygieneSpec extends AnyFunSuite {
       "operators/Similarity.scala" -> Set("d384Dirs"))
     val decl = ("""\bval\s+(\w+)\s*(?::[^=]*)?=\s*(?:new\s+)?""" +
       """(?:scala\.collection\.concurrent\.)?TrieMap""").r
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val st = java.nio.file.Files.walk(root)
-    val files = try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally st.close()
-    val offenders = files.filterNot(_.getFileName.toString == "StoreCatalog.scala")
-      .flatMap { p =>
-        val rel = root.relativize(p).toString
-        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    val offenders = mainSources.filterNot(_._1 == "StoreCatalog.scala")
+      .flatMap { case (rel, src) =>
         val declared = decl.findAllMatchIn(src).map(m => m.end -> m.group(1)).toMap
         "TrieMap".r.findAllMatchIn(src).map(_.end).toList.flatMap { end =>
           declared.get(end) match {
@@ -70,6 +74,27 @@ class SourceHygieneSpec extends AnyFunSuite {
       lines.zipWithIndex.collect {
         case (l, i) if l.contains(call) => s"$p:${i + 1}"
       }
+    }
+    assert(offenders.isEmpty, offenders.mkString("; "))
+  }
+
+  test("no limit(cap + 1).collect() probe in src/main outside DriverCap") {
+    // a driver-or-distributed choice probes through DriverCap.collect:
+    // one job, not an incremental take
+    val probe = """\.limit\([^;\n]*\+\s*1\s*\)\s*\.collect\(""".r
+    val offenders = mainSources.filterNot(_._1 == "operators/DriverCap.scala")
+      .flatMap { case (rel, src) =>
+        probe.findAllMatchIn(src).map(m => s"$rel: ${m.matched}")
+      }
+    assert(offenders.isEmpty, offenders.mkString("; "))
+  }
+
+  test("def main in src/main only in the runnable entry points") {
+    val allowed = Set("Verify.scala", "Bench.scala", "ScaleProbe.scala",
+      "RecallProbe.scala", "CalibrateJaccard.scala")
+    val offenders = mainSources.collect {
+      case (rel, src) if """\bdef\s+main\s*\(""".r.findFirstIn(src).isDefined &&
+        !allowed(rel) => rel
     }
     assert(offenders.isEmpty, offenders.mkString("; "))
   }
