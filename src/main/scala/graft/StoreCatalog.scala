@@ -244,6 +244,12 @@ object StoreCatalog {
     }
   }
 
+  /** Whether a store part dir holds data beyond `_SUCCESS`/hidden files. */
+  private[graft] def storeNonEmpty(d: String): Boolean = {
+    val f = new java.io.File(d).list()
+    f != null && f.exists(n => !n.startsWith("_") && !n.startsWith("."))
+  }
+
   /** Resolve the store for (family, sources, config): memo → valid
     * on-disk manifest → build. `build` receives part-name → staging
     * directory and returns the meta map to persist; it runs at most

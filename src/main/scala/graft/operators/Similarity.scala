@@ -424,7 +424,7 @@ object Similarity {
     var codebook = seedCodebook(emb, nCells)
     for (_ <- 1 to iters) {
       val assigned = emb.select(
-        greatestOf(centScores(col("embedding"), codebook)).getField("cid").as("cell"),
+        assignCell(col("embedding"), codebook).as("cell"),
         col("embedding"))
       val means = assigned
         .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "x")))
@@ -458,7 +458,7 @@ object Similarity {
     var codebook = seedCodebook(emb, nCells)
     for (_ <- 1 to iters if codebook.nonEmpty) {
       val assigned = emb.select(
-        greatestOf(centScores(col("embedding"), codebook)).getField("cid").as("cell"),
+        assignCell(col("embedding"), codebook).as("cell"),
         col("embedding"))
       val means = assigned
         .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "x")))
@@ -559,7 +559,7 @@ object Similarity {
         .toDF("qid", "rn", "vec_id", "score")
     }
     val assigned = emb.select(col("vec_id"), col("embedding"),
-      greatestOf(centScores(col("embedding"), codebook)).getField("cid").as("cell"))
+      assignCell(col("embedding"), codebook).as("cell"))
     val probeCells = transform(
       slice(sort_array(array(centScores(col("q_emb"), codebook): _*), asc = false), 1, nProbe),
       s => s.getField("cid"))
@@ -607,6 +607,38 @@ object Similarity {
                                     cells: Seq[Int]): DataFrame =
     spark.read.parquet(storeDir).where(col("cell").isin(cells: _*))
 
+  /** The IVF ingest kernel: assign `vecs` (vec_id, embedding) to cells
+    * against the codebook (the broadcast O(nCells·dim) coarse quantizer,
+    * fixed at deploy like the LSH width — a retrain is a rebuild) and
+    * append them clustered by cell, sorted vec_id. Into a non-empty
+    * store it first anti-joins vec_id against ONLY the cells the input
+    * touches, so a replayed micro-batch admits nothing; an empty store
+    * (the batch build, a stream's first batch) pays no extra job. The
+    * batch build calls it once on the corpus and the stream store once
+    * per micro-batch: assignment is a pure function of (vector,
+    * codebook), so the two stores hold the same rows under any
+    * batching. */
+  private[graft] def appendIvfCells(vecs: DataFrame, storeDir: String,
+                                    codebook: Array[(Long, Array[Float])]): Unit = {
+    val assigned = vecs.select(col("vec_id"), col("embedding"),
+      assignCell(col("embedding"), codebook).cast(IntegerType).as("cell"))
+    if (!graft.StoreCatalog.storeNonEmpty(storeDir))
+      Sinks.writeClustered(assigned, storeDir, "cell", Seq("vec_id"))
+    else {
+      assigned.persist()
+      try {
+        assigned.count() // materialize: two consumers below
+        val cells = assigned.select(col("cell")).distinct()
+          .collect().map(_.getInt(0)).toSeq.sorted
+        Sinks.writeClustered(assigned.join(
+            prunedIvfCells(vecs.sparkSession, storeDir, cells)
+              .select(col("vec_id").as("seen_id")),
+            col("vec_id") === col("seen_id"), "left_anti"),
+          storeDir, "cell", Seq("vec_id"))
+      } finally assigned.unpersist()
+    }
+  }
+
   /** [[ivfTopK]] SERVED from a materialized, cell-PARTITIONED vector
     * store — the deployment shape of the cells index family (the LSH
     * bucket store / graph edge store / HNSW hierarchy store sibling):
@@ -634,12 +666,7 @@ object Similarity {
       Seq(s"$dir/embeddings.parquet"),
       Seq("nCells" -> nCells.toString, "tag" -> storeTag),
       Seq("cells")) { parts =>
-      emb.select(col("vec_id"), col("embedding"),
-          greatestOf(centScores(col("embedding"), codebook))
-            .getField("cid").cast(IntegerType).as("cell"))
-        .repartition(col("cell")) // one clustered file per cell
-        .sortWithinPartitions(col("cell"), col("vec_id"))
-        .write.mode("overwrite").partitionBy("cell").parquet(parts("cells"))
+      appendIvfCells(emb, parts("cells"), codebook)
       Map.empty
     }.parts("cells")
     serveIvfFromStore(spark, emb, storeDir, codebook, k, nQueries, nProbe)
@@ -933,7 +960,7 @@ object Similarity {
     val cslice = pqSlices(codebook, sub)
     val assigned = emb.select(
       col("vec_id") +:
-        greatestOf(centScores(col("embedding"), codebook)).getField("cid").as("cell") +:
+        assignCell(col("embedding"), codebook).as("cell") +:
         pqCodeCols(cslice, m, sub): _*)
     val probeCells = transform(
       slice(sort_array(array(centScores(col("q_emb"), codebook): _*), asc = false), 1, nProbe),
@@ -1213,18 +1240,36 @@ object Similarity {
     }
     require(codebook.forall(_._2.length == dim), s"corpus dim != $dim")
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val sub = dim / m
-    val cslice = pqSlices(codebook, sub)
     val storeDir = graft.StoreCatalog.getOrBuild(spark, "pq_codes",
       Seq(s"$dir/embeddings.parquet"),
       Seq("nCells" -> nCells.toString, "m" -> m.toString),
       Seq("codes")) { parts =>
-      emb.select(col("vec_id") +: pqCodeCols(cslice, m, sub): _*)
-        .write.mode("overwrite").parquet(parts("codes"))
+      appendPqCodes(emb, parts("codes"), codebook, m, dim)
       Map.empty
     }.parts("codes")
-    servePqFromStore(spark, dir, emb, storeDir, cslice, m, sub,
-      k, nQueries, budget)
+    servePqFromStore(spark, dir, emb, storeDir, pqSliceFn(codebook, m, dim),
+      m, dim / m, k, nQueries, budget)
+  }
+
+  /** The PQ ingest kernel: encode `vecs` (vec_id, embedding) against the
+    * codebook's per-subspace slices and append the codes only. Into a
+    * non-empty store it first anti-joins vec_id against the store's
+    * vec_id column (codes pruned by the projection), so a replayed
+    * micro-batch admits nothing. The batch build calls it once on the
+    * corpus and the stream store once per micro-batch: codes are a pure
+    * function of (vector, codebook), so the two stores hold the same
+    * rows under any batching. */
+  private[graft] def appendPqCodes(vecs: DataFrame, storeDir: String,
+                                   codebook: Array[(Long, Array[Float])],
+                                   m: Int, dim: Int): Unit = {
+    val encoded = vecs.select(
+      col("vec_id") +: pqCodeCols(pqSliceFn(codebook, m, dim), m, dim / m): _*)
+    val fresh =
+      if (!graft.StoreCatalog.storeNonEmpty(storeDir)) encoded
+      else encoded.join(vecs.sparkSession.read.parquet(storeDir)
+          .select(col("vec_id").as("seen_id")),
+        col("vec_id") === col("seen_id"), "left_anti")
+    fresh.write.mode("append").parquet(storeDir)
   }
 
   /** The serve tail shared by the batch-built and stream-built code
@@ -1250,14 +1295,6 @@ object Similarity {
     exactRerank(spark, dir, shortlist, k, nQueries)
   }
 
-  /** The encode expression set for one corpus row — exposed so the
-    * streaming code-store ingest encodes arriving batches with the
-    * exact batch-build expressions. */
-  private[graft] def pqEncodeCols(codebook: Array[(Long, Array[Float])],
-                                  m: Int, dim: Int): Seq[Column] = {
-    val sub = dim / m
-    pqCodeCols(pqSlices(codebook, sub), m, sub)
-  }
   private[graft] def pqSliceFn(codebook: Array[(Long, Array[Float])],
                                m: Int, dim: Int): Int => Array[(Long, Array[Float])] =
     pqSlices(codebook, dim / m)

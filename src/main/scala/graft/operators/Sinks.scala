@@ -420,13 +420,22 @@ object Sinks {
                           destDir: String, partitionCol: String,
                           newValue: Column,
                           sortCols: Seq[String] = Nil): Long = {
-    val df = spark.read.parquet(srcDir)
-      .withColumn(partitionCol, newValue)
-    df.repartition(col(partitionCol))
-      .sortWithinPartitions((partitionCol +: sortCols).map(col): _*)
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(destDir)
+    writeClustered(spark.read.parquet(srcDir).withColumn(partitionCol, newValue),
+      destDir, partitionCol, sortCols, "overwrite")
     spark.read.parquet(destDir).count()
   }
+
+  /** The clustered store write: one file per `bucket` value, rows sorted
+    * by (bucket, keys) within it, so a pruned read lists one directory
+    * per bucket and row-group stats stay tight on the keys. Appends by
+    * default: into a fresh dir that is the whole layout, and a store fed
+    * per micro-batch gains one sorted file per touched bucket. */
+  private[graft] def writeClustered(df: DataFrame, dir: String, bucket: String,
+                                    keys: Seq[String],
+                                    mode: String = "append"): Unit =
+    df.repartition(col(bucket))
+      .sortWithinPartitions((bucket +: keys).map(col): _*)
+      .write.mode(mode).partitionBy(bucket).parquet(dir)
 
   def compactPartitioned(spark: SparkSession, dir: String,
                          targetBytes: Long = 128L << 20,

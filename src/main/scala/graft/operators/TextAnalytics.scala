@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions._
@@ -748,13 +748,35 @@ object TextAnalytics {
     (t.codePoints().toArray.foldLeft(0L)((acc, cp) =>
       (acc * 31 + cp) % Dedup.P) % buckets).toInt
 
-  /** Build the postings + doc-length stores ONCE per corpus:
-    * postings = (word, doc_id, tf) clustered into term-hash bucket
-    * partitions and sorted by (word, doc_id) within each — a query
-    * term's rows are one directory listing + a word-range row-group
-    * read; doc lengths land beside them. At 100 TB the postings store
-    * is the big artifact and this layout is why serving stays
-    * O(query terms), never O(vocabulary). The store persists in the
+  /** The in-plan bucket column every term-hash store is partitioned by
+    * — the column twin of [[termBucket]], which prunes the reads. */
+  private[graft] def termBucketCol(c: Column,
+                                   buckets: Int = PostingsBuckets): Column =
+    pmod(Dedup.chash(c), lit(buckets.toLong))
+      .cast(org.apache.spark.sql.types.IntegerType)
+
+  /** The bm25 ingest kernel: append whole documents' `tokens`
+    * (doc_id, word) to a postings store — (word, doc_id, tf) clustered
+    * into term-hash bucket partitions, sorted (word, doc_id) within each
+    * — and their (doc_id, dl) lengths beside it, one file. The batch
+    * build calls it once on the corpus and the stream store once per
+    * micro-batch, so the two layouts are one. A document lives in one
+    * call, so its counts are final. */
+  private[graft] def appendBm25(tokens: DataFrame, postingsDir: String,
+                                docsDir: String): Unit = {
+    Sinks.writeClustered(
+      tokens.groupBy(col("word"), col("doc_id")).agg(count(lit(1)).as("tf"))
+        .withColumn("tbucket", termBucketCol(col("word"))),
+      postingsDir, "tbucket", Seq("word", "doc_id"))
+    tokens.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
+      .coalesce(1).write.mode("append").parquet(docsDir)
+  }
+
+  /** Build the postings + doc-length stores ONCE per corpus through
+    * [[appendBm25]]: a query term's rows are one directory listing + a
+    * word-range row-group read. At 100 TB the postings store is the big
+    * artifact and this layout is why serving stays O(query terms),
+    * never O(vocabulary). The store persists in the
     * [[graft.StoreCatalog]] — built once per corpus LIFETIME, served by
     * any later session with zero rebuild. */
   private[graft] def buildBm25Store(spark: SparkSession,
@@ -763,20 +785,10 @@ object TextAnalytics {
       Seq(s"$dir/documents.parquet"),
       Seq("buckets" -> PostingsBuckets.toString),
       Seq("postings", "docs")) { parts =>
-      val tokens = Tables.loadWide(spark, dir, "documents")
-        .select(col("doc_id"), explode(words(col("text"))).as("word"))
-        .filter(col("word") =!= "")
-      tokens.groupBy(col("word"), col("doc_id"))
-        .agg(count(lit(1)).as("tf"))
-        .withColumn("tbucket",
-          pmod(Dedup.chash(col("word")), lit(PostingsBuckets.toLong))
-            .cast(org.apache.spark.sql.types.IntegerType))
-        .repartition(col("tbucket"))
-        .sortWithinPartitions(col("tbucket"), col("word"), col("doc_id"))
-        .write.mode("overwrite").partitionBy("tbucket")
-        .parquet(parts("postings"))
-      tokens.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-        .coalesce(1).write.mode("overwrite").parquet(parts("docs"))
+      appendBm25(Tables.loadWide(spark, dir, "documents")
+          .select(col("doc_id"), explode(words(col("text"))).as("word"))
+          .filter(col("word") =!= ""),
+        parts("postings"), parts("docs"))
       Map.empty
     }
     (h.parts("postings"), h.parts("docs"))
@@ -799,9 +811,7 @@ object TextAnalytics {
       Seq("buckets" -> newBuckets.toString),
       Seq("postings", "docs")) { parts =>
       Sinks.rebucketPartitioned(spark, pd, parts("postings"), "tbucket",
-        pmod(Dedup.chash(col("word")), lit(newBuckets.toLong))
-          .cast(org.apache.spark.sql.types.IntegerType),
-        Seq("word", "doc_id"))
+        termBucketCol(col("word"), newBuckets), Seq("word", "doc_id"))
       graft.StoreCatalog.linkTree(java.nio.file.Paths.get(dd),
         java.nio.file.Paths.get(parts("docs")))
       Map.empty
@@ -955,6 +965,16 @@ object TextAnalytics {
     phraseRank(prunedPhrasePostings(spark, dir, phrase), phrase, k)
   }
 
+  /** The phrase ingest kernel: append `docs`' (doc_id, text) positional
+    * postings (word, doc_id, pos) to a store, clustered into the bm25
+    * term-hash bucket partitions and sorted (word, doc_id, pos) within
+    * each. The batch build and the stream store both write through it. */
+  private[graft] def appendPhrasePostings(docs: DataFrame,
+                                          postingsDir: String): Unit =
+    Sinks.writeClustered(
+      phrasePostings(docs).withColumn("tbucket", termBucketCol(col("word"))),
+      postingsDir, "tbucket", Seq("word", "doc_id", "pos"))
+
   /** Resolve (build-if-absent) the positional postings store and prune
     * it to `phrase`'s term buckets — the shared serve-side read for
     * exact and proximity phrase queries. */
@@ -964,20 +984,11 @@ object TextAnalytics {
       Seq(s"$dir/documents.parquet"),
       Seq("buckets" -> PostingsBuckets.toString),
       Seq("postings")) { parts =>
-      phrasePostings(Tables.loadWide(spark, dir, "documents"))
-        .withColumn("tbucket",
-          pmod(Dedup.chash(col("word")), lit(PostingsBuckets.toLong))
-            .cast(org.apache.spark.sql.types.IntegerType))
-        .repartition(col("tbucket"))
-        .sortWithinPartitions(col("tbucket"), col("word"), col("doc_id"),
-          col("pos"))
-        .write.mode("overwrite").partitionBy("tbucket")
-        .parquet(parts("postings"))
+      appendPhrasePostings(Tables.loadWide(spark, dir, "documents"),
+        parts("postings"))
       Map.empty
     }
-    spark.read.parquet(h.parts("postings"))
-      .where(col("tbucket").isin(phrase.map(termBucket(_)).distinct: _*) &&
-        col("word").isin(phrase.distinct: _*))
+    prunedPostings(spark, h.parts("postings"), phrase.distinct)
   }
 
   /** PROXIMITY (SLOPPY) PHRASE SEARCH — [[phraseSearch]] generalized to

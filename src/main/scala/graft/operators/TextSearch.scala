@@ -128,15 +128,29 @@ object TextSearch {
     if (topAlt) Seq.empty else runs.distinct.toSeq
   }
 
+  /** The trigram ingest kernel: append `docs`' (doc_id, text) to a
+    * trigram index — postings = (tg, doc_id) in trigram-hash bucket
+    * partitions, sorted (tg, doc_id) within each, so a query trigram's
+    * rows are one directory listing plus a tg-range row-group read;
+    * stored fields = (doc_id, text) in doc-id-hash bucket partitions
+    * sorted by doc_id, so verification reads only candidate buckets.
+    * The batch build and the stream store both write through it. */
+  private[graft] def appendTrigrams(docs: DataFrame, postingsDir: String,
+                                    docsDir: String): Unit = {
+    Sinks.writeClustered(trigramPostings(docs).withColumn("tgbucket",
+        TextAnalytics.termBucketCol(col("tg"), TrigramBuckets)),
+      postingsDir, "tgbucket", Seq("tg", "doc_id"))
+    Sinks.writeClustered(docs.select(col("doc_id"), col("text"),
+        pmod(col("doc_id"), lit(DocBuckets.toLong)).cast(IntegerType)
+          .as("dbucket")),
+      docsDir, "dbucket", Seq("doc_id"))
+  }
+
   /** Build (once per corpus lifetime, catalog-persisted) the trigram
-    * index: postings = (tg, doc_id) in trigram-hash bucket partitions,
-    * sorted (tg, doc_id) within each — a query trigram's rows are one
-    * directory listing plus a tg-range row-group read; stored fields =
-    * (doc_id, text) in doc-id-hash bucket partitions sorted by doc_id —
-    * the verification side reads only candidate buckets. The text is
-    * duplicated into the store deliberately (Lucene stored-fields
-    * posture): verification must NOT re-read the source table, whose
-    * layout owes this query class nothing. */
+    * index through [[appendTrigrams]]. The text is duplicated into the
+    * store deliberately (Lucene stored-fields posture): verification
+    * must NOT re-read the source table, whose layout owes this query
+    * class nothing. */
   private[graft] def buildTrigramStore(spark: SparkSession,
                                        dir: String): (String, String) = {
     val h = graft.StoreCatalog.getOrBuild(spark, "trigram_postings",
@@ -144,22 +158,8 @@ object TextSearch {
       Seq("buckets" -> TrigramBuckets.toString,
         "docbuckets" -> DocBuckets.toString),
       Seq("postings", "docs")) { parts =>
-      val docs = Tables.loadWide(spark, dir, "documents")
-      trigramPostings(docs)
-        .withColumn("tgbucket",
-          pmod(Dedup.chash(col("tg")), lit(TrigramBuckets.toLong))
-            .cast(IntegerType))
-        .repartition(col("tgbucket"))
-        .sortWithinPartitions(col("tgbucket"), col("tg"), col("doc_id"))
-        .write.mode("overwrite").partitionBy("tgbucket")
-        .parquet(parts("postings"))
-      docs.select(col("doc_id"), col("text"))
-        .withColumn("dbucket",
-          pmod(col("doc_id"), lit(DocBuckets.toLong)).cast(IntegerType))
-        .repartition(col("dbucket"))
-        .sortWithinPartitions(col("dbucket"), col("doc_id"))
-        .write.mode("overwrite").partitionBy("dbucket")
-        .parquet(parts("docs"))
+      appendTrigrams(Tables.loadWide(spark, dir, "documents"),
+        parts("postings"), parts("docs"))
       Map.empty
     }
     (h.parts("postings"), h.parts("docs"))
@@ -185,9 +185,7 @@ object TextSearch {
         "docbuckets" -> DocBuckets.toString),
       Seq("postings", "docs")) { parts =>
       Sinks.rebucketPartitioned(spark, pd, parts("postings"), "tgbucket",
-        pmod(Dedup.chash(col("tg")), lit(newBuckets.toLong))
-          .cast(IntegerType),
-        Seq("tg", "doc_id"))
+        TextAnalytics.termBucketCol(col("tg"), newBuckets), Seq("tg", "doc_id"))
       graft.StoreCatalog.linkTree(java.nio.file.Paths.get(dd),
         java.nio.file.Paths.get(parts("docs")))
       Map.empty
@@ -360,16 +358,13 @@ object TextSearch {
       Seq(s"$dir/documents.parquet"),
       Seq("layout" -> "first-char-range"),
       Seq("postings")) { parts =>
-      Tables.loadWide(spark, dir, "documents")
-        .select(col("doc_id"), explode(words(col("text"))).as("word"))
-        .filter(col("word") =!= "")
-        .groupBy(col("word"), col("doc_id"))
-        .agg(count(lit(1)).as("tf"))
-        .withColumn("w0", substring(col("word"), 1, 1))
-        .repartition(col("w0"))
-        .sortWithinPartitions(col("w0"), col("word"), col("doc_id"))
-        .write.mode("overwrite").partitionBy("w0")
-        .parquet(parts("postings"))
+      Sinks.writeClustered(Tables.loadWide(spark, dir, "documents")
+          .select(col("doc_id"), explode(words(col("text"))).as("word"))
+          .filter(col("word") =!= "")
+          .groupBy(col("word"), col("doc_id"))
+          .agg(count(lit(1)).as("tf"))
+          .withColumn("w0", substring(col("word"), 1, 1)),
+        parts("postings"), "w0", Seq("word", "doc_id"))
       Map.empty
     }.parts("postings")
 
@@ -482,17 +477,13 @@ object TextSearch {
       Seq(s"$dir/documents.parquet"),
       Seq("kbuckets" -> KeyBuckets.toString, "dist" -> "1"),
       Seq("delkeys")) { parts =>
-      spark.read.parquet(pd).select(col("word")).distinct()
-        .withColumn("key", explode(expr(
-          "array_union(array(word), transform(sequence(0, length(word)-1)," +
-            " i -> concat(substr(word, 1, i), substr(word, i+2))))")))
-        .withColumn("kbucket",
-          pmod(Dedup.chash(col("key")), lit(KeyBuckets.toLong))
-            .cast(IntegerType))
-        .repartition(col("kbucket"))
-        .sortWithinPartitions(col("kbucket"), col("key"), col("word"))
-        .write.mode("overwrite").partitionBy("kbucket")
-        .parquet(parts("delkeys"))
+      Sinks.writeClustered(spark.read.parquet(pd).select(col("word")).distinct()
+          .withColumn("key", explode(expr(
+            "array_union(array(word), transform(sequence(0, length(word)-1)," +
+              " i -> concat(substr(word, 1, i), substr(word, i+2))))")))
+          .withColumn("kbucket",
+            TextAnalytics.termBucketCol(col("key"), KeyBuckets)),
+        parts("delkeys"), "kbucket", Seq("key", "word"))
       Map.empty
     }
     (h.parts("delkeys"), pd)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import graft.StoreCatalog.storeNonEmpty
 import graft.operators.{BeamDescent, DriverCap}
 
 /** Structured Streaming surface (SURVEY §1.5, §2.13): the reference's
@@ -281,12 +282,6 @@ object StreamOps {
   private def createParts(parts: Map[String, String]): Unit =
     parts.values.foreach(p => java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(p)))
-
-  /** Whether a store dir holds data beyond `_SUCCESS`/hidden files. */
-  private def storeNonEmpty(d: String): Boolean = {
-    val f = new java.io.File(d).list()
-    f != null && f.exists(n => !n.startsWith("_") && !n.startsWith("."))
-  }
 
   /** Streaming twin of Events.tumbling over the replayed fixture —
     * verifiable against the SAME DuckDB oracle as the batch query. */
@@ -1151,10 +1146,9 @@ object StreamOps {
     * batch (file count, not row count, dominates serve cost), fp-sorted
     * so row-group min/max stats are tight for the point lookup. */
   private def appendSeenFps(fresh: DataFrame, storeDir: String): Unit =
-    fresh.select(col("fp"), col("doc_id"), col("bucket"))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("fp"))
-      .write.mode("append").partitionBy("bucket").parquet(storeDir)
+    graft.operators.Sinks.writeClustered(
+      fresh.select(col("fp"), col("doc_id"), col("bucket")),
+      storeDir, "bucket", Seq("fp"))
 
   /** STORE-BACKED streaming exact dedup — UNBOUNDED-HISTORY ingest
     * dedup: each micro-batch collapses its own duplicates (min doc_id
@@ -1738,9 +1732,6 @@ object StreamOps {
     * twin's membership state — same pruning class as the fingerprint
     * store's [[fpBucket]]). */
   private[graft] val WordStoreBuckets = 64
-  private[graft] def wordBucket(w: Column): Column =
-    pmod(graft.operators.Dedup.chash(w), lit(WordStoreBuckets.toLong))
-      .cast("int")
 
   private[graft] def prunedSeenWords(spark: SparkSession, storeDir: String,
                                      buckets: Seq[Int]): DataFrame =
@@ -1762,7 +1753,8 @@ object StreamOps {
                                      batch: DataFrame): Unit = {
     val firsts = batch.groupBy(col("w"))
       .agg(min(col("bucket")).as("bucket"))
-      .withColumn("wbucket", wordBucket(col("w"))).persist()
+      .withColumn("wbucket", graft.operators.TextAnalytics
+        .termBucketCol(col("w"), WordStoreBuckets)).persist()
     try {
       val touched = firsts.select(col("wbucket")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
@@ -1773,10 +1765,9 @@ object StreamOps {
             col("w") === col("seen_w"), "left")
           .filter(col("seen_bucket").isNull ||
             col("bucket") < col("seen_bucket"))
-      fresh.select(col("w"), col("bucket"), col("wbucket"))
-        .repartition(col("wbucket"))
-        .sortWithinPartitions(col("wbucket"), col("w"))
-        .write.mode("append").partitionBy("wbucket").parquet(sd)
+      graft.operators.Sinks.writeClustered(
+        fresh.select(col("w"), col("bucket"), col("wbucket")),
+        sd, "wbucket", Seq("w"))
     } finally firsts.unpersist()
   }
 
@@ -2011,10 +2002,11 @@ object StreamOps {
     rankedReservoir(spark, s"$root/top.parquet")
   }
 
-  /** The store [[streamBm25StoreQuery]] describes: (postings, lengths). */
+  /** The store [[streamBm25StoreQuery]] describes: (postings, lengths),
+    * appended per micro-batch by the batch build's kernel. */
   private[graft] def bm25StreamStore(spark: SparkSession,
                                      dir: String): (String, String) = {
-    import graft.operators.{Dedup, TextAnalytics}
+    import graft.operators.TextAnalytics
     import graft.functions.TextFunctions.words
     val h = graft.StoreCatalog.getOrBuild(spark, "stream_bm25_postings",
       Seq(s"$dir/documents.parquet"),
@@ -2026,15 +2018,7 @@ object StreamOps {
         .filter(col("word") =!= "")
       runStream(in, Some(4)) {
         _.foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.groupBy(col("word"), col("doc_id"))
-            .agg(count(lit(1)).as("tf"))
-            .withColumn("tbucket",
-              pmod(Dedup.chash(col("word")),
-                lit(TextAnalytics.PostingsBuckets.toLong))
-                .cast(IntegerType))
-            .write.mode("append").partitionBy("tbucket").parquet(parts("posts"))
-          batch.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-            .coalesce(1).write.mode("append").parquet(parts("docs"))
+          TextAnalytics.appendBm25(batch, parts("posts"), parts("docs"))
         }
       }
       Map.empty
@@ -2068,9 +2052,10 @@ object StreamOps {
     TextAnalytics.serveBm25(spark, dir, posts, docs, terms, k)
   }
 
-  /** The positional postings store [[streamPhraseStoreQuery]] describes. */
+  /** The positional postings store [[streamPhraseStoreQuery]] describes,
+    * appended per micro-batch by the batch build's kernel. */
   private[graft] def phraseStreamStore(spark: SparkSession, dir: String): String = {
-    import graft.operators.{Dedup, TextAnalytics}
+    import graft.operators.TextAnalytics
     graft.StoreCatalog.getOrBuild(spark, "stream_phrase_postings",
       Seq(s"$dir/documents.parquet"),
       Seq("buckets" -> TextAnalytics.PostingsBuckets.toString),
@@ -2080,12 +2065,7 @@ object StreamOps {
         .select(col("doc_id"), col("text"))
       runStream(in, Some(4)) {
         _.foreachBatch { (batch: DataFrame, _: Long) =>
-          TextAnalytics.phrasePostings(batch)
-            .withColumn("tbucket",
-              pmod(Dedup.chash(col("word")),
-                lit(TextAnalytics.PostingsBuckets.toLong))
-                .cast(IntegerType))
-            .write.mode("append").partitionBy("tbucket").parquet(parts("posts"))
+          TextAnalytics.appendPhrasePostings(batch, parts("posts"))
         }
       }
       Map.empty
@@ -2124,19 +2104,18 @@ object StreamOps {
                                 phrase: Seq[String], k: Int,
                                 slop: Int): DataFrame = {
     import graft.operators.TextAnalytics
-    val pruned = spark.read.parquet(phraseStreamStore(spark, dir))
-      .where(col("tbucket").isin(
-        phrase.map(TextAnalytics.termBucket(_)).distinct: _*) &&
-        col("word").isin(phrase.distinct: _*))
+    val pruned = TextAnalytics.prunedPostings(spark,
+        phraseStreamStore(spark, dir), phrase.distinct)
       .select(col("word"), col("doc_id"), col("pos")).distinct()
     TextAnalytics.phraseRank(pruned, phrase, k, slop)
   }
 
   /** The trigram index [[streamSubstrStoreQuery]] describes:
-    * (postings, stored fields). */
+    * (postings, stored fields), appended per micro-batch by the batch
+    * build's kernel. */
   private[graft] def trigramStreamStore(spark: SparkSession,
                                         dir: String): (String, String) = {
-    import graft.operators.{Dedup, TextSearch}
+    import graft.operators.TextSearch
     val h = graft.StoreCatalog.getOrBuild(spark, "stream_trigram_postings",
       Seq(s"$dir/documents.parquet"),
       Seq("tgbuckets" -> TextSearch.TrigramBuckets.toString,
@@ -2147,17 +2126,7 @@ object StreamOps {
         .select(col("doc_id"), col("text"))
       runStream(in, Some(4)) {
         _.foreachBatch { (batch: DataFrame, _: Long) =>
-          TextSearch.trigramPostings(batch)
-            .withColumn("tgbucket",
-              pmod(Dedup.chash(col("tg")),
-                lit(TextSearch.TrigramBuckets.toLong))
-                .cast(IntegerType))
-            .write.mode("append").partitionBy("tgbucket").parquet(parts("posts"))
-          batch.select(col("doc_id"), col("text"))
-            .withColumn("dbucket",
-              pmod(col("doc_id"), lit(TextSearch.DocBuckets.toLong))
-                .cast(IntegerType))
-            .write.mode("append").partitionBy("dbucket").parquet(parts("docs"))
+          TextSearch.appendTrigrams(batch, parts("posts"), parts("docs"))
         }
       }
       Map.empty
@@ -2300,7 +2269,8 @@ object StreamOps {
     graft.operators.Similarity.hnswSearchSql(
       deg = deg, layerBits = Some(hnswStreamBits))
 
-  /** The cell store built through [[ingestIvfBatch]]. */
+  /** The cell store [[streamIvfTopKQuery]] describes, appended per
+    * micro-batch by the batch build's kernel. */
   private[graft] def ivfStreamStore(spark: SparkSession, dir: String,
                                     nCells: Int,
                                     codebook: Array[(Long, Array[Float])]): String =
@@ -2312,52 +2282,17 @@ object StreamOps {
         .select(col("vec_id"), col("embedding"))
       runStream(in) {
         _.foreachBatch { (batch: DataFrame, _: Long) =>
-          ingestIvfBatch(batch.sparkSession, batch, parts("store"), codebook)
+          graft.operators.Similarity.appendIvfCells(batch, parts("store"), codebook)
         }
       }
       Map.empty
     }.parts("store")
 
-  /** One micro-batch of the incremental IVF index: assign the batch
-    * against the deploy-time codebook (broadcast O(nCells·dim) model —
-    * the coarse quantizer is FIXED at deploy like the LSH width; a
-    * retrain is an index rebuild in every IVF system), dedupe replays
-    * by anti-joining vec_id against ONLY the store partitions the
-    * batch's own cells touch, and append the fresh rows clustered by
-    * cell. Assignment is a pure function of (vector, codebook), so the
-    * accumulated store equals the batch build under ANY batching —
-    * cell partitioning is set algebra, not order-dependent state. */
-  private[graft] def ingestIvfBatch(sp: SparkSession, batch: DataFrame,
-                                    storeDir: String,
-                                    codebook: Array[(Long, Array[Float])]): Unit = {
-    import graft.operators.Similarity
-    val assigned = batch.select(col("vec_id"), col("embedding"),
-        Similarity.assignCell(col("embedding"), codebook)
-          .cast(IntegerType).as("cell"))
-      .persist()
-    try {
-      assigned.count() // materialize: two consumers below
-      val batchCells = assigned.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      val empty = !storeNonEmpty(storeDir)
-      val fresh =
-        if (empty) assigned
-        else assigned.join(
-          Similarity.prunedIvfCells(sp, storeDir, batchCells)
-            .select(col("vec_id").as("seen_id")),
-          col("vec_id") === col("seen_id"), "left_anti")
-          .select(col("vec_id"), col("embedding"), col("cell"))
-      fresh.repartition(col("cell"))
-        .sortWithinPartitions(col("cell"), col("vec_id"))
-        .write.mode("append").partitionBy("cell").parquet(storeDir)
-    } finally assigned.unpersist()
-  }
-
   /** IVF TOP-K SERVED OFF THE STREAMING-MAINTAINED CELL STORE — the
     * cells-family member of the streamed-index family (LSH buckets /
     * k-NN graph / HNSW hierarchy): embeddings arrive as a stream and
     * accumulate into a cell-partitioned vector store
-    * ([[ingestIvfBatch]]); serving pushes the query set's probe-cell
+    * ([[graft.operators.Similarity.appendIvfCells]]); serving pushes the query set's probe-cell
     * union (O(nQueries·nProbe) ints of driver control state) as a
     * static partition filter and scans nProbe-many cells, never the
     * corpus. The store equals the batch assignment set, so results —
@@ -2382,7 +2317,8 @@ object StreamOps {
                              nProbe: Int = 2): String =
     graft.operators.Similarity.ivfTopKSql(k, nQueries, nCells, nProbe)
 
-  /** The code store built through [[ingestPqBatch]]. */
+  /** The code store [[streamPqTopKQuery]] describes, appended per
+    * micro-batch by the batch build's kernel. */
   private[graft] def pqStreamStore(spark: SparkSession, dir: String,
                                    nCells: Int, m: Int, dim: Int,
                                    codebook: Array[(Long, Array[Float])]): String =
@@ -2395,44 +2331,18 @@ object StreamOps {
         .select(col("vec_id"), col("embedding"))
       runStream(in) {
         _.foreachBatch { (batch: DataFrame, _: Long) =>
-          ingestPqBatch(batch.sparkSession, batch, parts("store"), codebook, m, dim)
+          graft.operators.Similarity.appendPqCodes(batch, parts("store"),
+            codebook, m, dim)
         }
       }
       Map.empty
     }.parts("store")
 
-  /** One micro-batch of the incremental PQ index: encode the batch
-    * against the deploy-time codebook (the same per-subspace argmin
-    * expressions the batch build uses — codes are a pure function of
-    * (vector, codebook)), dedupe replays by vec_id anti-join against
-    * the store, append codes only. The accumulated store equals the
-    * batch encode under ANY batching. The membership read scans the
-    * store's vec_id column alone (codes pruned by the projection) —
-    * at rest the store IS the m-codes-per-row layout, so even the full
-    * anti-join side is bytes-light; a deployment would additionally
-    * sort/range-partition by vec_id for row-group skipping. */
-  private[graft] def ingestPqBatch(sp: SparkSession, batch: DataFrame,
-                                   storeDir: String,
-                                   codebook: Array[(Long, Array[Float])],
-                                   m: Int, dim: Int): Unit = {
-    import graft.operators.Similarity
-    val encoded = batch.select(
-      (col("vec_id") +: Similarity.pqEncodeCols(codebook, m, dim)): _*)
-    val empty = !storeNonEmpty(storeDir)
-    val fresh =
-      if (empty) encoded
-      else encoded.join(
-        sp.read.parquet(storeDir).select(col("vec_id").as("seen_id")),
-        col("vec_id") === col("seen_id"), "left_anti")
-        .drop("seen_id")
-    fresh.write.mode("append").parquet(storeDir)
-  }
-
   /** PQ + EXACT RERANK SERVED OFF THE STREAMING-MAINTAINED CODE STORE —
     * the codes-family member of the streamed-index family (LSH buckets
     * / graph / hierarchy / IVF cells): embeddings arrive as a stream
     * and accumulate, ENCODED, into the codes-only store
-    * ([[ingestPqBatch]]); serving broadcasts per-query LUTs against the
+    * ([[graft.operators.Similarity.appendPqCodes]]); serving broadcasts per-query LUTs against the
     * stored codes, shortlists by asymmetric distance, and reranks
     * exactly. The store equals the batch encode set, so results — and
     * the oracle — are pqRerankTopK's own. */

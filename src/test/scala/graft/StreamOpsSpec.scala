@@ -829,7 +829,7 @@ class StreamOpsSpec extends AnyFunSuite {
       StreamOps.ivfStreamStore(spark, base.toString, 8, codebook))
     assert(new java.io.File(storeDir).list().exists(_.startsWith("cell=")))
     val countBefore = spark.read.parquet(storeDir).count()
-    StreamOps.ingestIvfBatch(spark,
+    Similarity.appendIvfCells(
       emb.filter(col("vec_id") >= 0 && col("vec_id") < 120)
         .select(col("vec_id"), col("embedding")),
       storeDir, codebook)
@@ -869,13 +869,14 @@ class StreamOpsSpec extends AnyFunSuite {
     val inPlan = Similarity.pqRerankTopK(spark, base.toString, nQueries = 5)
       .collect().map(key).toSeq
     assert(streamed == inPlan && streamed.nonEmpty)
-    // replay: re-encode batch 1 by hand — the anti-join admits nothing
+    // replay: re-append batch 1 through the kernel — the anti-join
+    // admits nothing
     val codebook = Similarity.seedCodebook(
       spark.read.parquet(base.toString + "/embeddings.parquet"), 8)
     val storeDir = TestSession.servedStore(
       StreamOps.pqStreamStore(spark, base.toString, 8, 4, 64, codebook))
     val countBefore = spark.read.parquet(storeDir).count()
-    StreamOps.ingestPqBatch(spark,
+    Similarity.appendPqCodes(
       emb.filter(col("vec_id") < 150).select(col("vec_id"), col("embedding")),
       storeDir, codebook, m = 4, dim = 64)
     assert(spark.read.parquet(storeDir).count() == countBefore,
@@ -1108,7 +1109,7 @@ class StreamOpsSpec extends AnyFunSuite {
 
   test("stream-accreted BM25 postings store serves the batch ranking; " +
     "a crash-replayed batch changes nothing") {
-    import graft.operators.{Dedup, TextAnalytics}
+    import graft.operators.TextAnalytics
     import graft.functions.TextFunctions.words
     val terms = Seq("vector", "scan", "merge")
     def served = StreamOps.streamBm25StoreQuery(spark, TestSession.sfDir, terms)
@@ -1117,27 +1118,20 @@ class StreamOpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
     val first = served
     assert(first == batch && first.nonEmpty)
-    // replay: re-append one batch's worth of identical postings + dl
-    // rows (what an at-least-once restart does); max-merge must absorb it
+    // replay: re-append one batch's documents through the ingest kernel
+    // (what an at-least-once restart does); max-merge must absorb it
     val (pd, dd) = TestSession.servedStore(StreamOps.bm25StreamStore(spark, TestSession.sfDir))
-    val replay = Tables.load(spark, TestSession.sfDir, "documents")
-      .limit(50)
-      .select(col("doc_id"), explode(words(col("text"))).as("word"))
-      .filter(col("word") =!= "")
-    replay.groupBy(col("word"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("tbucket",
-        pmod(Dedup.chash(col("word")), lit(TextAnalytics.PostingsBuckets.toLong))
-          .cast(org.apache.spark.sql.types.IntegerType))
-      .write.mode("append").partitionBy("tbucket").parquet(pd)
-    replay.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      .coalesce(1).write.mode("append").parquet(dd)
+    TextAnalytics.appendBm25(Tables.load(spark, TestSession.sfDir, "documents")
+        .limit(50)
+        .select(col("doc_id"), explode(words(col("text"))).as("word"))
+        .filter(col("word") =!= ""),
+      pd, dd)
     assert(served == batch)
   }
 
   test("stream-accreted positional postings store serves the batch phrase " +
     "ranking; a crash-replayed batch changes nothing") {
-    import graft.operators.{Dedup, TextAnalytics}
+    import graft.operators.TextAnalytics
     val phrase = Seq("vector", "small")
     def served = StreamOps.streamPhraseStoreQuery(spark, TestSession.sfDir, phrase)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
@@ -1145,17 +1139,12 @@ class StreamOpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
     val first = served
     assert(first == batch && first.nonEmpty)
-    // replay: re-append one batch's worth of identical positional rows
+    // replay: re-append one batch's documents through the ingest kernel
     // (what an at-least-once restart does); the serve's distinct over
     // (word, doc_id, pos) must absorb them
     val pd = TestSession.servedStore(StreamOps.phraseStreamStore(spark, TestSession.sfDir))
-    TextAnalytics.phrasePostings(
-        Tables.load(spark, TestSession.sfDir, "documents").limit(50))
-      .withColumn("tbucket",
-        pmod(Dedup.chash(col("word")),
-          lit(TextAnalytics.PostingsBuckets.toLong))
-          .cast(org.apache.spark.sql.types.IntegerType))
-      .write.mode("append").partitionBy("tbucket").parquet(pd)
+    TextAnalytics.appendPhrasePostings(
+      Tables.load(spark, TestSession.sfDir, "documents").limit(50), pd)
     assert(served == batch)
   }
 
